@@ -140,3 +140,33 @@ def test_validation_frame_matches_validate(spark, messy):
     }
     assert frame == report.violations
     assert len(frame) == len(suite)
+
+
+def test_fk_only_suite_skips_the_row_pass(spark):
+    """A suite without row-level constraints runs no count aggregate: the
+    FK violations match those of the same suite with a row constraint
+    added, from fewer jobs, and the unused row count is None."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    li = spark.read.parquet(f"{SF_SMALL}/lineitem.parquet")
+    broken = spark.read.parquet(f"{SF_SMALL}/orders.parquet").filter(
+        F.col("o_orderkey") % 7 != 0
+    )
+    fk = foreign_key("l_orderkey", broken, "o_orderkey")
+
+    def run(group, suite):
+        sc.setJobGroup(group, group)
+        try:
+            rep = validate(li, suite)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return rep, len(tracker.getJobIdsForGroup(group))
+
+    fk_only, fk_jobs = run("constraints-fk-only", [fk])
+    with_row, with_row_jobs = run("constraints-fk-and-row", [fk, not_null("l_orderkey")])
+    assert fk_only.row_count is None
+    assert with_row.row_count == li.count()
+    name = "foreign_key(l_orderkey)"
+    assert fk_only.violations[name] == with_row.violations[name] > 0
+    assert 0 < fk_jobs < with_row_jobs

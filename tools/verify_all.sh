@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
 # One-command verification sweep: unit/e2e tests, the oracle gate in both
-# session modes at the driver's grading scale, and the headline bench.
+# session modes at the driver's grading scale, and both perfbench workloads.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -20,5 +20,8 @@ echo "== oracle gate (adversarial edge dataset, full registry) =="
 python tools/make_edge_sf.py > /dev/null
 python tools/oracle_check.py /tmp/edge_sf 2>&1 | tail -1
 
-echo "== bench (sf0.1) =="
-SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python bench.py 2>/dev/null | tail -1
+echo "== perfbench batch_etl =="
+python3 perfbench/run.py --workload batch_etl --seed 1 --seconds 10 --trace 0 | tail -1
+
+echo "== perfbench query_mix =="
+python3 perfbench/run.py --workload query_mix --seed 1 --seconds 10 --trace 0 | tail -1

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..functions import hashing
 from ..plans.llm import corpus_prep_pipeline
+from ..sinks import write_parquet
 
 
 @dataclass
@@ -71,11 +72,7 @@ def run_corpus_pipeline(spark: SparkSession, cfg: CorpusConfig) -> dict:
         # mergeable across tasks) — the HLL sketch is the mergeable form
         F.approx_count_distinct("lang").alias("languages"),
     )
-    (
-        out.write.mode("overwrite")
-        .partitionBy("split", "lang")
-        .parquet(cfg.output_dir)
-    )
+    write_parquet(out, cfg.output_dir, partition_by=["split", "lang"])
     stats = dict(obs.get)
     stats["elapsed_s"] = round(time.perf_counter() - t0, 3)
     return stats

@@ -5,7 +5,9 @@ A constraint suite compiles to the MINIMUM number of Spark jobs:
 - every row-level constraint (``not_null``, ``in_range``,
   ``accepted_values``, ``matches_regex``, ``satisfies``) becomes one
   ``sum(when(violated, 1))`` term in a SINGLE aggregate pass over the
-  table — adding a constraint adds a column to one job, not a job;
+  table — adding a constraint adds a column to one job, not a job; a
+  suite without row-level constraints skips that pass (and its row
+  count) entirely;
 - each ``unique`` key set needs its own groupBy (a shuffle per key set —
   that is inherent: different keys, different partitioning);
 - each ``foreign_key`` is a left-anti join against the (broadcast-sized or
@@ -87,7 +89,10 @@ def foreign_key(col: str, ref: DataFrame, ref_col: str) -> Constraint:
 
 @dataclass
 class ConstraintReport:
-    row_count: int
+    #: rows in the validated table; ``None`` when the suite has no row-level
+    #: constraint, because the count rides the row-level pass and is not
+    #: worth a scan of its own
+    row_count: int | None
     #: constraint name -> number of violating rows (for ``unique``: number of
     #: rows in key groups of size > 1, i.e. rows that would collide)
     violations: dict[str, int]
@@ -105,15 +110,18 @@ def validate(df: DataFrame, constraints: list[Constraint]) -> ConstraintReport:
 
     violations: dict[str, int] = {}
 
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    aggs += [
-        F.sum(F.when(c.violated, 1).otherwise(0)).alias(f"__v{i}")
-        for i, c in enumerate(row_cs)
-    ]
-    row = df.agg(*aggs).collect()[0]
-    n = row["__n"]
-    for i, c in enumerate(row_cs):
-        violations[c.name] = int(row[f"__v{i}"] or 0)
+    n = None
+    if row_cs:
+        row = df.agg(
+            F.count(F.lit(1)).alias("__n"),
+            *[
+                F.sum(F.when(c.violated, 1).otherwise(0)).alias(f"__v{i}")
+                for i, c in enumerate(row_cs)
+            ],
+        ).collect()[0]
+        n = int(row["__n"])
+        for i, c in enumerate(row_cs):
+            violations[c.name] = int(row[f"__v{i}"] or 0)
 
     for c in uniq_cs:
         collisions = (
@@ -137,7 +145,7 @@ def validate(df: DataFrame, constraints: list[Constraint]) -> ConstraintReport:
         )
         violations[c.name] = int(orphans)
 
-    return ConstraintReport(row_count=int(n), violations=violations)
+    return ConstraintReport(row_count=n, violations=violations)
 
 
 def sample_violations(
