@@ -9,27 +9,43 @@ import pytest
 
 from tests.conftest import SF_SMALL
 from tools.oracle_check import duck_con
-from walmart_retail_pyspark_sqlite_pipeline_spark.plans import (
-    REGISTRY,
-    all_specs,
-    queries_map,
+from walmart_retail_pyspark_sqlite_pipeline_spark.plans import all_specs, registry
+from walmart_retail_pyspark_sqlite_pipeline_spark.plans.registry import (
+    EXPORTED,
+    QuerySpec,
+    register,
 )
 
-# all_specs includes the local-only registry (strict sub-plans / alternate
-# surfaces kept out of the driver's 50-query window but oracle-checked here)
+# every registered query, exported or local-only, is checked here
 SPECS = all_specs(include_local=True)
 QUERIES = {n: s.fn for n, s in SPECS.items()}
 ORACLES = {n: s.oracle for n, s in SPECS.items() if s.oracle is not None}
 
 
 def test_exported_registry_fits_driver_window():
-    # the driver grades at most 50 queries; everything beyond that budget
-    # must live in LOCAL_REGISTRY instead
-    queries_map()
-    assert len(REGISTRY) <= 50, (
-        f"exported registry has {len(REGISTRY)} queries; move sub-plans to "
-        "register_local so the driver window covers every exported query"
-    )
+    # the driver checks at most 50 queries
+    assert len(EXPORTED) <= 50, f"EXPORTED names {len(EXPORTED)} queries"
+
+
+def test_entry_point_exports_exactly_the_exported_set():
+    import __spark_entry__ as e
+
+    assert set(e.queries()) == EXPORTED
+    assert set(e.oracle_sql()) == EXPORTED
+
+
+def test_register_rejects_a_duplicate_name():
+    name = next(iter(EXPORTED))
+    with pytest.raises(ValueError, match="duplicate query name"):
+        register(QuerySpec(name, SPECS[name].fn, None))
+    assert registry.REGISTRY[name] is SPECS[name]
+
+
+def test_load_all_rejects_an_unregistered_exported_name(monkeypatch):
+    monkeypatch.setattr(registry, "EXPORTED", EXPORTED | {"no_such_query"})
+    with pytest.raises(RuntimeError, match="no_such_query"):
+        registry.queries_map()
+
 
 #: queries whose full run is slow-ish; still covered by oracle_check
 _SMOKE_ONLY: set[str] = set()
@@ -60,269 +76,6 @@ def test_entry_smoke(spark):
 
     rows = e.entry(spark).collect()
     assert len(rows) == 10
-
-
-def test_rotation_never_orphans_a_capability_tag():
-    """Every SURVEY §2 / extension tag owned by ANY registry query must be
-    either (a) owned by a query in the EXPORTED (driver-graded) window,
-    (b) owned by a query PARKED after >=1 green driver round — the round-6
-    convergence policy (VERDICT r5 "Next round" #3): one green row IS
-    driver evidence, and holding slots for second greens kept the
-    never-graded backlog from converging — proven by the
-    CORRECTNESS_r*.json history the driver wrote — or (c) in the short
-    documented exception list below. This is the invariant each round's
-    export rotation has to preserve."""
-    from pathlib import Path
-
-    from walmart_retail_pyspark_sqlite_pipeline_spark.plans.evidence import (
-        green_rounds,
-    )
-    from walmart_retail_pyspark_sqlite_pipeline_spark.plans.registry import (
-        LOCAL_REGISTRY,
-        all_specs,
-    )
-
-    all_specs()
-    exported_tags = {t for s in REGISTRY.values() for t in s.tags}
-
-    repo = Path(__file__).resolve().parent.parent
-    greens = green_rounds(repo)
-    parked_proven_tags = {
-        t
-        for s in LOCAL_REGISTRY.values()
-        if len(greens.get(s.name, [])) >= 1
-        for t in s.tags
-    }
-
-    # local-only tags with no twice-green owner, covered by an exported
-    # composition or by pytest-only surfaces (documented here so a bad
-    # rotation fails loudly with a diff)
-    covered_elsewhere = {
-        "UDTF1",  # text_chunks_udtf: same oracle as exported text_chunks
-        "SET1",   # q10 distinct set ops: multiset form proven via q28 (3x green)
-        "C10", "C11", "C12",  # function-surface demos (q24-q26), 1x green r2
-        "MM3", "MM4", "MM5",  # multimodal plumbing: MM1 proven; header
-        # decode real (test_multimodal), pixel kernels stubbed
-        "TX10",  # BPE merge-candidate training step: TX5 tokenizer proven
-        # new round-5 capabilities awaiting their first rotation window
-        "DD15",  # exact 13-gram substring dedup: DD1-DD9 family proven
-        "CP2",   # token-budget source rebalance: CP1/PIPE3-6 family proven
-        "TX13",  # bigram LM scoring: TX1-TX7 text family proven
-        # round-5 batch 2, awaiting their first rotation window
-        "DD16",  # asymmetric containment dedup: DD1-DD9 family proven
-        "DD17",  # normalized-exact dedup: DD1 exact-hash proven
-        "TX14",  # char-entropy quality signal: TX family proven
-        "TS8",   # MAD anomaly flags: z-score twin (TS6 family) proven
-        "TS9",   # top event paths: lead-window family (TS/W) proven
-        "MB1",   # market-basket pair mining: join/agg families proven
-        "QB1",   # Benford digit audit: QC family proven
-        "IT4",   # label propagation: iterative-graph family (IT1/IT2) proven
-        "CP3",   # DSIR importance weights: LM family (TX13) + samplers proven
-        "TX15",  # Flesch readability: text-quality family proven
-        "SIM10",  # RRF fusion: retriever family (SIM1/SIM5) proven
-        "TS10",  # windowed funnel: funnel family (TS3/ST9) proven
-        "TS11",  # Markov transitions: lead-window family proven
-        "DD18",  # minhash estimator error: DD3/DD4 + eval family proven
-        # round-5 batch 3, awaiting their first rotation window
-        "TS12",  # lag-k autocorrelation: exact-moments family (TS6) proven
-        "TS13",  # seasonal-naive forecast baseline: daily-rollup family proven
-        "TS14",  # dwell-time percentiles: lead-window + percentile (TS8) proven
-        "Q5",   # KS drift statistic: drift family (Q4 chi2, driver-green) proven
-        "Q6",   # PSI drift terms: drift family (Q4) + fixed-point-ln (TX13) proven
-        "ABC1",  # Pareto ABC classification: window+agg families proven
-        "REG1",  # per-group OLS slope: exact-moments family (TS6/TS12) proven
-        "LAT1",  # LATERAL correlated subquery: SQL-surface family (SQ1/SQ2) proven
-        "IT5",  # triangle census: LSH-graph family (IT1 CC driver-green) proven
-        "TX16",  # Zipf slope: fixed-point-ln + exact-moments families proven
-        "BLM1",  # Bloom-prefiltered contamination: exact twin (PIPE2) driver-green
-        "ST10",  # streaming dropDuplicates dedup: stream==batch family (ST1) proven
-        "TS15",  # dyadic-weight EWMA smoother: daily-rollup + DIV-round families proven
-        "W6",   # ntile/percent_rank/cume_dist: window family (W1-W5) proven
-        "SIM11",  # product-quantization ADC: ANN family (SIM2/SIM4 driver-green) proven
-        "SK3",  # from-scratch HLL registers: sketch family (SK1 driver-green) proven
-        "TX17",  # langid confusion matrix: langid (TX1 driver-green) + agg proven
-        "RC1",  # WITH RECURSIVE spine: SQL-surface family + gapfill (TS1) proven
-        "CP4",  # split-leakage audit: LSH pairs (DD3) + split (CP1) driver-green
-        # round-7 additions, awaiting their first rotation window
-        "SIM13",  # packed-BIGINT Hamming: covered-by ann_hamming_topk (exported
-        # r7), packed==unpacked agreement exported in every row
-        "SK6",  # KMV set-op sketches: sketch family (SK1/SK3 driver-green)
-        # proven; queued for round 8
-        "DD21",  # SemDeDup learned-cluster pruning: blocked-cosine (DD13) +
-        # IVF assignment (SIM2) families proven; queued for round 8
-        "TS24",  # CUSUM drawup change-point: anomaly family (TS6 z-score,
-        # TS8 MAD) + window cumsum proven; queued for round 8
-        "SIM14",  # MIPS inner-product top-k: ANN family (SIM1 driver-green)
-        # + in-row reduction proof; queued for round 8
-        "QG1",  # Gopher rule ledger: text-quality (TX2) + constraint-suite
-        # (QC5/QC7) families proven; queued for round 8
-        "Q7",   # join-key skew diagnostics: QC family + percentile (TS8) proven
-        "REG2",  # multivariate OLS normal equations: exact-moments (REG1) family
-        "CDC1",  # MERGE-shaped CDC apply: SCD/lifecycle family (SCD1 driver-green)
-        "DD19",  # winnowing fingerprints: dedup family (DD2/DD3 driver-green) proven
-        "BMP1",  # bitmap-packed retention: bit_or bitmap (BLM1) + cohort (TS4) proven
-        "TS16",  # hourly OHLC candles: window-rank + agg families proven
-        "TS17",  # gaps-and-islands streak histogram: window families proven
-        "TS18",  # bounce rate per entry type: sessionization (RJ2 driver-green) proven
-        "TS19",  # mutual-information cells: fixed-point-ln + tiny-rollup families
-        "DD20",  # dup rate by source: exact-hash dedup (DD1 driver-green) + agg
-        "TX18",  # PMI collocations: fixed-point-ln + lead-window families proven
-        "TS20",  # WoW percent change: weekly rollup + lag + DIV-round families
-        "DD21",  # threshold sensitivity curve: shares the LSH candidate path (DD3)
-        "TS21",  # new-vs-returning growth split: keyed-agg families proven
-        "TS22",  # revenue concentration: percentile (TS8) + conditional-agg
-        "TS23",  # audience-overlap Jaccard: keyed self-join + DIV-round families
-        # round-6 additions, queued in GRADE_QUEUE for the round-7 window
-        "SK4",  # from-scratch Count-Min sketch: sketch family (SK1/SK3) proven
-        "SK5",  # fixed-grid histogram quantiles: sketch family (SK2) proven
-        "QE1",  # encoding-damage audit: per-row-predicate QC family proven
-        "TX19",  # iterative BPE training loop: TX10 kernel + IT-family loop proven
-        "SIM12",  # 1-bit sign Hamming top-k: ANN family (SIM2/SIM11) proven
-        # round-7 batch 2, queued in GRADE_QUEUE for the round-8 window
-        "SK7",  # mergeable Misra-Gries heavy hitters: sketch family
-        # (SK1/SK3/SK4 driver-green) proven; queued for round 8
-        "CP5",  # temperature source-mixing weights: mix family (CP1
-        # driver-green r6, CP2 token rebalance driver-green r6) proven
-        "CP6",  # cumulative n-gram novelty curve: shingle-index family
-        # (DD2 driver-green) + bucket-rollup proven; queued for round 8
-        # round-7 batch 3, queued in GRADE_QUEUE for the round-8 window
-        "IT6",  # per-node clustering coefficient: graph family (IT2
-        # triangles / IT3 pagerank driver-green) proven; queued for round 8
-        "SK8",  # AMS F2 second-moment sketch: sketch family
-        # (SK1/SK3/SK4 driver-green) proven; queued for round 8
-        "TS25",  # seasonal decomposition: calendar-window family
-        # (TS1/TS24 driver-green) proven; queued for round 8
-        # round-8 additions, queued in GRADE_QUEUE for the round-9 window
-        "TX20",  # BM25 top-k retrieval: tf/df/length-norm families (TX9
-        # tfidf driver-green) proven; queued for round 9
-        "SIM15",  # JL sign projection + distortion audit: fixed-point
-        # vector families (SIM2/SIM12 driver-green) proven; queued for 9
-        "ST11",  # native session_window streaming sessionization: ST2
-        # streaming agg + ST1 batch sessionize driver-green; queued for 9
-        "DD22",  # IVF two-level SemDeDup: DD21 semdedup (graded r8) +
-        # SIM3 ivf machinery families proven; queued for round 9
-        "SIM16",  # int8-propose + exact-rerank cascade: SIM2/SIM7 int8
-        # families driver-green; queued for round 9
-        "MM6",  # decode->embed->ANN composition: MM4 features (graded
-        # r8) + SIM2 cosine top-k driver-green; queued for round 9
-        # round-8 batch 4 (post-review), queued for the round-9 window
-        "QA1",  # k-anonymity QI audit: groupBy/conditional-agg families
-        # (Q7 key-skew, A1-A8) driver-green; queued for round 9
-        "CP7",  # per-source KL divergence: fixed-point-ln (TX13/TX9) +
-        # source-mix (CP1) families driver-green; queued for round 9
-        "ST12",  # stream-static broadcast enrichment join: ST2 streaming
-        # agg + J1/J2 join families driver-green; queued for round 9
-        # round-9 additions, queued in GRADE_QUEUE for the round-10 window
-        "TX21",  # batched BM25 (query TABLE): TX20 scoring kernel exported
-        # r9 + the ann_knn_join per-key window idiom; queued for round 10
-        "SIM17",  # composed IVF-PQ (faiss IVFADC): SIM4 ivf + SIM11 pq,
-        # both driver-evidenced / in the r9 window; queued for round 10
-        "QA2",  # distinct l-diversity audit: QA1 k-anonymity frame (in the
-        # r9 window) + A2 countDistinct driver-green; queued for round 10
-        "MM7",  # scene-cut detection: MM2 frame expansion (driver-green)
-        # + per-doc window families proven; queued for round 10
-        "SIM18",  # batch rerank cascade: SIM16 cascade (in the r9 window)
-        # over the SIM11/knn-join query-block idiom; queued for round 10
-        "SIM19",  # Matryoshka prefix-recall eval: SIM2 cosine-topk +
-        # recall-eval (SIM4 ivf_recall) families proven; queued for 10
-        "CP8",  # linear quality-classifier inference: quality_score (TX2,
-        # driver-green) + gopher-rule (QG1) feature families; queued for 10
-        "PIPE7",  # classifier-gated prep pipeline: composes CP8 + the
-        # graded PIPE1 dedup legs verbatim; queued for round 10
-        # --- round-11 additions, queued for round 12 ---
-        "DD24",  # SoftDeDup down-weighting: DD1 exact-hash + DD3 LSH
-        "CP11",  # pairs (both driver-green) feeding one weight rule
-        "TX24",  # held-out add-one LM eval: TX13 LM frame (graded) on a
-        # doc_id train/val fold
-        "CP12",  # classifier-vs-rule calibration: CP8 classifier +
-        # TX2 quality rule, both graded r10
-        "MM9",  # energy VAD segments: MM7 frame-energy pass (graded
-        # r10) + gaps-and-islands windows
-        "SK9",  # CMS heavy changers: SK2 CMS machinery (driver-green)
-        # per corpus half + exact eval
-        "IT8",  # per-dim rank-quantile clip bounds: embeddings-infra
-        # family (IT3/IT6 driver-green) + exact rank windows
-        # --- round-10 additions, queued for round 11 ---
-        "QA3",  # t-closeness audit: QA1/QA2 governance frame + exact
-        # ordered-EMD windows; queued for round 11
-        "TX22",  # BM25 pseudo-relevance feedback: TX20 BM25 (graded r10
-        # window) run twice with a mined broadcast term table
-        "CP9",  # water-filling token-budget allocator: CP2 census +
-        # bounded-domain windows; queued for round 11
-        "DD23",  # b-bit minhash estimate-vs-exact: DD2 signature/LSH
-        # machinery (driver-green) + integer estimator; queued for 11
-        "MM8",  # keyframe selection: MM7 frame-energy pass (graded r10
-        # window) + per-doc rank window; queued for round 11
-        "TX23",  # Jelinek-Mercer interpolated LM: TX13 add-one LM frame
-        # with the exact rational mixture; queued for round 11
-        "CP10",  # curriculum phase schedule: TX2 quality-micro bands x
-        # source composition; queued for round 11
-        "IT7",  # deflated power iteration (top-2 components): IT3
-        # power-method frame + Gram-Schmidt step; queued for round 11
-        # --- round-12 additions, queued for round 13 ---
-        "DD25",  # 60-bit SimHash banded-LSH pairs: DD3 band-bucket-verify
-        # frame (driver-green) on the simhash fingerprint family
-        "SIM20",  # cosine radius search: SIM1 exact-cosine scan
-        # (driver-green) with a threshold instead of top-k
-        "IT9",  # per-dim whitening moments: embeddings-infra family
-        # (IT3/IT6/IT8) + the exact-moments frame (TS6)
-        "TX26",  # Kneser-Ney LM: TX13/TX23 LM frame (graded) with
-        # continuation-count windows
-        "CP13",  # tokenizer fertility: CP1 source-mix census (graded) off
-        # the shared postings index
-        "TX25",  # PII census: TX2 text-quality predicate frame
-        # (driver-green), split-based detection
-        "TS26",  # last-touch attribution: lead/lag-window family
-        # (TS9/TS11 driver-green) + the q42 whole-frame total idiom
-        # round-13 additions, queued in GRADE_QUEUE for the round-14 window
-        "RK1",  # distributed exact global rank: the q41 ntile machinery
-        # (driver re-grade r13) exposed as operators/ranking.py
-        "QR1",  # FK orphan census: constraint-suite (QC5 driver-green) +
-        # anti/left-join families proven
-        "TS27",  # U-shaped position attribution: last-touch twin (TS26) +
-        # partitioned journey windows (TS3/TS9 driver-green)
-        "CP14",  # CCNet perplexity terciles: bigram-LM scoring (TX13
-        # driver-green r12) + partitioned ntile (W5/W6)
-        "ST13",  # stream-stream interval join: streaming family (ST1/ST10
-        # driver-green) + the round-1 batch-equality pytest
-        "TS28",  # Markov removal-effect attribution: transition matrix
-        # (TS11 driver-green) + fixed-iteration chains (IT4 label-prop)
-        "DD26",  # growing-cell pair export: shares dedup_semantic_ivf's
-        # two-level assignment (DD22, exported r13) verbatim
-        # round-14 additions, queued in GRADE_QUEUE for the round-15 window
-        "CP40",  # seeded training-order shuffle: rides the RK1 rank
-        # primitive (q48 exported r14) + md5 keying (DD1 driver-green)
-        "SK10",  # HDR log2-bucket quantiles: sketch family (SK2/SK5
-        # driver-green) + integer bit arithmetic (SIM13 bin/shift)
-        "TS29",  # two-proportion z-test: conditional-agg families (A1-A8,
-        # TS21 driver-green) + the markov mirrored-double precedent
-        "SIM17",  # known-item MRR eval: exact leg (SIM4 ivf_recall
-        # driver-green) + batch knn (SIM6) + micro-int reciprocal ranks
-        "TS30",  # time-decay attribution: TS27 journey windows
-        # (driver-green r14 window) + power-of-two BIGINT weights with
-        # the TS27 micro-credit DIV idiom
-        "TS31",  # CUPED A/B readout: TS29 conditional-agg readout frame
-        # + the TS28/TS29 mirrored-double discipline over exact moments
-        "DD27",  # content-defined chunk dedup: DD10 chunk-histogram
-        # shape (driver-green) + poly-hash rolling windows (DD2/TX frame)
-        "TS32",  # SRM guard + power analysis: 1-row conditional-agg
-        # readouts on the TS29 experiment frame, mirrored doubles
-        "FE1",  # K-fold target encoding: bounded-enum agg (A1/A3
-        # driver-green) + partitioned/bounded windows + micro-int DIV
-    }
-    orphaned = {
-        t
-        for s in LOCAL_REGISTRY.values()
-        for t in s.tags
-        if t not in exported_tags
-        and t not in parked_proven_tags
-        and t not in covered_elsewhere
-    }
-    assert orphaned == set(), (
-        f"rotation orphaned capability tags {sorted(orphaned)}: no exported "
-        "query carries them, no parked owner has >=2 green driver rounds, "
-        "and they are not in the covered-elsewhere list"
-    )
 
 
 def test_embedding_oracles_use_the_canonical_source_contract():

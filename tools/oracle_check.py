@@ -2,8 +2,7 @@
 on Spark AND its oracle SQL on DuckDB, compare row-count + schema-shape +
 order-insensitive values (exact, with a float-approx fallback diagnostic).
 
-Checks every exported registry query plus the local-only registry (strict
-sub-plans / alternate surfaces the driver doesn't grade).
+Checks every registered query, exported or local-only.
 
 Usage: python tools/oracle_check.py [--plain] [--tz ZONE] [sf_dir] [query_name ...]
 """

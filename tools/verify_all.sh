@@ -1,11 +1,14 @@
 #!/usr/bin/env bash
-# One-command verification sweep: unit/e2e tests, the oracle gate in both
-# session modes at the driver's grading scale, and both perfbench workloads.
+# One-command verification sweep: the Tier-1 test command, the oracle gate in
+# both session modes at sf0.01, and both perfbench workloads.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-echo "== pytest =="
-python -m pytest tests/ -q
+echo "== pytest (Tier-1) =="
+(
+  export SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local
+  timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+)
 
 echo "== oracle gate (engine session, sf0.01) =="
 python tools/oracle_check.py /root/testdata/sf0.01 2>&1 | tail -1

@@ -98,13 +98,8 @@ def int8_quantize(v: Column) -> Column:
     (``x * s`` with ``s`` a per-row column) was never affected — DuckDB
     materializes the alias.
 
-    Deliberately a NEW entry point rather than a rewrite of a shared
-    helper: only the int8-ANN family consumes it — ``ann_int8_topk``,
-    ``ann_rrf_fusion``, ``ann_rerank_two_stage`` (all exported in the
-    round-9 window), ``ann_rerank_batch`` (GRADE_QUEUE, round 10), and
-    the permanently-local ``ann_rerank_audit`` (COVERED_BY) — so the
-    closure-hash drift lands only on queries already scheduled for a
-    grade or outside the evidence ledger (memory: closure-blast-radius).
+    Its consumers are the int8-ANN queries: ``ann_int8_topk``,
+    ``ann_rrf_fusion`` and the ``ann_rerank_*`` cascade.
     """
     scale = F.lit(127.0) / F.array_max(F.transform(v, F.abs))
     return F.zip_with(

@@ -1,5 +1,4 @@
 from .registry import (
-    LOCAL_REGISTRY,
     REGISTRY,
     QuerySpec,
     all_specs,
@@ -8,7 +7,6 @@ from .registry import (
 )
 
 __all__ = [
-    "LOCAL_REGISTRY",
     "REGISTRY",
     "QuerySpec",
     "all_specs",

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..sources import read_table
-from .registry import QuerySpec, register, register_local
+from .registry import QuerySpec, register
 
 
 def events_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -111,7 +111,6 @@ ORDER BY cohort, week_offset
 """
 
 
-# round-3 rotation: driver-graded.
 register(
     QuerySpec(
         "events_cohort_retention",
@@ -201,7 +200,6 @@ ORDER BY step_no
 """
 
 
-# round-3 rotation: driver-graded.
 register(
     QuerySpec(
         "events_funnel_conversion",
@@ -450,7 +448,7 @@ ORDER BY step_no
 """
 
 
-register_local(
+register(
     QuerySpec(
         "events_funnel_windowed",
         events_funnel_windowed,

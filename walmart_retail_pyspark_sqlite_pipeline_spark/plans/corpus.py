@@ -27,7 +27,7 @@ from .llm import (
     _doc_shingles,
     dedup_minhash_lsh_pairs,
 )
-from .registry import QuerySpec, register, register_local
+from .registry import QuerySpec, register
 
 #: context-window budget (tokens) for pack assignment.
 PACK_BUDGET = 512
@@ -201,7 +201,7 @@ ORDER BY hits.doc_id
 # graph algorithms (this is exactly how GraphX/GraphFrames CC works); the
 # per-round `.count()` is the convergence test on a node-sized (not
 # edge-sized) table. Oracle: DuckDB recursive CTE computing min reachable
-# node. Local-registry (iterative; exported window is full).
+# node.
 # ---------------------------------------------------------------------------
 CC_MAX_ITERS = 15
 
@@ -301,8 +301,7 @@ for _spec in [
 ]:
     register(_spec)
 
-# iterative graph algorithm, oracle = DuckDB recursive-CTE twin; promoted to
-# the driver window in the round-4 rotation (first hard-signal row for DD9)
+# iterative graph algorithm, oracle = DuckDB recursive-CTE twin
 register(
     QuerySpec("dedup_cc_clusters", dedup_cc_clusters, CC_CLUSTERS_SQL, ("DD9",))
 )
@@ -399,7 +398,7 @@ for _spec in [
     QuerySpec("corpus_source_mix", corpus_source_mix, CORPUS_SOURCE_MIX_SQL,
               ("CP1",)),
 ]:
-    register_local(_spec)
+    register(_spec)
 
 
 # ---------------------------------------------------------------------------
@@ -458,7 +457,7 @@ ORDER BY doc_id, rnk
 """
 
 
-register_local(
+register(
     QuerySpec("text_tfidf_topterms", text_tfidf_topterms, TFIDF_SQL, ("TX9",))
 )
 
@@ -510,7 +509,7 @@ SELECT n_copies, COUNT(*) AS n_groups FROM (
 """
 
 
-register_local(
+register(
     QuerySpec(
         "corpus_chunk_dedup",
         corpus_chunk_dedup,
@@ -618,7 +617,7 @@ SELECT node AS doc_id, ROUND(rank, 9) AS pagerank FROM it3 ORDER BY doc_id
 """
 
 
-register_local(
+register(
     QuerySpec(
         "corpus_pagerank",
         corpus_pagerank,
@@ -708,7 +707,7 @@ ORDER BY cluster_id
 """
 
 
-register_local(
+register(
     QuerySpec(
         "corpus_canonical_docs",
         corpus_canonical_docs,
@@ -889,7 +888,7 @@ ORDER BY p.doc_id
 """
 
 
-register_local(
+register(
     QuerySpec(
         "dedup_substring_ngrams",
         dedup_substring_ngrams,
@@ -1015,7 +1014,7 @@ ORDER BY probs.source
 """
 
 
-register_local(
+register(
     QuerySpec(
         "corpus_token_rebalance",
         corpus_token_rebalance,
@@ -1145,7 +1144,7 @@ ORDER BY doc_id
 """
 
 
-register_local(
+register(
     QuerySpec(
         "text_lm_score",
         text_lm_score,
@@ -1271,7 +1270,7 @@ ORDER BY d.doc_id
 """
 
 
-register_local(
+register(
     QuerySpec(
         "corpus_label_propagation",
         corpus_label_propagation,
@@ -1433,7 +1432,7 @@ ORDER BY d.doc_id
 """
 
 
-register_local(
+register(
     QuerySpec(
         "corpus_importance_weights",
         corpus_importance_weights,
@@ -1534,7 +1533,7 @@ FROM shape, e, tri
 """
 
 
-register_local(
+register(
     QuerySpec(
         "corpus_triangles",
         corpus_triangles,
@@ -1631,7 +1630,7 @@ FROM m
 """
 
 
-register_local(
+register(
     QuerySpec(
         "text_zipf_slope",
         text_zipf_slope,
@@ -1750,7 +1749,7 @@ ORDER BY doc_id
 """
 
 
-register_local(
+register(
     QuerySpec(
         "corpus_bloom_contamination",
         corpus_bloom_contamination,
@@ -1827,7 +1826,7 @@ ORDER BY split_lo, split_hi
 """
 
 
-register_local(
+register(
     QuerySpec(
         "corpus_split_leakage",
         corpus_split_leakage,
@@ -1874,7 +1873,7 @@ ORDER BY source
 """
 
 
-register_local(
+register(
     QuerySpec(
         "corpus_dup_rate_by_source",
         corpus_dup_rate_by_source,
@@ -1986,7 +1985,7 @@ ORDER BY source
 """
 
 
-register_local(
+register(
     QuerySpec(
         "corpus_encoding_audit",
         corpus_encoding_audit,
@@ -2184,7 +2183,7 @@ ORDER BY rule
 GOPHER_RULES_SQL = _gopher_sql()
 
 
-register_local(
+register(
     QuerySpec(
         "corpus_gopher_rules",
         corpus_gopher_rules,
@@ -2292,7 +2291,7 @@ ORDER BY source
 """
 
 
-register_local(
+register(
     QuerySpec(
         "corpus_temperature_mix",
         corpus_temperature_mix,
@@ -2427,7 +2426,7 @@ ORDER BY bucket
 """
 
 
-register_local(
+register(
     QuerySpec(
         "corpus_novelty_curve",
         corpus_novelty_curve,
@@ -2538,7 +2537,7 @@ ORDER BY d.node
 """
 
 
-register_local(
+register(
     QuerySpec(
         "corpus_clustering_coeff",
         corpus_clustering_coeff,
@@ -2671,7 +2670,7 @@ ORDER BY source
 """
 
 
-register_local(
+register(
     QuerySpec(
         "corpus_kl_divergence",
         corpus_kl_divergence,
@@ -2819,7 +2818,7 @@ FROM clf ORDER BY doc_id
 """
 
 
-register_local(
+register(
     QuerySpec(
         "corpus_quality_classifier",
         corpus_quality_classifier,
@@ -2915,7 +2914,7 @@ ORDER BY k.doc_id
 """
 
 
-register_local(
+register(
     QuerySpec(
         "corpus_prep_pipeline_clf",
         corpus_prep_pipeline_clf,
@@ -3085,7 +3084,7 @@ FROM alloc ORDER BY source
 """
 
 
-register_local(
+register(
     QuerySpec(
         "corpus_token_budget_waterfill",
         corpus_token_budget_waterfill,
@@ -3223,7 +3222,7 @@ ORDER BY doc_id
 """
 
 
-register_local(
+register(
     QuerySpec(
         "text_lm_interpolated",
         text_lm_interpolated,
@@ -3323,7 +3322,7 @@ ORDER BY phase, source
 """
 
 
-register_local(
+register(
     QuerySpec(
         "corpus_curriculum_phases",
         corpus_curriculum_phases,
@@ -3416,7 +3415,7 @@ ORDER BY ex.doc_id
 """
 
 
-register_local(
+register(
     QuerySpec(
         "corpus_soft_dedup_weights",
         corpus_soft_dedup_weights,
@@ -3537,7 +3536,7 @@ ORDER BY doc_id
 """
 
 
-register_local(
+register(
     QuerySpec(
         "text_lm_heldout_perplexity",
         text_lm_heldout_perplexity,
@@ -3624,7 +3623,7 @@ ORDER BY bin
 """
 
 
-register_local(
+register(
     QuerySpec(
         "corpus_quality_calibration",
         corpus_quality_calibration,
@@ -3767,7 +3766,7 @@ ORDER BY doc_id
 """
 
 
-register_local(
+register(
     QuerySpec(
         "corpus_lm_kneser_ney",
         corpus_lm_kneser_ney,
@@ -3858,7 +3857,7 @@ ORDER BY source, lang
 """
 
 
-register_local(
+register(
     QuerySpec(
         "corpus_tokenizer_fertility",
         corpus_tokenizer_fertility,
@@ -3949,7 +3948,7 @@ ORDER BY source
 """
 
 
-register_local(
+register(
     QuerySpec(
         "text_pii_detect",
         text_pii_detect,
@@ -4069,7 +4068,7 @@ ORDER BY lang, bucket
 """
 
 
-register_local(
+register(
     QuerySpec(
         "corpus_ccnet_perplexity_buckets",
         corpus_ccnet_perplexity_buckets,
@@ -4148,7 +4147,7 @@ ORDER BY doc_id
 """
 
 
-register_local(
+register(
     QuerySpec(
         "corpus_training_order",
         corpus_training_order,
@@ -4288,7 +4287,7 @@ FROM (
 """
 
 
-register_local(
+register(
     QuerySpec(
         "corpus_cdc_chunk_dedup",
         corpus_cdc_chunk_dedup,

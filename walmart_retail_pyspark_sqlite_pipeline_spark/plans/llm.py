@@ -25,7 +25,7 @@ from pyspark.sql.window import Window
 from ..functions import hashing, text, vectors
 from ..multimodal import attach_fake_payload, frame_sample, image_meta
 from ..sources import read_embeddings, read_table
-from .registry import QuerySpec, register, register_local
+from .registry import QuerySpec, register
 
 P = hashing.MERSENNE_P
 PERMS = hashing.MINHASH_PERMS
@@ -1152,7 +1152,7 @@ ORDER BY doc_id, frame_idx
 """
 
 
-register_local(
+register(
     QuerySpec(
         "multimodal_scene_cut",
         multimodal_scene_cut,
@@ -1177,8 +1177,7 @@ register_local(
 # shuffle by doc_id, three windows sharing that partitioning, per-doc
 # state bounded at 8 frames. The oracle reproduces the energies from the
 # payload's hex dump (the shared byte-walk idiom; CTEs mirror
-# SCENE_CUT_SQL's — kept textually identical rather than composed so the
-# graded scene-cut oracle string stays byte-stable).
+# SCENE_CUT_SQL's, kept textually identical rather than composed).
 # ---------------------------------------------------------------------------
 def multimodal_audio_vad_segments(
     spark: SparkSession, sf_dir: str
@@ -1287,7 +1286,7 @@ ORDER BY doc_id, seg_id
 """
 
 
-register_local(
+register(
     QuerySpec(
         "multimodal_audio_vad_segments",
         multimodal_audio_vad_segments,
@@ -1303,8 +1302,8 @@ register_local(
 # step). The EXPORTED surface is the Arrow-batched mapInPandas chunker
 # (operators/chunking.py) — the 100 TB path, no per-row Python call
 # overhead. The Python-UDTF formulation (SQL LATERAL join over
-# functions/udtfs.py::ChunkText) is kept as a local-registry twin
-# (text_chunks_udtf) demonstrating Spark 4's UDTF surface; both are graded
+# functions/udtfs.py::ChunkText) is kept as a local-only twin
+# (text_chunks_udtf) demonstrating Spark 4's UDTF surface; both are checked
 # against the same oracle, which reproduces the chunk arithmetic with
 # substr over a lateral range.
 # ---------------------------------------------------------------------------
@@ -1617,20 +1616,10 @@ SELECT doc_id, t, {hashing.poly_hash_sql('t')} AS h FROM uni
 """
 
 
-# Strict sub-plans of exported queries (signatures stage of the LSH pipeline;
-# cell assignment stage of IVF top-k; the shared shingle index every dedup
-# consumer reads): oracle-verified locally, not exported to the driver's
-# 50-query window. Round-3 rotation also parked ann_ivf_topk (SIM4/SIM2 now
-# driver-graded via ann_ivf_recall — which composes it — and
-# dedup_embedding_ivf_pairs), text_stats (TX3 exported via
-# corpus_prep_pipeline), and multimodal_frame_sample (MM plumbing graded via
-# multimodal_image_meta) here.
+# Dedup, ANN, text and sampling queries, including sub-plans of other
+# queries (signatures stage of the LSH pipeline; cell assignment stage of
+# IVF top-k; the shared shingle index every dedup consumer reads).
 for _spec in [
-    # round-4 rotation: six twice-driver-green queries parked here so the
-    # as-of/range-join/knn/cc-cluster/drift/timeseries families earn rows.
-    # Tag coverage stays exported: DD2/TX2 via corpus_prep_pipeline,
-    # DD3/DD4/DD7 via dedup_incremental_near_docs, SIM2 via ann_ivf_recall +
-    # ann_knn_join, PIPE3 via corpus_quality_weighted_sample, J4 via q13.
     QuerySpec("dedup_ngram_jaccard", dedup_ngram_jaccard, DEDUP_NGRAM_SQL,
               ("DD2",), bench=True, warm_index=True),
     QuerySpec("dedup_minhash_lsh_pairs", dedup_minhash_lsh_pairs,
@@ -1655,7 +1644,7 @@ for _spec in [
     QuerySpec("corpus_shingle_index", corpus_shingle_index,
               CORPUS_SHINGLE_INDEX_SQL, ("DD2", "DD3"), bench=True),
 ]:
-    register_local(_spec)
+    register(_spec)
 
 
 # ---------------------------------------------------------------------------
@@ -1719,7 +1708,7 @@ LIMIT {ANN_K}
 """
 
 
-register_local(
+register(
     QuerySpec(
         "ann_int8_topk",
         ann_int8_topk,
@@ -1876,9 +1865,8 @@ ORDER BY doc_new, doc_old
 """
 
 
-# round-3 rotation: dedup_embedding_ivf_pairs is the 100TB-scale form of
-# embedding dedup — it earns a driver-graded slot (freed by ann_ivf_topk,
-# whose plan it subsumes on the blocking side).
+# dedup_embedding_ivf_pairs blocks embedding dedup by IVF cell (the
+# ann_ivf_topk assignment on the blocking side).
 register(
     QuerySpec(
         "dedup_embedding_ivf_pairs",
@@ -2003,10 +1991,8 @@ for _spec in [
         doc="one BPE round: corpus-weighted adjacent char-pair merge scores",
     ),
 ]:
-    register_local(_spec)
+    register(_spec)
 
-# round-4 rotation: promoted (covers PIPE3 for the parked
-# corpus_stratified_sample, and PIPE4 gets its first driver row)
 register(
     QuerySpec(
         "corpus_quality_weighted_sample",
@@ -2135,7 +2121,7 @@ FROM tk ORDER BY doc_id
 """
 
 
-register_local(
+register(
     QuerySpec(
         "text_sentiment",
         text_sentiment,
@@ -2259,7 +2245,7 @@ GROUP BY 1 ORDER BY 1
 """
 
 
-register_local(
+register(
     QuerySpec(
         "entity_match_customers",
         entity_match_customers,
@@ -2315,11 +2301,10 @@ FROM r ORDER BY doc_id
 
 def multimodal_image_features_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN-ready shape: one ``array<double>`` column — the shape the
-    ``ann_*`` / ``dedup_embedding_*`` ops consume. Local-only (covered by
-    ``multimodal_image_features``): the driver's value hasher sorts a pandas
-    frame by every column, and a list column is unhashable there
-    (CORRECTNESS_r07 TypeError), so the DRIVER-graded export is the exploded
-    scalar twin below and this variant stays a covered-by local query."""
+    ``ann_*`` / ``dedup_embedding_*`` ops consume. Local-only: the driver's
+    value hasher sorts a pandas frame by every column, and a list column is
+    unhashable there, so ``multimodal_image_features`` exports the exploded
+    scalar twin below instead."""
     from ..multimodal import image_features
 
     docs = read_table(spark, sf_dir, "documents")
@@ -2414,7 +2399,7 @@ for _spec in [
         doc="byte-histogram feature vectors (CNN-embedding stand-in), ANN-ready",
     ),
 ]:
-    register_local(_spec)
+    register(_spec)
 
 
 # ---------------------------------------------------------------------------
@@ -2444,7 +2429,7 @@ FROM d ORDER BY doc_id
 """
 
 
-register_local(
+register(
     QuerySpec(
         "multimodal_audio_meta",
         multimodal_audio_meta,
@@ -2484,8 +2469,8 @@ FROM ({ANN_TOPK_SQL}) exact JOIN ({ANN_IVF_TOPK_SQL}) approx USING (vec_id)
 """
 
 
-# round-3 rotation: driver-graded — composes ann_ivf_topk against the exact
-# baseline, so one green row covers the whole IVF path (SIM2+SIM4).
+# composes ann_ivf_topk against the exact baseline, so one query checks the
+# whole IVF path (SIM2+SIM4).
 register(
     QuerySpec(
         "ann_ivf_recall",
@@ -2576,7 +2561,7 @@ ORDER BY cluster
 """
 
 
-register_local(
+register(
     QuerySpec(
         "embeddings_kmeans",
         embeddings_kmeans,
@@ -2654,7 +2639,7 @@ LIMIT {WSAMPLE_K}
 """
 
 
-register_local(
+register(
     QuerySpec(
         "corpus_weighted_sample_topk",
         corpus_weighted_sample_topk,
@@ -2726,7 +2711,7 @@ ORDER BY lang, lang_rank
 """
 
 
-register_local(
+register(
     QuerySpec(
         "corpus_balanced_sample_topk",
         corpus_balanced_sample_topk,
@@ -2845,7 +2830,7 @@ ORDER BY d
 """
 
 
-register_local(
+register(
     QuerySpec(
         "embeddings_top_component",
         embeddings_top_component,
@@ -2964,7 +2949,7 @@ ORDER BY doc_inner, doc_outer
 """
 
 
-register_local(
+register(
     QuerySpec(
         "dedup_containment",
         dedup_containment,
@@ -3048,7 +3033,7 @@ ORDER BY n_copies
 """
 
 
-register_local(
+register(
     QuerySpec(
         "dedup_normalized_exact",
         dedup_normalized_exact,
@@ -3150,7 +3135,7 @@ ORDER BY doc_id
 """
 
 
-register_local(
+register(
     QuerySpec(
         "text_char_entropy",
         text_char_entropy,
@@ -3228,7 +3213,7 @@ ORDER BY doc_id
 """
 
 
-register_local(
+register(
     QuerySpec(
         "text_readability",
         text_readability,
@@ -3371,7 +3356,7 @@ LIMIT {ANN_K}
 """
 
 
-register_local(
+register(
     QuerySpec(
         "ann_rrf_fusion",
         ann_rrf_fusion,
@@ -3524,7 +3509,7 @@ ORDER BY doc_a, doc_b
 """
 
 
-register_local(
+register(
     QuerySpec(
         "dedup_minhash_est_error",
         dedup_minhash_est_error,
@@ -3681,7 +3666,7 @@ WHERE rk <= {PQ_TOP_K}
 ANN_PQ_SQL = f"{ANN_PQ_BODY}\nORDER BY q_id, rk"
 
 
-register_local(
+register(
     QuerySpec(
         "ann_pq_topk",
         ann_pq_topk,
@@ -3815,7 +3800,7 @@ ORDER BY q_id, rk
 """
 
 
-register_local(
+register(
     QuerySpec(
         "ann_ivfpq_topk",
         ann_ivfpq_topk,
@@ -3885,7 +3870,7 @@ ORDER BY cell.stated, predicted
 """
 
 
-register_local(
+register(
     QuerySpec(
         "text_lang_confusion",
         text_lang_confusion,
@@ -4009,7 +3994,7 @@ ORDER BY doc_a, doc_b
 """
 
 
-register_local(
+register(
     QuerySpec(
         "dedup_winnowing_pairs",
         dedup_winnowing_pairs,
@@ -4106,7 +4091,7 @@ ORDER BY q.q_id
 """
 
 
-register_local(
+register(
     QuerySpec(
         "ann_pq_recall",
         ann_pq_recall,
@@ -4214,7 +4199,7 @@ LIMIT {COLLOC_TOP_K}
 """
 
 
-register_local(
+register(
     QuerySpec(
         "text_collocations",
         text_collocations,
@@ -4296,7 +4281,7 @@ ORDER BY threshold
 """
 
 
-register_local(
+register(
     QuerySpec(
         "dedup_threshold_curve",
         dedup_threshold_curve,
@@ -4439,7 +4424,7 @@ ORDER BY step
 TEXT_BPE_TRAIN_SQL = _bpe_train_sql()
 
 
-register_local(
+register(
     QuerySpec(
         "text_bpe_train",
         text_bpe_train,
@@ -4463,7 +4448,7 @@ register_local(
 # JVM-side inside codegen, TakeOrderedAndProject for top-k — at 100 TB a
 # production deployment additionally packs the 64 signs into one BIGINT
 # word per vector and XOR+bit_count's words: that packed form is
-# ann_hamming_packed below (local-only, covered-by this query), which
+# ann_hamming_packed below (local-only), which
 # cross-checks its word distances against these unpacked ones row-by-row.
 # ---------------------------------------------------------------------------
 def ann_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4507,7 +4492,7 @@ LIMIT {ANN_K}
 """
 
 
-register_local(
+register(
     QuerySpec(
         "ann_hamming_topk",
         ann_hamming_topk,
@@ -4538,7 +4523,7 @@ register_local(
 # overflow. Dims beyond 64 would chunk into ceil(dim/64) words with the
 # same weight trick per word; the embeddings table is dim-64, one word.
 #
-# Local-only, tiered covered-by ann_hamming_topk: same capability, the
+# Local-only, next to ann_hamming_topk: same capability, the
 # packed encoding is a storage/bandwidth optimization, not new semantics.
 # ---------------------------------------------------------------------------
 _HAM_MINLONG = -(2**63)
@@ -4613,7 +4598,7 @@ LIMIT {ANN_K}
 """
 
 
-register_local(
+register(
     QuerySpec(
         "ann_hamming_packed",
         ann_hamming_packed,
@@ -4792,7 +4777,7 @@ ORDER BY cluster
 """
 
 
-register_local(
+register(
     QuerySpec(
         "dedup_semantic_clusters",
         dedup_semantic_clusters,
@@ -4933,7 +4918,7 @@ ORDER BY rk_dot
 """
 
 
-register_local(
+register(
     QuerySpec(
         "ann_mips_topk",
         ann_mips_topk,
@@ -5155,7 +5140,7 @@ FROM ranked WHERE rk <= {BM25_K} ORDER BY rk
 """
 
 
-register_local(
+register(
     QuerySpec(
         "text_bm25_topk",
         text_bm25_topk,
@@ -5338,7 +5323,7 @@ FROM ranked WHERE rk <= {BM25_BATCH_K} ORDER BY query_id, rk
 """
 
 
-register_local(
+register(
     QuerySpec(
         "text_bm25_batch",
         text_bm25_batch,
@@ -5493,7 +5478,7 @@ ORDER BY va, vb
 """
 
 
-register_local(
+register(
     QuerySpec(
         "embeddings_jl_projection",
         embeddings_jl_projection,
@@ -5645,7 +5630,7 @@ FROM u ORDER BY prefix_dims, k
 MRL_SQL = _mrl_sql()
 
 
-register_local(
+register(
     QuerySpec(
         "embeddings_matryoshka_recall",
         embeddings_matryoshka_recall,
@@ -5684,7 +5669,7 @@ def _two_level_fine_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance work, never n·C. Returns (ccell, fcell, vec_id, v).
     Round 13: factored out of dedup_semantic_ivf verbatim so the
     pair-level export (dedup_embedding_pairs_scaled) shares one
-    implementation; dedup_semantic_ivf re-grades in the round-13 window.
+    implementation.
     """
     import math
 
@@ -5910,7 +5895,7 @@ ORDER BY cluster
 """
 
 
-register_local(
+register(
     QuerySpec(
         "dedup_semantic_ivf",
         dedup_semantic_ivf,
@@ -5964,7 +5949,7 @@ ORDER BY vec_a, vec_b
 """
 
 
-register_local(
+register(
     QuerySpec(
         "dedup_embedding_pairs_scaled",
         dedup_embedding_pairs_scaled,
@@ -5986,7 +5971,7 @@ register_local(
 # top-K to flag each cascade pick (`in_exact_topk`) — a second linear scan
 # that doubled the measured growth (SCALING.md 10.69×/decade vs the
 # token-scan ~5×). That recall-audit surface survives unchanged as the
-# local `ann_rerank_audit` (COVERED_BY this query); the exported query is
+# local-only `ann_rerank_audit`; the exported query is
 # the production cascade with ONE linear scan.
 #
 # Exactness: stage-1 scores are exact BIGINT int8 dots (ann_int8_topk's
@@ -6086,9 +6071,8 @@ register(
 # ann_rerank_audit — recall-audit surface of the SAME cascade: every
 # exported row additionally carries an `in_exact_topk` flag comparing the
 # cascade's pick against the DIRECT full-corpus exact top-K. The exact leg
-# is a second linear scan, so this stays local (COVERED_BY
-# ann_rerank_two_stage) as recall evidence rather than the production
-# export (VERDICT r8 #7).
+# is a second linear scan, so this stays local as a recall check next to
+# the production export ann_rerank_two_stage.
 # ---------------------------------------------------------------------------
 def ann_rerank_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round-12: shared cached vector store (_emb_base); int8 codes derive
@@ -6193,7 +6177,7 @@ ORDER BY rk
 """
 
 
-register_local(
+register(
     QuerySpec(
         "ann_rerank_audit",
         ann_rerank_audit,
@@ -6313,7 +6297,7 @@ ORDER BY q_id, rk
 """
 
 
-register_local(
+register(
     QuerySpec(
         "ann_rerank_batch",
         ann_rerank_batch,
@@ -6381,7 +6365,7 @@ LIMIT {ANN_K}
 )
 
 
-register_local(
+register(
     QuerySpec(
         "multimodal_image_ann",
         multimodal_image_ann,
@@ -6629,7 +6613,7 @@ FROM ranked WHERE rk <= {PRF_K} ORDER BY rk
 """
 
 
-register_local(
+register(
     QuerySpec(
         "text_bm25_prf",
         text_bm25_prf,
@@ -6760,7 +6744,7 @@ ORDER BY doc_a, doc_b
 """
 
 
-register_local(
+register(
     QuerySpec(
         "dedup_minhash_b_bit",
         dedup_minhash_b_bit,
@@ -6845,7 +6829,7 @@ ORDER BY doc_id, rk
 """
 
 
-register_local(
+register(
     QuerySpec(
         "multimodal_keyframe_select",
         multimodal_keyframe_select,
@@ -6995,7 +6979,7 @@ ORDER BY component, d
 """
 
 
-register_local(
+register(
     QuerySpec(
         "embeddings_top2_components",
         embeddings_top2_components,
@@ -7103,7 +7087,7 @@ ORDER BY dim
 """
 
 
-register_local(
+register(
     QuerySpec(
         "embeddings_dim_clip_bounds",
         embeddings_dim_clip_bounds,
@@ -7290,7 +7274,7 @@ ORDER BY doc_a, doc_b
 """
 
 
-register_local(
+register(
     QuerySpec(
         "dedup_simhash_hamming_pairs",
         dedup_simhash_hamming_pairs,
@@ -7344,7 +7328,7 @@ ORDER BY q_id, vec_id
 """
 
 
-register_local(
+register(
     QuerySpec(
         "ann_range_search_cosine",
         ann_range_search_cosine,
@@ -7425,7 +7409,7 @@ ORDER BY dim
 """
 
 
-register_local(
+register(
     QuerySpec(
         "embeddings_whitening_stats",
         embeddings_whitening_stats,
@@ -7559,7 +7543,7 @@ ORDER BY q_id
 """
 
 
-register_local(
+register(
     QuerySpec(
         "ann_eval_mrr",
         ann_eval_mrr,

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..sources import read_table
-from .registry import QuerySpec, register, register_local
+from .registry import QuerySpec, register
 
 
 def _r6(c):  # ratios/fractions: 6 decimals
@@ -1046,19 +1046,10 @@ for _spec in [
 ]:
     register(_spec)
 
-# Oracle-verified locally (oracle_check --all + pytest) but outside the
-# driver's 50-query window: alternate API surfaces of capabilities the
-# exported registry already grades (q09 DataFrame rollup vs q17 SQL grouping
-# sets; q10 distinct set ops vs q28 multiset forms; round-3 rotation moved
-# q04/q07/q12/q15/q18/q21/q23 here — each tag stays exported via a sibling:
-# A3→q29 cube, A5/A7→q06/dedup_exact_hist, F1/P3→q01+q05/q14, W1/O4→q08/q02,
-# W2→corpus_pack_tokens, A9→sketch_approx_quantile, A1/F1→many — freeing
-# driver slots for previously ungraded capability families).
+# Star-schema joins and aggregates plus alternate API surfaces of the
+# queries above (q09 DataFrame rollup vs q17 SQL grouping sets; q10 distinct
+# set ops vs q28 multiset forms).
 for _spec in [
-    # round-4 rotation: q03/q08/q22 (each twice driver-green; J1/J2/A2/W1/A1/
-    # C2 all stay exported via q02/q14/events_asof_two_stream/events_range_join)
-    # park here so asof/range-join/knn/cc-cluster/drift/timeseries operators
-    # earn their first hard-signal rows
     QuerySpec("q03_sales_by_nation_year", q03_sales_by_nation_year, Q03_SQL,
               ("J1", "J2", "A2", "C2"), bench=True),
     QuerySpec("q08_supplier_rank_in_nation", q08_supplier_rank_in_nation, Q08_SQL,
@@ -1080,13 +1071,12 @@ for _spec in [
               ("A1", "G1")),
     QuerySpec("q10_nation_set_ops", q10_nation_set_ops, Q10_SQL, ("SET1",)),
     # function-surface demos: the function families stay covered by the
-    # oracle via these (+ tests/test_functions.py); their exported slots now
-    # grade corpus-engineering operators instead (plans/corpus.py)
+    # oracle via these (+ tests/test_functions.py)
     QuerySpec("q24_string_funcs", q24_string_funcs, Q24_SQL, ("C10",)),
     QuerySpec("q25_date_funcs", q25_date_funcs, Q25_SQL, ("C11",)),
     QuerySpec("q26_array_funcs", q26_array_funcs, Q26_SQL, ("C12",)),
 ]:
-    register_local(_spec)
+    register(_spec)
 
 
 # ---------------------------------------------------------------------------
@@ -1243,20 +1233,15 @@ ORDER BY c_custkey
 """
 
 
-# round-3 rotation: q29 (CUBE — also the exported A3 boolean-dim grouped agg,
-# subsuming q04) and q31 (scalar subqueries) earn driver-graded slots.
 for _spec in [
+    # q29's CUBE is also the A3 boolean-dim grouped agg, subsuming q04
     QuerySpec("q29_cube_returnflag_status", q29_cube_returnflag_status,
               Q29_SQL, ("G2", "A3")),
     QuerySpec("q31_scalar_subquery", q31_scalar_subquery, Q31_SQL, ("SQ1",)),
-]:
-    register(_spec)
-
-for _spec in [
     QuerySpec("q30_unpivot_metrics", q30_unpivot_metrics, Q30_SQL, ("PV2",)),
     QuerySpec("q32_window_depth", q32_window_depth, Q32_SQL, ("W3",)),
 ]:
-    register_local(_spec)
+    register(_spec)
 
 
 # ---------------------------------------------------------------------------
@@ -1294,7 +1279,7 @@ ORDER BY event_type
 """
 
 
-register_local(
+register(
     QuerySpec("q33_variant_props", q33_variant_props, Q33_SQL, ("C13",))
 )
 
@@ -1333,7 +1318,7 @@ def q34_correlated_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
 Q34_SQL = _Q34_BODY  # identical ANSI SQL runs on both engines
 
 
-register_local(
+register(
     QuerySpec("q34_correlated_scalar", q34_correlated_scalar, Q34_SQL, ("SQ2",))
 )
 
@@ -1450,7 +1435,7 @@ ORDER BY o_year
 """
 
 
-register_local(
+register(
     QuerySpec("q35_market_share", q35_market_share, Q35_SQL, ("J6",))
 )
 
@@ -1490,7 +1475,7 @@ ORDER BY l_returnflag, l_linestatus
 """
 
 
-register_local(
+register(
     QuerySpec("q36_pipe_syntax", q36_pipe_syntax, Q36_SQL, ("PS1",))
 )
 
@@ -1534,7 +1519,7 @@ ORDER BY bucket
 """
 
 
-register_local(QuerySpec("q37_histogram", q37_histogram, Q37_SQL, ("H1",)))
+register(QuerySpec("q37_histogram", q37_histogram, Q37_SQL, ("H1",)))
 
 
 # ---------------------------------------------------------------------------
@@ -1581,7 +1566,7 @@ ORDER BY k ASC NULLS FIRST
 """
 
 
-register_local(
+register(
     QuerySpec("q38_nullsafe_join", q38_nullsafe_join, Q38_SQL, ("J7",))
 )
 
@@ -1632,7 +1617,7 @@ ORDER BY o_orderstatus
 """
 
 
-register_local(
+register(
     QuerySpec("q39_decimal_money", q39_decimal_money, Q39_SQL, ("DEC1",))
 )
 
@@ -1677,7 +1662,7 @@ ORDER BY user_id
 """
 
 
-register_local(QuerySpec("q40_map_type", q40_map_type, Q40_SQL, ("MAP1",)))
+register(QuerySpec("q40_map_type", q40_map_type, Q40_SQL, ("MAP1",)))
 
 
 # ---------------------------------------------------------------------------
@@ -1799,7 +1784,7 @@ ORDER BY c_custkey
 """
 
 
-register_local(
+register(
     QuerySpec(
         "q41_rfm_segments",
         q41_rfm_segments,
@@ -1847,7 +1832,7 @@ def q44_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
 Q44_SQL = _Q44_BODY  # identical ANSI SQL runs on both engines
 
 
-register_local(
+register(
     QuerySpec("q44_lateral_topn", q44_lateral_topn, Q44_SQL, ("LAT1",))
 )
 
@@ -1899,7 +1884,7 @@ ORDER BY c_custkey
 """
 
 
-register_local(
+register(
     QuerySpec("q45_rank_surface", q45_rank_surface, Q45_SQL, ("W6",))
 )
 
@@ -1976,7 +1961,7 @@ ORDER BY month_start
 Q46_SQL = _Q46_ORACLE  # DuckDB keeps the self-contained recursive text
 
 
-register_local(
+register(
     QuerySpec("q46_recursive_spine", q46_recursive_spine, Q46_SQL, ("RC1",))
 )
 
@@ -2020,7 +2005,7 @@ ORDER BY o_orderkey
 """
 
 
-register_local(
+register(
     QuerySpec(
         "q48_global_rank",
         q48_global_rank,

@@ -26,7 +26,7 @@ from ..quality.constraints import (
     validation_frame,
 )
 from ..sources import read_table
-from .registry import QuerySpec, register, register_local
+from .registry import QuerySpec, register
 
 
 def qc_constraint_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -88,7 +88,6 @@ ORDER BY check_name
 """
 
 
-# round-3 rotation: driver-graded (the Q4 composite's hard-signal row).
 register(
     QuerySpec(
         "qc_constraint_suite",
@@ -319,7 +318,7 @@ FROM cum, totals
 """
 
 
-register_local(
+register(
     QuerySpec(
         "qc_drift_ks",
         qc_drift_ks,
@@ -388,7 +387,7 @@ ORDER BY bucket
 """
 
 
-register_local(
+register(
     QuerySpec(
         "qc_drift_psi",
         qc_drift_psi,
@@ -458,7 +457,7 @@ FROM stats
 """
 
 
-register_local(
+register(
     QuerySpec(
         "qc_key_skew",
         qc_key_skew,
@@ -599,7 +598,7 @@ FROM cum, totals
 """
 
 
-register_local(
+register(
     QuerySpec(
         "qc_drift_wasserstein",
         qc_drift_wasserstein,
@@ -730,7 +729,7 @@ FROM t ORDER BY k
 """
 
 
-register_local(
+register(
     QuerySpec(
         "qc_k_anonymity",
         qc_k_anonymity,
@@ -864,7 +863,7 @@ FROM t ORDER BY l
 """
 
 
-register_local(
+register(
     QuerySpec(
         "qc_l_diversity",
         qc_l_diversity,
@@ -1090,7 +1089,7 @@ FROM t ORDER BY t_threshold_micro
 """
 
 
-register_local(
+register(
     QuerySpec(
         "qc_t_closeness",
         qc_t_closeness,
@@ -1235,7 +1234,7 @@ ORDER BY fk_edge
 """
 
 
-register_local(
+register(
     QuerySpec(
         "qc_referential_integrity",
         qc_referential_integrity,

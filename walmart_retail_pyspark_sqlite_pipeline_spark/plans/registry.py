@@ -6,7 +6,12 @@ Each :class:`QuerySpec` carries
   (``None`` only for genuinely non-SQL-expressible ops → driver falls back
   to a rows-only check),
 - ``tags`` — SURVEY.md §2 inventory ids this query exercises,
-- ``bench`` — whether bench.py times it as a headline query.
+- ``bench`` — whether :func:`bench_specs` lists it as a headline query.
+
+Every spec lives in one :data:`REGISTRY`; the fixed :data:`EXPORTED` set
+names the subset ``__spark_entry__.queries()``/``oracle_sql()`` expose.
+All of them are oracle-checked by tools/oracle_check.py and
+tests/test_registry.py.
 
 Column names are aliased identically on both sides (the driver's compare
 sorts columns by name before hashing). Float aggregates are rounded on both
@@ -16,7 +21,7 @@ sides so independent summation orders cannot flip the value hash.
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -39,65 +44,9 @@ class QuerySpec:
 
 REGISTRY: dict[str, QuerySpec] = {}
 
-# Oracle-verified locally (tools/oracle_check.py --all + pytest) but not
-# exported to the driver: the driver grades at most 50 queries, so strict
-# sub-plans (ann_ivf_cells ⊂ ann_ivf_topk, dedup_minhash_signatures ⊂
-# dedup_minhash_lsh_pairs) and alternate API surfaces of an already-graded
-# capability (q09 DataFrame rollup vs q17 SQL grouping sets, q10 distinct
-# set ops vs q28 multiset ops) live here instead.
-LOCAL_REGISTRY: dict[str, QuerySpec] = {}
-
-# ---------------------------------------------------------------------------
-# Export rotation + convergence tiers. The driver grades at most 50 queries
-# per round, so the split between REGISTRY (driver-graded) and
-# LOCAL_REGISTRY (locally oracle-checked) rotates each round. This single
-# set IS the rotation — ``register``/``register_local`` below route on
-# membership, so the per-module call sites record only the *default* tier
-# and never need editing.
-#
-# Convergence policy (round 6, VERDICT r5 "Next round" #3): rotation alone
-# stopped converging once the registry outgrew 3x the window, so every
-# registry query now sits in exactly ONE of four tiers, and
-# tests/test_rotation.py enforces the partition against the accumulated
-# CORRECTNESS_r*.json evidence:
-#   1. exported        — in EXPORTED_NAMES, graded by the driver this round;
-#   2. parked-green    — >=1 green driver round in some CORRECTNESS_r*.json,
-#                        currently local (driver evidence already exists);
-#   3. covered-by      — permanently local: a strict sub-plan or alternate
-#                        API surface of a query with driver evidence, listed
-#                        in COVERED_BY below and never counted against the
-#                        grading backlog;
-#   4. queued          — never driver-graded, genuinely distinct capability,
-#                        listed in GRADE_QUEUE with the round it rotates in.
-#
-# Round-15 window (VERDICT r14 "Next round" #1; ROTATION.md "Round-15
-# window plan", written in round 14):
-# - 14 bench headliners: the standing bench.py lines, unchanged;
-# - 11 queue drains: every never-graded round-14 operator addition
-#   (corpus_training_order, sketch_hdr_quantiles, the experimentation
-#   suite, ann_eval_mrr, CDC chunk dedup, Hilbert layout, target
-#   encoding);
-# - 18 re-grades: the full round-14 re-grade queue — every parked-green
-#   query whose closure the round-14 optimization rewrites drifted
-#   (LSH/shingle consumers, the PCA power iterations, semantic IVF, the
-#   IVF family) regains driver evidence (VERDICT r14 "Next round" #1);
-# - 7 round-15 optimization slots: the queries THIS round's optimization
-#   pass rewrites (VERDICT r14 #2-#4 targets), exported so their drift
-#   is graded in the same round it happens instead of parking as
-#   evidence debt — dedup_substring_ngrams, the sketch family
-#   (mg/cms/changers + approx_distinct, whose mixed exact/HLL aggregate
-#   shuffled ~1.6k HLL register columns at (group, user) grain), and the
-#   PQ chain (ivfpq, pq_recall; ann_pq_topk is a strict sub-plan of
-#   ann_pq_recall and moves to COVERED_BY). text_bm25_prf (VERDICT #6)
-#   measured as already-shared (one postings InMemoryRelation; dl agg
-#   0.06 s warm) and stays parked untouched.
-# 14 + 11 + 18 + 7 = 50 slots — the full driver window. The deepening
-# drawdown (stream_static_enrich + the r10-r13 single-green cohorts)
-# pauses for one round: re-grade evidence for rewritten closures
-# outranks deepening already-green unchanged ones (VERDICT r14 #1).
-EXPORTED_NAMES: frozenset[str] = frozenset(
+# The queries the driver contract exposes; the rest are local-only.
+EXPORTED: frozenset[str] = frozenset(
     {
-        # --- bench headliners (timed by bench.py every round) ---
         "q01_pricing_summary",
         "q02_top_customers",
         "q11_event_hourly",
@@ -112,7 +61,6 @@ EXPORTED_NAMES: frozenset[str] = frozenset(
         "corpus_shingle_index",
         "ann_rerank_two_stage",
         "corpus_prep_pipeline_clf",
-        # --- queue drains: first grades (round-14 operator additions) ---
         "corpus_training_order",
         "sketch_hdr_quantiles",
         "events_ab_test",
@@ -124,7 +72,6 @@ EXPORTED_NAMES: frozenset[str] = frozenset(
         "events_ab_srm",
         "events_power_mde",
         "ml_target_encoding",
-        # --- re-grades: round-14 rewrite drift (the full 18-entry queue) ---
         "dedup_minhash_b_bit",
         "dedup_cc_clusters",
         "corpus_pagerank",
@@ -143,8 +90,6 @@ EXPORTED_NAMES: frozenset[str] = frozenset(
         "embeddings_top2_components",
         "ann_ivf_topk",
         "ann_ivf_recall",
-        # --- round-15 optimization slots (rewritten THIS round; graded
-        # in the same round the drift happens) ---
         "dedup_substring_ngrams",
         "sketch_mg_heavyhitters",
         "sketch_cms_manual",
@@ -155,289 +100,18 @@ EXPORTED_NAMES: frozenset[str] = frozenset(
     }
 )
 
-# Tier 3 — permanently local: strict sub-plans or alternate API surfaces of
-# a query that already has driver evidence. Key = the local query, value =
-# the driver-graded query whose green row covers the capability. These are
-# still oracle-checked locally every round (tools/oracle_check.py) but are
-# no longer part of the grading backlog.
-COVERED_BY: dict[str, str] = {
-    # threshold sweep over the same shingle-Jaccard pair scores the graded
-    # query verifies at one cutoff
-    "dedup_threshold_curve": "dedup_ngram_jaccard",
-    # same exact hash-groupBy dedup, after text canonicalization
-    "dedup_normalized_exact": "dedup_exact_hist",
-    # estimator-error diagnostic over the SAME signature matrix and LSH
-    # candidate set the graded query produces
-    "dedup_minhash_est_error": "dedup_minhash_lsh_pairs",
-    # Python-UDTF surface of the same fixed-width chunker whose Arrow
-    # mapInPandas surface is graded
-    "text_chunks_udtf": "text_chunks",
-    # strict sub-plans noted since round 4 (both sides of each pair now
-    # have driver evidence, kept for documentation)
-    "ann_ivf_cells": "ann_ivf_topk",
-    "dedup_minhash_signatures": "dedup_minhash_lsh_pairs",
-    # packed-BIGINT storage encoding of the SAME sign-quantized distances
-    # the graded query computes unpacked — every exported row carries both
-    # distances and an agree flag, so the coverage is self-evidencing
-    "ann_hamming_packed": "ann_hamming_topk",
-    # array<double>-shaped surface of the SAME byte-histogram kernel; the
-    # driver's pandas hasher can't sort a list column (CORRECTNESS_r07
-    # TypeError), so the exploded scalar twin is the driver-graded export
-    "multimodal_image_features_vec": "multimodal_image_features",
-    # VERDICT r8 #3: the flat SemDeDup variant (driver-green r8) carries a
-    # named scale-killer — with the SemDeDup recipe C ∝ n, flat assignment
-    # is n·C = n²/250 distance evals (SCALING.md measured 8.72×/decade at
-    # 200k vectors). The IVF variant computes the SAME keep-rule and export
-    # via n·3·√C two-level assignment (3.81×/decade) and is now the
-    # canonical exported surface; the flat variant stays local as the
-    # measured comparison point.
-    "dedup_semantic_clusters": "dedup_semantic_ivf",
-    # VERDICT r13 "What's wrong" #1 / "Next round" #2: the two FIXED-BLOCK
-    # exact embedding pair surfaces are measured n²/k scale-killers (the
-    # round-13 200k-vector rotated-replica drive: dedup_embedding_cosine
-    # 40.4×/decade — killed at >50 min; dedup_embedding_ivf_pairs
-    # 14.3×/decade — fixed cell count k means candidates grow n²/k while
-    # output stays ~linear, invisible to the static plan audit because the
-    # join has a key). dedup_embedding_pairs_scaled computes the SAME
-    # pair export via GROWING learned cells (C = n/250, two-level n·3·√C
-    # assignment, exact cosine verify on candidates only — measured
-    # 3.51×/decade at 200k vectors) and is the round-14-graded canonical
-    # surface; the fixed-block variants stay local as the measured
-    # comparison points (the dedup_semantic_clusters precedent), so no
-    # future rotation can re-export an n²/k plan as a production surface.
-    "dedup_embedding_cosine": "dedup_embedding_pairs_scaled",
-    "dedup_embedding_ivf_pairs": "dedup_embedding_pairs_scaled",
-    # VERDICT r8 #7: recall-audit surface of the SAME int8→exact rerank
-    # cascade — it forces the exact full-corpus top-K leg into the plan
-    # (a second linear scan) for the per-row in_exact_topk flags, so it
-    # stays local as evidence while the exported query runs the production
-    # cascade (ONE linear scan).
-    "ann_rerank_audit": "ann_rerank_two_stage",
-    # round 15: ann_pq_recall CALLS ann_pq_topk for its approx leg — the
-    # full PQ/ADC plan (codebook, codes, LUT, top-k) executes inside the
-    # graded recall query, so topk is a strict sub-plan (the ann_ivf_cells
-    # ⊂ ann_ivf_topk precedent). Demoted when the round-15 optimization
-    # pass moved _pq_subspace_dists onto the shared cached vector store
-    # (drift) and the 50-slot window had room to grade the superset only.
-    "ann_pq_topk": "ann_pq_recall",
-}
 
-# Tier 4 — the must-grade queue: entries are EITHER never-driver-graded
-# new capabilities OR parked greens whose spec hash drifted and which did
-# not fit the current 50-slot window (allowed only while hash-drifted —
-# tests/test_rotation.py). Round 15 drains the ENTIRE round-14 queue into
-# the window: all 11 never-graded round-14 operator additions and all 18
-# round-14 optimization-drift re-grades are exported above, so the queue
-# is empty — both the never-graded set AND the re-grade backlog are ∅
-# for the first time. Round-15 rewrites all land in the window the same
-# round (the 7 optimization slots), so no new entries accrue.
-GRADE_QUEUE: dict[str, int] = {}
-
-
-_PKG = __name__.split(".", 1)[0]  # top-level package name
-
-
-def _closure_payload(fn: Callable) -> str:
-    """Source of ``fn`` plus every in-package module-level helper, class,
-    and constant it transitively references.
-
-    ADVICE r7 (registry.py spec_hash scope): hashing only the registered
-    fn's own source let a rewrite of a shared helper (``_mean_centroids``,
-    ``vectors.dot``, hashing fns) silently preserve stale driver evidence
-    for every parked query that calls it. This walks the fn's code-object
-    ``co_names`` (including nested lambdas/comprehensions) against its
-    defining module — and against in-package modules referenced by name, so
-    intra-fn relative imports (``from ..multimodal import image_features``)
-    are followed too — and folds the resolved helpers' source and constant
-    reprs into the payload. Over-capture is safe (an unrelated-helper edit
-    forces a spurious re-grade); under-capture is the failure mode this
-    exists to close.
-    """
-    import inspect
-    import re as _re
-    import sys as _sys
-    import textwrap
-    import types
-
-    seen: set[tuple[str, str]] = set()
-    parts: list[str] = []
-
-    def const_repr(v: object, depth: int = 0) -> str:
-        """Deterministic repr for module-level constants, including the
-        container types ``repr`` alone can't canonicalize (set iteration
-        order) or that the original scalar-only capture skipped entirely
-        (list/dict — e.g. ``CURATED_COLUMNS``, ``TRAIN_RENAME``: editing
-        them changes every curated-derived query's output, so they MUST
-        flip the hash)."""
-        if depth > 6:
-            return "<depth-capped>"
-        if isinstance(v, dict):
-            items = sorted(
-                (const_repr(k, depth + 1), const_repr(x, depth + 1))
-                for k, x in v.items()
-            )
-            return "{" + ", ".join(f"{k}: {x}" for k, x in items) + "}"
-        if isinstance(v, (set, frozenset)):
-            return "{" + ", ".join(sorted(const_repr(x, depth + 1) for x in v)) + "}"
-        if isinstance(v, (list, tuple)):
-            inner = ", ".join(const_repr(x, depth + 1) for x in v)
-            return ("[%s]" if isinstance(v, list) else "(%s)") % inner
-        if isinstance(v, _re.Pattern):
-            return f"re.compile({v.pattern!r}, {v.flags})"
-        if isinstance(v, (str, bytes, int, float, bool, type(None))):
-            return repr(v)
-        return f"<opaque:{type(v).__name__}>"
-
-    def code_names(code: types.CodeType) -> set[str]:
-        names: set[str] = set()
-        stack = [code]
-        while stack:
-            c = stack.pop()
-            names.update(c.co_names)
-            names.update(c.co_freevars)
-            for k in c.co_consts:
-                if isinstance(k, types.CodeType):
-                    stack.append(k)
-        return names
-
-    def visit(obj: object) -> None:
-        key = (
-            getattr(obj, "__module__", "") or "",
-            getattr(obj, "__qualname__", repr(obj)),
-        )
-        if key in seen:
-            return
-        seen.add(key)
-        try:
-            parts.append(textwrap.dedent(inspect.getsource(obj)))
-        except (OSError, TypeError):  # builtins / C-level callables
-            parts.append(f"<unreadable:{key}>")
-        code = getattr(obj, "__code__", None)
-        mod = _sys.modules.get(getattr(obj, "__module__", "") or "")
-        if code is None or mod is None:
-            return
-        names = sorted(code_names(code))
-        # Namespaces to resolve names in: the defining module first
-        # (mirrors Python's global lookup), then in-package modules the fn
-        # references by simple name (module-level OR intra-fn imports).
-        namespaces: list[types.ModuleType] = [mod]
-        for n in names:
-            bound = getattr(mod, n, None)
-            if isinstance(bound, types.ModuleType) and bound.__name__.startswith(
-                _PKG
-            ):
-                namespaces.append(bound)
-            else:
-                for cand in (
-                    f"{_PKG}.{n}",
-                    f"{_PKG}.plans.{n}",
-                    f"{_PKG}.functions.{n}",
-                    f"{_PKG}.operators.{n}",
-                ):
-                    # Round 15: IMPORT the candidate instead of peeking at
-                    # sys.modules. The peek made the payload depend on
-                    # interpreter import state: a fn whose only reference
-                    # to a helper module is an intra-fn relative import
-                    # (``from ..operators.ranking import ...``) captured
-                    # the helper ONLY when some earlier code had already
-                    # imported that module — so the same source hashed
-                    # differently in a fresh process vs mid-test-suite
-                    # (q48/q41 false drift, round 15). Importing resolves
-                    # deterministically; failures mean "not a module" and
-                    # fall through exactly as the peek's miss did.
-                    m = _sys.modules.get(cand)
-                    if m is None:
-                        import importlib
-
-                        try:
-                            m = importlib.import_module(cand)
-                        except ImportError:
-                            m = None
-                    if m is not None:
-                        namespaces.append(m)
-                        break
-        for n in names:
-            for m in namespaces:
-                target = getattr(m, n, None)
-                if target is None:
-                    continue
-                if isinstance(target, types.FunctionType) and (
-                    getattr(target, "__module__", "") or ""
-                ).startswith(_PKG):
-                    visit(target)
-                elif isinstance(target, type) and (
-                    getattr(target, "__module__", "") or ""
-                ).startswith(_PKG):
-                    visit(target)
-                elif isinstance(
-                    target,
-                    (str, bytes, int, float, bool, tuple, frozenset,
-                     list, dict, set, _re.Pattern),
-                ):
-                    # Any namespace in the list is in-package (the defining
-                    # module or an in-package module the fn references), so
-                    # constant capture is safe from either — restricting to
-                    # the defining module was the round-8 under-capture gap.
-                    parts.append(f"<const {n}={const_repr(target)}>")
-                break  # first resolution wins, mirroring name lookup
-    visit(fn)
-    return "\x00".join(parts)
-
-
-def spec_hash(spec: QuerySpec) -> str:
-    """Content hash of what a driver grade actually graded: the spec's
-    plan-builder source — including the transitive closure of in-package
-    helpers and constants it references (see :func:`_closure_payload`) —
-    plus its oracle SQL.
-
-    Used by the re-grade-on-rewrite policy (ADVICE r6): a parked-green query
-    keeps its driver evidence only while this hash matches the one recorded
-    in ``GRADED_HASHES.json`` at grading time; a rewrite — of the fn, the
-    oracle, OR any helper the fn calls (ADVICE r7) — flips the hash and
-    ``tests/test_rotation.py`` forces the query back into the export window.
-    Algorithm migration note: the closure extension changed every hash at
-    the start of round 8, and the constant capture was widened mid-round-8
-    to container constants (list/dict/set, via a canonical repr) after a
-    review found ``CURATED_COLUMNS``/``TRAIN_RENAME``-class edits would
-    slip through; each time the ledger was restamped in the same commit
-    (``tools/update_graded_hashes.py --restamp-algo``) while current source
-    still equaled the graded source (rotation test green under the old
-    algorithm immediately before each migration). Round 15 made the
-    module-candidate resolution import-deterministic (see the comment in
-    ``_closure_payload``) and migrated the ledger with a GUARDED restamp:
-    only entries whose ledger hash equaled the old-algorithm fresh-state
-    hash (i.e. source provably unchanged since grading) were recomputed;
-    entries already awaiting a re-grade kept their historical graded hash.
-    """
-    import hashlib
-
-    payload = _closure_payload(spec.fn) + "\x00" + (spec.oracle or "")
-    return hashlib.sha256(payload.encode("utf-8")).hexdigest()
-
-
-def _route(spec: QuerySpec) -> QuerySpec:
-    if spec.name in REGISTRY or spec.name in LOCAL_REGISTRY:
+def register(spec: QuerySpec) -> QuerySpec:
+    if spec.name in REGISTRY:
         raise ValueError(f"duplicate query name {spec.name!r}")
-    if spec.name in EXPORTED_NAMES:
-        REGISTRY[spec.name] = spec
-    else:
-        LOCAL_REGISTRY[spec.name] = spec
+    REGISTRY[spec.name] = spec
     return spec
 
 
-def register(spec: QuerySpec) -> QuerySpec:
-    return _route(spec)
-
-
-def register_local(spec: QuerySpec) -> QuerySpec:
-    return _route(spec)
-
-
 def _load_all() -> None:
-    # Import for side effects: each module registers its QuerySpecs.
-    # streams registers before llm so the event-stream queries sit inside the
-    # driver's checked window (round 1: the driver graded the first 50 names
-    # and the 4 stream queries, registered last, got no CORRECTNESS row).
+    # Import for side effects: each module registers its QuerySpecs. The
+    # import order is the registration order, which fixes the order of
+    # queries_map() and oracle_sql_map().
     from . import parity  # noqa: F401
     from . import streams  # noqa: F401
     from . import llm  # noqa: F401
@@ -449,36 +123,31 @@ def _load_all() -> None:
     from . import cohorts  # noqa: F401
     from . import retail  # noqa: F401
 
-    missing = EXPORTED_NAMES - REGISTRY.keys()
-    if missing:  # a typo in the rotation list would silently shrink the window
-        raise RuntimeError(f"EXPORTED_NAMES entries never registered: {sorted(missing)}")
-
-
-def queries_map() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    _load_all()
-    return {name: spec.fn for name, spec in REGISTRY.items()}
-
-
-def oracle_sql_map() -> dict[str, str]:
-    _load_all()
-    return {
-        name: spec.oracle for name, spec in REGISTRY.items() if spec.oracle is not None
-    }
-
-
-def bench_specs() -> list[QuerySpec]:
-    # bench covers the local-only registry too: queries kept out of the
-    # driver's 50-query correctness window are still part of the engine's
-    # performance surface (e.g. the corpus_shingle_index build line).
-    _load_all()
-    out = [s for s in REGISTRY.values() if s.bench]
-    out.extend(s for s in LOCAL_REGISTRY.values() if s.bench)
-    return out
+    missing = EXPORTED - REGISTRY.keys()
+    if missing:  # a typo in EXPORTED would silently shrink the exported set
+        raise RuntimeError(f"EXPORTED entries never registered: {sorted(missing)}")
 
 
 def all_specs(include_local: bool = True) -> dict[str, QuerySpec]:
     _load_all()
-    out = dict(REGISTRY)
-    if include_local:
-        out.update(LOCAL_REGISTRY)
-    return out
+    return {
+        name: spec
+        for name, spec in REGISTRY.items()
+        if include_local or name in EXPORTED
+    }
+
+
+def queries_map() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {name: spec.fn for name, spec in all_specs(include_local=False).items()}
+
+
+def oracle_sql_map() -> dict[str, str]:
+    return {
+        name: spec.oracle
+        for name, spec in all_specs(include_local=False).items()
+        if spec.oracle is not None
+    }
+
+
+def bench_specs() -> list[QuerySpec]:
+    return [s for s in all_specs().values() if s.bench]

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import read_table
-from .registry import QuerySpec, register_local
+from .registry import QuerySpec, register
 
 # ---------------------------------------------------------------------------
 # basket_part_pairs — market-basket co-occurrence: which part pairs appear
@@ -113,7 +113,7 @@ LIMIT {BASKET_TOP_K}
 """
 
 
-register_local(
+register(
     QuerySpec(
         "basket_part_pairs",
         basket_part_pairs,
@@ -218,7 +218,7 @@ ORDER BY digit
 """
 
 
-register_local(
+register(
     QuerySpec(
         "qc_benford_totalprice",
         qc_benford_totalprice,
@@ -327,7 +327,7 @@ ORDER BY revenue_cents DESC, p_brand
 """
 
 
-register_local(
+register(
     QuerySpec(
         "q42_abc_analysis",
         q42_abc_analysis,
@@ -411,7 +411,7 @@ ORDER BY p_brand
 """
 
 
-register_local(
+register(
     QuerySpec(
         "q43_elasticity_slope",
         q43_elasticity_slope,
@@ -544,7 +544,7 @@ ORDER BY l_returnflag
 """
 
 
-register_local(
+register(
     QuerySpec(
         "q47_ols_normal_eq",
         q47_ols_normal_eq,
@@ -647,7 +647,7 @@ ORDER BY category, fold
 """
 
 
-register_local(
+register(
     QuerySpec(
         "ml_target_encoding",
         ml_target_encoding,

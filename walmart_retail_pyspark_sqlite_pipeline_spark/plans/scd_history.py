@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from ..operators.scd import scd2_apply, scd2_init
 from ..sources import read_table
-from .registry import QuerySpec, register, register_local
+from .registry import QuerySpec, register
 
 _T0 = "2024-01-01"
 _T1 = "2024-06-01"
@@ -73,7 +73,6 @@ ORDER BY c_custkey, valid_from
 """
 
 
-# round-3 rotation: driver-graded.
 register(
     QuerySpec(
         "scd2_customer_history",
@@ -194,7 +193,7 @@ ORDER BY action
 """
 
 
-register_local(
+register(
     QuerySpec(
         "cdc_apply_changes",
         cdc_apply_changes,

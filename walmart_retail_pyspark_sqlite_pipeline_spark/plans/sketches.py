@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from ..operators.layout import _interleave
 from ..sources import read_table
 from .llm import _token_postings
-from .registry import QuerySpec, register, register_local
+from .registry import QuerySpec, register
 
 # Relative error band asserted for the HLL estimate. Spark runs at
 # rsd=0.01 (~1% standard error) and DuckDB's HLL is ~1.6% typical —
@@ -221,8 +221,7 @@ ORDER BY z_key
 """
 
 
-# round-3 rotation: the two mergeable-sketch queries are driver-graded
-# (sketch_approx_quantile also carries the exported A9 slot freed by q21).
+# the two mergeable-sketch queries, each checked against its exact twin
 for _spec in [
     QuerySpec(
         "sketch_approx_distinct",
@@ -241,7 +240,7 @@ for _spec in [
 ]:
     register(_spec)
 
-register_local(
+register(
     QuerySpec(
         "layout_zorder_clustering",
         layout_zorder_clustering,
@@ -391,7 +390,7 @@ ORDER BY fin.event_type
 """
 
 
-register_local(
+register(
     QuerySpec(
         "sketch_hll_manual",
         sketch_hll_manual,
@@ -578,7 +577,7 @@ ORDER BY cms_est DESC, token
 SKETCH_CMS_MANUAL_SQL = _cms_sql()
 
 
-register_local(
+register(
     QuerySpec(
         "sketch_cms_manual",
         sketch_cms_manual,
@@ -734,7 +733,7 @@ ORDER BY o_orderpriority
 SKETCH_QUANTILE_MANUAL_SQL = _qsk_sql()
 
 
-register_local(
+register(
     QuerySpec(
         "sketch_quantile_manual",
         sketch_quantile_manual,
@@ -971,7 +970,7 @@ FROM est
 SKETCH_KMV_SQL = _kmv_sql()
 
 
-register_local(
+register(
     QuerySpec(
         "sketch_kmv_intersection",
         sketch_kmv_intersection,
@@ -1195,7 +1194,7 @@ ORDER BY mg_est DESC, token
 SKETCH_MG_SQL = _mg_sql()
 
 
-register_local(
+register(
     QuerySpec(
         "sketch_mg_heavyhitters",
         sketch_mg_heavyhitters,
@@ -1391,7 +1390,7 @@ FROM est CROSS JOIN exact
 SKETCH_AMS_SQL = _ams_sql()
 
 
-register_local(
+register(
     QuerySpec(
         "sketch_ams_f2",
         sketch_ams_f2,
@@ -1594,7 +1593,7 @@ ORDER BY ABS(change_est) DESC, top.token
 SKETCH_CMS_CHANGERS_SQL = _cms_changers_sql()
 
 
-register_local(
+register(
     QuerySpec(
         "sketch_cms_heavy_changers",
         sketch_cms_heavy_changers,
@@ -1728,7 +1727,7 @@ ORDER BY q_pct
 """
 
 
-register_local(
+register(
     QuerySpec(
         "sketch_hdr_quantiles",
         sketch_hdr_quantiles,
@@ -1876,7 +1875,7 @@ ORDER BY d
 LAYOUT_HILBERT_SQL = _hilbert_sql()
 
 
-register_local(
+register(
     QuerySpec(
         "layout_hilbert_clustering",
         layout_hilbert_clustering,

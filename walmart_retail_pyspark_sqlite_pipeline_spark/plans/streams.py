@@ -13,7 +13,7 @@ from ..operators import binned_range_join
 from ..sources import read_table
 from ..streaming import asof_last_event, hourly_counts_stream, sessionize
 from ..streaming.events import asof_join
-from .registry import QuerySpec, register, register_local
+from .registry import QuerySpec, register
 
 
 # ---------------------------------------------------------------------------
@@ -239,9 +239,8 @@ for _spec in [
               ("ASOF1", "W1")),
     QuerySpec("events_sliding_windows", events_sliding_windows, SLIDING_SQL,
               ("ST5",)),
-    # round-4 rotation: promoted from the local registry (driver slots freed
-    # by q03/q08/q22) — the two-table as-of join is checked against DuckDB's
-    # NATIVE ASOF LEFT JOIN operator, the strongest oracle in the registry
+    # the two-table as-of join is checked against DuckDB's NATIVE ASOF
+    # LEFT JOIN operator, the strongest oracle in the registry
     QuerySpec("events_asof_two_stream", events_asof_two_stream,
               ASOF_TWO_STREAM_SQL, ("ASOF2", "W1")),
     QuerySpec("events_range_join", events_range_join, RANGE_JOIN_SQL,
@@ -304,7 +303,7 @@ ORDER BY user_id, session_start
 """
 
 
-register_local(
+register(
     QuerySpec(
         "events_session_native",
         events_session_native,
@@ -344,7 +343,7 @@ ORDER BY event_type
 """
 
 
-register_local(
+register(
     QuerySpec(
         "stream_dedup_counts",
         stream_dedup_counts,
@@ -402,7 +401,7 @@ ORDER BY user_id, session_start
 """
 
 
-register_local(
+register(
     QuerySpec(
         "stream_session_windows",
         stream_session_windows,
@@ -443,7 +442,7 @@ ORDER BY segment, event_type
 """
 
 
-register_local(
+register(
     QuerySpec(
         "stream_static_enrich",
         stream_static_enrich,
@@ -491,7 +490,7 @@ ORDER BY p_id, c_id
 """
 
 
-register_local(
+register(
     QuerySpec(
         "stream_stream_join",
         stream_stream_join,

@@ -15,7 +15,7 @@ from pyspark.sql.window import Window
 
 from ..sources import read_table
 from ..streaming.events import SESSION_GAP_S
-from .registry import QuerySpec, register, register_local
+from .registry import QuerySpec, register
 
 
 # ---------------------------------------------------------------------------
@@ -150,7 +150,6 @@ ORDER BY event_id
 """
 
 
-# round-4 rotation: promoted (first hard-signal row for TS1 gap-fill)
 register(
     QuerySpec(
         "events_gapfill_locf",
@@ -170,7 +169,7 @@ for _spec in [
         doc="RANGE-frame rolling 10-minute window on event time",
     ),
 ]:
-    register_local(_spec)
+    register(_spec)
 
 
 # ---------------------------------------------------------------------------
@@ -265,7 +264,7 @@ ORDER BY event_type, day
 """
 
 
-register_local(
+register(
     QuerySpec(
         "events_anomaly_zscore",
         events_anomaly_zscore,
@@ -345,7 +344,7 @@ ORDER BY hour_start
 """
 
 
-register_local(
+register(
     QuerySpec(
         "events_session_concurrency",
         events_session_concurrency,
@@ -431,7 +430,7 @@ ORDER BY dev.event_type, day
 """
 
 
-register_local(
+register(
     QuerySpec(
         "events_mad_anomaly",
         events_mad_anomaly,
@@ -501,7 +500,7 @@ LIMIT {TOP_PATHS_K}
 """
 
 
-register_local(
+register(
     QuerySpec(
         "events_top_paths",
         events_top_paths,
@@ -574,7 +573,7 @@ ORDER BY from_type, to_type
 """
 
 
-register_local(
+register(
     QuerySpec(
         "events_markov_transitions",
         events_markov_transitions,
@@ -706,7 +705,7 @@ ORDER BY event_type, lag
 """
 
 
-register_local(
+register(
     QuerySpec(
         "events_autocorr",
         events_autocorr,
@@ -801,7 +800,7 @@ ORDER BY event_type
 """
 
 
-register_local(
+register(
     QuerySpec(
         "events_seasonal_naive",
         events_seasonal_naive,
@@ -873,7 +872,7 @@ ORDER BY event_type
 """
 
 
-register_local(
+register(
     QuerySpec(
         "events_dwell_time",
         events_dwell_time,
@@ -973,7 +972,7 @@ ORDER BY event_type, day
 """
 
 
-register_local(
+register(
     QuerySpec(
         "events_ewma",
         events_ewma,
@@ -1066,7 +1065,7 @@ ORDER BY k
 """
 
 
-register_local(
+register(
     QuerySpec(
         "events_retention_bitmap",
         events_retention_bitmap,
@@ -1155,7 +1154,7 @@ ORDER BY event_type, hour_s
 """
 
 
-register_local(
+register(
     QuerySpec(
         "events_ohlc",
         events_ohlc,
@@ -1226,7 +1225,7 @@ ORDER BY longest_streak
 """
 
 
-register_local(
+register(
     QuerySpec(
         "events_activity_streaks",
         events_activity_streaks,
@@ -1354,7 +1353,7 @@ ORDER BY entry_type
 """
 
 
-register_local(
+register(
     QuerySpec(
         "events_bounce_rate",
         events_bounce_rate,
@@ -1447,7 +1446,7 @@ ORDER BY joint.event_type, joint.hod
 """
 
 
-register_local(
+register(
     QuerySpec(
         "events_mutual_info",
         events_mutual_info,
@@ -1520,7 +1519,7 @@ ORDER BY event_type, week_start
 """
 
 
-register_local(
+register(
     QuerySpec(
         "events_wow_change",
         events_wow_change,
@@ -1584,7 +1583,7 @@ ORDER BY day
 """
 
 
-register_local(
+register(
     QuerySpec(
         "events_new_vs_returning",
         events_new_vs_returning,
@@ -1689,7 +1688,7 @@ ORDER BY pct DESC
 """
 
 
-register_local(
+register(
     QuerySpec(
         "events_revenue_concentration",
         events_revenue_concentration,
@@ -1789,7 +1788,7 @@ ORDER BY type_a, type_b
 """
 
 
-register_local(
+register(
     QuerySpec(
         "events_audience_overlap",
         events_audience_overlap,
@@ -1903,7 +1902,7 @@ ORDER BY event_type, day
 """
 
 
-register_local(
+register(
     QuerySpec(
         "events_cusum_changepoint",
         events_cusum_changepoint,
@@ -2016,7 +2015,7 @@ ORDER BY event_type, dow
 """
 
 
-register_local(
+register(
     QuerySpec(
         "events_seasonal_decompose",
         events_seasonal_decompose,
@@ -2113,7 +2112,7 @@ ORDER BY channel
 """
 
 
-register_local(
+register(
     QuerySpec(
         "events_attribution_last_touch",
         events_attribution_last_touch,
@@ -2266,7 +2265,7 @@ ORDER BY channel
 """
 
 
-register_local(
+register(
     QuerySpec(
         "events_attribution_position",
         events_attribution_position,
@@ -2544,7 +2543,7 @@ ORDER BY channel
 """
 
 
-register_local(
+register(
     QuerySpec(
         "events_attribution_markov",
         events_attribution_markov,
@@ -2654,7 +2653,7 @@ FROM stats
 """
 
 
-register_local(
+register(
     QuerySpec(
         "events_ab_test",
         events_ab_test,
@@ -2818,7 +2817,7 @@ ORDER BY channel
 """
 
 
-register_local(
+register(
     QuerySpec(
         "events_attribution_time_decay",
         events_attribution_time_decay,
@@ -3030,7 +3029,7 @@ FROM stats
 AB_CUPED_SQL = _cuped_sql()
 
 
-register_local(
+register(
     QuerySpec(
         "events_ab_cuped",
         events_ab_cuped,
@@ -3120,7 +3119,7 @@ FROM stats
 """
 
 
-register_local(
+register(
     QuerySpec(
         "events_ab_srm",
         events_ab_srm,
@@ -3222,7 +3221,7 @@ FROM stats
 """
 
 
-register_local(
+register(
     QuerySpec(
         "events_power_mde",
         events_power_mde,

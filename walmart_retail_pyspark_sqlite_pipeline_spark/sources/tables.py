@@ -63,11 +63,11 @@ def read_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     lands in the scan; the element predicates run post-scan. Edge rows
     exercised by tools/make_edge_sf.py.
 
-    Deliberately a SEPARATE entry point rather than a branch inside
-    :func:`read_table`: the re-grade-on-rewrite hash covers the
-    transitive closure of helpers, and read_table is in EVERY query's
-    closure — a branch there would have spuriously drifted ~120
-    parked queries that never touch embeddings.
+    A separate entry point rather than a branch inside
+    :func:`read_table`, which returns every table as stored: the
+    quarantine is a contract between the vector queries and their DuckDB
+    twins (:data:`EMB_VALID_SQL`), so only readers that opt into it
+    apply it.
     """
     from pyspark.sql import functions as F
 
