@@ -34,3 +34,12 @@ def test_cli_pipeline(spark, walmart_fixtures, tmp_path, capsys):
     ) == 0
     assert db.exists()
     assert "sales_curated" in capsys.readouterr().out
+
+
+def test_cli_pipeline_rejects_unknown_sink(capsys):
+    import pytest
+
+    with pytest.raises(SystemExit) as exc:
+        main(["pipeline", "--raw-dir", "data/raw", "--sink", "both"])
+    assert exc.value.code == 2
+    assert "invalid choice: 'both'" in capsys.readouterr().err

@@ -187,3 +187,24 @@ def test_pipeline_constraint_gate(spark, walmart_fixtures, tmp_path):
     with pytest.raises(ValueError, match="foreign_key"):
         run_pipeline(spark, cfg2)
     assert not db2.exists()  # the gate fired before any write
+
+
+def test_pipeline_rejects_unknown_sink_before_reading_input(spark, tmp_path):
+    """A misspelled sink from the YAML config fails loudly before the
+    acquisition hook or any CSV read, instead of running QC and the join
+    and returning no tables."""
+    import pytest
+
+    cfg_path = tmp_path / "pipeline.yaml"
+    cfg_path.write_text(
+        f"raw_dir: {tmp_path / 'raw'}\n"
+        f"output_db: {tmp_path / 'retail.db'}\n"
+        "sink: sqllite\n"
+    )
+    cfg = PipelineConfig.from_yaml(cfg_path)
+    touched = []
+    cfg.acquire = touched.append
+    with pytest.raises(ValueError, match="'sqlite', 'parquet'"):
+        run_pipeline(spark, cfg)
+    assert touched == []
+    assert not (tmp_path / "retail.db").exists()

@@ -6,6 +6,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from walmart_retail_pyspark_sqlite_pipeline_spark.plans.quality_suite import (
+    qc_referential_integrity,
+)
 from walmart_retail_pyspark_sqlite_pipeline_spark.quality import (
     count_duplicates,
     profile,
@@ -219,3 +222,43 @@ def test_t_closeness_exact_ordered_emd_on_planted_groups(spark, tmp_path):
         assert (r.groups_above, r.rows_at_risk) == (2, 20)
         assert r.at_risk_share == 0.666667
         assert (r.n_groups, r.n_rows, r.max_t_micro) == (3, 30, 500000)
+
+
+def test_referential_integrity_counts_planted_orphans(spark, tmp_path):
+    sf = str(tmp_path)
+    spark.createDataFrame(
+        [Row(c_custkey=1), Row(c_custkey=2)]
+    ).write.parquet(f"{sf}/customer.parquet")
+    spark.createDataFrame(
+        [Row(p_partkey=10)]
+    ).write.parquet(f"{sf}/part.parquet")
+    spark.createDataFrame(
+        [Row(s_suppkey=100)]
+    ).write.parquet(f"{sf}/supplier.parquet")
+    # one orphan custkey=99; order 21 never referenced (not an orphan)
+    spark.createDataFrame(
+        [
+            Row(o_orderkey=20, o_custkey=1),
+            Row(o_orderkey=21, o_custkey=2),
+            Row(o_orderkey=22, o_custkey=99),
+        ]
+    ).write.parquet(f"{sf}/orders.parquet")
+    # lineitem: one bad orderkey, two bad partkeys, zero bad suppkeys
+    spark.createDataFrame(
+        [
+            Row(l_orderkey=20, l_partkey=10, l_suppkey=100),
+            Row(l_orderkey=999, l_partkey=10, l_suppkey=100),
+            Row(l_orderkey=22, l_partkey=11, l_suppkey=100),
+            Row(l_orderkey=20, l_partkey=12, l_suppkey=100),
+        ]
+    ).write.parquet(f"{sf}/lineitem.parquet")
+    got = {
+        r.fk_edge: (r.n_child_rows, r.n_orphans)
+        for r in qc_referential_integrity(spark, sf).collect()
+    }
+    assert got == {
+        "lineitem.l_orderkey->orders": (4, 1),
+        "lineitem.l_partkey->part": (4, 2),
+        "lineitem.l_suppkey->supplier": (4, 0),
+        "orders.o_custkey->customer": (3, 1),
+    }

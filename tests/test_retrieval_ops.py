@@ -5,9 +5,14 @@ from __future__ import annotations
 
 import tempfile
 
+from pyspark.sql import Row
+
 from tests.conftest import SF_SMALL
 from walmart_retail_pyspark_sqlite_pipeline_spark.plans.llm import (
     JL_K,
+    RANGE_TAU,
+    ann_range_search_cosine,
+    ann_topk_cosine,
     embeddings_jl_projection,
     text_bm25_topk,
 )
@@ -418,3 +423,67 @@ def test_bm25_prf_expansion_recovers_seedless_doc(spark, tmp_path):
         assert got[i].n_terms == 2  # seed + expansion
         assert got[i].score_micro > got[6].score_micro
     assert [r.rk for r in out] == list(range(1, len(out) + 1))
+
+
+def test_range_search_threshold_and_consistency_with_topk(spark):
+    rows = ann_range_search_cosine(spark, SF_SMALL).collect()
+    assert rows, "radius search returned nothing on the synthetic corpus"
+    for r in rows:
+        assert r.cos >= RANGE_TAU
+        assert r.vec_id != r.q_id
+    # query 0's radius set must contain every exact top-k hit above tau
+    top = ann_topk_cosine(spark, SF_SMALL).collect()
+    radius0 = {r.vec_id for r in rows if r.q_id == 0}
+    for t in top:
+        if t.cos >= RANGE_TAU:
+            assert t.vec_id in radius0
+
+
+def test_ann_eval_mrr_contract_on_sf_small(spark):
+    from walmart_retail_pyspark_sqlite_pipeline_spark.plans.llm import (
+        ANN_K,
+        KNN_Q,
+        ann_eval_mrr,
+    )
+
+    rows = ann_eval_mrr(spark, SF_SMALL).collect()
+    assert 0 < len(rows) <= KNN_Q
+    tot = sum(r.rr_micro for r in rows)
+    for r in rows:
+        if r.approx_rank is None:
+            assert r.rr_micro == 0
+        else:
+            assert 1 <= r.approx_rank <= ANN_K
+            assert r.rr_micro == 1_000_000 // r.approx_rank
+        assert r.mrr_micro == tot // len(rows)
+
+
+def test_ann_eval_mrr_single_cell_is_perfect(spark, tmp_path):
+    """With one label (one IVF cell) the single-probe search IS the exact
+    search, so every query's exact top-1 must sit at approx rank 1."""
+    import random
+
+    from walmart_retail_pyspark_sqlite_pipeline_spark.plans.llm import (
+        ann_eval_mrr,
+    )
+
+    rng = random.Random(7)
+    sf = str(tmp_path)
+    rows = [
+        Row(
+            vec_id=i,
+            embedding=[rng.uniform(-1, 1) for _ in range(64)],
+            label=1,
+        )
+        for i in range(40)
+    ]
+    spark.createDataFrame(rows).selectExpr(
+        "vec_id",
+        "CAST(embedding AS ARRAY<FLOAT>) AS embedding",
+        "CAST(label AS INT) AS label",
+    ).write.parquet(f"{sf}/embeddings.parquet")
+    got = ann_eval_mrr(spark, sf).collect()
+    assert len(got) == 5
+    for r in got:
+        assert r.approx_rank == 1 and r.rr_micro == 1_000_000
+        assert r.mrr_micro == 1_000_000

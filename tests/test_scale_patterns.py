@@ -2,9 +2,18 @@
 co-located joins (no Exchange), and broadcast-join plan shape."""
 
 import pyspark.sql.functions as F
+from pyspark.sql import Row
+from pyspark.sql.window import Window
 
 from tests.conftest import SF_SMALL
 from walmart_retail_pyspark_sqlite_pipeline_spark.operators import salted_agg
+from walmart_retail_pyspark_sqlite_pipeline_spark.operators.ranking import (
+    global_ntile,
+    global_row_number,
+)
+from walmart_retail_pyspark_sqlite_pipeline_spark.plans.parity import (
+    q48_global_rank,
+)
 from walmart_retail_pyspark_sqlite_pipeline_spark.sources import read_table
 
 
@@ -450,3 +459,58 @@ def test_global_rank_exact_with_exchange_reuse_and_aqe_off(spark):
             else:
                 spark.conf.set(k, v)
         spark.catalog.clearCache()
+
+
+def test_global_row_number_matches_window(spark):
+    """The distributed rank must equal the single-partition window's
+    row_number on every row, for an adversarial value distribution
+    (duplicates, negatives, a constant run) and a partition count that
+    does not divide the row count."""
+    vals = [7, -3, 7, 0, 0, 0, 42, -3, 9, 1, 1, 5, 7] * 7  # 91 rows
+    df = spark.createDataFrame(
+        [Row(id=i, v=v) for i, v in enumerate(vals)]
+    ).repartition(8)
+    got = {
+        r.id: r.rn
+        for r in global_row_number(
+            df, [F.desc("v"), F.col("id")], out="rn"
+        ).collect()
+    }
+    w = Window.orderBy(F.desc("v"), "id")
+    want = {
+        r.id: r.rn
+        for r in df.withColumn("rn", F.row_number().over(w)).collect()
+    }
+    assert got == want
+
+
+def test_global_ntile_matches_window_for_all_remainders(spark):
+    """Exact ntile parity for every n mod buckets class, including
+    n < buckets."""
+    for n in (1, 2, 3, 4, 5, 7, 12, 37):
+        df = spark.createDataFrame(
+            [Row(id=i, v=(i * 13) % 7) for i in range(n)]
+        ).crossJoin(
+            spark.createDataFrame([Row(_n=n)])
+        )
+        got = {
+            r.id: r.b
+            for r in global_ntile(
+                df, [F.col("v"), F.col("id")], "_n", 4, "b"
+            ).collect()
+        }
+        w = Window.orderBy("v", "id")
+        want = {
+            r.id: r.b
+            for r in df.withColumn("b", F.ntile(4).over(w)).collect()
+        }
+        assert got == want, f"ntile mismatch at n={n}"
+
+
+def test_q48_rank_is_dense_and_value_ordered(spark):
+    rows = q48_global_rank(spark, SF_SMALL).collect()
+    ranks = sorted(r.value_rank for r in rows)
+    assert ranks == list(range(1, len(rows) + 1)), "ranks not dense 1..n"
+    by_rank = sorted(rows, key=lambda r: r.value_rank)
+    for a, b in zip(by_rank, by_rank[1:]):
+        assert (a.cents, -a.o_orderkey) >= (b.cents, -b.o_orderkey)

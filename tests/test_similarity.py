@@ -8,6 +8,13 @@ from walmart_retail_pyspark_sqlite_pipeline_spark.functions import vectors
 from walmart_retail_pyspark_sqlite_pipeline_spark.operators.similarity import (
     topk_cosine,
 )
+from walmart_retail_pyspark_sqlite_pipeline_spark.plans.llm import (
+    SIMHASH_HAM_MAX,
+    _simhash64_index,
+    dedup_simhash_hamming_pairs,
+    embeddings_dim_clip_bounds,
+    embeddings_whitening_stats,
+)
 from walmart_retail_pyspark_sqlite_pipeline_spark.sources import read_table
 
 
@@ -299,49 +306,6 @@ def test_packed_hamming_agrees_with_unpacked_on_planted_bit63_vectors(spark):
         assert r.hamming == r.hamming_unpacked and r.agree == 1, r
 
 
-def test_semdedup_prunes_planted_near_duplicates_within_learned_cluster(spark):
-    """Planted geometry with NO usable labels (all label 0): two seed
-    vectors (ids 0 and 1) sit on orthogonal axes; a trio of near-copies of
-    the axis-0 seed must land in its learned cluster and be pruned down to
-    the min-id representative, orthogonal strays must survive, and the
-    axis-1 near-copy prunes against its own cluster — entirely from the
-    vectors themselves."""
-    import tempfile
-
-    from walmart_retail_pyspark_sqlite_pipeline_spark.plans.llm import (
-        dedup_semantic_clusters,
-    )
-
-    def axis(i, bump=None):
-        v = [0.0] * 64
-        v[i] = 1.0
-        if bump is not None:
-            v[bump] = 1e-3
-        return v
-
-    rows = [
-        (0, axis(0), 0),          # seed A (axis 0)
-        (1, axis(1), 0),          # seed B (axis 1)
-        (20, axis(0, bump=2), 0),  # near-copies of seed A -> pruned
-        (21, axis(0, bump=3), 0),
-        (22, axis(0, bump=4), 0),
-        (23, axis(3), 0),          # orthogonal stray -> kept
-        (30, axis(1, bump=5), 0),  # near-copy of seed B -> pruned
-        (31, axis(5), 0),          # orthogonal stray -> kept
-    ]
-    df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    )
-    with tempfile.TemporaryDirectory() as d:
-        df.write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
-        out = {r.cluster: r for r in dedup_semantic_clusters(spark, d).collect()}
-    c0, c1 = out[0], out[1]
-    # cluster 0: seed A + its 3 near-copies + the tie-broken strays 23/31
-    assert (c0.n_vecs, c0.n_dup_pairs, c0.n_pruned, c0.n_kept) == (6, 6, 3, 3)
-    # cluster 1: seed B + its near-copy
-    assert (c1.n_vecs, c1.n_dup_pairs, c1.n_pruned, c1.n_kept) == (2, 1, 1, 1)
-
-
 def test_mips_ranks_by_inner_product_and_reduction_agrees(spark):
     """Planted magnitudes where cosine and inner-product DISAGREE: a long
     vector with moderate angle must out-rank a short well-aligned one by
@@ -495,3 +459,102 @@ def test_b_bit_minhash_exact_on_identical_docs(spark, tmp_path):
         num = max(0, 16 * r.n_match - 8)
         assert r.est_j_micro == (2 * num * 1000000 + 120) // 240
         assert 0 <= r.est_j_micro <= 1000000
+
+
+def test_dim_clip_bounds_match_exact_quantiles(spark):
+    from walmart_retail_pyspark_sqlite_pipeline_spark.sources import (
+        read_embeddings,
+    )
+
+    rows = {r.dim: r for r in embeddings_dim_clip_bounds(spark, SF_SMALL).collect()}
+    assert rows
+    vecs = [r.embedding for r in read_embeddings(spark, SF_SMALL).collect()]
+    dims = len(vecs[0])
+    assert set(rows) == set(range(dims))
+    for d in (0, dims // 2, dims - 1):
+        vals = sorted(v[d] for v in vecs)
+        n = len(vals)
+        lo = vals[(n + 99) // 100 - 1]
+        hi = vals[(99 * n + 99) // 100 - 1]
+        r = rows[d]
+        assert r.n == n
+        assert abs(r.p01 - round(lo, 6)) < 1e-9
+        assert abs(r.p99 - round(hi, 6)) < 1e-9
+        assert r.n_clipped == sum(1 for v in vals if v < lo or v > hi)
+
+
+def test_simhash_hamming_pairs_verified_distance(spark):
+    """Every exported pair must be within the Hamming radius, and the
+    banded recall guarantee must hold: ANY fingerprint pair within the
+    radius shares a nibble band, so brute-force pairs == LSH pairs."""
+    pairs = dedup_simhash_hamming_pairs(spark, SF_SMALL).collect()
+    fp = {
+        r.doc_id: r.simhash60
+        for r in _simhash64_index(spark, SF_SMALL).collect()
+    }
+    got = {(r.doc_a, r.doc_b) for r in pairs}
+    for r in pairs:
+        assert 0 <= r.hamming <= SIMHASH_HAM_MAX
+        assert bin(fp[r.doc_a] ^ fp[r.doc_b]).count("1") == r.hamming
+    ids = sorted(fp)
+    want = {
+        (a, b)
+        for i, a in enumerate(ids)
+        for b in ids[i + 1 :]
+        if bin(fp[a] ^ fp[b]).count("1") <= SIMHASH_HAM_MAX
+    }
+    assert got == want, "pigeonhole LSH missed or invented pairs"
+
+
+def test_whitening_stats_match_plain_moments(spark):
+    rows = embeddings_whitening_stats(spark, SF_SMALL).collect()
+    assert len(rows) == 64
+    from walmart_retail_pyspark_sqlite_pipeline_spark.sources import (
+        read_embeddings,
+    )
+
+    vecs = [r.embedding for r in read_embeddings(spark, SF_SMALL).collect()]
+    d0 = [round(v[0] * 1e6) for v in vecs]
+    n = len(d0)
+    mean = sum(d0) / (n * 1e6)
+    var = (n * sum(x * x for x in d0) - sum(d0) ** 2) / (n * n * 1e12)
+    assert abs(rows[0].mean - mean) < 2e-6
+    assert abs(rows[0].variance - var) < 2e-6
+    assert all(r.n == n for r in rows)
+
+
+def test_pairs_scaled_equals_brute_force_within_cells(spark):
+    """Every exported pair must (a) verify at cos >= threshold and (b) the
+    pair set must equal brute-force enumeration WITHIN the learned fine
+    cells — the candidate discipline is the cells; the verify is exact."""
+    from walmart_retail_pyspark_sqlite_pipeline_spark.plans.llm import (
+        COSINE_DUP_THRESHOLD,
+        _two_level_fine_cells,
+        dedup_embedding_pairs_scaled,
+    )
+
+    got = {
+        (r.vec_a, r.vec_b): r.cos
+        for r in dedup_embedding_pairs_scaled(spark, SF_SMALL).collect()
+    }
+    ev = _two_level_fine_cells(spark, SF_SMALL).collect()
+    by_cell: dict[int, list] = {}
+    for r in ev:
+        by_cell.setdefault(r.fcell, []).append(r)
+
+    def cos(u, v):
+        num = sum(a * b for a, b in zip(u, v))
+        den = (sum(a * a for a in u) ** 0.5) * (sum(b * b for b in v) ** 0.5)
+        return round(num / den, 6)
+
+    want = {}
+    for members in by_cell.values():
+        members = sorted(members, key=lambda r: r.vec_id)
+        for i, a in enumerate(members):
+            for b in members[i + 1 :]:
+                c = cos(a.v, b.v)
+                if c >= COSINE_DUP_THRESHOLD:
+                    want[(a.vec_id, b.vec_id)] = c
+    assert set(got) == set(want)
+    for k, v in want.items():
+        assert abs(got[k] - v) < 2e-6

@@ -8,6 +8,7 @@ prune on both dimensions.
 """
 
 import pyspark.sql.functions as F
+from pyspark.sql import Row
 
 from tests.conftest import SF_SMALL
 from walmart_retail_pyspark_sqlite_pipeline_spark.operators.layout import _interleave
@@ -16,6 +17,8 @@ from walmart_retail_pyspark_sqlite_pipeline_spark.plans.sketches import (
     layout_zorder_clustering,
     sketch_approx_distinct,
     sketch_approx_quantile,
+    sketch_cms_heavy_changers,
+    sketch_hdr_quantiles,
 )
 
 
@@ -413,3 +416,100 @@ def test_ams_band_holds_on_testdata(spark):
     assert r.rel_err == round(
         abs(r.ams_est2x - 2 * r.f2_exact) / (2 * r.f2_exact), 6
     )
+
+
+def test_cms_heavy_changers_estimates_dominate_truth(spark):
+    rows = sketch_cms_heavy_changers(spark, SF_SMALL).collect()
+    assert rows
+    for r in rows:
+        # CMS never underestimates a half's count
+        assert r.est0 >= r.true0
+        assert r.est1 >= r.true1
+        assert r.change_est == r.est1 - r.est0
+        assert r.change_true == r.true1 - r.true0
+    # export is ordered by |estimated change| descending
+    changes = [abs(r.change_est) for r in rows]
+    assert changes == sorted(changes, reverse=True)
+
+
+def test_hdr_quantiles_error_contract_on_planted_values(spark, tmp_path):
+    """Planted value set with hand-computable quantiles: the chosen
+    bucket must CONTAIN the exact discrete quantile (that is the sketch's
+    whole contract), and the midpoint's relative error is < 50%."""
+    sf = str(tmp_path)
+    # 100 rows: 50 x $1.00 (100 cents, bucket 7), 45 x $10.00 (1000
+    # cents, bucket 10), 5 x $1000.00 (100000 cents, bucket 17)
+    vals = [1.0] * 50 + [10.0] * 45 + [1000.0] * 5
+    spark.createDataFrame(
+        [Row(o_orderkey=i, o_totalprice=v) for i, v in enumerate(vals)]
+    ).write.parquet(f"{sf}/orders.parquet")
+    got = {r.q_pct: r for r in sketch_hdr_quantiles(spark, sf).collect()}
+    assert set(got) == {50, 95, 99}
+    exact = {50: 100, 95: 1000, 99: 100000}  # cents at ceil(p*n/100)
+    for p, cents in exact.items():
+        r = got[p]
+        assert r.bucket_lo <= cents <= r.bucket_hi, (p, cents, r)
+        assert r.est_mid == (r.bucket_lo + r.bucket_hi) // 2
+        # relative error bound of the log2 bucket midpoint
+        assert abs(r.est_mid - cents) <= cents, (p, r)
+        assert r.total == 100
+        assert r.target_rank == (p * 100 + 99) // 100
+        assert r.cum_count >= r.target_rank
+
+
+def _xy2d_reference(n: int, x: int, y: int) -> int:
+    """Pure-Python Hilbert xy2d, n-1-x rotation variant (stays in
+    [0, n) every round — the form the SQL arithmetic mirrors)."""
+    d, s = 0, n // 2
+    while s > 0:
+        rx = 1 if (x // s) % 2 else 0
+        ry = 1 if (y // s) % 2 else 0
+        d += s * s * ((3 * rx) ^ ry)
+        if ry == 0:
+            if rx == 1:
+                x, y = n - 1 - x, n - 1 - y
+            x, y = y, x
+        s //= 2
+    return d
+
+
+def test_hilbert_reference_walk_is_bijective_and_adjacent():
+    """The property Z-order lacks: consecutive Hilbert keys are ALWAYS
+    Manhattan-adjacent cells (no jumps), and the walk is a bijection."""
+    n = 16
+    cells = {_xy2d_reference(n, x, y): (x, y) for x in range(n) for y in range(n)}
+    assert sorted(cells) == list(range(n * n))
+    for d in range(n * n - 1):
+        (x0, y0), (x1, y1) = cells[d], cells[d + 1]
+        assert abs(x0 - x1) + abs(y0 - y1) == 1, (d, cells[d], cells[d + 1])
+
+
+def test_hilbert_engine_key_matches_reference_walk(spark, tmp_path):
+    """Planted orders covering every (price 0..15, month 1..12) cell:
+    the engine's h_key must equal the reference walk cell-for-cell."""
+    import datetime
+
+    from walmart_retail_pyspark_sqlite_pipeline_spark.plans.sketches import (
+        layout_hilbert_clustering,
+    )
+
+    sf = str(tmp_path)
+    rows = []
+    k = 0
+    for p in range(16):
+        for m in range(1, 13):
+            k += 1
+            rows.append(
+                Row(
+                    o_orderkey=k,
+                    o_totalprice=float(p),
+                    o_orderdate=datetime.date(2024, m, 5),
+                )
+            )
+    spark.createDataFrame(rows).write.parquet(f"{sf}/orders.parquet")
+    got = layout_hilbert_clustering(spark, sf).collect()
+    assert len(got) == 192  # 16 price x 12 month cells, one row each
+    for r in got:
+        assert r.n_rows == 1
+        assert r.pb_min == r.pb_max and r.mb_min == r.mb_max
+        assert r.h_key == _xy2d_reference(16, r.pb_min, r.mb_min), r

@@ -4,13 +4,18 @@ depend on arithmetic width, not just on the driver data's value range."""
 from __future__ import annotations
 
 import datetime
+import math
 import tempfile
 
 import duckdb
+from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from walmart_retail_pyspark_sqlite_pipeline_spark.plans.timeseries import (
     ANOMALY_ZSCORE_SQL,
+    events_ab_test,
     events_anomaly_zscore,
+    events_attribution_position,
 )
 
 EVENT_SCHEMA = (
@@ -179,3 +184,428 @@ def test_seasonal_decompose_excludes_gapped_windows(spark):
     # hole (6 surviving rows) have invalid windows -> 22 - 7 = 15 remain
     assert sum(r.n_days for r in holed) == 15
     assert all(r.seasonal_cents == 0.0 for r in holed), holed
+
+
+def test_attribution_last_touch_planted(spark, tmp_path):
+    """Planted stream: user 1 view->click->purchase(10) credits click;
+    user 2 purchase(5) with no prior touch credits direct; user 3's
+    purchase(2) after a view credits view; a NULL-value purchase counts a
+    row but no revenue."""
+    import datetime as dt
+
+    from walmart_retail_pyspark_sqlite_pipeline_spark.plans.timeseries import (
+        events_attribution_last_touch,
+    )
+
+    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
+
+    def ev(eid, uid, typ, val, s):
+        return Row(event_id=eid, ts=t0 + dt.timedelta(seconds=s),
+                   user_id=uid, event_type=typ, value=val, props="{}")
+
+    rows = [
+        ev(1, 1, "view", 0.0, 0),
+        ev(2, 1, "click", 0.0, 10),
+        ev(3, 1, "purchase", 10.0, 20),
+        ev(4, 2, "purchase", 5.0, 5),
+        ev(5, 3, "view", 0.0, 1),
+        ev(6, 3, "purchase", 2.0, 9),
+        ev(7, 3, "purchase", None, 12),  # still last-touched by the view
+    ]
+    spark.createDataFrame(rows).write.mode("overwrite").parquet(
+        str(tmp_path / "events.parquet")
+    )
+    out = {
+        r.channel: r
+        for r in events_attribution_last_touch(spark, str(tmp_path)).collect()
+    }
+    assert out["click"].attributed_cents == 1000
+    assert out["direct"].attributed_cents == 500
+    assert out["view"].n_purchases == 2  # the NULL-value purchase counts
+    assert out["view"].attributed_cents == 200
+    total = 1000 + 500 + 200
+    assert abs(out["click"].revenue_share - round(1000 / total, 6)) < 2e-6
+
+
+def test_position_attribution_u_shape_on_planted_journeys(spark, tmp_path):
+    sf = str(tmp_path)
+    ts = [f"2024-01-01 00:0{i}:00" for i in range(10)]
+    rows = [
+        # user 1: ad -> email -> search -> purchase(100.00): 40/20/40
+        Row(event_id=1, ts=ts[0], user_id=1, event_type="ad", value=0.0),
+        Row(event_id=2, ts=ts[1], user_id=1, event_type="email", value=0.0),
+        Row(event_id=3, ts=ts[2], user_id=1, event_type="search", value=0.0),
+        Row(event_id=4, ts=ts[3], user_id=1, event_type="purchase", value=100.0),
+        # user 2: bare purchase(50.00) -> direct 100%
+        Row(event_id=5, ts=ts[0], user_id=2, event_type="purchase", value=50.0),
+        # user 2 second journey: one touch then purchase(10.00) -> ad 100%
+        Row(event_id=6, ts=ts[1], user_id=2, event_type="ad", value=0.0),
+        Row(event_id=7, ts=ts[2], user_id=2, event_type="purchase", value=10.0),
+        # user 3: two touches, NO purchase -> no credits at all
+        Row(event_id=8, ts=ts[0], user_id=3, event_type="ad", value=0.0),
+        Row(event_id=9, ts=ts[1], user_id=3, event_type="email", value=0.0),
+    ]
+    df = spark.createDataFrame(rows).withColumn(
+        "ts", F.col("ts").cast("timestamp")
+    )
+    df.write.parquet(f"{sf}/events.parquet")
+    got = {
+        r.channel: (r.n_credits, r.attributed_micro)
+        for r in events_attribution_position(spark, sf).collect()
+    }
+    cents100, cents50, cents10 = 10_000, 5_000, 1_000
+    assert got == {
+        # ad: 40% of user1's purchase + 100% of user2's second journey
+        "ad": (2, cents100 * 1_000_000 * 2 // 5 + cents10 * 1_000_000),
+        "email": (1, cents100 * 1_000_000 // 5),
+        "search": (1, cents100 * 1_000_000 * 2 // 5),
+        "direct": (1, cents50 * 1_000_000),
+    }
+
+
+def test_markov_attribution_on_planted_chain(spark, tmp_path):
+    """Hand-solvable chain: u1 ad->purchase, u2 ad->drop, u3 email->purchase.
+    Full chain: P(conv|START)=2/3. Remove ad: its journeys drop, P=1/3.
+    Remove email: P=1/3. Removal effects equal -> shares 0.5/0.5."""
+    from walmart_retail_pyspark_sqlite_pipeline_spark.plans.timeseries import (
+        events_attribution_markov,
+    )
+    from pyspark.sql import Row
+    from pyspark.sql import functions as F
+
+    sf = str(tmp_path)
+    ts = [f"2024-01-01 00:0{i}:00" for i in range(4)]
+    rows = [
+        Row(event_id=1, ts=ts[0], user_id=1, event_type="ad", value=0.0),
+        Row(event_id=2, ts=ts[1], user_id=1, event_type="purchase", value=1.0),
+        Row(event_id=3, ts=ts[0], user_id=2, event_type="ad", value=0.0),
+        Row(event_id=4, ts=ts[0], user_id=3, event_type="email", value=0.0),
+        Row(event_id=5, ts=ts[1], user_id=3, event_type="purchase", value=1.0),
+    ]
+    df = spark.createDataFrame(rows).withColumn(
+        "ts", F.col("ts").cast("timestamp")
+    )
+    df.write.parquet(f"{sf}/events.parquet")
+    got = {
+        r.channel: r for r in events_attribution_markov(spark, sf).collect()
+    }
+    assert set(got) == {"ad", "email"}
+    # START -> ad (2/3) -> CONV (1/2); START -> email (1/3) -> CONV (1)
+    # p_full = 2/3*1/2 + 1/3*1 = 2/3 (micro-truncated)
+    assert abs(got["ad"].p_conv_full - 2 / 3) < 2e-6
+    # remove ad: START->ad edges go to DROP; only email converts: 1/3
+    assert abs(got["ad"].p_conv_removed - 1 / 3) < 2e-6
+    # remove email: ad journeys unaffected: 2/3 * 1/2 = 1/3
+    assert abs(got["email"].p_conv_removed - 1 / 3) < 2e-6
+    assert abs(got["ad"].attribution_share - 0.5) < 2e-6
+    assert abs(got["email"].attribution_share - 0.5) < 2e-6
+
+
+def test_ab_test_z_score_matches_hand_calc(spark, tmp_path):
+    """8 users: arm A (even ids) 4 users 3 converted, arm B (odd ids)
+    4 users 1 converted. z = (0.75-0.25)/sqrt(0.5*0.5*(1/4+1/4))."""
+    sf = str(tmp_path)
+    rows = []
+    eid = 0
+    for uid in range(8):
+        eid += 1
+        rows.append(
+            Row(
+                event_id=eid,
+                ts="2024-01-01 00:00:00",
+                user_id=uid,
+                event_type="view",
+                value=0.0,
+            )
+        )
+    for uid in (0, 2, 4, 1):  # 3 even converters + 1 odd
+        eid += 1
+        rows.append(
+            Row(
+                event_id=eid,
+                ts="2024-01-01 00:01:00",
+                user_id=uid,
+                event_type="purchase",
+                value=1.0,
+            )
+        )
+    df = spark.createDataFrame(rows).withColumn("ts", F.col("ts").cast("timestamp"))
+    df.write.parquet(f"{sf}/events.parquet")
+    r = events_ab_test(spark, sf).collect()[0]
+    assert (r.n_a, r.conv_a, r.n_b, r.conv_b) == (4, 3, 4, 1)
+    want_z = (0.75 - 0.25) / math.sqrt(0.5 * 0.5 * (1 / 4 + 1 / 4))
+    assert abs(r.z_score - want_z) < 1e-12
+    assert abs(r.p_a - 0.75) < 1e-12 and abs(r.p_b - 0.25) < 1e-12
+
+
+def test_ab_test_degenerate_arms_yield_null_z(spark, tmp_path):
+    """One-arm data (all even user ids): z must be NULL, counts exact."""
+    sf = str(tmp_path)
+    rows = [
+        Row(
+            event_id=i,
+            ts="2024-01-01 00:00:00",
+            user_id=2 * i,
+            event_type="view",
+            value=0.0,
+        )
+        for i in range(1, 4)
+    ]
+    df = spark.createDataFrame(rows).withColumn("ts", F.col("ts").cast("timestamp"))
+    df.write.parquet(f"{sf}/events.parquet")
+    r = events_ab_test(spark, sf).collect()[0]
+    assert (r.n_a, r.n_b) == (3, 0)
+    assert r.z_score is None and r.p_b is None
+
+
+def _write_events(spark, sf, rows):
+    df = spark.createDataFrame(rows).withColumn(
+        "ts", F.col("ts").cast("timestamp")
+    )
+    df.write.parquet(f"{sf}/events.parquet")
+
+
+def test_time_decay_attribution_hand_calc(spark, tmp_path):
+    """User 1: click (age 2 days), view (age 0 days), purchase $1.00.
+    Weights 2^18 : 2^20 -> credit split exactly 20%/80% of 100e6 micro.
+    User 3: touchless purchase $2.00 -> 'direct' gets the full 200e6."""
+    from walmart_retail_pyspark_sqlite_pipeline_spark.plans.timeseries import (
+        events_attribution_time_decay,
+    )
+
+    sf = str(tmp_path)
+    rows = [
+        Row(event_id=1, ts="2024-01-01 00:00:00", user_id=1,
+            event_type="click", value=0.0),
+        Row(event_id=2, ts="2024-01-03 00:00:00", user_id=1,
+            event_type="view", value=0.0),
+        Row(event_id=3, ts="2024-01-03 01:00:00", user_id=1,
+            event_type="purchase", value=1.0),
+        Row(event_id=4, ts="2024-01-05 00:00:00", user_id=3,
+            event_type="purchase", value=2.0),
+    ]
+    _write_events(spark, sf, rows)
+    got = {
+        r.channel: r
+        for r in events_attribution_time_decay(spark, sf).collect()
+    }
+    assert set(got) == {"click", "view", "direct"}
+    # click: age (2d+1h) DIV 1d = 2 -> w=2^18; view: age 0 -> w=2^20
+    w_click, w_view = 1 << 18, 1 << 20
+    tot = w_click + w_view
+    assert got["click"].attributed_micro == 100_000_000 * w_click // tot
+    assert got["view"].attributed_micro == 100_000_000 * w_view // tot
+    assert got["direct"].attributed_micro == 200_000_000
+    assert (
+        got["click"].n_credits,
+        got["view"].n_credits,
+        got["direct"].n_credits,
+    ) == (1, 1, 1)
+
+
+def test_time_decay_conserves_purchase_value_within_truncation(
+    spark, tmp_path
+):
+    """Across many journeys the per-channel micros must sum to the total
+    converted value minus at most one micro of DIV truncation per touch."""
+    from walmart_retail_pyspark_sqlite_pipeline_spark.plans.timeseries import (
+        events_attribution_time_decay,
+    )
+
+    sf = str(tmp_path)
+    rows, eid = [], 0
+    n_touch = 0
+    for uid in range(20):
+        base = 1704067200  # 2024-01-01
+        for k in range(uid % 5):
+            eid += 1
+            n_touch += 1
+            rows.append(
+                Row(
+                    event_id=eid,
+                    ts=f"2024-01-0{1 + k % 5} 0{uid % 9}:00:00",
+                    user_id=uid,
+                    event_type=("click", "view", "signup")[k % 3],
+                    value=0.0,
+                )
+            )
+        eid += 1
+        rows.append(
+            Row(
+                event_id=eid,
+                ts="2024-01-09 00:00:00",
+                user_id=uid,
+                event_type="purchase",
+                value=float(uid + 1),
+            )
+        )
+    _write_events(spark, sf, rows)
+    got = events_attribution_time_decay(spark, sf).collect()
+    total_micro = sum(r.attributed_micro for r in got)
+    want = sum((uid + 1) * 100 * 1_000_000 for uid in range(20))
+    assert want - n_touch <= total_micro <= want
+
+
+def test_ab_cuped_matches_python_float_reference(spark, tmp_path):
+    """Planted per-user (x, y): the engine's mirrored-double outputs must
+    equal the same IEEE expression tree computed in Python floats."""
+    from walmart_retail_pyspark_sqlite_pipeline_spark.plans.timeseries import (
+        events_ab_cuped,
+    )
+
+    sf = str(tmp_path)
+    # span 00:00..02:00 -> cut at 01:00; pre events at 00:00, purchases
+    # (the Y metric) at 02:00
+    xs = {0: 1, 1: 2, 2: 3, 3: 4, 4: 2, 5: 1}
+    ys = {0: 0, 1: 1, 2: 1, 3: 2, 4: 2, 5: 0}
+    rows, eid = [], 0
+    for uid, x in xs.items():
+        for _ in range(x):
+            eid += 1
+            rows.append(
+                Row(event_id=eid, ts="2024-01-01 00:00:00", user_id=uid,
+                    event_type="view", value=0.0)
+            )
+        for _ in range(ys[uid]):
+            eid += 1
+            rows.append(
+                Row(event_id=eid, ts="2024-01-01 02:00:00", user_id=uid,
+                    event_type="purchase", value=1.0)
+            )
+    _write_events(spark, sf, rows)
+    r = events_ab_cuped(spark, sf).collect()[0]
+    # purchases at 02:00 are post-period rows; they do NOT count into x
+    n = len(xs)
+    sx = sum(xs.values())
+    sy = sum(ys.values())
+    sxy = sum(xs[u] * ys[u] for u in xs)
+    sxx = sum(v * v for v in xs.values())
+    syy = sum(v * v for v in ys.values())
+    varx = float(n) * float(sxx) - float(sx) * float(sx)
+    covxy = float(n) * float(sxy) - float(sx) * float(sy)
+    vary = float(n) * float(syy) - float(sy) * float(sy)
+    theta = covxy / varx
+    a = [u for u in xs if u % 2 == 0]
+    b = [u for u in xs if u % 2 == 1]
+    mean_x = float(sx) / float(n)
+    mean_y_a = float(sum(ys[u] for u in a)) / float(len(a))
+    mean_y_b = float(sum(ys[u] for u in b)) / float(len(b))
+    mean_x_a = float(sum(xs[u] for u in a)) / float(len(a))
+    mean_x_b = float(sum(xs[u] for u in b)) / float(len(b))
+    assert (r.n_a, r.n_b) == (len(a), len(b))
+    assert r.theta == theta
+    assert r.mean_y_a == mean_y_a and r.mean_y_b == mean_y_b
+    assert r.diff_raw == mean_y_a - mean_y_b
+    want_cuped = (mean_y_a - theta * (mean_x_a - mean_x)) - (
+        mean_y_b - theta * (mean_x_b - mean_x)
+    )
+    assert r.diff_cuped == want_cuped
+    assert r.rho2 == (covxy * covxy) / (varx * vary)
+
+
+def test_ab_cuped_zero_variance_covariate_yields_null_theta(
+    spark, tmp_path
+):
+    from walmart_retail_pyspark_sqlite_pipeline_spark.plans.timeseries import (
+        events_ab_cuped,
+    )
+
+    sf = str(tmp_path)
+    rows = []
+    for uid in range(4):  # every user: exactly one pre event -> var(X)=0
+        rows.append(
+            Row(event_id=uid + 1, ts="2024-01-01 00:00:00", user_id=uid,
+                event_type="view", value=0.0)
+        )
+    rows.append(
+        Row(event_id=99, ts="2024-01-01 02:00:00", user_id=0,
+            event_type="purchase", value=1.0)
+    )
+    _write_events(spark, sf, rows)
+    r = events_ab_cuped(spark, sf).collect()[0]
+    assert r.theta is None and r.diff_cuped is None and r.rho2 is None
+    assert r.diff_raw is not None  # raw readout still defined
+
+
+def test_ab_srm_flags_planted_mismatch(spark, tmp_path):
+    """90 even users vs 10 odd users: chi2 = (40^2/50)*2 = 64 >> 3.841
+    -> flagged; a balanced 10/10 split must NOT flag."""
+    from walmart_retail_pyspark_sqlite_pipeline_spark.plans.timeseries import (
+        events_ab_srm,
+    )
+
+    sf = str(tmp_path)
+    rows = [
+        Row(event_id=i + 1, ts="2024-01-01 00:00:00",
+            user_id=2 * i if i < 90 else 2 * i + 1,
+            event_type="view", value=0.0)
+        for i in range(100)
+    ]
+    _write_events(spark, sf, rows)
+    r = events_ab_srm(spark, sf).collect()[0]
+    assert (r.n_a, r.n_b) == (90, 10)
+    assert r.chi2 == 64.0 and bool(r.srm_flag) is True
+
+
+def test_ab_srm_balanced_split_not_flagged(spark, tmp_path):
+    from walmart_retail_pyspark_sqlite_pipeline_spark.plans.timeseries import (
+        events_ab_srm,
+    )
+
+    sf = str(tmp_path)
+    rows = [
+        Row(event_id=i + 1, ts="2024-01-01 00:00:00", user_id=i,
+            event_type="view", value=0.0)
+        for i in range(20)
+    ]
+    _write_events(spark, sf, rows)
+    r = events_ab_srm(spark, sf).collect()[0]
+    assert (r.n_a, r.n_b) == (10, 10)
+    assert r.chi2 == 0.0 and bool(r.srm_flag) is False
+
+
+def test_power_mde_matches_hand_formula(spark, tmp_path):
+    """20 users, 5 converters: p1=0.25, p2=0.275 -> the two-proportion
+    sample-size formula evaluated in Python floats must match exactly."""
+    import math
+
+    from walmart_retail_pyspark_sqlite_pipeline_spark.plans.timeseries import (
+        events_power_mde,
+    )
+
+    sf = str(tmp_path)
+    rows = [
+        Row(event_id=i + 1, ts="2024-01-01 00:00:00", user_id=i,
+            event_type="purchase" if i < 5 else "view", value=0.0)
+        for i in range(20)
+    ]
+    _write_events(spark, sf, rows)
+    r = events_power_mde(spark, sf).collect()[0]
+    assert (r.n, r.conv) == (20, 5)
+    p1 = 5.0 / 20.0
+    p2 = p1 * 1.1
+    want = math.ceil(
+        7.84888591922985 * (p1 * (1.0 - p1) + p2 * (1.0 - p2))
+        / ((p2 - p1) * (p2 - p1))
+    )
+    assert r.p_base == p1 and r.p_target == p2
+    assert r.n_required_per_arm == want
+    # sanity: a 10% relative lift on a 25% baseline needs thousands per arm
+    assert 4000 < want < 6000
+
+
+def test_power_mde_zero_conversions_yield_null(spark, tmp_path):
+    from walmart_retail_pyspark_sqlite_pipeline_spark.plans.timeseries import (
+        events_power_mde,
+    )
+
+    sf = str(tmp_path)
+    rows = [
+        Row(event_id=i + 1, ts="2024-01-01 00:00:00", user_id=i,
+            event_type="view", value=0.0)
+        for i in range(5)
+    ]
+    _write_events(spark, sf, rows)
+    r = events_power_mde(spark, sf).collect()[0]
+    assert r.conv == 0 and r.n_required_per_arm is None
+    assert r.p_base == 0.0

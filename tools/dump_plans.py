@@ -63,7 +63,6 @@ HEADLINE = [
     # round-7 additions (sketch-native CMS probes are covered by the
     # sketch_cms_manual entry above)
     "sketch_kmv_intersection",
-    "dedup_semantic_clusters",
     "events_cusum_changepoint",
     "ann_mips_topk",
     "ann_hamming_topk",

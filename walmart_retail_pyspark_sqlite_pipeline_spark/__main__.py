@@ -18,6 +18,8 @@ from __future__ import annotations
 import argparse
 import sys
 
+from .pipeline.orchestrator import SINKS
+
 
 def _build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="walmart_retail_pyspark_sqlite_pipeline_spark")
@@ -35,8 +37,9 @@ def _build_parser() -> argparse.ArgumentParser:
     pl = sub.add_parser("pipeline", help="run the retail ETL lifecycle")
     pl.add_argument("--raw-dir", required=True)
     pl.add_argument("--output-db", default="curated/retail.db")
-    pl.add_argument("--sink", default="sqlite",
-                    choices=["sqlite", "parquet", "both"])
+    pl.add_argument("--sink", default="sqlite", choices=SINKS,
+                    help="write the curated tables to the SQLite database "
+                    "(--output-db) or to parquet under curated/")
 
     c = sub.add_parser("corpus", help="run the corpus-prep lifecycle")
     c.add_argument("--input-dir", required=True)

@@ -30,6 +30,8 @@ from ..sources.csv import read_csv_raw
 
 log = logging.getLogger("walmart_retail_pipeline")
 
+SINKS = ("sqlite", "parquet")
+
 
 @dataclass
 class PipelineConfig:
@@ -39,7 +41,7 @@ class PipelineConfig:
     max_null_fraction: float = 0.6
     drop_duplicates: bool = True
     fail_on_schema_mismatch: bool = False
-    sink: str = "sqlite"  # "sqlite" | "parquet" | "both"
+    sink: str = "sqlite"  # one of SINKS
     #: lakehouse layout for the parquet sink: table -> partition columns.
     #: Partitioning the fact by year means a year-filtered downstream read
     #: prunes whole directories before any IO — the default layout choice
@@ -102,6 +104,8 @@ def run_pipeline(
     spark: SparkSession, cfg: PipelineConfig
 ) -> dict[str, object]:
     """Run the full lifecycle; returns {reports, table_rows, elapsed_s}."""
+    if cfg.sink not in SINKS:
+        raise ValueError(f"unknown sink {cfg.sink!r}; expected one of {SINKS}")
     t0 = time.perf_counter()
     if cfg.acquire is not None:
         cfg.acquire(cfg.raw_dir)
@@ -171,29 +175,28 @@ def run_pipeline(
                 for i, c in enumerate(row_cons)
             ],
         )
-        if cfg.sink in ("sqlite", "both"):
+        if cfg.sink == "sqlite":
             table_rows[name] = write_sqlite(df, db_path, name)
             log.info("wrote %s: %d rows -> %s", name, table_rows[name], db_path)
-        if cfg.sink in ("parquet", "both"):
+        else:
             out = f"{cfg.output_parquet_dir or 'curated'}/{name}"
             write_parquet(
                 df, out, partition_by=cfg.parquet_partition_by.get(name)
             )
             log.info("wrote %s -> %s", name, out)
-        if cfg.sink in ("sqlite", "parquet", "both"):
-            got = dict(obs.get)
-            for i, c in enumerate(row_cons):
-                cnt = int(got.pop(f"__v{i}") or 0)
-                constraint_violations.setdefault(name, {})[c.name] = cnt
-                if cnt:
-                    log.warning(
-                        "constraint %s on %s: %d violating rows (write-time)",
-                        c.name, name, cnt,
-                    )
-            observed[name] = got
-            # parquet-only runs still report row counts — from the write-time
-            # observation, not an extra count() job
-            table_rows.setdefault(name, observed[name]["rows"])
+        got = dict(obs.get)
+        for i, c in enumerate(row_cons):
+            cnt = int(got.pop(f"__v{i}") or 0)
+            constraint_violations.setdefault(name, {})[c.name] = cnt
+            if cnt:
+                log.warning(
+                    "constraint %s on %s: %d violating rows (write-time)",
+                    c.name, name, cnt,
+                )
+        observed[name] = got
+        # parquet runs still report row counts — from the write-time
+        # observation, not an extra count() job
+        table_rows.setdefault(name, observed[name]["rows"])
 
     return {
         "reports": reports,

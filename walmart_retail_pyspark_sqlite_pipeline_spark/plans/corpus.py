@@ -2920,8 +2920,6 @@ register(
         corpus_prep_pipeline_clf,
         CORPUS_PREP_CLF_SQL,
         ("PIPE7",),
-        bench=True,  # round-10 bench line (VERDICT r9 #5): the learned-gate capstone
-        warm_index=True,  # consumes the shared shingle index like the other dedup passes
         doc="prep pipeline with the learned quality gate: classifier keep -> exact dedup -> LSH near-dup removal",
     )
 )

@@ -516,55 +516,6 @@ def _emb_base(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# dedup_embedding_cosine — near-dup pairs by embedding cosine within label
-# blocks. SCALE BOUNDARY, measured (round-13 vector replica drive): with a
-# FIXED block count the candidate set is n^2/|blocks| while the output is
-# ~linear (0.04% selectivity at tau=0.4 on sf0.1), so the 200k-vector
-# rotated replica was killed at >50 min — and no exact prefilter can help
-# on this geometry (max within-block cosine 0.51 vs tau 0.4: nearly every
-# pair is "almost qualifying", so any no-false-negative filter must touch
-# nearly all of them; per-coordinate Lipschitz strips and centroid-angle
-# strips were both measured useless here). This surface is therefore the
-# EXACT COMPARISON POINT, valid at driver SFs — the same status as the
-# flat SemDeDup variant (VERDICT r8 #3) — and the production path at
-# scale is the recall-documented candidate discipline family:
-# dedup_semantic_ivf (two-level assignment, 3.81x/decade),
-# dedup_minhash_lsh_pairs / dedup_simhash_hamming_pairs (banded, exact
-# verify on candidates only), ann_rerank_two_stage.
-# ---------------------------------------------------------------------------
-def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = read_embeddings(spark, sf_dir)
-    e = emb.select(
-        "vec_id", "label", vectors.as_double(F.col("embedding")).alias("v")
-    )
-    a, b = e.alias("a"), e.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.label") == F.col("b.label"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            F.round(vectors.cosine(F.col("a.v"), F.col("b.v")), 6).alias("cos"),
-        )
-        .filter(F.col("cos") >= COSINE_DUP_THRESHOLD)
-        .sortWithinPartitions("vec_a", "vec_b")
-    )
-
-
-DEDUP_EMB_COS_SQL = f"""
-WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x IS NULL)) = 0 AND len(list_filter(embedding, x -> x <> 0)) > 0) embeddings)
-SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       ROUND({vectors.cosine_sql('a.v', 'b.v')}, 6) AS cos
-FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
-WHERE ROUND({vectors.cosine_sql('a.v', 'b.v')}, 6) >= {COSINE_DUP_THRESHOLD}
-ORDER BY vec_a, vec_b
-"""
-
-
-# ---------------------------------------------------------------------------
 # ann_topk_cosine — brute-force cosine top-k against a query vector
 # (vec_id 0). The one-row query side is broadcast; the scan side streams —
 # this is the exact-baseline ANN a 1000-executor cluster runs when recall
@@ -1583,8 +1534,6 @@ for _spec in [
     QuerySpec("dedup_exact_hist", dedup_exact_hist, DEDUP_EXACT_SQL,
               ("A7", "DD1")),
     QuerySpec("dedup_simhash", dedup_simhash, DEDUP_SIMHASH_SQL, ("DD5",)),
-    QuerySpec("dedup_embedding_cosine", dedup_embedding_cosine,
-              DEDUP_EMB_COS_SQL, ("DD6", "SIM1")),
     QuerySpec("ann_lsh_buckets", ann_lsh_buckets, ANN_LSH_SQL, ("SIM3",)),
     QuerySpec("text_langid", text_langid, TEXT_LANGID_SQL, ("TX1",)),
     QuerySpec("text_bpe_tokens", text_bpe_tokens, TEXT_BPE_SQL, ("TX5",)),
@@ -1593,8 +1542,7 @@ for _spec in [
     QuerySpec("multimodal_image_meta", multimodal_image_meta, MULTIMODAL_SQL,
               ("MM1",)),
     QuerySpec("corpus_prep_pipeline", corpus_prep_pipeline, CORPUS_PREP_SQL,
-              ("DD1", "DD2", "TX2", "TX3", "PIPE1"), bench=True,
-              warm_index=True),
+              ("DD1", "DD2", "TX2", "TX3", "PIPE1")),
     QuerySpec("corpus_split_train_val_test", corpus_split_train_val_test,
               CORPUS_SPLIT_SQL, ("PIPE2",)),
 ]:
@@ -1621,12 +1569,11 @@ SELECT doc_id, t, {hashing.poly_hash_sql('t')} AS h FROM uni
 # IVF top-k; the shared shingle index every dedup consumer reads).
 for _spec in [
     QuerySpec("dedup_ngram_jaccard", dedup_ngram_jaccard, DEDUP_NGRAM_SQL,
-              ("DD2",), bench=True, warm_index=True),
+              ("DD2",)),
     QuerySpec("dedup_minhash_lsh_pairs", dedup_minhash_lsh_pairs,
-              DEDUP_MINHASH_PAIRS_SQL, ("DD3", "DD4"), bench=True,
-              warm_index=True),
+              DEDUP_MINHASH_PAIRS_SQL, ("DD3", "DD4")),
     QuerySpec("ann_topk_cosine", ann_topk_cosine, ANN_TOPK_SQL,
-              ("SIM2",), bench=True),
+              ("SIM2",)),
     QuerySpec("text_quality", text_quality, TEXT_QUALITY_SQL, ("TX2",)),
     QuerySpec("dedup_incremental_new_docs", dedup_incremental_new_docs,
               DEDUP_INCR_SQL, ("DD7", "J4")),
@@ -1642,7 +1589,7 @@ for _spec in [
     QuerySpec("multimodal_frame_sample", multimodal_frame_sample,
               FRAME_SAMPLE_SQL, ("MM2",)),
     QuerySpec("corpus_shingle_index", corpus_shingle_index,
-              CORPUS_SHINGLE_INDEX_SQL, ("DD2", "DD3"), bench=True),
+              CORPUS_SHINGLE_INDEX_SQL, ("DD2", "DD3")),
 ]:
     register(_spec)
 
@@ -1717,54 +1664,6 @@ register(
         doc="int8-quantized integer-dot ANN ranking",
     )
 )
-
-
-# ---------------------------------------------------------------------------
-# dedup_embedding_ivf_pairs — embedding near-dup with IVF-cell blocking:
-# every vector is assigned to its nearest coarse centroid (_ivf_cells),
-# and candidate pairs are generated ONLY within a cell — pair count drops
-# from N^2 to ~N^2/k with no all-pairs shuffle; the cell id is the shuffle
-# key. At 100 TB the vectors are stored bucketed by cell (see ann_ivf_topk)
-# so this query's self-join is Exchange-free. SCALE NOTE (round-13 vector
-# replica drive): with a FIXED cell count k this is the same n^2/k
-# candidate class as the label-blocked twin above — the honest production
-# discipline grows k with n (cells ~ sqrt(n), as dedup_semantic_ivf's
-# two-level assignment does), which keeps within-cell pairs ~linear; this
-# surface stays the fixed-k comparison point at driver SFs.
-# ---------------------------------------------------------------------------
-def dedup_embedding_ivf_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # round-12: shared cached vector store (_emb_base)
-    e = _emb_base(spark, sf_dir).select("vec_id", "v").join(
-        _ivf_cells(spark, sf_dir), "vec_id"
-    )
-    a, b = e.alias("a"), e.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.cell") == F.col("b.cell"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            F.round(vectors.cosine(F.col("a.v"), F.col("b.v")), 6).alias("cos"),
-        )
-        .filter(F.col("cos") >= COSINE_DUP_THRESHOLD)
-        .sortWithinPartitions("vec_a", "vec_b")
-    )
-
-
-DEDUP_EMB_IVF_SQL = f"""
-WITH {_IVF_CELLS_CTE}
-SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       ROUND({vectors.cosine_sql('ea.v', 'eb.v')}, 6) AS cos
-FROM cells a
-JOIN cells b ON a.cell = b.cell AND a.vec_id < b.vec_id
-JOIN e ea ON ea.vec_id = a.vec_id
-JOIN e eb ON eb.vec_id = b.vec_id
-WHERE ROUND({vectors.cosine_sql('ea.v', 'eb.v')}, 6) >= {COSINE_DUP_THRESHOLD}
-ORDER BY vec_a, vec_b
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -1864,18 +1763,6 @@ WHERE ROUND(CAST(common AS DOUBLE) / (na.n + nb.n - common), 6) >= {MINHASH_VERI
 ORDER BY doc_new, doc_old
 """
 
-
-# dedup_embedding_ivf_pairs blocks embedding dedup by IVF cell (the
-# ann_ivf_topk assignment on the blocking side).
-register(
-    QuerySpec(
-        "dedup_embedding_ivf_pairs",
-        dedup_embedding_ivf_pairs,
-        DEDUP_EMB_IVF_SQL,
-        ("DD6", "SIM4"),
-        doc="embedding near-dup pairs blocked by IVF cell (scale form)",
-    )
-)
 
 register(
     QuerySpec(
@@ -2010,8 +1897,8 @@ register(
 # retrieval eval, hard-negative mining, kNN-LM — ask in batches). Plan:
 # corpus × broadcast(queries) projection, then one window per query
 # (rank over cos). Work is Q×N with the small side broadcast — the exact
-# baseline; at large Q you block by IVF cell first (ann_ivf_topk /
-# dedup_embedding_ivf_pairs show that path).
+# baseline; at large Q you block by IVF cell first (ann_ivf_topk shows
+# that path).
 # ---------------------------------------------------------------------------
 KNN_Q = 5  # vec_id < 5 are the query batch
 KNN_K = 5
@@ -4609,183 +4496,19 @@ register(
 )
 
 
-# ---------------------------------------------------------------------------
-# dedup_semantic_clusters — SemDeDup-shaped semantic deduplication (Abbas et
-# al. 2023, "SemDeDup: Data-efficient learning at web-scale through semantic
-# deduplication"): cluster the embedding space, then look for near-duplicate
-# pairs ONLY within each cluster and prune all but one representative per
-# duplicate neighborhood. Differs from dedup_embedding_cosine (GIVEN label
-# blocks) in that the blocking is LEARNED from the data WITHOUT labels —
-# the form that works on a raw crawl: clustering is one deterministic
-# k-means pass seeded from the data itself (the C lowest-vec_id vectors
-# are the seeds — engine-portable and label-free), then a mean-centroid
-# update and a final reassignment, exactly the Lloyd-step machinery
-# embeddings_kmeans proves but with no label anywhere in the plan.
-#
-# Keep rule: within a cluster, a vector is pruned iff some cluster-mate with
-# a SMALLER vec_id is within the cosine threshold — the deterministic
-# min-id representative rule (SemDeDup keeps one doc per ε-neighborhood;
-# min-id is the engine-portable choice of which).
-#
-# Export: per-cluster integers only (members, duplicate pairs, pruned
-# count, kept count) — no float crosses the driver hash; the threshold
-# compare happens on the 6-dp-rounded cosine with the identical rounding
-# on both engines (dedup_embedding_cosine's proven idiom).
-#
-# Scale shape: the centroid table is broadcast (bounded by n_clusters);
-# the pair search is an equi-join on cell — candidate pairs are bounded
-# per-cluster exactly like the label/LSH/IVF blocked variants, never
-# all-pairs. The cluster count SCALES WITH THE CORPUS — C = max(8,
-# n_vectors DIV 250), the SemDeDup recipe (~100k clusters for billions of
-# docs) — because a FIXED C makes intra-cluster pairs quadratic in n
-# (n²/C): the round-8 rotated-replica probe caught exactly that at 200k
-# vectors before this fix. Per-cluster candidate sets stay ~250²/2
-# regardless of scale; assignment cost is n·C distance evals, the
-# (hierarchically shardable) linear term.
-# ---------------------------------------------------------------------------
+# SemDeDup (Abbas et al. 2023) sizing shared by dedup_semantic_ivf and
+# dedup_embedding_pairs_scaled: the learned cluster count SCALES WITH THE
+# CORPUS — C = max(8, n_vectors DIV 250) — because a FIXED C makes
+# intra-cluster pairs quadratic in n (n²/C). _L2_FOLD is the DuckDB
+# squared-L2 distance of v to centroid cv, folded in dimension order so
+# the doubles match Spark's ordered zip_with fold bit for bit.
 _SEMDEDUP_TARGET = 250  # target vectors per learned cluster
 _SEMDEDUP_C_MIN = 8  # cluster-count floor at tiny scales
-
-
-def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # repartition BEFORE the n·C distance evaluation: the assignment stage
-    # is compute-bound (n·C·d flops), and a single-file parquet source
-    # would otherwise run it on one partition — one O(n·d) round-robin
-    # shuffle buys full-cluster parallelism on the dominant term (the
-    # round-8 200k-vector probe ran single-threaded without this)
-    e = _emb_base(spark, sf_dir).select("vec_id", "v").repartition(
-        int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    )
-    # cluster count from the data (same formula as the oracle's cfg CTE)
-    n_clusters = max(_SEMDEDUP_C_MIN, e.count() // _SEMDEDUP_TARGET)
-    # label-free learned clustering: data-vector seeds -> assign ->
-    # mean-centroid update -> final assignment (one Lloyd refinement)
-    seeds = e.filter(F.col("vec_id") < n_clusters).select(
-        F.col("vec_id").alias("cell"), F.col("v").alias("cv")
-    )
-    a1 = _assign_nearest(e, seeds).select("vec_id", F.col("cell").alias("c1"))
-    cent = _mean_centroids(
-        e.join(a1, "vec_id").select(F.col("c1").alias("cell"), "v"), "cell"
-    )
-    ev = (
-        e.join(_assign_nearest(e, cent).select("vec_id", "cell"), "vec_id")
-        .select("cell", "vec_id", "v")
-    )
-    a, b = ev.alias("a"), ev.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.cell") == F.col("b.cell"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.cell").alias("cell"),
-            F.col("b.vec_id").alias("pruned_id"),
-            F.round(vectors.cosine(F.col("a.v"), F.col("b.v")), 6).alias("cos"),
-        )
-        .filter(F.col("cos") >= COSINE_DUP_THRESHOLD)
-    )
-    per_pairs = pairs.groupBy("cell").agg(
-        F.count("*").alias("n_dup_pairs"),
-        F.countDistinct("pruned_id").alias("n_pruned"),
-    )
-    return (
-        ev.groupBy("cell")
-        .agg(F.count("*").alias("n_vecs"))
-        .join(per_pairs, "cell", "left")
-        .select(
-            F.col("cell").cast("bigint").alias("cluster"),
-            F.col("n_vecs").cast("bigint").alias("n_vecs"),
-            F.coalesce("n_dup_pairs", F.lit(0)).cast("bigint").alias("n_dup_pairs"),
-            F.coalesce("n_pruned", F.lit(0)).cast("bigint").alias("n_pruned"),
-            (F.col("n_vecs") - F.coalesce("n_pruned", F.lit(0)))
-            .cast("bigint")
-            .alias("n_kept"),
-        )
-        .orderBy("cluster")
-    )
-
 
 _L2_FOLD = """list_reduce(
       list_prepend(CAST(0.0 AS DOUBLE),
         list_transform(range(1, 65), i -> (v[i] - cv[i]) * (v[i] - cv[i]))),
       (acc, x) -> acc + x)"""
-
-DEDUP_SEMANTIC_SQL = f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x IS NULL)) = 0 AND len(list_filter(embedding, x -> x <> 0)) > 0) embeddings),
-cfg AS (
-  SELECT GREATEST({_SEMDEDUP_C_MIN}, COUNT(*) // {_SEMDEDUP_TARGET}) AS c
-  FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x IS NULL)) = 0 AND len(list_filter(embedding, x -> x <> 0)) > 0) embeddings
-),
-seed AS (
-  SELECT vec_id AS cell, v AS cv FROM e WHERE vec_id < (SELECT c FROM cfg)
-),
-dist0 AS (
-  SELECT e.vec_id, seed.cell, {_L2_FOLD} AS d2 FROM e, seed
-),
-a1 AS (
-  SELECT vec_id, cell FROM (
-    SELECT vec_id, cell,
-      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell) AS rn
-    FROM dist0
-  ) WHERE rn = 1
-),
-ex1 AS (
-  SELECT a1.cell, t.d AS d, e.v[t.d + 1] AS x
-  FROM e JOIN a1 USING (vec_id), range(0, 64) t(d)
-),
-centdim AS (
-  SELECT cell, d,
-    (SUM(CAST(ROUND(x * 1000000, 0) AS BIGINT)) / 1000000.0) / COUNT(*) AS c
-  FROM ex1 GROUP BY cell, d
-),
-cent AS (
-  SELECT cell, list(c ORDER BY d) AS cv FROM centdim GROUP BY cell
-),
-dist AS (
-  SELECT e.vec_id, cent.cell, {_L2_FOLD} AS d2 FROM e, cent
-),
-cells AS (
-  SELECT vec_id, cell FROM (
-    SELECT vec_id, cell,
-      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell) AS rn
-    FROM dist
-  ) WHERE rn = 1
-),
-ev AS (
-  SELECT c.cell, e.vec_id, e.v FROM e JOIN cells c USING (vec_id)
-),
-pairs AS (
-  SELECT a.cell, b.vec_id AS pruned_id,
-         ROUND({vectors.cosine_sql('a.v', 'b.v')}, 6) AS cos
-  FROM ev a JOIN ev b ON a.cell = b.cell AND a.vec_id < b.vec_id
-  WHERE ROUND({vectors.cosine_sql('a.v', 'b.v')}, 6) >= {COSINE_DUP_THRESHOLD}
-),
-per_pairs AS (
-  SELECT cell, COUNT(*) AS n_dup_pairs,
-         COUNT(DISTINCT pruned_id) AS n_pruned
-  FROM pairs GROUP BY cell
-)
-SELECT CAST(ev.cell AS BIGINT) AS cluster,
-  CAST(COUNT(*) AS BIGINT) AS n_vecs,
-  CAST(COALESCE(ANY_VALUE(p.n_dup_pairs), 0) AS BIGINT) AS n_dup_pairs,
-  CAST(COALESCE(ANY_VALUE(p.n_pruned), 0) AS BIGINT) AS n_pruned,
-  CAST(COUNT(*) - COALESCE(ANY_VALUE(p.n_pruned), 0) AS BIGINT) AS n_kept
-FROM ev LEFT JOIN per_pairs p ON ev.cell = p.cell
-GROUP BY ev.cell
-ORDER BY cluster
-"""
-
-
-register(
-    QuerySpec(
-        "dedup_semantic_clusters",
-        dedup_semantic_clusters,
-        DEDUP_SEMANTIC_SQL,
-        ("DD21",),
-        doc="SemDeDup: learned-cluster blocking + min-id representative pruning",
-    )
-)
 
 
 # ---------------------------------------------------------------------------
@@ -5642,11 +5365,13 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# dedup_semantic_ivf — the 100 TB-shaped SemDeDup: identical keep-rule and
-# export to dedup_semantic_clusters, but the LEARNED clustering uses
-# TWO-LEVEL (IVF-style) assignment, replacing the flat n·C distance term —
-# which with the SemDeDup recipe C ∝ n is quadratic, the asymptote the
-# round-8 probe documented — with coarse-then-refine:
+# dedup_semantic_ivf — the 100 TB-shaped SemDeDup: cluster the embedding
+# space without labels, search near-duplicate pairs ONLY within each
+# cluster, and prune every vector that has a cluster-mate with a SMALLER
+# vec_id within the cosine threshold (the deterministic min-id
+# representative rule). The LEARNED clustering uses TWO-LEVEL (IVF-style)
+# assignment instead of a flat n·C distance term — which with the
+# SemDeDup recipe C ∝ n is quadratic — with coarse-then-refine:
 #   C1 = max(2, isqrt(C)) coarse seeds -> assign every vector (n·C1);
 #   C2 = ceil(C/C1) fine seeds PER coarse cell (its lowest vec_ids) ->
 #   assign only against the own cell's seeds (n·C2 via an equi-join on the
@@ -5656,11 +5381,11 @@ register(
 # machinery applied to the dedup blocking problem. Per-fine-cluster pair
 # candidates stay ~(n/C)²/2 = 250²/2 regardless of scale.
 #
-# Exactness: the same idioms as dedup_semantic_clusters throughout —
-# ordered zip_with L2 folds (bit-identical doubles), micro-scaled BIGINT
-# centroid sums, ROW_NUMBER (d2, id) tie-breaks, 6-dp-rounded cosines,
-# integer-only export. Cluster ids are the fine-seed vec_ids (globally
-# unique), so the export needs no synthetic numbering.
+# Exactness: ordered zip_with L2 folds (bit-identical doubles),
+# micro-scaled BIGINT centroid sums, ROW_NUMBER (d2, id) tie-breaks,
+# 6-dp-rounded cosines, integer-only export. Cluster ids are the
+# fine-seed vec_ids (globally unique), so the export needs no synthetic
+# numbering.
 # ---------------------------------------------------------------------------
 def _two_level_fine_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The growing-cell assignment shared by the scalable dedup surfaces:
@@ -5900,7 +5625,7 @@ register(
         "dedup_semantic_ivf",
         dedup_semantic_ivf,
         DEDUP_SEMANTIC_IVF_SQL,
-        ("DD22",),
+        ("DD22", "DD21"),
         doc="SemDeDup with IVF two-level assignment: n·3·sqrt(C) distance work",
     )
 )
@@ -5908,17 +5633,16 @@ register(
 
 # ---------------------------------------------------------------------------
 # dedup_embedding_pairs_scaled — the PAIR-level export of the scalable
-# embedding near-dup discipline, and the round-13 constructive answer to
-# the fixed-block n^2/k class the vector replica drive quantified
-# (dedup_embedding_cosine 40.4x/decade, dedup_embedding_ivf_pairs
-# 14.3x/decade — SCALING.md round-13 part 1): cells come from the SAME
-# two-level learned assignment as dedup_semantic_ivf (C = n/250 cells
-# GROWS with n, assignment work n·3·sqrt(C)), so within-cell candidates
-# stay ~(n/C)^2/2 = 250^2/2 per cell — ~n·125 total, LINEAR in n — and
-# the exact 6-dp cosine verify runs on candidates only. Same
-# (vec_a, vec_b, cos) surface as the fixed-block comparison points; the
-# candidate discipline (which pairs are eligible) is the documented
-# difference, exactly as banded LSH is for the text near-dup family.
+# embedding near-dup discipline. Blocking by a FIXED number of cells
+# (given labels, or k IVF cells) leaves n^2/k candidate pairs (SCALING.md
+# round-13 part 1 measured 40.4x and 14.3x per decade). Here cells come
+# from the SAME two-level learned assignment as dedup_semantic_ivf
+# (C = n/250 cells GROWS with n, assignment work n·3·sqrt(C)), so
+# within-cell candidates stay ~(n/C)^2/2 = 250^2/2 per cell — ~n·125
+# total, LINEAR in n — and the exact 6-dp cosine verify runs on
+# candidates only. The candidate discipline (which pairs are eligible)
+# is the documented recall trade, exactly as banded LSH is for the text
+# near-dup family.
 # ---------------------------------------------------------------------------
 def dedup_embedding_pairs_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _two_level_fine_cells(spark, sf_dir)
@@ -5954,7 +5678,7 @@ register(
         "dedup_embedding_pairs_scaled",
         dedup_embedding_pairs_scaled,
         DEDUP_EMB_PAIRS_SCALED_SQL,
-        ("DD26",),
+        ("DD26", "DD6", "SIM1"),
         doc="near-dup pair list over GROWING learned cells (C = n/250): linear candidates, exact cosine verify — the scale path for the pair surface",
     )
 )
@@ -6061,7 +5785,6 @@ register(
         ann_rerank_two_stage,
         ANN_RERANK_SQL,
         ("SIM16",),
-        bench=True,  # round-10 bench line (VERDICT r9 #5): the serving cascade
         doc="int8-propose + exact-cosine-rerank production cascade (one linear scan)",
     )
 )

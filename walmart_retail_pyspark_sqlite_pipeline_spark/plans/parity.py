@@ -1026,17 +1026,17 @@ ORDER BY nationkey
 
 for _spec in [
     QuerySpec("q01_pricing_summary", q01_pricing_summary, Q01_SQL,
-              ("A1", "O1", "F1", "C5"), bench=True),
+              ("A1", "O1", "F1", "C5")),
     QuerySpec("q02_top_customers", q02_top_customers, Q02_SQL,
-              ("J1", "A2", "O2", "O4"), bench=True),
+              ("J1", "A2", "O2", "O4")),
     QuerySpec("q05_null_profile_orders", q05_null_profile_orders, Q05_SQL,
               ("Q2", "A8", "F1")),
     QuerySpec("q06_dup_stats", q06_dup_stats, Q06_SQL, ("A5", "A6", "Q3")),
     QuerySpec("q11_event_hourly", q11_event_hourly, Q11_SQL,
-              ("ST1", "A1"), bench=True),
+              ("ST1", "A1")),
     QuerySpec("q13_semi_anti", q13_semi_anti, Q13_SQL, ("J3", "J4")),
     QuerySpec("q14_curated_wide", q14_curated_wide, Q14_SQL,
-              ("J1", "J2", "P3", "P4", "C1", "C2", "C3", "C4"), bench=True),
+              ("J1", "J2", "P3", "P4", "C1", "C2", "C3", "C4")),
     QuerySpec("q16_status_pivot", q16_status_pivot, Q16_SQL, ("A1", "PV1")),
     QuerySpec("q17_grouping_sets", q17_grouping_sets, Q17_SQL, ("G1", "SQL1")),
     QuerySpec("q19_salted_skew_agg", q19_salted_skew_agg, Q19_SQL, ("SK1", "A1")),
@@ -1051,11 +1051,11 @@ for _spec in [
 # set ops vs q28 multiset forms).
 for _spec in [
     QuerySpec("q03_sales_by_nation_year", q03_sales_by_nation_year, Q03_SQL,
-              ("J1", "J2", "A2", "C2"), bench=True),
+              ("J1", "J2", "A2", "C2")),
     QuerySpec("q08_supplier_rank_in_nation", q08_supplier_rank_in_nation, Q08_SQL,
               ("W1", "A1", "J1")),
     QuerySpec("q22_revenue_by_region", q22_revenue_by_region, Q22_SQL,
-              ("J1", "J2", "A1"), bench=True),
+              ("J1", "J2", "A1")),
     QuerySpec("q04_returnflag_by_year", q04_returnflag_by_year, Q04_SQL,
               ("A3", "C2")),
     QuerySpec("q07_distinct_flag_status", q07_distinct_flag_status, Q07_SQL,

@@ -6,7 +6,7 @@ Each :class:`QuerySpec` carries
   (``None`` only for genuinely non-SQL-expressible ops → driver falls back
   to a rows-only check),
 - ``tags`` — SURVEY.md §2 inventory ids this query exercises,
-- ``bench`` — whether :func:`bench_specs` lists it as a headline query.
+- ``doc`` — a one-line description for the CLI ``list`` command.
 
 Every spec lives in one :data:`REGISTRY`; the fixed :data:`EXPORTED` set
 names the subset ``__spark_entry__.queries()``/``oracle_sql()`` expose.
@@ -32,13 +32,6 @@ class QuerySpec:
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None
     tags: tuple[str, ...] = ()
-    bench: bool = False
-    #: bench timing protocol: True = this query is a consumer of the shared
-    #: corpus shingle index and is timed as MARGINAL cost with the index
-    #: resident (the index build itself is the corpus_shingle_index bench
-    #: line, timed cold) — the way a production dedup suite runs, where the
-    #: index is materialized once and every dedup pass reads it.
-    warm_index: bool = False
     doc: str = ""
 
 
@@ -147,7 +140,3 @@ def oracle_sql_map() -> dict[str, str]:
         for name, spec in all_specs(include_local=False).items()
         if spec.oracle is not None
     }
-
-
-def bench_specs() -> list[QuerySpec]:
-    return [s for s in all_specs().values() if s.bench]

@@ -232,7 +232,7 @@ ORDER BY owner_id
 
 for _spec in [
     QuerySpec("events_sessionization", events_sessionization, SESSIONIZE_SQL,
-              ("ST2", "W1"), bench=True),
+              ("ST2", "W1")),
     QuerySpec("stream_event_counts", stream_event_counts, STREAM_COUNTS_SQL,
               ("ST1", "ST3")),
     QuerySpec("events_asof_join", events_asof_join, ASOF_SQL,

@@ -11,9 +11,6 @@ stays flat because ``toArrow`` batches arrive incrementally.
 Type fidelity fixes over the reference (SURVEY §1.4): DateType is stored as
 ISO 'YYYY-MM-DD' TEXT (not driver-dependent epoch-millis), booleans as 0/1
 INTEGER — deterministic across driver versions.
-
-A JDBC-based variant (for warehouses that ARE parallel-writable) is in
-``sinks/jdbc.py``.
 """
 
 from __future__ import annotations

@@ -2,8 +2,7 @@
 
 The reference round-trips its curated tables through SQLite with the xerial
 JDBC driver (``/root/reference/src/pipeline_orchestrator.py:81-97``); this
-container bundles no driver jar, so the JDBC *read* path is gated
-(``sinks/jdbc.py``). Spark 4's Python DataSource API removes the jar
+engine ships no driver jar. Spark 4's Python DataSource API removes the jar
 dependency entirely: schema inference, partition planning, and row reading
 run in Python workers against the sqlite3 stdlib.
 
