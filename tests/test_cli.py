@@ -1,5 +1,8 @@
 """CLI surface (python -m walmart_retail_pyspark_sqlite_pipeline_spark)."""
 
+import os
+
+from tests.conftest import SF_SMALL
 from walmart_retail_pyspark_sqlite_pipeline_spark.__main__ import main
 
 
@@ -34,6 +37,21 @@ def test_cli_pipeline(spark, walmart_fixtures, tmp_path, capsys):
     ) == 0
     assert db.exists()
     assert "sales_curated" in capsys.readouterr().out
+
+
+def test_cli_corpus(spark, tmp_path, capsys):
+    from walmart_retail_pyspark_sqlite_pipeline_spark.plans.llm import (
+        corpus_prep_pipeline,
+    )
+
+    out = str(tmp_path / "corpus")
+    assert main(["corpus", "--input-dir", SF_SMALL, "--output-dir", out]) == 0
+    top = [d for d in os.listdir(out) if not d.startswith(("_", "."))]
+    assert top and all(d.startswith("split=") for d in top)
+    assert (
+        spark.read.parquet(out).count()
+        == corpus_prep_pipeline(spark, SF_SMALL).count()
+    )
 
 
 def test_cli_pipeline_rejects_unknown_sink(capsys):

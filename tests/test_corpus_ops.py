@@ -29,8 +29,10 @@ from walmart_retail_pyspark_sqlite_pipeline_spark.plans.corpus import (
 )
 from walmart_retail_pyspark_sqlite_pipeline_spark.plans.llm import (
     JACCARD_THRESHOLD,
+    _lsh_candidate_jaccards,
     dedup_minhash_lsh_pairs,
 )
+from walmart_retail_pyspark_sqlite_pipeline_spark.sources import read_table
 
 
 def test_pii_scrub_redacts_planted_pii(spark):
@@ -131,6 +133,101 @@ def test_corpus_pipeline_lifecycle(spark, tmp_path):
     # reading one split prunes to its directories and is a proper subset
     train = spark.read.parquet(out).filter(F.col("split") == "train")
     assert 0 < train.count() < stats["docs"]
+
+
+def _plan_nodes_outside_cache(node):
+    """Physical plan nodes reachable through ``children()``, not entering
+    cached-data scans (their plans are the cache's, built once)."""
+    if node.nodeName() == "InMemoryTableScan":
+        return
+    yield node
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_nodes_outside_cache(children.apply(i))
+
+
+def test_corpus_pipeline_reads_documents_once(spark, tmp_path, monkeypatch):
+    """The written plan scans the documents file once outside the cached
+    shingle index, and that one scan carries ``text`` to the sink."""
+    from walmart_retail_pyspark_sqlite_pipeline_spark.pipeline import (
+        CorpusConfig,
+        corpus,
+        run_corpus_pipeline,
+    )
+
+    written = []
+    real_write = corpus.write_parquet
+
+    def capture(df, *args, **kwargs):
+        written.append(df)
+        return real_write(df, *args, **kwargs)
+
+    monkeypatch.setattr(corpus, "write_parquet", capture)
+    run_corpus_pipeline(
+        spark, CorpusConfig(input_dir=SF_SMALL, output_dir=str(tmp_path / "c"))
+    )
+    (df,) = written
+    # AQE wraps the physical plan; executedPlan() is its current form
+    plan = df._jdf.queryExecution().executedPlan().executedPlan()
+    scans = [
+        n
+        for n in _plan_nodes_outside_cache(plan)
+        if n.getClass().getSimpleName() == "FileSourceScanExec"
+        and "documents.parquet" in str(n.relation().location().rootPaths())
+    ]
+    assert len(scans) == 1, [n.toString() for n in scans]
+    assert "text" in list(scans[0].requiredSchema().fieldNames())
+
+
+def test_near_dup_core_on_unbacked_dataframe(spark):
+    """The dedup core takes any documents frame: on a createDataFrame
+    input no path backs, the planted near-dup pair is found and the
+    unrelated document is in no candidate pair."""
+    base = (
+        "the quick brown fox jumps over the lazy dog and runs far away "
+        "into the green forest tonight"
+    )
+    docs = spark.createDataFrame(
+        [
+            Row(doc_id=1, text=base),
+            Row(doc_id=2, text=base.replace("green", "dark")),  # near-dup of 1
+            Row(doc_id=3, text="completely different text about spark engines "
+                               "processing parquet tables at scale every day"),
+        ]
+    )
+    cand = _lsh_candidate_jaccards(docs).collect()
+    assert all(3 not in (p.doc_a, p.doc_b) for p in cand)
+    pairs = [p for p in cand if p.jaccard >= 0.5]
+    assert [(p.doc_a, p.doc_b) for p in pairs] == [(1, 2)]
+    assert pairs[0].jaccard < 1.0
+
+
+def test_lsh_candidates_far_fewer_than_all_pairs(spark):
+    docs = read_table(spark, SF_SMALL, "documents")
+    n_docs = docs.count()
+    assert _lsh_candidate_jaccards(docs).count() < n_docs * (n_docs - 1) / 20
+
+
+def test_split_decision_keyed_by_plan(spark, monkeypatch):
+    """undersplit() probes once per documents plan: two separate reads of
+    one path share a decision, and a frame no path backs gets its own."""
+    from walmart_retail_pyspark_sqlite_pipeline_spark import session
+
+    probes = []
+    real = session.default_parallelism
+
+    def counting():
+        probes.append(1)
+        return real()
+
+    monkeypatch.setattr(session, "_SPLIT_DECISIONS", {})
+    monkeypatch.setattr(session, "default_parallelism", counting)
+    first = session.undersplit(read_table(spark, SF_SMALL, "documents"))
+    second = session.undersplit(read_table(spark, SF_SMALL, "documents"))
+    assert first == second and len(probes) == 1
+    local = spark.createDataFrame([Row(doc_id=1, text="a b c")])
+    assert isinstance(session.undersplit(local), bool)
+    assert len(probes) == 2 and len(session._SPLIT_DECISIONS) == 2
 
 
 def test_training_shard_export(spark, tmp_path):
@@ -442,7 +539,7 @@ def test_bloom_prefilter_prunes_but_never_drops_a_true_hit(spark):
     )
     with tempfile.TemporaryDirectory() as dirname:
         df.write.mode("overwrite").parquet(f"{dirname}/documents.parquet")
-        sh = _doc_shingles(spark, dirname)
+        sh = _doc_shingles(read_table(spark, dirname, "documents"))
         eval_t = {
             r.t for r in sh.filter(F.col("doc_id") % EVAL_MOD == 0).collect()
         }

@@ -705,10 +705,11 @@ def test_shingle_index_no_distinct_exchange(spark):
     from walmart_retail_pyspark_sqlite_pipeline_spark.plans.llm import (
         _doc_shingles,
     )
+    from walmart_retail_pyspark_sqlite_pipeline_spark.sources import read_table
 
     # fresh-plan count — see test_lsh_pairs_no_trailing_sizes_joins
     spark.catalog.clearCache()
-    df = _doc_shingles(spark, SF_SMALL)
+    df = _doc_shingles(read_table(spark, SF_SMALL, "documents"))
     try:
         plan = _formatted_plan(spark, df)
         assert plan.count("Exchange") <= 2, (

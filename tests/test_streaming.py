@@ -519,122 +519,6 @@ def test_streaming_session_window_emits_closed_sessions(spark, tmp_path):
     assert len(emitted) > len(batch) * 0.3, (len(emitted), len(batch))
 
 
-def test_streaming_near_dup_gate(spark, tmp_path):
-    """Online incremental near-dup: two availableNow runs over one
-    checkpoint; the second run's docs are flagged against the persisted
-    signature/shingle store built by the first, never re-scanning it."""
-    import os
-
-    from pyspark.sql import Row
-
-    from walmart_retail_pyspark_sqlite_pipeline_spark.streaming.dedup_stream import (
-        near_dup_gate_stream,
-    )
-
-    src = tmp_path / "incoming"
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-    base = (
-        "the quick brown fox jumps over the lazy dog and runs far away "
-        "into the green forest tonight"
-    )
-    other = (
-        "spark engines process parquet tables at scale every day with "
-        "catalyst planning every stage carefully"
-    )
-    spark.createDataFrame([Row(doc_id=1, text=base), Row(doc_id=2, text=other)]) \
-        .coalesce(1).write.parquet(str(src / "b1"))
-
-    def run_once():
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{src}/*")
-        )
-        q = near_dup_gate_stream(stream, state, ckpt, threshold=0.5)
-        assert q.awaitTermination(timeout=120)
-
-    run_once()
-    pairs_dir = os.path.join(state, "pairs")
-    assert not os.path.exists(pairs_dir)  # nothing to collide with yet
-
-    # batch 2: a near-dup of doc 1 plus a fresh doc
-    spark.createDataFrame(
-        [Row(doc_id=10, text=base.replace("green", "dark")),
-         Row(doc_id=11, text="entirely novel content about benchmarking "
-                             "oracle twins for analytics engines")]
-    ).coalesce(1).write.parquet(str(src / "b2"))
-    run_once()
-
-    pairs = spark.read.parquet(pairs_dir).collect()
-    assert [(p.new_id, p.old_id) for p in pairs] == [(10, 1)]
-    assert pairs[0].jaccard >= 0.5
-
-    # store now holds all four docs' signatures
-    sigs = spark.read.parquet(os.path.join(state, "sig"))
-    assert sorted(r.doc_id for r in sigs.collect()) == [1, 2, 10, 11]
-
-
-def test_streaming_topk_equals_batch_topk(spark, tmp_path):
-    """Continuous top-k over two availableNow runs == batch top-k over the
-    union of all vectors seen."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from tests.conftest import SF_SMALL
-    from walmart_retail_pyspark_sqlite_pipeline_spark.functions import vectors
-    from walmart_retail_pyspark_sqlite_pipeline_spark.sources import read_table
-    from walmart_retail_pyspark_sqlite_pipeline_spark.streaming.dedup_stream import (
-        topk_stream,
-    )
-
-    emb = read_table(spark, SF_SMALL, "embeddings")
-    qrow = emb.filter(F.col("vec_id") == 0).collect()[0]
-    qv = [float(x) for x in qrow.embedding]
-    corpus = emb.filter(F.col("vec_id") != 0).select("vec_id", "embedding")
-
-    src = tmp_path / "vecs"
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-    corpus.filter(F.col("vec_id") < 250).coalesce(1).write.parquet(str(src / "b1"))
-
-    def run_once():
-        stream = (
-            spark.readStream.schema(corpus.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{src}/*")
-        )
-        q = topk_stream(stream, qv, state, ckpt, k=10)
-        assert q.awaitTermination(timeout=120)
-
-    run_once()
-    corpus.filter(F.col("vec_id") >= 250).coalesce(1).write.parquet(str(src / "b2"))
-    run_once()
-
-    got = sorted(
-        (r.vec_id, r.cos)
-        for r in spark.read.parquet(os.path.join(state, "topk")).collect()
-    )
-    want = sorted(
-        (r.vec_id, r.cos)
-        for r in corpus.select(
-            "vec_id",
-            F.round(
-                vectors.cosine(
-                    vectors.as_double(F.col("embedding")),
-                    F.array(*[F.lit(x) for x in qv]),
-                ),
-                6,
-            ).alias("cos"),
-        )
-        .orderBy(F.col("cos").desc(), "vec_id")
-        .limit(10)
-        .collect()
-    )
-    assert got == want
-
-
 def test_streaming_hll_distinct_matches_batch(spark, tmp_path):
     """HLL in Structured Streaming: approx_count_distinct is algebraic, so
     its partial sketches merge across micro-batches exactly like any

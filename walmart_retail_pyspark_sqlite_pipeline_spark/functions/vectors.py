@@ -5,9 +5,7 @@ Dot products and norms are computed JVM-side with ``zip_with`` +
 which is exactly what DuckDB's ``list_dot_product`` over ``DOUBLE[]`` does,
 so both engines produce bit-identical doubles.
 
-At 100 TB these are per-row projections (no shuffle, no Python). For the
-Arrow-batched alternative used when a workload prefers NumPy kernels, see
-``operators/similarity.py``.
+At 100 TB these are per-row projections (no shuffle, no Python).
 """
 
 from __future__ import annotations

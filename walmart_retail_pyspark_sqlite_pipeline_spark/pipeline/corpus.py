@@ -5,17 +5,20 @@ Stages (every one is the oracle-verified building block from
 ``plans/llm.py`` — this module only composes and materializes):
 
 1. **prep** — quality gate → exact-dup drop → LSH near-dup drop
-   (``corpus_prep_pipeline``: the scale-safe composition).
+   (``corpus_prep``: the scale-safe composition).
 2. **split** — deterministic content-hash 80/10/10 train/val/test
-   (``corpus_split_train_val_test`` semantics, joined on doc_id).
+   (``split_of``, the ``corpus_split_train_val_test`` rule) over the
+   bucket the prep scoring scan already computed.
 3. **sink** — one parquet write partitioned by ``(split, lang)``: the
    layout a training job wants, since data loaders read one split and
    usually filter by language — both prune to whole directories. Corpus
    metrics (docs, token sum, mean quality) ride the write's ``observe()``,
    zero extra passes.
 
-The write is the ONLY action: prep/split stay lazy until the sink job, so
-the whole pipeline is one distributed pass over the corpus plus the dedup
+The documents are read once and that frame feeds every stage. The write
+is the ONLY action: prep/split stay lazy until the sink job, so the run is
+one scoring scan of the corpus (``text`` rides it to the sink through the
+exact-dup exchange) plus the cached shingle-index build and the dedup
 family's bounded shuffles. At 100 TB you point ``input_dir`` at the raw
 document lake and raise nothing but cluster size.
 """
@@ -28,38 +31,28 @@ from dataclasses import dataclass
 from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import hashing
-from ..plans.llm import corpus_prep_pipeline
+from ..plans.llm import corpus_prep, split_of
 from ..sinks import write_parquet
+from ..sources import read_table
 
 
 @dataclass
 class CorpusConfig:
     input_dir: str  # sf_dir-shaped: contains documents.parquet
     output_dir: str
-    train_pct: int = 80
-    val_pct: int = 10  # test = 100 - train - val
 
 
 def run_corpus_pipeline(spark: SparkSession, cfg: CorpusConfig) -> dict:
     """Run prep → split → partitioned sink; returns observed corpus stats."""
     t0 = time.perf_counter()
-    kept = corpus_prep_pipeline(spark, cfg.input_dir)
-
-    docs = spark.read.parquet(f"{cfg.input_dir}/documents.parquet")
-    bucket = (hashing.poly_hash(F.col("text")) % 100).alias("bucket")
-    split = (
-        F.when(F.col("bucket") < cfg.train_pct, "train")
-        .when(F.col("bucket") < cfg.train_pct + cfg.val_pct, "val")
-        .otherwise("test")
-        .alias("split")
-    )
-    assignment = docs.select("doc_id", "text", bucket).select(
-        "doc_id", "text", split
-    )
-
-    out = kept.join(assignment, "doc_id").select(
-        "doc_id", "lang", "split", "n_tokens", "quality_score", "text"
+    kept = corpus_prep(read_table(spark, cfg.input_dir, "documents"))
+    out = kept.select(
+        "doc_id",
+        "lang",
+        split_of(F.col("bucket")).alias("split"),
+        "n_tokens",
+        "quality_score",
+        "text",
     )
 
     obs = Observation("corpus_prep")

@@ -144,7 +144,7 @@ EVAL_MOD = 20
 
 
 def corpus_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = _doc_shingles(spark, sf_dir)
+    sh = _doc_shingles(read_table(spark, sf_dir, "documents"))
     eval_sh = (
         sh.filter(F.col("doc_id") % EVAL_MOD == 0).select("t").distinct()
     )
@@ -807,7 +807,7 @@ def dedup_substring_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parquet file serializes it all onto one task. Data-adaptive: never
     # fires on a well-split 100 TB scan; what it shuffles is the raw
     # doc rows (1× corpus bytes), before any expansion.
-    if undersplit(docs, f"substring_ngrams:{sf_dir}"):
+    if undersplit(docs):
         docs = docs.repartition(default_parallelism(), "doc_id")
     # materialized tok / thp / n columns — never the expressions (capture
     # pathology; see text_lm_score): the gram fold references thp 24×
@@ -1676,7 +1676,7 @@ def _bloom_probes(col: Column) -> list[Column]:
 def _bloom_candidate_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, t) training shingles that pass the eval-set Bloom probe —
     a superset of the true overlap, exposed for the pruning test."""
-    sh = _doc_shingles(spark, sf_dir)
+    sh = _doc_shingles(read_table(spark, sf_dir, "documents"))
     eval_sh = sh.filter(F.col("doc_id") % EVAL_MOD == 0).select("t").distinct()
     train = sh.filter(F.col("doc_id") % EVAL_MOD != 0)
 
@@ -1722,7 +1722,7 @@ def _bloom_candidate_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def corpus_bloom_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = _doc_shingles(spark, sf_dir)
+    sh = _doc_shingles(read_table(spark, sf_dir, "documents"))
     eval_sh = sh.filter(F.col("doc_id") % EVAL_MOD == 0).select("t").distinct()
     cand = _bloom_candidate_shingles(spark, sf_dir)
     return (

@@ -6,7 +6,7 @@ shuffle.partitions=8, sqlite-jdbc package). We keep the config-driven spirit
 but default to scale-friendly settings: AQE on (runtime partition coalescing
 + skew-join handling), explicit shuffle partitions, UTC session timezone so
 date math is deterministic across hosts, and Arrow enabled for the pandas
-boundaries used by the multimodal/similarity extensions.
+boundaries used by the multimodal extensions.
 
 ANSI note: Spark 4 enables ANSI mode by default. The engine's own code never
 relies on session-level cast semantics — parity-critical lenient casts (the
@@ -79,22 +79,24 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
-# Cached scan-split decisions for undersplit(), keyed by the caller's
-# (plan-site, sf_dir) string. One probe per key per process: the probe is a
+# Cached scan-split decisions for undersplit(), keyed by the frame's
+# semantic plan hash, so two reads of one path (or two builds of one plan)
+# share a decision. One probe per plan per process: the probe is a
 # DataFrame→RDD conversion (full analysis + deserializer plan — cheap but
 # not free), and caching it also keeps the guarded plan SHAPE stable within
 # a session even if the file layout changes mid-run (ADVICE r14: the
-# per-call probe both re-paid the conversion and could split one sf_dir
+# per-call probe both re-paid the conversion and could split one plan
 # into two divergent cache entries).
-_SPLIT_DECISIONS: dict[str, bool] = {}
+_SPLIT_DECISIONS: dict[int, bool] = {}
 
 
-def undersplit(df, key: str) -> bool:
+def undersplit(df) -> bool:
     """True when ``df``'s scan yields fewer partitions than the session's
     parallelism — the data-adaptive trigger for the "repartition
     immediately after an under-split read" guards (guide §2.5). Never
     fires on a well-split 100 TB scan; on a local single-row-group parquet
     file it restores the parallelism the input cannot supply."""
+    key = df.semanticHash()
     hit = _SPLIT_DECISIONS.get(key)
     if hit is None:
         hit = df.rdd.getNumPartitions() < default_parallelism()

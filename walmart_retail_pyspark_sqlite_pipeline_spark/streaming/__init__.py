@@ -1,4 +1,3 @@
-from .dedup_stream import near_dup_gate_stream
 from .events import asof_last_event, dedup_counts_stream, hourly_counts_stream, sessionize
 from .stateful import (
     running_user_totals_stream,
@@ -7,7 +6,6 @@ from .stateful import (
 )
 
 __all__ = [
-    "near_dup_gate_stream",
     "sessionize",
     "dedup_counts_stream",
     "hourly_counts_stream",
