@@ -230,65 +230,6 @@ def test_split_decision_keyed_by_plan(spark, monkeypatch):
     assert len(probes) == 2 and len(session._SPLIT_DECISIONS) == 2
 
 
-def test_training_shard_export(spark, tmp_path):
-    """Shard export: per-file row cap holds, manifest matches the bytes on
-    disk, sequence assignment follows the deterministic pack rule, and two
-    exports of the same corpus produce identical manifests."""
-    import json
-    import os
-
-    from walmart_retail_pyspark_sqlite_pipeline_spark.pipeline import (
-        CorpusConfig,
-        ShardConfig,
-        export_training_shards,
-        run_corpus_pipeline,
-    )
-    from tests.conftest import SF_SMALL
-
-    corpus_dir = str(tmp_path / "corpus")
-    run_corpus_pipeline(spark, CorpusConfig(input_dir=SF_SMALL, output_dir=corpus_dir))
-
-    out = str(tmp_path / "shards")
-    cfg = ShardConfig(
-        corpus_dir=corpus_dir, output_dir=out, seq_len=256, records_per_shard=100
-    )
-    manifest = export_training_shards(spark, cfg)
-
-    written = spark.read.parquet(out)
-    total_rows = written.count()
-    assert total_rows == spark.read.parquet(corpus_dir).count()
-    assert sum(s["rows"] for s in manifest["splits"].values()) == total_rows
-
-    # row cap per shard file
-    for split, s in manifest["splits"].items():
-        assert all(sh["rows"] <= 100 for sh in s["shards"])
-        assert s["rows"] == sum(sh["rows"] for sh in s["shards"])
-
-    # pack rule: within a split, seq_id == floor(cumulative-start / seq_len)
-    import pandas as pd
-
-    pdf = written.filter(F.col("split") == "train").orderBy("doc_id").toPandas()
-    cum = pdf["n_tokens"].cumsum() - pdf["n_tokens"]
-    assert (pdf["seq_id"] == cum // 256).all()
-    assert (pdf["seq_offset"] == cum - (cum // 256) * 256).all()
-
-    # deterministic: a second export produces the identical manifest
-    out2 = str(tmp_path / "shards2")
-    m2 = export_training_shards(
-        spark,
-        ShardConfig(corpus_dir=corpus_dir, output_dir=out2, seq_len=256,
-                    records_per_shard=100),
-    )
-    m2_norm = json.loads(json.dumps(m2))
-    m1_norm = json.loads((tmp_path / "shards" / "_manifest.json").read_text())
-    # file names contain task/attempt UUIDs -> compare everything else
-    for m in (m1_norm, m2_norm):
-        for s in m["splits"].values():
-            for sh in s["shards"]:
-                sh.pop("file")
-    assert m1_norm == m2_norm
-
-
 def test_pagerank_is_a_probability_distribution(spark):
     """PageRank over the symmetric LSH graph: every graph node gets a
     positive rank, ranks sum to ~1 (no dangling nodes, so mass is

@@ -39,23 +39,6 @@ def test_orc_roundtrip(spark, tmp_path):
     assert "PushedFilters" in plan
 
 
-def test_csv_roundtrip_with_typed_read(spark, tmp_path):
-    from walmart_retail_pyspark_sqlite_pipeline_spark.sources.csv import (
-        read_csv_typed,
-    )
-
-    src = _orders(spark).select("o_orderkey", "o_custkey", "o_totalprice")
-    path = str(tmp_path / "orders_csv")
-    src.write.mode("overwrite").option("header", True).csv(path)
-    back = read_csv_typed(
-        spark, path, "o_orderkey long, o_custkey long, o_totalprice double"
-    )
-    assert back.count() == 200
-    a = {r.o_orderkey: r.o_totalprice for r in src.collect()}
-    b = {r.o_orderkey: r.o_totalprice for r in back.collect()}
-    assert a == b
-
-
 def test_normalize_event_ts_all_encodings(spark):
     """normalize_event_ts must map every parquet event-time encoding the
     driver has shipped (nanos-as-long, timestamp[us]→TIMESTAMP_NTZ, plain

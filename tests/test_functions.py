@@ -156,28 +156,6 @@ def test_percentile_approx_tracks_exact_quantiles(spark):
         assert abs(a - e) / e < 0.01
 
 
-def test_map_in_arrow_token_counts_match_jvm_expression(spark):
-    # the Arrow-native Python boundary must agree exactly with the
-    # whole-stage-codegen JVM expression it parallels
-    from tests.conftest import SF_SMALL
-    from walmart_retail_pyspark_sqlite_pipeline_spark.operators.arrow_ops import (
-        token_counts_arrow,
-    )
-    from walmart_retail_pyspark_sqlite_pipeline_spark.sources import read_table
-
-    docs = read_table(spark, SF_SMALL, "documents")
-    got = {
-        r.doc_id: r.n_tokens for r in token_counts_arrow(docs).collect()
-    }
-    want = {
-        r.doc_id: r.n
-        for r in docs.select(
-            "doc_id", F.size(F.split(F.col("text"), r"\s+")).alias("n")
-        ).collect()
-    }
-    assert got == want and len(got) > 0
-
-
 def test_ansi_overflow_try_variants(spark):
     # Spark 4 runs ANSI mode by default: long-sum overflow must RAISE, and
     # the try_* family must return NULL instead — the two behaviors an
@@ -201,79 +179,6 @@ def test_ansi_overflow_try_variants(spark):
         )
     finally:
         spark.conf.set("spark.sql.ansi.enabled", prev)
-
-
-# ---------------------------------------------------------------------------
-# BPE trainer (functions/bpe.py)
-# ---------------------------------------------------------------------------
-def test_bpe_trainer_first_merge_matches_distributed_kernel(spark):
-    """The trainer's first merge == top row of text_bpe_merge_candidates
-    (same counts, same tiebreak) on the same corpus."""
-    from walmart_retail_pyspark_sqlite_pipeline_spark.functions import bpe
-    from walmart_retail_pyspark_sqlite_pipeline_spark.plans.llm import (
-        text_bpe_merge_candidates,
-    )
-    from tests.conftest import SF_SMALL
-
-    merges = bpe.train_bpe(
-        spark.read.parquet(f"{SF_SMALL}/documents.parquet"), n_merges=1
-    )
-    top = text_bpe_merge_candidates(spark, SF_SMALL).limit(1).collect()[0]
-    assert merges[0][0] + merges[0][1] == top["pair"]
-
-
-def test_bpe_trainer_known_corpus(spark):
-    """Hand-checkable corpus: 'aaab' x3 + 'aab' x1.
-
-    Pair counts round 1: ('a','a') = 2*3 + 1 = 7; ('a','b') = 3 + 1 = 4
-    -> merge 'aa'. Round 2: ('aa','a') 3, ('aa','b') 1+... recount:
-    'aaab' -> [aa, a, b] (greedy left-to-right), 'aab' -> [aa, b];
-    pairs: (aa,a)=3, (a,b)=3, (aa,b)=1 -> tie 3 between 'aaa' and 'ab'
-    -> lexicographically smaller 'aaa' wins.
-    """
-    from pyspark.sql import Row
-
-    from walmart_retail_pyspark_sqlite_pipeline_spark.functions import bpe
-
-    docs = spark.createDataFrame(
-        [Row(text="aaab aaab aaab aab")]
-    )
-    merges = bpe.train_bpe(docs, n_merges=2)
-    assert merges == [("a", "a"), ("aa", "a")]
-    assert bpe.segment("aaab", merges) == ["aaa", "b"]
-    assert bpe.segment("aab", merges) == ["aa", "b"]
-    assert bpe.segment("zq", merges) == ["z", "q"]
-
-
-def test_bpe_vocab_cap_preserves_merges_when_not_binding(spark):
-    """max_vocab ≥ |distinct words| must leave the merge list unchanged
-    (the cap only trims the tail it is allowed to drop), and a binding cap
-    keeps only the top-V words by (count desc, word asc)."""
-    from pyspark.sql import Row
-
-    from walmart_retail_pyspark_sqlite_pipeline_spark.functions import bpe
-
-    docs = spark.createDataFrame(
-        [Row(text="aaab aaab aaab aab zz zz qq")]
-    )
-    uncapped = bpe.train_bpe(docs, n_merges=3, max_vocab=None)
-    for v in (4, 10, 1000):  # vocab is 4 distinct words
-        assert bpe.train_bpe(docs, n_merges=3, max_vocab=v) == uncapped
-
-    # binding cap: top-2 words by frequency are 'aaab'(3) and 'aab'... ties
-    # between aab/zz (1 vs 2): counts are aaab=3, zz=2, aab=1, qq=1 —
-    # top-2 = {aaab, zz}; merge votes then come from those words only
-    freqs = bpe.word_frequencies(docs, max_vocab=2)
-    assert freqs == {"aaab": 3, "zz": 2}
-
-
-def test_bpe_segment_idempotent_merge_order(spark):
-    """Merges apply in order: later merges can consume earlier ones."""
-    from walmart_retail_pyspark_sqlite_pipeline_spark.functions import bpe
-
-    merges = [("a", "b"), ("ab", "c")]
-    assert bpe.segment("abc", merges) == ["abc"]
-    assert bpe.segment("acb", merges) == ["a", "c", "b"]
 
 
 def test_grouped_agg_pandas_udaf_matches_builtin(spark):

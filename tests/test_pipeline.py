@@ -3,7 +3,12 @@ CSV → quality checks → curated star → SQLite, asserting the reference's
 structural invariants."""
 
 import sqlite3
+from collections import Counter
 
+import pyspark.sql.functions as F
+import pytest
+
+from tests.conftest import SF_SMALL
 from walmart_retail_pyspark_sqlite_pipeline_spark.pipeline import (
     PipelineConfig,
     run_pipeline,
@@ -11,6 +16,8 @@ from walmart_retail_pyspark_sqlite_pipeline_spark.pipeline import (
 from walmart_retail_pyspark_sqlite_pipeline_spark.plans.curated import (
     CURATED_COLUMNS,
 )
+from walmart_retail_pyspark_sqlite_pipeline_spark.sinks import write_sqlite
+from walmart_retail_pyspark_sqlite_pipeline_spark.sources import read_table
 from walmart_retail_pyspark_sqlite_pipeline_spark.sources.csv import read_csv_raw
 
 
@@ -90,38 +97,81 @@ def test_duplicate_variant_dedups(spark, walmart_fixtures, tmp_path):
 def test_pipeline_sqlite_roundtrip_via_datasource(
     spark, walmart_fixtures, tmp_path
 ):
-    """The curated SQLite output reads back through the Python DataSource
-    (no JDBC jar) with the same rows Spark wrote — full write→read loop."""
-    import pyspark.sql.functions as F
-
-    from walmart_retail_pyspark_sqlite_pipeline_spark.sources import read_sqlite
-
+    """The curated SQLite output reads back through ``sqlite3`` with the
+    rows Spark wrote — full write→read loop."""
     db = tmp_path / "retail_rt.db"
     cfg = PipelineConfig(
         raw_dir=str(walmart_fixtures["root"]), output_db=str(db)
     )
     result = run_pipeline(spark, cfg)
 
-    back = read_sqlite(spark, db, "sales_curated", num_partitions=4)
-    assert back.count() == result["table_rows"]["sales_curated"]
-    assert back.columns == CURATED_COLUMNS
-    # spot-check an aggregate against the in-session curated view
-    got = (
-        back.groupBy("store_id")
-        .agg(F.round(F.sum("weekly_sales"), 2).alias("total"))
-        .orderBy("store_id")
-        .collect()
-    )
+    con = sqlite3.connect(db)
+    try:
+        (n,) = con.execute("SELECT COUNT(*) FROM sales_curated").fetchone()
+        cols = [r[1] for r in con.execute("PRAGMA table_info(sales_curated)")]
+        # spot-check an aggregate against the in-session curated view; the
+        # fixture's sales have 2 decimals, so whole cents sum exactly
+        got = con.execute(
+            "SELECT store_id, SUM(CAST(ROUND(weekly_sales * 100) AS INTEGER)) "
+            "FROM sales_curated GROUP BY store_id ORDER BY store_id"
+        ).fetchall()
+    finally:
+        con.close()
+    assert n == result["table_rows"]["sales_curated"]
+    assert cols == CURATED_COLUMNS
     want = (
         spark.table("curated_sales")
         .groupBy("store_id")
-        .agg(F.round(F.sum("weekly_sales"), 2).alias("total"))
+        .agg(F.sum(F.round(F.col("weekly_sales") * 100).cast("long")).alias("c"))
         .orderBy("store_id")
         .collect()
     )
-    assert [(r.store_id, r.total) for r in got] == [
-        (r.store_id, r.total) for r in want
-    ]
+    assert got == [(r.store_id, r.c) for r in want]
+
+
+def test_sqlite_roundtrip_through_spark(spark, tmp_path):
+    """write_sqlite stores exactly the frame's rows, under SQLite column
+    types that follow the Spark types."""
+    db = tmp_path / "roundtrip.db"
+    orders = read_table(spark, SF_SMALL, "orders").select(
+        "o_orderkey", "o_orderstatus", "o_totalprice"
+    )
+    n = write_sqlite(orders, db, "orders_curated")
+    con = sqlite3.connect(db)
+    try:
+        types = {r[1]: r[2] for r in con.execute("PRAGMA table_info(orders_curated)")}
+        back = con.execute("SELECT * FROM orders_curated").fetchall()
+    finally:
+        con.close()
+    assert len(back) == n == orders.count()
+    assert types == {
+        "o_orderkey": "INTEGER",
+        "o_orderstatus": "TEXT",
+        "o_totalprice": "REAL",
+    }
+    assert Counter(back) == Counter(tuple(r) for r in orders.collect())
+
+
+def test_sqlite_sink_row_ceiling_guard(spark, tmp_path):
+    """Oversized input must fail fast with the parquet-sink pointer and
+    leave no committed table — SQLite is the local BI hand-off, not the
+    scale sink. The under-limit path through the same ceiling still
+    writes and returns the exact count."""
+    db = tmp_path / "guard.db"
+    orders = read_table(spark, SF_SMALL, "orders").select(
+        "o_orderkey", "o_totalprice"
+    )
+    with pytest.raises(ValueError, match="parquet"):
+        write_sqlite(orders, db, "too_big", max_rows=10)
+    con = sqlite3.connect(db)
+    try:
+        n_rows = con.execute("SELECT COUNT(*) FROM too_big").fetchone()[0]
+    finally:
+        con.close()
+    assert n_rows == 0  # rolled back: the CREATE survived, no rows did
+    total = orders.count()
+    assert write_sqlite(orders, db, "fits", max_rows=total) == total
+
 
 def test_pipeline_parquet_sink_partitioned_by_year(
     spark, walmart_fixtures, tmp_path
@@ -193,8 +243,6 @@ def test_pipeline_rejects_unknown_sink_before_reading_input(spark, tmp_path):
     """A misspelled sink from the YAML config fails loudly before the
     acquisition hook or any CSV read, instead of running QC and the join
     and returning no tables."""
-    import pytest
-
     cfg_path = tmp_path / "pipeline.yaml"
     cfg_path.write_text(
         f"raw_dir: {tmp_path / 'raw'}\n"
@@ -208,3 +256,18 @@ def test_pipeline_rejects_unknown_sink_before_reading_input(spark, tmp_path):
         run_pipeline(spark, cfg)
     assert touched == []
     assert not (tmp_path / "retail.db").exists()
+
+
+def test_pipeline_config_from_yaml_rejects_unknown_keys(tmp_path):
+    """A misspelled key (``sinks`` for ``sink``) is named in the error
+    instead of being dropped, which would run the default SQLite sink."""
+    cfg_path = tmp_path / "pipeline.yaml"
+    cfg_path.write_text(
+        f"raw_dir: {tmp_path / 'raw'}\n"
+        "sinks: parquet\n"
+        "max_null_fractoin: 0.1\n"
+    )
+    with pytest.raises(ValueError, match=r"\['max_null_fractoin', 'sinks'\]"):
+        PipelineConfig.from_yaml(cfg_path)
+    cfg_path.write_text(f"raw_dir: {tmp_path / 'raw'}\nsink: parquet\n")
+    assert PipelineConfig.from_yaml(cfg_path).sink == "parquet"

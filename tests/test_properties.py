@@ -128,30 +128,6 @@ def test_left_join_preserves_rows_under_unique_right_keys(spark, seed):
 
 @settings(max_examples=5, deadline=None)
 @given(
-    texts=st.lists(
-        st.text(string.ascii_lowercase + " .,!", min_size=0, max_size=60),
-        min_size=1,
-        max_size=8,
-    )
-)
-def test_bpe_word_frequencies_match_counter(spark, texts):
-    """The distributed word-frequency pass == a Python Counter over the
-    same tokenization (the merge loop is pure Python on top of it)."""
-    import re
-    from collections import Counter
-
-    from walmart_retail_pyspark_sqlite_pipeline_spark.functions import bpe
-
-    df = spark.createDataFrame([Row(text=t) for t in texts])
-    got = bpe.word_frequencies(df)
-    want = Counter(
-        w for t in texts for w in re.split(r"[^a-z0-9]+", t.lower()) if w
-    )
-    assert got == dict(want)
-
-
-@settings(max_examples=5, deadline=None)
-@given(
     rows=st.lists(
         st.tuples(
             st.one_of(st.none(), st.integers(-50, 150)),

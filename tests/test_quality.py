@@ -10,7 +10,6 @@ from walmart_retail_pyspark_sqlite_pipeline_spark.plans.quality_suite import (
     qc_referential_integrity,
 )
 from walmart_retail_pyspark_sqlite_pipeline_spark.quality import (
-    count_duplicates,
     profile,
     run_quality_checks,
 )
@@ -49,14 +48,6 @@ def test_profile_empty_input(spark):
     n, fractions, dup = profile(df)
     assert n == 0 and dup == 0
     assert fractions == {"a": 0.0, "b": 0.0}
-
-
-def test_count_duplicates_subset(spark):
-    df = spark.createDataFrame(
-        [Row(k=1, v="a"), Row(k=1, v="b"), Row(k=2, v="c")]
-    )
-    assert count_duplicates(df, ["k"]) == 1
-    assert count_duplicates(df) == 0
 
 
 def test_fail_on_schema_mismatch_flags_extras(spark):

@@ -4,6 +4,10 @@ the properties the driver's correctness gate depends on. (Exact value
 parity is checked by tools/oracle_check.py, which is too slow for the
 default pytest loop.)"""
 
+import ast
+import importlib.util
+from pathlib import Path
+
 import duckdb
 import pytest
 
@@ -107,3 +111,107 @@ def test_embedding_oracles_use_the_canonical_source_contract():
         f"{problems}"
     )
     assert gated >= 19, f"expected >=19 gated sites, found {gated}"
+
+
+# --- every engine module is reached by an entry point ------------------------
+
+_REPO = Path(__file__).resolve().parents[1]
+_PKG = "walmart_retail_pyspark_sqlite_pipeline_spark"
+_PKG_DIR = _REPO / _PKG
+
+#: entry points inside the package: the CLI, the two pipelines and the
+#: session factory (plans.registry, reached from the CLI, imports the plan
+#: modules inside ``_load_all``)
+_ROOTS = ("__main__", "pipeline.orchestrator", "pipeline.corpus", "session")
+
+#: the reference's ingest step. It is no import's target: a caller plugs
+#: ``sources.acquire.download`` in through ``PipelineConfig.acquire``.
+_UNREACHED_OK = {"sources.acquire"}
+
+
+def _path(mod: str) -> Path | None:
+    base = _PKG_DIR.joinpath(*mod.split("."))
+    return next(
+        (p for p in (base / "__init__.py", base.with_suffix(".py")) if p.exists()),
+        None,
+    )
+
+
+def _is_package(mod: str) -> bool:
+    return (_PKG_DIR.joinpath(*mod.split(".")) / "__init__.py").exists()
+
+
+def _package_imports(tree: ast.Module, pkg: str | None) -> list[tuple[str, tuple]]:
+    """``(module, names)`` for every import of the package in ``tree``,
+    function bodies included; ``pkg`` is the package a relative import is
+    resolved against (None outside the package)."""
+    out = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom):
+            if node.level:
+                parts = pkg.split(".") if pkg else []
+                parts = parts[: len(parts) - node.level + 1]
+                target = ".".join(parts + ([node.module] if node.module else []))
+            elif node.module == _PKG or node.module.startswith(_PKG + "."):
+                target = node.module[len(_PKG) + 1 :]
+            else:
+                continue
+            out.append((target, tuple(a.name for a in node.names)))
+        elif isinstance(node, ast.Import):
+            out += [
+                (a.name[len(_PKG) + 1 :], ())
+                for a in node.names
+                if a.name.startswith(_PKG + ".")
+            ]
+    return out
+
+
+def _imports(mod: str) -> list[tuple[str, tuple]]:
+    pkg = mod if _is_package(mod) else mod.rpartition(".")[0]
+    return _package_imports(ast.parse(_path(mod).read_text()), pkg)
+
+
+def _resolve(target: str, names: tuple) -> set[str]:
+    """A name imported from a package reaches the submodule of that name,
+    or else only the submodule whose ``__init__`` re-exports it."""
+    if not _is_package(target):
+        return {target}
+    out = set()
+    for name in names:
+        sub = f"{target}.{name}" if target else name
+        if _path(sub):
+            out.add(sub)
+            continue
+        for t, ns in _imports(target):
+            if name in ns:
+                out |= _resolve(t, (name,))
+    return out
+
+
+def test_every_engine_module_is_reached_from_an_entry_point():
+    """A module that no entry point imports is code the system does not
+    run. Roots: the in-package entry points, the driver contract, and
+    everything the benchmark reaches (its tracer's wrapped functions and
+    its own imports). Spark-free: the package is parsed, not imported."""
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_tracer", _REPO / "perfbench" / "tracer.py"
+    )
+    tracer = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tracer)
+    todo = set(_ROOTS) | {mod for mod, _ in tracer.TARGETS}
+    for outside in [_REPO / "__spark_entry__.py", *(_REPO / "perfbench").glob("*.py")]:
+        for target, names in _package_imports(ast.parse(outside.read_text()), None):
+            todo |= _resolve(target, names)
+    seen: set[str] = set()
+    while todo:
+        mod = todo.pop()
+        seen.add(mod)
+        for target, names in _imports(mod):
+            todo |= _resolve(target, names) - seen
+    modules = {
+        ".".join(p.relative_to(_PKG_DIR).with_suffix("").parts)
+        for p in _PKG_DIR.rglob("*.py")
+        if p.name != "__init__.py"
+    }
+    unreached = sorted(modules - seen - _UNREACHED_OK)
+    assert unreached == [], f"modules no entry point reaches: {unreached}"

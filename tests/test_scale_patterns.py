@@ -88,22 +88,6 @@ def test_partitioned_write_prunes(spark, tmp_path):
     assert back.count() == ev.filter(F.col("event_type") == "error").count()
 
 
-def test_apply_in_pandas_zscore_matches_window(spark):
-    from walmart_retail_pyspark_sqlite_pipeline_spark.operators.grouped import (
-        zscore_apply_in_pandas,
-        zscore_window,
-    )
-
-    ev = read_table(spark, SF_SMALL, "events")
-    got = {
-        r.event_id: r.zscore for r in zscore_apply_in_pandas(ev).collect()
-    }
-    want = {r.event_id: r.zscore for r in zscore_window(ev).collect()}
-    assert set(got) == set(want)
-    for k in want:
-        assert abs(got[k] - want[k]) < 1e-9
-
-
 def test_sorted_layout_narrows_rowgroup_stats(spark, tmp_path):
     """Writing sorted-by-key (Z-order-lite) gives each parquet row group a
     narrow key min/max range, which is what lets range predicates skip
@@ -240,58 +224,6 @@ def test_runtime_bloom_filter_injected_on_probe_side(spark):
     assert n == li.join(orders, li.l_orderkey == orders.o_orderkey).count()
 
 
-def test_zorder_layout_narrows_both_dimensions(spark, tmp_path):
-    """Z-order vs single-column sort: sorting files by user_id alone leaves
-    each file spanning the FULL ts range; Morton-interleaving user_id and
-    ts gives every file a small rectangle — narrow min/max in BOTH columns,
-    so scans filtered on either one skip most files."""
-    from pathlib import Path
-
-    import pyarrow.parquet as pq
-
-    from walmart_retail_pyspark_sqlite_pipeline_spark.operators.layout import (
-        zorder_layout,
-    )
-
-    ev = read_table(spark, SF_SMALL, "events").select(
-        "user_id", F.col("ts").cast("long").alias("ts_s")
-    )
-
-    def file_spans(path, col_idx):
-        spans, lo, hi = [], None, None
-        for f in Path(path).glob("*.parquet"):
-            st = pq.ParquetFile(f).metadata.row_group(0).column(col_idx).statistics
-            fl, fh = None, None
-            for i in range(pq.ParquetFile(f).metadata.num_row_groups):
-                s = pq.ParquetFile(f).metadata.row_group(i).column(col_idx).statistics
-                fl = s.min if fl is None else min(fl, s.min)
-                fh = s.max if fh is None else max(fh, s.max)
-            spans.append(fh - fl)
-            lo = fl if lo is None else min(lo, fl)
-            hi = fh if hi is None else max(hi, fh)
-        return spans, hi - lo
-
-    plain = str(tmp_path / "by_user")
-    ev.repartitionByRange(8, "user_id").sortWithinPartitions(
-        "user_id"
-    ).write.parquet(plain)
-    zpath = str(tmp_path / "zorder")
-    zorder_layout(ev, "user_id", "ts_s", num_files=8).write.parquet(zpath)
-
-    # single-column sort: every file spans ~the whole ts range
-    ts_spans_plain, ts_full = file_spans(plain, 1)
-    assert min(ts_spans_plain) > 0.9 * ts_full
-
-    # z-order: the average file covers a small fraction of BOTH ranges
-    u_spans, u_full = file_spans(zpath, 0)
-    ts_spans, _ = file_spans(zpath, 1)
-    assert sum(u_spans) / len(u_spans) < 0.6 * u_full, (u_spans, u_full)
-    assert sum(ts_spans) / len(ts_spans) < 0.6 * ts_full, (ts_spans, ts_full)
-
-    # layout changes bytes, never rows
-    assert spark.read.parquet(zpath).count() == ev.count()
-
-
 def test_analyze_table_feeds_cbo_statistics(spark):
     """ANALYZE TABLE gives the cost-based optimizer real rowCount/column
     stats instead of file-size guesses — on a 100 TB catalog this is what
@@ -374,39 +306,6 @@ def test_max_records_per_file_caps_file_size(spark, tmp_path):
     files = list(Path(out).glob("*.parquet"))
     assert len(files) == 4  # 1000 rows / 250 cap
     assert all(pq.ParquetFile(f).metadata.num_rows <= 250 for f in files)
-
-
-def test_salted_join_equals_direct(spark):
-    """salted_join spreads a hot key across n_salts reducers; results must
-    be exactly the plain join's (verified for inner and left against a
-    shuffle-forced direct join)."""
-    from walmart_retail_pyspark_sqlite_pipeline_spark.operators.skew import (
-        salted_join,
-    )
-
-    li = read_table(spark, SF_SMALL, "lineitem").select("l_orderkey", "l_quantity")
-    o = read_table(spark, SF_SMALL, "orders").select("o_orderkey", "o_orderstatus")
-    o = o.withColumnRenamed("o_orderkey", "l_orderkey")
-
-    for how in ("inner", "left"):
-        direct = li.join(o, ["l_orderkey"], how)
-        salted = salted_join(li, o, ["l_orderkey"], n_salts=8, how=how)
-        assert salted.count() == direct.count()
-        # exact multiset equality of full rows
-        assert (
-            salted.exceptAll(direct).count() == 0
-            and direct.exceptAll(salted).count() == 0
-        )
-
-    # the salted plan shuffles on (key, salt): the hot key no longer maps
-    # to a single reducer partition
-    plan = (
-        salted_join(li, o.hint("shuffle_hash"), ["l_orderkey"], n_salts=8)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "__salt" in plan
 
 
 def test_global_rank_exact_with_exchange_reuse_and_aqe_off(spark):

@@ -81,10 +81,10 @@ def test_zorder_runs_are_locally_bounded(spark):
 
 
 def test_zorder_query_agrees_with_layout_operator(spark):
-    """The oracle-graded query and the writer operator share one interleave
-    (`operators.layout._interleave`), so a z-key computed by the query is
-    the same Morton code `zorder_layout` sorts by at write time (the write
-    path itself is covered in test_scale_patterns.py)."""
+    """The oracle-graded query's z-key is the Morton code of
+    `operators.layout._interleave`: the interleave is a bijection, so each
+    z-run holds one (price, month) bucket pair and re-interleaving its
+    buckets gives back the query's key."""
     rows = layout_zorder_clustering(spark, SF_SMALL)
     recomputed = rows.select(
         "z_key",

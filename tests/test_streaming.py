@@ -8,8 +8,6 @@ from walmart_retail_pyspark_sqlite_pipeline_spark.sources.tables import normaliz
 from walmart_retail_pyspark_sqlite_pipeline_spark.streaming import (
     hourly_counts_stream,
     sessionize,
-    user_stats_batch,
-    user_stats_stateful,
 )
 
 
@@ -80,33 +78,6 @@ def test_streaming_equals_batch(spark):
     assert stream_counts == batch_counts
 
 
-def test_stateful_apply_in_pandas_with_state(spark):
-    """applyInPandasWithState running per-user totals must converge to the
-    batch groupBy result (values are nonnegative, so max == final state)."""
-    from walmart_retail_pyspark_sqlite_pipeline_spark.streaming.stateful import (
-        running_user_totals_stream,
-    )
-    import pyspark.sql.functions as F
-
-    got = {
-        r.user_id: (r.n_events, r.total_value)
-        for r in running_user_totals_stream(
-            spark, f"{SF_SMALL}/events.parquet"
-        ).collect()
-    }
-    want = {
-        r.user_id: (r.n, r.t)
-        for r in read_table(spark, SF_SMALL, "events")
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("t"))
-        .collect()
-    }
-    assert set(got) == set(want)
-    for u in want:
-        assert got[u][0] == want[u][0]
-        assert abs(got[u][1] - want[u][1]) < 0.05
-
-
 def test_foreachbatch_sqlite_sink(spark, tmp_path):
     """Streaming → SQLite via foreachBatch: each micro-batch appends through
     the single-writer sink; totals must equal the batch aggregate."""
@@ -170,39 +141,6 @@ def test_streaming_with_watermark_availablenow(spark):
     emitted = spark.table("wm_test").agg(F.sum("count")).collect()[0][0] or 0
     total = spark.read.parquet(f"{SF_SMALL}/events.parquet").count()
     assert 0 <= emitted <= total
-
-
-def test_stateful_user_stats_multi_batch(spark, tmp_path):
-    """applyInPandasWithState: state must persist across micro-batches.
-    The events are split into 4 files and streamed one file per trigger;
-    the FINAL emission per user (update mode -> the row with the highest
-    running n_events) must equal the batch groupBy over the full input."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from walmart_retail_pyspark_sqlite_pipeline_spark.streaming.stateful import (
-        user_stats_stateful,
-    )
-
-    ev = read_table(spark, SF_SMALL, "events")
-    src = str(tmp_path / "events_multi")
-    ev.repartition(4).write.mode("overwrite").parquet(src)
-
-    sink = user_stats_stateful(spark, src, max_files_per_trigger=1)
-    n_emissions = sink.count()
-    n_users = sink.select("user_id").distinct().count()
-    # >1 emission for at least one user proves state crossed a batch boundary
-    assert n_emissions > n_users
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    final = (
-        sink.withColumn("rn", F.row_number().over(w))
-        .filter("rn = 1")
-        .drop("rn")
-    )
-    batch = user_stats_batch(ev)
-    assert final.exceptAll(batch).count() == 0
-    assert batch.exceptAll(final).count() == 0
 
 
 def test_stream_stream_join_equals_batch(spark):
@@ -391,61 +329,6 @@ def test_drop_duplicates_within_watermark_across_batches(spark, tmp_path):
     out = spark.table("dedup_wm")
     assert out.count() == ev.count()  # 1000 distinct event_ids, no dupes
     assert out.select("event_id").distinct().count() == ev.count()
-
-
-def test_streaming_rollup_sink_exactly_once(spark, tmp_path):
-    """foreachBatch + incremental merge + batch-id ledger: a multi-batch
-    stream must produce exactly the batch rollup, and REPLAYING a batch
-    (Structured Streaming's at-least-once failure mode) must be a no-op."""
-    import pyspark.sql.functions as F
-
-    from walmart_retail_pyspark_sqlite_pipeline_spark.pipeline import (
-        hourly_rollup,
-        rollup_stream_sink,
-    )
-    from walmart_retail_pyspark_sqlite_pipeline_spark.sources import read_table
-
-    ev = read_table(spark, SF_SMALL, "events")
-    src = tmp_path / "src"
-    # three source files -> three micro-batches under maxFilesPerTrigger=1
-    for i, cond in enumerate(
-        ["event_id < 300", "event_id >= 300 AND event_id < 700", "event_id >= 700"]
-    ):
-        ev.filter(cond).coalesce(1).write.parquet(f"{src}/f{i}")
-
-    path = str(tmp_path / "rollup")
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(str(src))
-    )
-    q = rollup_stream_sink(stream, path, str(tmp_path / "ckpt"))
-    q.awaitTermination()
-
-    cols = ["d", "hour_s", "event_type", "n_events", "cents"]
-    got = (
-        spark.read.parquet(path).select(*cols).orderBy(*cols[:3]).collect()
-    )
-    want = hourly_rollup(ev).select(*cols).orderBy(*cols[:3]).collect()
-    assert got == want
-
-    # hard replay: a FRESH checkpoint re-delivers the whole source as batch
-    # ids 0..2 again — exactly the ids already in the ledger — so only the
-    # ledger stands between the sink and double-counting every event
-    q2 = rollup_stream_sink(
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(str(src)),
-        path,
-        str(tmp_path / "ckpt_replay"),
-    )
-    q2.awaitTermination()
-    again = (
-        spark.read.parquet(path).select(*cols).orderBy(*cols[:3]).collect()
-    )
-    assert again == got
 
 
 def test_streaming_session_window_emits_closed_sessions(spark, tmp_path):

@@ -1,11 +1,4 @@
 from .chunking import chunk_text_batched
-from .maintenance import (
-    compact_small_files,
-    delete_rows,
-    expire_partitions,
-    upsert_parquet,
-    vacuum,
-)
 from .projections import enforce_schema, rename_columns
 from .range_join import binned_range_join
 from .scd import scd2_apply, scd2_as_of, scd2_init
@@ -17,11 +10,6 @@ __all__ = [
     "salted_agg",
     "chunk_text_batched",
     "binned_range_join",
-    "compact_small_files",
-    "delete_rows",
-    "expire_partitions",
-    "upsert_parquet",
-    "vacuum",
     "scd2_init",
     "scd2_apply",
     "scd2_as_of",

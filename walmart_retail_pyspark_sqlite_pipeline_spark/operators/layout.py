@@ -1,102 +1,29 @@
-"""Multi-dimensional data layout: Z-order (Morton) clustering for parquet.
+"""Morton (Z-order) bit interleaving for multi-dimensional data layout.
 
 A single-column sort gives perfect row-group skipping on that column and
-none on any other. Interleaving the bits of two (or more) quantized key
-columns into one Morton code and range-partitioning + sorting on it gives
-*every* interleaved column locality: each file/row group covers a small
-rectangle of the key space, so min/max stats prune scans filtered on
-either column — the layout trick behind Delta/Iceberg OPTIMIZE ZORDER,
-implemented here with nothing but Spark expressions.
-
-Everything is distributed: per-column bounds are one tiny global aggregate
-(broadcast back as literals), the Morton code is a pure projection, and
-``repartitionByRange`` samples the code to build balanced range bounds —
-the same machinery a 1000-executor sort uses.
+none on any other. Interleaving the bits of two quantized key columns into
+one Morton code and sorting on it gives *every* interleaved column
+locality: each file/row group covers a small rectangle of the key space,
+so min/max stats prune scans filtered on either column — the layout trick
+behind Delta/Iceberg OPTIMIZE ZORDER. :func:`_interleave` is the pure
+projection that computes the code; ``plans.sketches``'s
+``layout_zorder_clustering`` quantizes its two dimensions and calls it.
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-ZBITS = 16  # 16 bits per dimension -> 2 dims fit a 32-bit Morton code
 
-
-def _quantize(col: Column, lo: Column, hi: Column, bits: int = ZBITS) -> Column:
-    """Scale a numeric column onto the [0, 2^bits) integer grid."""
-    span = (hi.cast("double") - lo.cast("double"))
-    frac = F.when(span > 0, (col.cast("double") - lo) / span).otherwise(F.lit(0.0))
-    top = F.lit((1 << bits) - 1)
-    return F.least(F.floor(frac * (1 << bits)).cast("long"), top.cast("long"))
-
-
-def _interleave(a: Column, b: Column, bits: int = ZBITS) -> Column:
-    """Morton-interleave two quantized ints: a's bit i -> position 2i+1,
-    b's bit i -> position 2i. A fixed-depth expression tree (2*bits ORs),
-    entirely whole-stage-codegen-able."""
+def _interleave(a: Column, b: Column, bits: int) -> Column:
+    """Morton-interleave the low ``bits`` bits of two quantized ints: a's
+    bit i -> position 2i+1, b's bit i -> position 2i. A fixed-depth
+    expression tree (2*bits ORs), entirely whole-stage-codegen-able."""
     parts = []
     for i in range(bits):
         parts.append(F.shiftleft(F.shiftright(a, i).bitwiseAND(F.lit(1)), 2 * i + 1))
         parts.append(F.shiftleft(F.shiftright(b, i).bitwiseAND(F.lit(1)), 2 * i))
     return reduce(lambda x, y: x.bitwiseOR(y), parts)
-
-
-def zorder_layout(
-    df: DataFrame, col_a: str, col_b: str, num_files: int = 8
-) -> DataFrame:
-    """Return ``df`` arranged in Z-order on (col_a, col_b): write the result
-    with ``.write.parquet(...)`` to get a layout whose row-group stats are
-    narrow in BOTH columns."""
-    bounds = df.agg(
-        F.min(col_a).alias("alo"),
-        F.max(col_a).alias("ahi"),
-        F.min(col_b).alias("blo"),
-        F.max(col_b).alias("bhi"),
-    )
-    z = _interleave(
-        _quantize(F.col(col_a), F.col("alo"), F.col("ahi")),
-        _quantize(F.col(col_b), F.col("blo"), F.col("bhi")),
-    )
-    return (
-        df.crossJoin(F.broadcast(bounds))
-        .withColumn("__z", z)
-        .repartitionByRange(num_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z", "alo", "ahi", "blo", "bhi")
-    )
-
-
-def bucketed_tables(
-    spark,
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    n_buckets: int = 8,
-    prefix: str = "bkt",
-) -> tuple[str, str]:
-    """Write both join sides BUCKETED by the join key (same bucket count,
-    sorted within buckets) into the session catalog and return the two
-    table names.
-
-    This is the layout that makes a repeated big-big join shuffle-FREE:
-    Spark's bucketed scan exposes the hash-partitioning of the files, so a
-    subsequent equi-join on the bucket key plans with NO Exchange on either
-    side (asserted by tests/test_layout.py) — at 100 TB this converts every
-    recurring fact-fact join on the key into a local per-bucket merge,
-    paying the shuffle once at write time instead of per query. The same
-    trick underlies Hive bucketing and Iceberg's bucket partition
-    transform.
-    """
-    lname, rname = f"{prefix}_left", f"{prefix}_right"
-    for name, df in ((lname, left), (rname, right)):
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        (
-            df.write.mode("overwrite")
-            .bucketBy(n_buckets, key)
-            .sortBy(key)
-            .format("parquet")
-            .saveAsTable(name)
-        )
-    return lname, rname

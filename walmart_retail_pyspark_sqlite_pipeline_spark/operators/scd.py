@@ -45,8 +45,8 @@ def scd2_apply(
     batch_ts,
 ) -> DataFrame:
     """Fold one update batch into an SCD2 history table; returns the new
-    history DataFrame (caller persists it — e.g. via
-    ``operators.maintenance.upsert_parquet`` or a table-format MERGE).
+    history DataFrame (the caller persists it, e.g. with a table-format
+    MERGE).
 
     ``updates`` carries ``key_cols + track_cols`` (one row per key;
     duplicate keys in one batch are an error the caller must resolve —

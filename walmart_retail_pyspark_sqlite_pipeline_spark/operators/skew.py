@@ -40,37 +40,3 @@ def salted_agg(
     return partial.groupBy(*keys).agg(
         *[fin(F.col(name)).alias(name) for name, (_, fin) in aggs.items()]
     )
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: Sequence[str],
-    n_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-proof shuffle join: salt the big side, replicate the small side.
-
-    AQE's skew-join split only fires for sort-merge joins it can observe at
-    runtime; this is the manual rewrite for when the engine can't help
-    (non-AQE deployments, skew inside a single task, joins forced to
-    shuffle-hash). Each big-side row gets one of ``n_salts`` synthetic
-    sub-keys — spreading a hot join key over ``n_salts`` reducers — while
-    the small side is exploded ``n_salts``x so every sub-key still finds
-    its match. Cost: small side shuffles ``n_salts``x its size; use only
-    when the small side is orders of magnitude below the big one (else
-    broadcast it and no salt is needed).
-
-    Result-identical to ``big.join(small, on, how)`` for ``inner`` and
-    ``left`` (each big row joins exactly its one salt's replica).
-    """
-    if how not in ("inner", "left"):
-        raise ValueError("salted_join supports inner/left (big side preserved)")
-    salted_big = big.withColumn(
-        "__salt",
-        (F.spark_partition_id() + F.monotonically_increasing_id()) % n_salts,
-    )
-    replicated = small.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
-    )
-    return salted_big.join(replicated, [*on, "__salt"], how).drop("__salt")

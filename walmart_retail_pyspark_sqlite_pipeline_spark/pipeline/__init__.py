@@ -1,22 +1,9 @@
-from .incremental import (
-    build_rollup,
-    hourly_rollup,
-    incremental_rollup_merge,
-    rollup_stream_sink,
-)
 from .corpus import CorpusConfig, run_corpus_pipeline
 from .orchestrator import PipelineConfig, run_pipeline
-from .shards import ShardConfig, export_training_shards
 
 __all__ = [
     "CorpusConfig",
     "run_corpus_pipeline",
     "PipelineConfig",
     "run_pipeline",
-    "ShardConfig",
-    "export_training_shards",
-    "hourly_rollup",
-    "build_rollup",
-    "incremental_rollup_merge",
-    "rollup_stream_sink",
 ]

@@ -75,8 +75,10 @@ class PipelineConfig:
     def from_yaml(cls, path: str | Path) -> "PipelineConfig":
         with open(path) as fh:
             data = yaml.safe_load(fh) or {}
-        known = {k: v for k, v in data.items() if k in cls.__dataclass_fields__}
-        return cls(**known)
+        unknown = sorted(set(data) - set(cls.__dataclass_fields__))
+        if unknown:  # a misspelled key would otherwise fall back to its default
+            raise ValueError(f"{path}: unknown PipelineConfig keys {unknown}")
+        return cls(**data)
 
 
 _SCHEMAS = {

@@ -1,4 +1,4 @@
-from .checks import QualityReport, count_duplicates, profile, run_quality_checks
+from .checks import QualityReport, profile, run_quality_checks
 from .constraints import (
     Constraint,
     ConstraintReport,
@@ -17,7 +17,6 @@ from .constraints import (
 __all__ = [
     "QualityReport",
     "profile",
-    "count_duplicates",
     "run_quality_checks",
     "Constraint",
     "ConstraintReport",

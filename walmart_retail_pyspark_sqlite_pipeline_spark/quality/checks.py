@@ -59,20 +59,6 @@ def profile(df: DataFrame) -> tuple[int, dict[str, float], int]:
     return n, fractions, dup
 
 
-def count_duplicates(df: DataFrame, subset: list[str] | None = None) -> int:
-    """Duplicate detection (SURVEY §2.5 A5/A6). With a subset: number of key
-    groups appearing more than once; without: full-row duplicate rows."""
-    if subset:
-        return (
-            df.groupBy(*subset)
-            .count()
-            .filter(F.col("count") > 1)
-            .count()
-        )
-    n, _, dup = profile(df.select(df.columns))
-    return dup
-
-
 def run_quality_checks(
     df: DataFrame,
     expected: dict[str, str],

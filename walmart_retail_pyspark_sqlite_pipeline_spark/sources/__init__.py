@@ -1,21 +1,8 @@
-from .sqlite_source import SQLiteDataSource, read_sqlite, stream_sqlite
-from .tables import (
-    STAR_TABLES,
-    TABLES,
-    load_tables,
-    read_embeddings,
-    read_table,
-    register_tables,
-)
+from .tables import STAR_TABLES, TABLES, read_embeddings, read_table
 
 __all__ = [
     "TABLES",
     "STAR_TABLES",
     "read_embeddings",
     "read_table",
-    "load_tables",
-    "register_tables",
-    "SQLiteDataSource",
-    "read_sqlite",
-    "stream_sqlite",
 ]

@@ -1,20 +1,15 @@
 """CSV sources (SURVEY §2.1 S1).
 
-Two modes:
-- :func:`read_csv_raw` — the reference's load-then-cast idiom: header-aware,
-  every column a string, ``multiLine`` + quote-escape enabled (which also
-  makes the univocity parser tolerate the CR-only line endings of the
-  checked-in stores.csv — SURVEY §1.4). Types are imposed afterwards by
-  ``quality.run_quality_checks`` / ``operators.enforce_schema``.
-- :func:`read_csv_typed` — the scale-preferred one-pass variant: an explicit
-  ``StructType`` (never ``inferSchema``, which costs a full extra scan) so
-  the scan is typed at the source and Catalyst can push filters into it.
+:func:`read_csv_raw` is the reference's load-then-cast idiom: header-aware,
+every column a string, ``multiLine`` + quote-escape enabled (which also
+makes the univocity parser tolerate the CR-only line endings of the
+checked-in stores.csv — SURVEY §1.4). Types are imposed afterwards by
+``quality.run_quality_checks`` / ``operators.enforce_schema``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
 
 
 def read_csv_raw(spark: SparkSession, paths: str | list[str]) -> DataFrame:
@@ -22,17 +17,5 @@ def read_csv_raw(spark: SparkSession, paths: str | list[str]) -> DataFrame:
         spark.read.option("header", True)
         .option("multiLine", True)
         .option("escape", '"')
-        .csv(paths)
-    )
-
-
-def read_csv_typed(
-    spark: SparkSession, paths: str | list[str], schema: StructType | str
-) -> DataFrame:
-    return (
-        spark.read.option("header", True)
-        .option("multiLine", True)
-        .option("escape", '"')
-        .schema(schema)
         .csv(paths)
     )

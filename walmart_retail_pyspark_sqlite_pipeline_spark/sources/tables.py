@@ -102,7 +102,9 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
-def _read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+def pin_event_confs(spark: SparkSession) -> None:
+    """Set the two session confs every events read relies on (batch and
+    stream alike); they stay set after the read."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # queries over events export epoch seconds (window starts, session
     # bounds); epoch extraction from a naive-storage timestamp depends on
@@ -111,22 +113,9 @@ def _read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # are timezone-independent for naive data, so this is a no-op for the
     # relational tables.)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+def _read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    pin_event_confs(spark)
     df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
     return normalize_event_ts(df)
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    return {n: read_table(spark, sf_dir, n) for n in names}
-
-
-def register_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    """Register each table as a temp view (the reference's catalog idiom,
-    ``/root/reference/src/quality_checks.py:125``) and return the frames."""
-    dfs = load_tables(spark, sf_dir, names)
-    for n, df in dfs.items():
-        df.createOrReplaceTempView(n)
-    return dfs

@@ -20,12 +20,47 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import normalize_event_ts
+from ..sources.tables import normalize_event_ts, pin_event_confs
 from pyspark.sql.window import Window
 
 SESSION_GAP_S = 1800
 
 _stream_counter = itertools.count()
+
+
+def _events_stream(spark: SparkSession, events_path: str) -> DataFrame:
+    """The events parquet file as a streaming source, normalized like the
+    batch read (``sources.tables.read_table``): same confs, same ``ts``."""
+    pin_event_confs(spark)
+    schema = spark.read.parquet(events_path).schema
+    # the file stream source requires a DIRECTORY; point it at the parent
+    # and glob-filter down to the events file
+    stream = (
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", os.path.basename(events_path))
+        .parquet(os.path.dirname(events_path))
+    )
+    return normalize_event_ts(stream)
+
+
+def _drive(agg: DataFrame, prefix: str, mode: str) -> DataFrame:
+    """Run a streaming plan over its availableNow snapshot into a memory
+    sink in output ``mode``; return the final table."""
+    name = f"{prefix}_{next(_stream_counter)}"
+    q = (
+        agg.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    # availableNow terminates on its own once the snapshot is processed; the
+    # timeout is a hard bound so a wedged stream can never hang a caller with
+    # a time budget (e.g. the driver's correctness gate)
+    if not q.awaitTermination(timeout=120):
+        q.stop()
+        raise TimeoutError(f"stream {name} did not finish within 120 s")
+    return agg.sparkSession.table(name)
 
 
 def sessionize(events: DataFrame, gap_s: int = SESSION_GAP_S) -> DataFrame:
@@ -168,21 +203,7 @@ def hourly_counts_stream(spark: SparkSession, events_path: str) -> DataFrame:
     watermark (see tests/test_streaming.py for the watermark variant); the
     aggregation plan is identical.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # epoch window-starts are exported; pin UTC like sources.read_table so
-    # the result is independent of the caller's session timezone
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(events_path).schema
-    # the file stream source requires a DIRECTORY; point it at the parent
-    # and glob-filter down to the events file
-    base_dir = os.path.dirname(events_path)
-    fname = os.path.basename(events_path)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", fname)
-        .parquet(base_dir)
-    )
-    stream = normalize_event_ts(stream)
+    stream = _events_stream(spark, events_path)
     agg = (
         stream.groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
         .agg(F.count("*").alias("n_events"))
@@ -192,21 +213,7 @@ def hourly_counts_stream(spark: SparkSession, events_path: str) -> DataFrame:
             "n_events",
         )
     )
-    name = f"hourly_counts_{next(_stream_counter)}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    # availableNow terminates on its own once the snapshot is processed; the
-    # timeout is a hard bound so a wedged stream can never hang a caller with
-    # a time budget (e.g. the driver's correctness gate)
-    if not q.awaitTermination(timeout=120):
-        q.stop()
-        raise TimeoutError("hourly_counts_stream did not finish within 120 s")
-    return spark.table(name)
+    return _drive(agg, "hourly_counts", "complete")
 
 
 def click_purchase_stream_join(
@@ -225,21 +232,11 @@ def click_purchase_stream_join(
     user_id, and the watermark bound keeps per-key state O(events in the
     window), not O(history).
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(events_path).schema
-    base_dir = os.path.dirname(events_path)
-    fname = os.path.basename(events_path)
 
     def side(event_type: str, prefix: str) -> DataFrame:
-        s = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", fname)
-            .parquet(base_dir)
-        )
-        s = normalize_event_ts(s)
         return (
-            s.filter(F.col("event_type") == event_type)
+            _events_stream(spark, events_path)
+            .filter(F.col("event_type") == event_type)
             .select(
                 F.col("user_id").alias(f"{prefix}_user"),
                 F.col("event_id").alias(f"{prefix}_id"),
@@ -262,18 +259,7 @@ def click_purchase_stream_join(
         F.col("p_ts").cast("long").alias("purchase_ts_s"),
         F.col("c_ts").cast("long").alias("click_ts_s"),
     )
-    name = f"stream_join_{next(_stream_counter)}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout=120):
-        q.stop()
-        raise TimeoutError("click_purchase_stream_join did not finish in 120 s")
-    return spark.table(name)
+    return _drive(joined, "stream_join", "append")
 
 
 def dedup_counts_stream(spark: SparkSession, events_path: str) -> DataFrame:
@@ -288,17 +274,7 @@ def dedup_counts_stream(spark: SparkSession, events_path: str) -> DataFrame:
     here keeps all keys — correct for a bounded snapshot, unbounded state on
     a true stream); tests/test_streaming.py exercises the watermarked twin.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(events_path).schema
-    base_dir = os.path.dirname(events_path)
-    fname = os.path.basename(events_path)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", fname)
-        .parquet(base_dir)
-    )
-    stream = normalize_event_ts(stream)
+    stream = _events_stream(spark, events_path)
     agg = (
         stream.select(
             "user_id",
@@ -311,18 +287,7 @@ def dedup_counts_stream(spark: SparkSession, events_path: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count("*").alias("n_deduped"))
     )
-    name = f"dedup_counts_{next(_stream_counter)}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout=120):
-        q.stop()
-        raise TimeoutError("dedup_counts_stream did not finish within 120 s")
-    return spark.table(name)
+    return _drive(agg, "dedup_counts", "complete")
 
 
 def session_window_stream(
@@ -357,17 +322,7 @@ def session_window_stream(
     config tweak) is exercised separately by
     tests/test_streaming.py::test_streaming_session_window_emits_closed_sessions.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(events_path).schema
-    base_dir = os.path.dirname(events_path)
-    fname = os.path.basename(events_path)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", fname)
-        .parquet(base_dir)
-    )
-    stream = normalize_event_ts(stream)
+    stream = _events_stream(spark, events_path)
     agg = (
         stream.withWatermark("ts", "0 seconds")
         .groupBy(
@@ -382,18 +337,7 @@ def session_window_stream(
             "n_events",
         )
     )
-    name = f"session_windows_{next(_stream_counter)}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout=120):
-        q.stop()
-        raise TimeoutError("session_window_stream did not finish within 120 s")
-    return spark.table(name)
+    return _drive(agg, "session_windows", "complete")
 
 
 def static_enrich_stream(
@@ -417,17 +361,7 @@ def static_enrich_stream(
     Revenue follows the repo's exact-sum idiom (cents as BIGINT), so
     streaming == batch == DuckDB to the last cent.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    schema = spark.read.parquet(events_path).schema
-    base_dir = os.path.dirname(events_path)
-    fname = os.path.basename(events_path)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", fname)
-        .parquet(base_dir)
-    )
-    stream = normalize_event_ts(stream)
+    stream = _events_stream(spark, events_path)
     dim = spark.read.parquet(customer_path).select(
         F.col("c_custkey").alias("user_id"),
         F.col("c_mktsegment").alias("segment"),
@@ -442,15 +376,4 @@ def static_enrich_stream(
             ).alias("revenue_cents"),
         )
     )
-    name = f"static_enrich_{next(_stream_counter)}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout=120):
-        q.stop()
-        raise TimeoutError("static_enrich_stream did not finish within 120 s")
-    return spark.table(name)
+    return _drive(agg, "static_enrich", "complete")
