@@ -170,3 +170,37 @@ def test_fk_only_suite_skips_the_row_pass(spark):
     name = "foreign_key(l_orderkey)"
     assert fk_only.violations[name] == with_row.violations[name] > 0
     assert 0 < fk_jobs < with_row_jobs
+
+
+def test_unique_sample_matches_the_count_on_null_keys(spark):
+    """NULL keys form one group (SQL GROUP BY), so two NULL ids collide:
+    the count says 4 and the sample returns those same 4 rows, NULLs
+    included — for a single key and for a key set with a NULL part."""
+    from walmart_retail_pyspark_sqlite_pipeline_spark.quality import (
+        validation_frame,
+    )
+
+    df = spark.createDataFrame(
+        [(None, "a"), (None, "a"), (1, None), (1, None), (2, "b")],
+        "id int, s string",
+    )
+    for c in (unique("id"), unique("id", "s")):
+        assert validate(df, [c]).violations[c.name] == 4
+        frame = validation_frame(df, [c]).collect()
+        assert {r.constraint: r.violations for r in frame} == {c.name: 4}
+        ids = [r.id for r in sample_violations(df, c, limit=10).collect()]
+        assert sorted(ids, key=lambda v: (v is not None, v)) == [None, None, 1, 1]
+
+
+def test_validation_frame_counts_zero_on_an_empty_table(spark):
+    """Row-level counters are 0, not NULL, on an empty table — what the
+    COUNT(CASE ...) form of the same checks returns in SQL."""
+    from walmart_retail_pyspark_sqlite_pipeline_spark.quality import (
+        validation_frame,
+    )
+
+    empty = spark.createDataFrame([], "id int, qty int")
+    suite = [not_null("id"), in_range("qty", 0, 100), unique("id")]
+    got = {r.constraint: r.violations for r in validation_frame(empty, suite).collect()}
+    assert got == {c.name: 0 for c in suite}
+    assert validate(empty, suite).violations == got

@@ -239,6 +239,43 @@ def test_pipeline_constraint_gate(spark, walmart_fixtures, tmp_path):
     assert not db2.exists()  # the gate fired before any write
 
 
+def test_pipeline_sink_writes_read_the_cached_fact(
+    spark, walmart_fixtures, tmp_path, monkeypatch
+):
+    """The curated join runs once per run: every frame handed to the
+    SQLite sink (the fact and its three rollups) plans a scan of the
+    cached fact, with no join node left to re-execute."""
+    from walmart_retail_pyspark_sqlite_pipeline_spark.pipeline import orchestrator
+
+    handed = {}
+
+    def capture(df, db_path, table):
+        handed[table] = df
+        return write_sqlite(df, db_path, table)
+
+    monkeypatch.setattr(orchestrator, "write_sqlite", capture)
+    cfg = PipelineConfig(
+        raw_dir=str(walmart_fixtures["root"]), output_db=str(tmp_path / "r.db")
+    )
+    run_pipeline(spark, cfg)
+
+    def node_names(plan):
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            plan = plan.executedPlan()
+        kids = plan.children()
+        return [plan.nodeName()] + [
+            n for i in range(kids.size()) for n in node_names(kids.apply(i))
+        ]
+
+    assert sorted(handed) == sorted(
+        ["sales_curated", "agg_store_dept", "agg_store_type_year", "holidays_vs_normal"]
+    )
+    for table, df in handed.items():
+        nodes = node_names(df._jdf.queryExecution().executedPlan())
+        assert "InMemoryTableScan" in nodes, (table, nodes)
+        assert not [n for n in nodes if "Join" in n], (table, nodes)
+
+
 def test_pipeline_rejects_unknown_sink_before_reading_input(spark, tmp_path):
     """A misspelled sink from the YAML config fails loudly before the
     acquisition hook or any CSV read, instead of running QC and the join

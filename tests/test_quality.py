@@ -69,6 +69,22 @@ def test_fail_on_schema_mismatch_flags_extras(spark):
     assert lenient.schema_ok is True
 
 
+def test_missing_columns_are_reported(spark):
+    """A missing input column is padded with typed NULLs and named in an
+    issue (not only seen as a 100% null fraction); under
+    fail_on_schema_mismatch it clears schema_ok like an extra column."""
+    df = spark.createDataFrame([Row(Store="1")])
+    expected = {"Store": "int", "Dept": "int"}
+    typed, lenient = run_quality_checks(df, expected, "lenient", register_view=False)
+    assert typed.columns == ["Store", "Dept"]
+    assert "missing columns filled with NULL: ['Dept']" in lenient.issues
+    assert lenient.schema_ok is True
+    _, strict = run_quality_checks(
+        df, expected, "strict", fail_on_schema_mismatch=True, register_view=False
+    )
+    assert strict.schema_ok is False
+
+
 def test_run_quality_checks_end_to_end(spark):
     df = spark.createDataFrame(
         [

@@ -78,6 +78,20 @@ def test_streaming_equals_batch(spark):
     assert stream_counts == batch_counts
 
 
+def test_stream_leaves_no_temp_view_behind(spark):
+    """Each memory-sink drive drops its temp view: two runs leave the
+    session's catalog as it was and return the same rows."""
+    from collections import Counter
+
+    path = f"{SF_SMALL}/events.parquet"
+    before = sorted(t.name for t in spark.catalog.listTables())
+    first = hourly_counts_stream(spark, path)
+    second = hourly_counts_stream(spark, path)
+    assert sorted(t.name for t in spark.catalog.listTables()) == before
+    rows = Counter(map(tuple, first.collect()))
+    assert rows and rows == Counter(map(tuple, second.collect()))
+
+
 def test_foreachbatch_sqlite_sink(spark, tmp_path):
     """Streaming → SQLite via foreachBatch: each micro-batch appends through
     the single-writer sink; totals must equal the batch aggregate."""

@@ -189,14 +189,14 @@ def main():
         from walmart_retail_pyspark_sqlite_pipeline_spark.session import get_spark
 
         spark = get_spark("oracle-check")
-    if tz:
-        spark.conf.set("spark.sql.session.timeZone", tz)
     con = duck_con(sf_dir)
 
     n_pass = n_fail = n_skip = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        if tz:  # again per query: an events read pins the session to UTC
+            spark.conf.set("spark.sql.session.timeZone", tz)
         if name not in oracles:
             df = fn(spark, sf_dir)
             n = df.count()

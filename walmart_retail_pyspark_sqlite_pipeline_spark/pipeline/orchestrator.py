@@ -3,7 +3,9 @@ ingest → quality checks → curated transform → sink.
 
 Differences from the reference, by design (SURVEY §4.3):
 - quality profiling is one aggregate job per table, not N+3;
-- each curated table's plan executes ONCE — the row count comes back from
+- the curated join executes ONCE: the fact is cached where it is built,
+  the pre-sink FK gate's anti-join fills the cache, and every sink write
+  (the fact and its three rollups) reads it; row counts come back from
   the sink writer instead of a pre-write ``count()`` re-execution;
 - the sink is pluggable: SQLite for the BI hand-off (single-writer by
   construction), parquet as the scale default;
@@ -21,10 +23,20 @@ from dataclasses import dataclass, field
 from pathlib import Path
 
 import yaml
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from ..plans import curated as cur
 from ..quality import QualityReport, run_quality_checks
+from ..quality.constraints import (
+    Constraint,
+    foreign_key,
+    in_range,
+    not_null,
+    row_counters,
+    row_violations,
+    validate,
+)
 from ..sinks import write_parquet, write_sqlite
 from ..sources.csv import read_csv_raw
 
@@ -42,13 +54,6 @@ class PipelineConfig:
     drop_duplicates: bool = True
     fail_on_schema_mismatch: bool = False
     sink: str = "sqlite"  # one of SINKS
-    #: lakehouse layout for the parquet sink: table -> partition columns.
-    #: Partitioning the fact by year means a year-filtered downstream read
-    #: prunes whole directories before any IO — the default layout choice
-    #: for a time-organized 100 TB fact table.
-    parquet_partition_by: dict[str, list[str]] = field(
-        default_factory=lambda: {"sales_curated": ["year"]}
-    )
     datasets: dict[str, str] = field(
         default_factory=lambda: {
             "train": "train.csv",
@@ -58,17 +63,6 @@ class PipelineConfig:
     )
     #: optional acquisition hook: called with raw_dir before reading
     acquire: Callable[[str], None] | None = None
-    #: pre-sink referential-integrity gate: (table, fk_col, dataset, ref_col)
-    #: anti-join checks run BEFORE any write, so a violation can actually
-    #: block the sink (set fail_on_constraint_violation). The typed inputs
-    #: are cached by QC, so each check costs one anti-join over cache.
-    fk_checks: list[tuple[str, str, str, str]] = field(
-        default_factory=lambda: [("sales_curated", "store_id", "stores", "Store")]
-    )
-    #: row-level constraint counters ride the sink write's observe() — the
-    #: SAME job that materializes the table, zero extra passes. None ->
-    #: default suite on sales_curated (see _default_observe_constraints).
-    observe_constraints: Callable[[], dict[str, list]] | None = None
     fail_on_constraint_violation: bool = False
 
     @classmethod
@@ -88,18 +82,25 @@ _SCHEMAS = {
 }
 
 
-def _default_observe_constraints() -> dict[str, list]:
-    """Write-time row constraints for the curated fact (built lazily — a
-    Column needs the JVM, so this can't be a dataclass default)."""
-    from ..quality.constraints import in_range, not_null
+#: lakehouse layout for the parquet sink: table -> partition columns.
+#: Partitioning the fact by year means a year-filtered downstream read
+#: prunes whole directories before any IO — the default layout choice for a
+#: time-organized 100 TB fact table.
+PARQUET_PARTITION_BY = {"sales_curated": ["year"]}
 
-    return {
-        "sales_curated": [
-            not_null("store_id"),
-            not_null("date"),
-            in_range("week", 1, 53),
-        ]
-    }
+
+def _fact_constraints(stores: DataFrame) -> list[Constraint]:
+    """The curated fact's suite (built per run — a Column needs the JVM).
+    Its foreign key is the pre-sink gate, run BEFORE any write so
+    ``fail_on_constraint_violation`` can block the sink; its row-level
+    checks ride the fact write's ``observe()`` — the SAME job that
+    materializes the table, zero extra passes."""
+    return [
+        foreign_key("store_id", stores, "Store"),
+        not_null("store_id"),
+        not_null("date"),
+        in_range("week", 1, 53),
+    ]
 
 
 def run_pipeline(
@@ -137,23 +138,18 @@ def run_pipeline(
     tables = cur.build_curated_tables(
         spark, typed["train"], typed["features"], typed["stores"]
     )
-
-    # pre-sink referential-integrity gate (anti-join over cached inputs):
-    # runs BEFORE any write so fail_on_constraint_violation can block it
-    from ..quality.constraints import foreign_key, validate
-
-    constraint_violations: dict[str, dict[str, int]] = {}
-    for tbl, fk_col, ds, ref_col in cfg.fk_checks:
-        rep = validate(tables[tbl], [foreign_key(fk_col, typed[ds], ref_col)])
-        for cname, cnt in rep.violations.items():
-            constraint_violations.setdefault(tbl, {})[cname] = cnt
-            if cnt:
-                msg = f"constraint {cname} on {tbl}: {cnt} violating rows"
-                log.warning(msg)
-                if cfg.fail_on_constraint_violation:
-                    raise ValueError(msg)
-
-    obs_constraints = (cfg.observe_constraints or _default_observe_constraints)()
+    fact = "sales_curated"
+    suite = _fact_constraints(typed["stores"])
+    # the gate's anti-join is the curated join's one execution: it fills
+    # the fact's cache, which every sink write below reads
+    gate = validate(tables[fact], [c for c in suite if c.kind == "foreign_key"])
+    constraint_violations: dict[str, dict[str, int]] = {fact: gate.violations}
+    for cname, cnt in gate.violations.items():
+        if cnt:
+            msg = f"constraint {cname} on {fact}: {cnt} violating rows"
+            log.warning(msg)
+            if cfg.fail_on_constraint_violation:
+                raise ValueError(msg)
 
     table_rows: dict[str, int] = {}
     observed: dict[str, dict] = {}
@@ -162,43 +158,29 @@ def run_pipeline(
     for name, df in tables.items():
         # observe(): write-time metrics from the SAME job that materializes
         # the table — zero extra passes (the reference re-executes every
-        # plan with a pre-write count(), SURVEY §4.3). Row-level constraint
-        # counters ride the same observation.
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
-        row_cons = [c for c in obs_constraints.get(name, []) if c.kind == "row"]
+        # plan with a pre-write count(), SURVEY §4.3)
+        checks = suite if name == fact else []
         obs = Observation(f"obs_{name}")
-        df = df.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows"),
-            *[
-                F.sum(F.when(c.violated, 1).otherwise(0)).alias(f"__v{i}")
-                for i, c in enumerate(row_cons)
-            ],
-        )
+        df = df.observe(obs, F.count(F.lit(1)).alias("rows"), *row_counters(checks))
         if cfg.sink == "sqlite":
             table_rows[name] = write_sqlite(df, db_path, name)
             log.info("wrote %s: %d rows -> %s", name, table_rows[name], db_path)
         else:
             out = f"{cfg.output_parquet_dir or 'curated'}/{name}"
-            write_parquet(
-                df, out, partition_by=cfg.parquet_partition_by.get(name)
-            )
+            write_parquet(df, out, partition_by=PARQUET_PARTITION_BY.get(name))
             log.info("wrote %s -> %s", name, out)
-        got = dict(obs.get)
-        for i, c in enumerate(row_cons):
-            cnt = int(got.pop(f"__v{i}") or 0)
-            constraint_violations.setdefault(name, {})[c.name] = cnt
+        got = obs.get
+        for cname, cnt in row_violations(got, checks).items():
+            constraint_violations[fact][cname] = cnt
             if cnt:
                 log.warning(
                     "constraint %s on %s: %d violating rows (write-time)",
-                    c.name, name, cnt,
+                    cname, name, cnt,
                 )
-        observed[name] = got
+        observed[name] = {"rows": got["rows"]}
         # parquet runs still report row counts — from the write-time
         # observation, not an extra count() job
-        table_rows.setdefault(name, observed[name]["rows"])
+        table_rows.setdefault(name, got["rows"])
 
     return {
         "reports": reports,

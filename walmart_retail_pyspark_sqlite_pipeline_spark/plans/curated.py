@@ -99,7 +99,8 @@ def build_curated_tables(
     stores: DataFrame,
 ) -> dict[str, DataFrame]:
     """Rename → enrich → join train⟕features⟕stores → wide fact + three
-    aggregate rollups. Returns {table_name: lazy DataFrame}."""
+    aggregate rollups. Returns {table_name: lazy DataFrame}; the fact is
+    cached, so the join runs once however many of the four are executed."""
     from ..operators import rename_columns
 
     t = parse_and_enrich(rename_columns(train, TRAIN_RENAME))
@@ -126,7 +127,7 @@ def build_curated_tables(
     # J2: string-key join form emits store_id once
     joined = joined.join(s, on="store_id", how="left")
 
-    curated = joined.select(*CURATED_COLUMNS)
+    curated = joined.select(*CURATED_COLUMNS).cache()
     curated.createOrReplaceTempView("curated_sales")
 
     agg_store_dept = (

@@ -69,7 +69,8 @@ def run_quality_checks(
     fail_on_schema_mismatch: bool = False,
     register_view: bool = True,
 ) -> tuple[DataFrame, QualityReport]:
-    """Q4 composite: enforce schema → one-pass profile → conditional dedup →
+    """Q4 composite: enforce schema (extra and missing columns are
+    reported as issues) → one-pass profile → conditional dedup →
     threshold issues → cache + temp view → report.
 
     Job count: exactly one aggregate job (the profile); the reference runs
@@ -78,12 +79,13 @@ def run_quality_checks(
     from ..operators import enforce_schema
 
     typed, extras = enforce_schema(df, expected)
+    missing = [c for c in expected if c not in df.columns]
     issues: list[str] = []
-    schema_ok = True
     if extras:
         issues.append(f"unexpected columns dropped: {extras}")
-        if fail_on_schema_mismatch:
-            schema_ok = False
+    if missing:
+        issues.append(f"missing columns filled with NULL: {missing}")
+    schema_ok = not (fail_on_schema_mismatch and (extras or missing))
 
     n, fractions, dup = profile(typed)
     if dup and drop_duplicates:

@@ -1,23 +1,22 @@
 """Declarative constraint validation (Deequ-style checks, Spark-first).
 
-A constraint suite compiles to the MINIMUM number of Spark jobs:
+Each constraint kind has ONE definition of what it counts, and every
+consumer builds from it (:func:`validate`, :func:`validation_frame`,
+:func:`sample_violations` and the pipeline's write-time ``observe()``):
 
-- every row-level constraint (``not_null``, ``in_range``,
-  ``accepted_values``, ``matches_regex``, ``satisfies``) becomes one
-  ``sum(when(violated, 1))`` term in a SINGLE aggregate pass over the
-  table — adding a constraint adds a column to one job, not a job; a
-  suite without row-level constraints skips that pass (and its row
-  count) entirely;
-- each ``unique`` key set needs its own groupBy (a shuffle per key set —
-  that is inherent: different keys, different partitioning);
-- each ``foreign_key`` is a left-anti join against the (broadcast-sized or
-  shuffled, Catalyst's call) referenced key column.
+- row-level constraints (``not_null``, ``in_range``, ``accepted_values``,
+  ``matches_regex``, ``satisfies``) are counter terms
+  (:func:`row_counters`) that share a SINGLE aggregate pass — adding a
+  constraint adds a column to one job, not a job; a suite without
+  row-level constraints skips that pass (and its row count) entirely;
+- a ``unique`` key set is its collision groups (one groupBy — a shuffle
+  per key set, inherent: different keys, different partitioning); NULL
+  keys form one group, as in SQL ``GROUP BY``;
+- a ``foreign_key`` is its orphan rows, a left-anti join against the
+  referenced key column (broadcast or shuffled, Catalyst's call).
 
-At 100 TB the row-level pass is one scan with map-side partial aggregation
-(a few hundred bytes per executor to the driver), uniqueness is one
-shuffle per key, and FK anti-joins ride AQE join selection. Violation
-*samples* are only computed on demand (``sample_violations``) so the
-validation pass itself never widens beyond counters.
+Violation *samples* are only computed on demand (``sample_violations``) so
+the validation pass itself never widens beyond counters.
 
 The reference has no counterpart (its QC is profile-based —
 /root/reference/src/quality_checks.py:105-130); this is the
@@ -27,6 +26,7 @@ constraint-assertion layer a production pipeline puts in front of a sink.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -102,49 +102,65 @@ class ConstraintReport:
         self.passed = all(v == 0 for v in self.violations.values())
 
 
+def row_counters(constraints: list[Constraint]) -> list[Column]:
+    """One aggregate term ``__v{i}`` per row-level constraint of the suite
+    (others are skipped): its number of violating rows, 0 on an empty
+    table. Usable in ``agg`` and in ``observe``."""
+    rows = [c for c in constraints if c.kind == "row"]
+    return [
+        F.count(F.when(c.violated, 1)).alias(f"__v{i}") for i, c in enumerate(rows)
+    ]
+
+
+def row_violations(counters, constraints: list[Constraint]) -> dict[str, int]:
+    """Read the :func:`row_counters` terms back from a collected ``Row`` or
+    an observation's metrics dict."""
+    rows = [c for c in constraints if c.kind == "row"]
+    return {c.name: int(counters[f"__v{i}"]) for i, c in enumerate(rows)}
+
+
+def _collisions(df: DataFrame, keys: tuple[str, ...]) -> DataFrame:
+    """The key groups of more than one row, with their size ``__cnt``."""
+    return (
+        df.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("__cnt"))
+        .filter(F.col("__cnt") > 1)
+    )
+
+
+def _orphans(df: DataFrame, c: Constraint) -> DataFrame:
+    """The rows whose non-NULL ``fk_col`` has no match in the reference."""
+    ref = c.ref.select(F.col(c.ref_col).alias(c.fk_col)).distinct()
+    return df.filter(F.col(c.fk_col).isNotNull()).join(ref, c.fk_col, "left_anti")
+
+
+def _key_count(df: DataFrame, c: Constraint) -> DataFrame:
+    """A unique / foreign-key constraint's count as one
+    ``(constraint, violations)`` row."""
+    if c.kind == "unique":
+        src, n = _collisions(df, c.keys), F.coalesce(F.sum("__cnt"), F.lit(0))
+    elif c.kind == "foreign_key":
+        src, n = _orphans(df, c), F.count(F.lit(1))
+    else:
+        raise ValueError(f"unknown constraint kind {c.kind!r}")
+    return src.agg(n.cast("bigint").alias("violations")).select(
+        F.lit(c.name).alias("constraint"), "violations"
+    )
+
+
 def validate(df: DataFrame, constraints: list[Constraint]) -> ConstraintReport:
     """Run a constraint suite with the minimal job count (see module doc)."""
-    row_cs = [c for c in constraints if c.kind == "row"]
-    uniq_cs = [c for c in constraints if c.kind == "unique"]
-    fk_cs = [c for c in constraints if c.kind == "foreign_key"]
-
-    violations: dict[str, int] = {}
-
     n = None
-    if row_cs:
+    violations: dict[str, int] = {}
+    if any(c.kind == "row" for c in constraints):
         row = df.agg(
-            F.count(F.lit(1)).alias("__n"),
-            *[
-                F.sum(F.when(c.violated, 1).otherwise(0)).alias(f"__v{i}")
-                for i, c in enumerate(row_cs)
-            ],
+            F.count(F.lit(1)).alias("__n"), *row_counters(constraints)
         ).collect()[0]
         n = int(row["__n"])
-        for i, c in enumerate(row_cs):
-            violations[c.name] = int(row[f"__v{i}"] or 0)
-
-    for c in uniq_cs:
-        collisions = (
-            df.groupBy(*c.keys)
-            .agg(F.count(F.lit(1)).alias("__cnt"))
-            .filter(F.col("__cnt") > 1)
-            .agg(F.coalesce(F.sum("__cnt"), F.lit(0)).alias("__rows"))
-            .collect()[0]["__rows"]
-        )
-        violations[c.name] = int(collisions)
-
-    for c in fk_cs:
-        orphans = (
-            df.filter(F.col(c.fk_col).isNotNull())
-            .join(
-                c.ref.select(F.col(c.ref_col).alias(c.fk_col)).distinct(),
-                c.fk_col,
-                "left_anti",
-            )
-            .count()
-        )
-        violations[c.name] = int(orphans)
-
+        violations.update(row_violations(row, constraints))
+    for c in constraints:
+        if c.kind != "row":
+            violations[c.name] = int(_key_count(df, c).collect()[0]["violations"])
     return ConstraintReport(row_count=n, violations=violations)
 
 
@@ -152,30 +168,19 @@ def sample_violations(
     df: DataFrame, constraint: Constraint, limit: int = 5
 ) -> DataFrame:
     """On-demand violating-row samples for debugging (separate job by
-    design — the validation pass stays counters-only)."""
+    design — the validation pass stays counters-only). A ``unique`` sample
+    matches keys NULL-safely, so NULL-key collisions show up as counted."""
     if constraint.kind == "row":
         return df.filter(constraint.violated).limit(limit)
     if constraint.kind == "unique":
-        keys = list(constraint.keys)
-        dupkeys = (
-            df.groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("__cnt"))
-            .filter(F.col("__cnt") > 1)
-            .select(*keys)
+        keys = constraint.keys
+        dup = _collisions(df, keys).select(
+            *[F.col(k).alias(f"__k{i}") for i, k in enumerate(keys)]
         )
-        return df.join(dupkeys, keys, "left_semi").limit(limit)
+        on = [F.col(k).eqNullSafe(F.col(f"__k{i}")) for i, k in enumerate(keys)]
+        return df.join(dup, on, "left_semi").limit(limit)
     if constraint.kind == "foreign_key":
-        return (
-            df.filter(F.col(constraint.fk_col).isNotNull())
-            .join(
-                constraint.ref.select(
-                    F.col(constraint.ref_col).alias(constraint.fk_col)
-                ).distinct(),
-                constraint.fk_col,
-                "left_anti",
-            )
-            .limit(limit)
-        )
+        return _orphans(df, constraint).limit(limit)
     raise ValueError(f"unknown constraint kind {constraint.kind!r}")
 
 
@@ -186,54 +191,14 @@ def validation_frame(df: DataFrame, constraints: list[Constraint]) -> DataFrame:
     constraints share ONE aggregate; each unique/FK constraint contributes
     its own 1-row aggregate; the tiny per-constraint rows are unioned."""
     row_cs = [c for c in constraints if c.kind == "row"]
-    uniq_cs = [c for c in constraints if c.kind == "unique"]
-    fk_cs = [c for c in constraints if c.kind == "foreign_key"]
-
-    parts = []
+    parts = [_key_count(df, c) for c in constraints if c.kind != "row"]
     if row_cs:
-        one_pass = df.agg(
-            *[
-                F.sum(F.when(c.violated, 1).otherwise(0))
-                .cast("bigint")
-                .alias(f"__v{i}")
-                for i, c in enumerate(row_cs)
-            ]
-        )
         # unpivot the single counters row to (constraint, violations)
-        stack = ", ".join(
-            f"'{c.name}', __v{i}" for i, c in enumerate(row_cs)
-        )
-        parts.append(
-            one_pass.selectExpr(
+        stack = ", ".join(f"'{c.name}', __v{i}" for i, c in enumerate(row_cs))
+        parts.insert(
+            0,
+            df.agg(*row_counters(row_cs)).selectExpr(
                 f"stack({len(row_cs)}, {stack}) AS (constraint, violations)"
-            )
+            ),
         )
-    for c in uniq_cs:
-        parts.append(
-            df.groupBy(*c.keys)
-            .agg(F.count(F.lit(1)).alias("__cnt"))
-            .filter(F.col("__cnt") > 1)
-            .agg(
-                F.coalesce(F.sum("__cnt"), F.lit(0))
-                .cast("bigint")
-                .alias("violations")
-            )
-            .select(F.lit(c.name).alias("constraint"), "violations")
-        )
-    for c in fk_cs:
-        orphans = (
-            df.filter(F.col(c.fk_col).isNotNull())
-            .join(
-                c.ref.select(F.col(c.ref_col).alias(c.fk_col)).distinct(),
-                c.fk_col,
-                "left_anti",
-            )
-            .agg(F.count(F.lit(1)).cast("bigint").alias("violations"))
-            .select(F.lit(c.name).alias("constraint"), "violations")
-        )
-        parts.append(orphans)
-
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return reduce(DataFrame.unionByName, parts)

@@ -10,15 +10,11 @@ from pyspark.sql import DataFrame
 
 
 def write_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-    coalesce: int | None = None,
+    df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> None:
-    if coalesce:
-        df = df.coalesce(coalesce)
-    writer = df.write.mode(mode)
+    """Overwrite ``path`` with ``df`` as parquet, hive-partitioned by
+    ``partition_by`` when given."""
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)

@@ -3,10 +3,11 @@
 The reference writes through the xerial JDBC driver with default
 parallelism — which only works because SQLite locks the whole file and the
 data is tiny. SQLite is inherently a SINGLE-WRITER sink, so parallel
-executor writes buy nothing; this implementation streams Arrow batches to
-the driver and bulk-inserts with ``executemany`` inside one transaction —
-no JDBC jar dependency, one writer by construction, and executor memory
-stays flat because ``toArrow`` batches arrive incrementally.
+executor writes buy nothing; this implementation collects the table to the
+driver as ONE Arrow table (``toArrow``) and bulk-inserts it with
+``executemany`` in 50k-row batches inside one transaction — no JDBC jar
+dependency, one writer by construction. The whole table is held on the
+driver while it is inserted; ``MAX_SQLITE_ROWS`` bounds that.
 
 Type fidelity fixes over the reference (SURVEY §1.4): DateType is stored as
 ISO 'YYYY-MM-DD' TEXT (not driver-dependent epoch-millis), booleans as 0/1
@@ -48,9 +49,10 @@ def _normalize(df: DataFrame) -> DataFrame:
 #: Hard ceiling on rows routed through the driver to SQLite. SQLite is the
 #: single-writer local BI hand-off, NOT the scale sink — a table 100× the
 #: reference's (~420k rows) pointed here by accident should fail fast, not
-#: materialize on the driver. Checked incrementally while streaming, so the
-#: plan is never double-executed and the abort happens at the ceiling, not
-#: after a full materialization.
+#: materialize on the driver. The collect is limited to ``max_rows + 1``
+#: rows and the count is checked once that table is on the driver, so an
+#: oversized input costs at most one row more than the ceiling, its plan
+#: runs once, and nothing is committed.
 MAX_SQLITE_ROWS = 10_000_000
 
 

@@ -45,7 +45,11 @@ def _events_stream(spark: SparkSession, events_path: str) -> DataFrame:
 
 def _drive(agg: DataFrame, prefix: str, mode: str) -> DataFrame:
     """Run a streaming plan over its availableNow snapshot into a memory
-    sink in output ``mode``; return the final table."""
+    sink in output ``mode``; return the final table.
+
+    The returned frame's resolved plan holds the sink's rows itself, so the
+    sink's temp view is dropped before returning: the result lives as long
+    as the caller's frame, not as long as the session."""
     name = f"{prefix}_{next(_stream_counter)}"
     q = (
         agg.writeStream.format("memory")
@@ -54,13 +58,16 @@ def _drive(agg: DataFrame, prefix: str, mode: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    # availableNow terminates on its own once the snapshot is processed; the
-    # timeout is a hard bound so a wedged stream can never hang a caller with
-    # a time budget (e.g. the driver's correctness gate)
-    if not q.awaitTermination(timeout=120):
-        q.stop()
-        raise TimeoutError(f"stream {name} did not finish within 120 s")
-    return agg.sparkSession.table(name)
+    try:
+        # availableNow terminates on its own once the snapshot is processed;
+        # the timeout is a hard bound so a wedged stream can never hang a
+        # caller with a time budget (e.g. an oracle check)
+        if not q.awaitTermination(timeout=120):
+            q.stop()
+            raise TimeoutError(f"stream {name} did not finish within 120 s")
+        return agg.sparkSession.table(name)
+    finally:
+        agg.sparkSession.catalog.dropTempView(name)
 
 
 def sessionize(events: DataFrame, gap_s: int = SESSION_GAP_S) -> DataFrame:
