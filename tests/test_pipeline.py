@@ -2,7 +2,13 @@
 CSV → quality checks → curated star → SQLite, asserting the reference's
 structural invariants."""
 
+import datetime
+import functools
+import logging
+import shutil
 import sqlite3
+import sys
+import threading
 from collections import Counter
 
 import pyspark.sql.functions as F
@@ -11,6 +17,7 @@ import pytest
 from tests.conftest import SF_SMALL
 from walmart_retail_pyspark_sqlite_pipeline_spark.pipeline import (
     PipelineConfig,
+    orchestrator,
     run_pipeline,
 )
 from walmart_retail_pyspark_sqlite_pipeline_spark.plans.curated import (
@@ -154,10 +161,14 @@ def test_sqlite_roundtrip_through_spark(spark, tmp_path):
 
 def test_sqlite_sink_row_ceiling_guard(spark, tmp_path):
     """Oversized input must fail fast with the parquet-sink pointer and
-    leave no committed table — SQLite is the local BI hand-off, not the
-    scale sink. The under-limit path through the same ceiling still
+    leave the file as it was — SQLite is the local BI hand-off, not the
+    scale sink: an overwritten table keeps its old rows and a new table is
+    never created. The under-limit path through the same ceiling still
     writes and returns the exact count."""
     db = tmp_path / "guard.db"
+    assert write_sqlite(spark.range(5), db, "t") == 5
+    with pytest.raises(ValueError, match="parquet"):
+        write_sqlite(spark.range(100), db, "t", max_rows=10)
     orders = read_table(spark, SF_SMALL, "orders").select(
         "o_orderkey", "o_totalprice"
     )
@@ -165,12 +176,66 @@ def test_sqlite_sink_row_ceiling_guard(spark, tmp_path):
         write_sqlite(orders, db, "too_big", max_rows=10)
     con = sqlite3.connect(db)
     try:
-        n_rows = con.execute("SELECT COUNT(*) FROM too_big").fetchone()[0]
+        kept = con.execute("SELECT id FROM t").fetchall()
+        tables = [r[0] for r in con.execute("SELECT name FROM sqlite_master")]
     finally:
         con.close()
-    assert n_rows == 0  # rolled back: the CREATE survived, no rows did
+    assert kept == [(i,) for i in range(5)]
+    assert tables == ["t"]
     total = orders.count()
     assert write_sqlite(orders, db, "fits", max_rows=total) == total
+
+
+def test_sqlite_sink_concurrent_writers_share_one_file(spark, tmp_path, monkeypatch):
+    """Four threads writing four tables into one file all land whole, with
+    exact rows and SQLite types: one writer at a time holds the file, and
+    no call depends on SQLite's busy timeout (set to zero here, so two
+    writers meeting on the file would fail with 'database is locked')."""
+    monkeypatch.setattr(sqlite3, "connect", functools.partial(sqlite3.connect, timeout=0))
+    db = tmp_path / "shared.db"
+    frames = {
+        f"t{k}": spark.range(2_000 * (k + 1)).select(
+            (F.col("id") + k).alias("n"),
+            F.concat(F.lit(f"s{k}-"), F.col("id").cast("string")).alias("s"),
+            (F.col("id") / 4).alias("x"),
+            F.date_add(F.lit(datetime.date(2010, 1, 1)), F.col("id").cast("int") % 365).alias("d"),
+            (F.col("id") % 2 == 0).alias("b"),
+        )
+        for k in range(4)
+    }
+    written, errors = {}, []
+
+    def write(name):
+        try:
+            written[name] = write_sqlite(frames[name], db, name)
+        except Exception as e:  # noqa: BLE001 - asserted empty below
+            errors.append(e)
+
+    threads = [threading.Thread(target=write, args=(n,)) for n in frames]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave the writers' Python finely
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+
+    con = sqlite3.connect(db)
+    try:
+        for k, (name, df) in enumerate(frames.items()):
+            types = [r[2] for r in con.execute(f"PRAGMA table_info({name})")]
+            back = con.execute(f"SELECT * FROM {name}").fetchall()
+            assert types == ["INTEGER", "TEXT", "REAL", "TEXT", "INTEGER"]
+            assert written[name] == len(back) == 2_000 * (k + 1)
+            assert back == [
+                (r.n, r.s, r.x, r.d.isoformat(), int(r.b)) for r in df.collect()
+            ]
+    finally:
+        con.close()
 
 
 def test_pipeline_parquet_sink_partitioned_by_year(
@@ -245,8 +310,6 @@ def test_pipeline_sink_writes_read_the_cached_fact(
     """The curated join runs once per run: every frame handed to the
     SQLite sink (the fact and its three rollups) plans a scan of the
     cached fact, with no join node left to re-execute."""
-    from walmart_retail_pyspark_sqlite_pipeline_spark.pipeline import orchestrator
-
     handed = {}
 
     def capture(df, db_path, table):
@@ -274,6 +337,142 @@ def test_pipeline_sink_writes_read_the_cached_fact(
         nodes = node_names(df._jdf.queryExecution().executedPlan())
         assert "InMemoryTableScan" in nodes, (table, nodes)
         assert not [n for n in nodes if "Join" in n], (table, nodes)
+
+
+PIPELINE_TABLES = [
+    "sales_curated", "agg_store_dept", "agg_store_type_year", "holidays_vs_normal"
+]
+
+
+def test_pipeline_concurrent_stages_keep_the_sequential_order(
+    spark, walmart_fixtures, tmp_path, monkeypatch, caplog
+):
+    """The QC passes and the sink writes run one thread per item, yet the
+    reports, row counts, constraint violations and log lines come back in
+    config/table order, and every table holds the rows a one-at-a-time
+    write of the same frame stores, in the same order."""
+    handed = {}
+
+    def capture(df, db_path, table):
+        handed[table] = df
+        return write_sqlite(df, db_path, table)
+
+    monkeypatch.setattr(orchestrator, "write_sqlite", capture)
+    db = tmp_path / "r.db"
+    cfg = PipelineConfig(raw_dir=str(walmart_fixtures["root"]), output_db=str(db))
+    with caplog.at_level(logging.INFO, logger=orchestrator.log.name):
+        result = run_pipeline(spark, cfg)
+
+    reports = result["reports"]
+    assert list(reports) == ["train", "features", "stores"]
+    assert [r.row_count for r in reports.values()] == [36_320, 1_800, 45]
+    assert list(result["table_rows"].items()) == list(
+        zip(PIPELINE_TABLES, [36_320, 9_080, 3, 2])
+    )
+    assert list(result["constraint_violations"]["sales_curated"].items()) == [
+        ("foreign_key(store_id)", 0),
+        ("not_null(store_id)", 0),
+        ("not_null(date)", 0),
+        ("in_range(week,1,53)", 0),
+    ]
+    logged = [
+        r.getMessage().split(":")[0]
+        for r in caplog.records
+        if r.name == orchestrator.log.name
+    ]
+    assert logged == ["QC train", "QC features", "QC stores"] + [
+        f"wrote {t}" for t in PIPELINE_TABLES
+    ]
+
+    sequential = tmp_path / "sequential.db"
+    for table in PIPELINE_TABLES:
+        write_sqlite(handed[table], sequential, table)
+    con = sqlite3.connect(db)
+    con.execute(f"ATTACH DATABASE '{sequential}' AS seq")
+    try:
+        for table in PIPELINE_TABLES:
+            got = con.execute(f"SELECT * FROM main.{table}").fetchall()
+            want = con.execute(f"SELECT * FROM seq.{table}").fetchall()
+            assert len(got) == len(want) == result["table_rows"][table]
+            for g, w in zip(got, want):
+                assert g == pytest.approx(w, rel=1e-12), table
+    finally:
+        con.close()
+
+
+def _marker_job(sc, group: str) -> int:
+    """Run one job under ``group`` and return its id (job ids are global
+    and increase by one per submitted job)."""
+    sc.setJobGroup(group, group)
+    sc.parallelize([1], 1).count()
+    (job,) = sc.statusTracker().getJobIdsForGroup(group)
+    return job
+
+
+def _clear_job_group(sc) -> None:
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    sc.setLocalProperty("spark.job.description", None)
+
+
+def test_pipeline_jobs_carry_the_callers_job_group(spark, walmart_fixtures, tmp_path):
+    """Every job run_pipeline submits — from its QC and sink threads too —
+    belongs to the job group its caller set."""
+    sc = spark.sparkContext
+    try:
+        before = _marker_job(sc, "pipeline-group-before")
+        sc.setJobGroup("g", "run_pipeline under a caller's job group")
+        run_pipeline(
+            spark,
+            PipelineConfig(
+                raw_dir=str(walmart_fixtures["root"]), output_db=str(tmp_path / "r.db")
+            ),
+        )
+        after = _marker_job(sc, "pipeline-group-after")
+    finally:
+        _clear_job_group(sc)
+    ours = sorted(sc.statusTracker().getJobIdsForGroup("g"))
+    assert len(ours) > 10
+    assert ours == list(range(before + 1, after))
+
+
+def test_pipeline_missing_input_fails_before_any_job(spark, walmart_fixtures, tmp_path):
+    """A missing input is reported before any Spark job runs, so the error
+    does not depend on how far the other datasets' QC threads got."""
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    for name in ("train.csv", "features.csv"):
+        shutil.copy(walmart_fixtures["root"] / name, raw / name)
+    sc = spark.sparkContext
+    try:
+        before = _marker_job(sc, "missing-input-before")
+        _clear_job_group(sc)
+        with pytest.raises(FileNotFoundError, match="dataset 'stores'"):
+            run_pipeline(
+                spark, PipelineConfig(raw_dir=str(raw), output_db=str(tmp_path / "r.db"))
+            )
+        after = _marker_job(sc, "missing-input-after")
+    finally:
+        _clear_job_group(sc)
+    assert after == before + 1
+
+
+def test_pipeline_schema_mismatch_blocks_the_sink(spark, walmart_fixtures, tmp_path):
+    """``fail_on_schema_mismatch`` stops the run after QC, naming each
+    mismatched dataset and its issues, before the gate or any write."""
+    raw = tmp_path / "raw"
+    shutil.copytree(walmart_fixtures["root"], raw)
+    lines = (raw / "stores.csv").read_text().splitlines()
+    (raw / "stores.csv").write_text(
+        "\n".join(",".join(line.split(",")[:2]) for line in lines) + "\n"
+    )
+    db = tmp_path / "out" / "retail.db"
+    cfg = PipelineConfig(raw_dir=str(raw), output_db=str(db), fail_on_schema_mismatch=True)
+    with pytest.raises(
+        ValueError, match=r"schema mismatch in stores: .*missing columns filled with NULL: \['Size'\]"
+    ) as err:
+        run_pipeline(spark, cfg)
+    assert "train" not in str(err.value) and "features" not in str(err.value)
+    assert not db.exists()
 
 
 def test_pipeline_rejects_unknown_sink_before_reading_input(spark, tmp_path):

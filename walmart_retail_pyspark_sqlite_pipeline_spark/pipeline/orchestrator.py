@@ -1,6 +1,21 @@
 """Config-driven pipeline lifecycle (SURVEY §3 entry point 1):
 ingest → quality checks → curated transform → sink.
 
+Independent work runs concurrently, one driver thread per item: the
+read + quality pass of each dataset, then the sink write of each table.
+Every action is dominated by fixed per-plan driver work (planning, code
+generation, a few jobs each) while the executors sit mostly idle, so the
+overlapped plans share the cores. Each thread is a PySpark
+``InheritableThread``, so the caller's job group and local properties tag
+every job; results, reports and log lines are gathered in
+config/table order, and a failed thread is raised (the first in that
+order) only after every thread has ended. Every input path is checked
+before any Spark job, so a missing file fails the same way however the
+threads are timed. Between the two concurrent stages, with every QC
+report in and before any write, run the schema check
+(``fail_on_schema_mismatch``) and the FK gate, so either can still block
+the sink.
+
 Differences from the reference, by design (SURVEY §4.3):
 - quality profiling is one aggregate job per table, not N+3;
 - the curated join executes ONCE: the fact is cached where it is built,
@@ -16,6 +31,7 @@ Differences from the reference, by design (SURVEY §4.3):
 
 from __future__ import annotations
 
+import functools
 import logging
 import time
 from collections.abc import Callable
@@ -25,6 +41,7 @@ from pathlib import Path
 import yaml
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import InheritableThread
 
 from ..plans import curated as cur
 from ..quality import QualityReport, run_quality_checks
@@ -103,6 +120,39 @@ def _fact_constraints(stores: DataFrame) -> list[Constraint]:
     ]
 
 
+def _in_threads(spark: SparkSession, fn: Callable, items: list) -> list:
+    """``[fn(x) for x in items]`` with one thread per item. Each thread is
+    a PySpark ``InheritableThread``, so the caller's job group and local
+    properties reach its jobs. Results come back in ``items``
+    order; if any call fails, every thread is still waited for and the
+    first failure in ``items`` order is raised."""
+    results: list = [None] * len(items)
+    errors: list[BaseException | None] = [None] * len(items)
+
+    def run(i: int) -> None:
+        try:
+            results[i] = fn(items[i])
+        except BaseException as e:  # noqa: BLE001 - re-raised in order below
+            errors[i] = e
+
+    # each thread copies the caller's local properties when it starts (a
+    # plain thread when PySpark's pinned-thread mode is off, where
+    # ``inheritable_thread_target(spark)`` would return the session itself
+    # instead of a wrapper)
+    threads = [
+        InheritableThread(functools.partial(run, i), session=spark)
+        for i in range(len(items))
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for e in errors:
+        if e is not None:
+            raise e
+    return results
+
+
 def run_pipeline(
     spark: SparkSession, cfg: PipelineConfig
 ) -> dict[str, object]:
@@ -114,26 +164,33 @@ def run_pipeline(
         cfg.acquire(cfg.raw_dir)
 
     raw_dir = Path(cfg.raw_dir)
-    typed = {}
-    reports: dict[str, QualityReport] = {}
-    for key, fname in cfg.datasets.items():
-        path = raw_dir / fname
-        if not path.exists():
-            raise FileNotFoundError(f"input {path} for dataset {key!r}")
-        df = read_csv_raw(spark, str(path))
-        typed[key], reports[key] = run_quality_checks(
-            df,
+    datasets = list(cfg.datasets.items())
+    for key, fname in datasets:
+        if not (raw_dir / fname).exists():
+            raise FileNotFoundError(f"input {raw_dir / fname} for dataset {key!r}")
+
+    def check(item: tuple[str, str]) -> tuple[DataFrame, QualityReport]:
+        key, fname = item
+        return run_quality_checks(
+            read_csv_raw(spark, str(raw_dir / fname)),
             _SCHEMAS[key],
             key,
             max_null_fraction=cfg.max_null_fraction,
             drop_duplicates=cfg.drop_duplicates,
             fail_on_schema_mismatch=cfg.fail_on_schema_mismatch,
         )
+
+    typed: dict[str, DataFrame] = {}
+    reports: dict[str, QualityReport] = {}
+    for (key, _), (df, report) in zip(datasets, _in_threads(spark, check, datasets)):
+        typed[key], reports[key] = df, report
         log.info(
             "QC %s: rows=%d dup=%d issues=%s",
-            key, reports[key].row_count, reports[key].duplicate_count,
-            reports[key].issues,
+            key, report.row_count, report.duplicate_count, report.issues,
         )
+    mismatched = [f"{k}: {r.issues}" for k, r in reports.items() if not r.schema_ok]
+    if mismatched:
+        raise ValueError(f"schema mismatch in {'; '.join(mismatched)}")
 
     tables = cur.build_curated_tables(
         spark, typed["train"], typed["features"], typed["stores"]
@@ -151,36 +208,48 @@ def run_pipeline(
             if cfg.fail_on_constraint_violation:
                 raise ValueError(msg)
 
-    table_rows: dict[str, int] = {}
-    observed: dict[str, dict] = {}
     db_path = Path(cfg.output_db)
     db_path.parent.mkdir(parents=True, exist_ok=True)
-    for name, df in tables.items():
+    out_dir = cfg.output_parquet_dir or "curated"
+
+    def sink(name: str) -> tuple[int | None, int, dict[str, int]]:
         # observe(): write-time metrics from the SAME job that materializes
         # the table — zero extra passes (the reference re-executes every
         # plan with a pre-write count(), SURVEY §4.3)
         checks = suite if name == fact else []
         obs = Observation(f"obs_{name}")
-        df = df.observe(obs, F.count(F.lit(1)).alias("rows"), *row_counters(checks))
+        df = tables[name].observe(
+            obs, F.count(F.lit(1)).alias("rows"), *row_counters(checks)
+        )
+        written = None
         if cfg.sink == "sqlite":
-            table_rows[name] = write_sqlite(df, db_path, name)
-            log.info("wrote %s: %d rows -> %s", name, table_rows[name], db_path)
+            written = write_sqlite(df, db_path, name)
         else:
-            out = f"{cfg.output_parquet_dir or 'curated'}/{name}"
-            write_parquet(df, out, partition_by=PARQUET_PARTITION_BY.get(name))
-            log.info("wrote %s -> %s", name, out)
+            write_parquet(
+                df, f"{out_dir}/{name}", partition_by=PARQUET_PARTITION_BY.get(name)
+            )
         got = obs.get
-        for cname, cnt in row_violations(got, checks).items():
+        return written, got["rows"], row_violations(got, checks)
+
+    table_rows: dict[str, int] = {}
+    observed: dict[str, dict] = {}
+    names = list(tables)
+    for name, (written, rows, violations) in zip(names, _in_threads(spark, sink, names)):
+        if written is None:
+            log.info("wrote %s -> %s/%s", name, out_dir, name)
+        else:
+            log.info("wrote %s: %d rows -> %s", name, written, db_path)
+        for cname, cnt in violations.items():
             constraint_violations[fact][cname] = cnt
             if cnt:
                 log.warning(
                     "constraint %s on %s: %d violating rows (write-time)",
                     cname, name, cnt,
                 )
-        observed[name] = {"rows": got["rows"]}
+        observed[name] = {"rows": rows}
         # parquet runs still report row counts — from the write-time
         # observation, not an extra count() job
-        table_rows.setdefault(name, got["rows"])
+        table_rows[name] = rows if written is None else written
 
     return {
         "reports": reports,
