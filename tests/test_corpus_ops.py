@@ -135,6 +135,50 @@ def test_corpus_pipeline_lifecycle(spark, tmp_path):
     assert 0 < train.count() < stats["docs"]
 
 
+def test_corpus_pipeline_rerun_reads_changed_documents(spark, tmp_path):
+    """A second run over the same input dir after the documents changed
+    keeps exactly the docs the prep oracle keeps on the new file, not a
+    result built from the first run's cached shingle index."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from walmart_retail_pyspark_sqlite_pipeline_spark.pipeline import (
+        CorpusConfig,
+        run_corpus_pipeline,
+    )
+    from walmart_retail_pyspark_sqlite_pipeline_spark.plans.llm import CORPUS_PREP_SQL
+
+    docs = pq.read_table(f"{SF_SMALL}/documents.parquet")
+    src = tmp_path / "in"
+    src.mkdir()
+    path = src / "documents.parquet"
+    pq.write_table(docs, path)
+    run_corpus_pipeline(
+        spark, CorpusConfig(input_dir=str(src), output_dir=str(tmp_path / "out1"))
+    )
+    # every doc_id now holds another document's text
+    texts = docs.column("text").to_pylist()
+    moved = docs.set_column(
+        docs.schema.get_field_index("text"), "text", pa.array(texts[7:] + texts[:7])
+    )
+    pq.write_table(moved, path)
+    out = tmp_path / "out2"
+    stats = run_corpus_pipeline(
+        spark, CorpusConfig(input_dir=str(src), output_dir=str(out))
+    )
+
+    con = duckdb.connect()
+    try:
+        con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
+        want = {r[0] for r in con.execute(f"SELECT doc_id FROM ({CORPUS_PREP_SQL})").fetchall()}
+    finally:
+        con.close()
+    got = {r.doc_id for r in spark.read.parquet(str(out)).select("doc_id").collect()}
+    assert got == want
+    assert stats["docs"] == len(want)
+
+
 def _plan_nodes_outside_cache(node):
     """Physical plan nodes reachable through ``children()``, not entering
     cached-data scans (their plans are the cache's, built once)."""

@@ -456,6 +456,67 @@ def test_pipeline_missing_input_fails_before_any_job(spark, walmart_fixtures, tm
     assert after == before + 1
 
 
+def test_pipeline_dataset_keys_fail_before_any_job(spark, walmart_fixtures, tmp_path):
+    """``datasets`` must name exactly train, features and stores: an
+    omitted or unknown key is named in a ValueError before the acquisition
+    hook or any Spark job runs, not a KeyError after other QC jobs."""
+    root = walmart_fixtures["root"]
+    full = {"train": "train.csv", "features": "features.csv", "stores": "stores.csv"}
+    omitted = {k: v for k, v in full.items() if k != "features"}
+    extra = {**full, "holidays": "stores.csv"}
+    sc = spark.sparkContext
+    cases = [
+        ("omitted", omitted, r"missing \['features'\], unknown \[\]"),
+        ("unknown", extra, r"missing \[\], unknown \['holidays'\]"),
+    ]
+    for case, datasets, match in cases:
+        touched = []
+        cfg = PipelineConfig(
+            raw_dir=str(root), output_db=str(tmp_path / "r.db"),
+            datasets=datasets, acquire=touched.append,
+        )
+        try:
+            before = _marker_job(sc, f"dataset-keys-{case}-before")
+            _clear_job_group(sc)
+            with pytest.raises(ValueError, match=match):
+                run_pipeline(spark, cfg)
+            after = _marker_job(sc, f"dataset-keys-{case}-after")
+        finally:
+            _clear_job_group(sc)
+        assert after == before + 1
+        assert touched == []
+    assert not (tmp_path / "r.db").exists()
+
+
+def test_pipeline_rerun_reads_changed_inputs(spark, tmp_path):
+    """A second run over the same raw dir after train.csv changed reports
+    and writes the new file's rows, not frames cached by the first run."""
+    from tests.fixtures import generate
+
+    raw_dir = tmp_path / "raw"
+    raw_dir.mkdir()
+    raw = generate(raw_dir)
+    run_pipeline(
+        spark, PipelineConfig(raw_dir=str(raw["root"]), output_db=str(tmp_path / "1.db"))
+    )
+    lines = raw["train"].read_text().splitlines()
+    kept = lines[: 1 + (len(lines) - 1) // 2]
+    raw["train"].write_text("\n".join(kept) + "\n")
+    want = len(set(kept[1:]))
+
+    db = tmp_path / "2.db"
+    result = run_pipeline(spark, PipelineConfig(raw_dir=str(raw["root"]), output_db=str(db)))
+    assert result["reports"]["train"].row_count == want
+    assert result["table_rows"]["sales_curated"] == want
+    con = sqlite3.connect(db)
+    try:
+        (n,) = con.execute("SELECT COUNT(*) FROM sales_curated").fetchone()
+        (weeks,) = con.execute("SELECT SUM(num_weeks) FROM agg_store_dept").fetchone()
+    finally:
+        con.close()
+    assert n == weeks == want
+
+
 def test_pipeline_schema_mismatch_blocks_the_sink(spark, walmart_fixtures, tmp_path):
     """``fail_on_schema_mismatch`` stops the run after QC, naming each
     mismatched dataset and its issues, before the gate or any write."""

@@ -1,8 +1,7 @@
 """Fleet-wide physical-plan audit: every registry query (exported AND
 local) is statically planned and scanned for scale hazards.
 
-This is the systematic form of the per-query plan checks in PLANS.md:
-instead of trusting that each new query was hand-audited, the suite fails
+This is the systematic form of per-query plan checks: instead of trusting that each new query was hand-audited, the suite fails
 if ANY registered plan picks up
 
 - a ``CartesianProduct`` (unbounded cross join — the classic accidental
@@ -205,7 +204,7 @@ MULTI_TEXT_SCAN_ALLOWED: dict[str, tuple[int, str]] = {
 #: final adaptive plans); the floors below are recorded from the
 #: round-11 census so any REGRESSION (or any new multi-scan query)
 #: fails immediately. Entries marked "recorded floor" are the round-12
-#: consolidation/justification backlog (PLANS.md census note).
+#: consolidation/justification backlog from that census.
 FACT_MULTI_SCAN_ALLOWED: dict[str, dict[str, tuple[int, str]]] = {
     "basket_part_pairs": {"lineitem": (5, "self-join + count branches over one shared constrained exchange; 1 scan executed")},
     "events_asof_two_stream": {"events": (2, "the two as-of streams are type-filtered views of one table")},
@@ -647,9 +646,8 @@ def test_exported_schema_is_driver_hashable(spark, name, spec):
 
 
 # Structural pins on single queries: each locks a plan property an
-# optimization established (OPTIMIZATION_r14.md, OPTIMIZATION_r15.md), so a
-# later refactor cannot silently bring the pathology back. Ceilings are
-# tighten-only: if a change lowers a count, lower the constant with it.
+# optimization established, so a later refactor cannot silently bring the
+# pathology back. Ceilings are tighten-only: if a change lowers a count, lower the constant with it.
 # Plans are counted FRESH (clearCache first) where a session-warm cache
 # would make InMemoryRelation re-print its materialized subtree.
 
@@ -680,7 +678,8 @@ def test_ngram_jaccard_no_shingle_self_join(spark):
 def test_lsh_pairs_no_trailing_sizes_joins(spark):
     """Doc sizes ride the band explode (one extra agg in the signature
     groupBy); the exporter must not re-join a doc-grain sizes table after
-    the verify. Exchange-ref ceiling from plans/r14/*_after.txt."""
+    the verify. The exchange-ref ceiling is the count the optimized plan
+    reached."""
     from walmart_retail_pyspark_sqlite_pipeline_spark.plans.llm import (
         dedup_minhash_lsh_pairs,
     )

@@ -112,6 +112,7 @@ def test_plan_skips_on_active_conf_files_and_caller_flags(tmp_path, monkeypatch)
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
     monkeypatch.delenv("HADOOP_CONF_DIR", raising=False)
     monkeypatch.delenv("YARN_CONF_DIR", raising=False)
+    monkeypatch.delenv("SPARK_SUBMIT_OPTS", raising=False)
     conf = tmp_path / "conf"
     conf.mkdir()
     (conf / "spark-defaults.conf.template").write_text("# template\n")
@@ -123,8 +124,11 @@ def test_plan_skips_on_active_conf_files_and_caller_flags(tmp_path, monkeypatch)
     assert not any(plan.conf_dir.iterdir())
     assert plan.archive.parent == session.cache_dir() / "cds"
 
-    assert plan_cold_start("-Xss4m -Xshare:off").state.startswith("skipped (the caller")
-    assert plan_cold_start("-XX:SharedArchiveFile=/x.jsa").state.startswith("skipped")
+    monkeypatch.setenv("SPARK_SUBMIT_OPTS", "-Xss4m -Xshare:off")
+    assert plan_cold_start().state.startswith("skipped (the caller")
+    monkeypatch.setenv("SPARK_SUBMIT_OPTS", "-XX:SharedArchiveFile=/x.jsa")
+    assert plan_cold_start().state.startswith("skipped")
+    monkeypatch.delenv("SPARK_SUBMIT_OPTS")
 
     (conf / "spark-defaults.conf").write_text("spark.ui.enabled false\n")
     skipped = plan_cold_start()

@@ -84,7 +84,7 @@ def int8_quantize(v: Column) -> Column:
     (sources/tables.py); a new caller on unquarantined input must apply
     the same gate first (ADVICE r9).
 
-    PERF (round 9, found via the SCALING probe): the scale expression
+    PERF (found by timing the kernel across data sizes): the scale expression
     must NOT be captured inside a ``transform()`` lambda — Catalyst
     inlines the captured subtree into the per-element lambda body, so
     ``array_max(transform(v, abs))`` is re-evaluated (and its two

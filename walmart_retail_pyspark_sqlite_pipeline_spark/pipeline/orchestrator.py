@@ -9,12 +9,12 @@ overlapped plans share the cores. Each thread is a PySpark
 ``InheritableThread``, so the caller's job group and local properties tag
 every job; results, reports and log lines are gathered in
 config/table order, and a failed thread is raised (the first in that
-order) only after every thread has ended. Every input path is checked
-before any Spark job, so a missing file fails the same way however the
-threads are timed. Between the two concurrent stages, with every QC
-report in and before any write, run the schema check
-(``fail_on_schema_mismatch``) and the FK gate, so either can still block
-the sink.
+order) only after every thread has ended. The dataset keys and every
+input path are checked before any Spark job, so a bad config or a
+missing file fails the same way however the threads are timed. Between
+the two concurrent stages, with every QC report in and before any write,
+run the schema check (``fail_on_schema_mismatch``) and the FK gate, so
+either can still block the sink.
 
 Differences from the reference, by design (SURVEY §4.3):
 - quality profiling is one aggregate job per table, not N+3;
@@ -159,6 +159,13 @@ def run_pipeline(
     """Run the full lifecycle; returns {reports, table_rows, elapsed_s}."""
     if cfg.sink not in SINKS:
         raise ValueError(f"unknown sink {cfg.sink!r}; expected one of {SINKS}")
+    missing = sorted(set(_SCHEMAS) - set(cfg.datasets))
+    unknown = sorted(set(cfg.datasets) - set(_SCHEMAS))
+    if missing or unknown:
+        raise ValueError(
+            f"datasets must name exactly {sorted(_SCHEMAS)}: "
+            f"missing {missing}, unknown {unknown}"
+        )
     t0 = time.perf_counter()
     if cfg.acquire is not None:
         cfg.acquire(cfg.raw_dir)
@@ -168,6 +175,9 @@ def run_pipeline(
     for key, fname in datasets:
         if not (raw_dir / fname).exists():
             raise FileNotFoundError(f"input {raw_dir / fname} for dataset {key!r}")
+    # a cached plan is matched by its file scans' root paths, so frames a
+    # previous run cached over these inputs would hide changed files
+    spark.catalog.refreshByPath(str(raw_dir))
 
     def check(item: tuple[str, str]) -> tuple[DataFrame, QualityReport]:
         key, fname = item

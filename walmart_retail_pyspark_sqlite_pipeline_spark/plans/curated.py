@@ -121,7 +121,7 @@ def build_curated_tables(
     )
     # No broadcast hints: features grows as stores×weeks and a pinned hint
     # would override AQE's size check at scale. Catalyst already picks
-    # BroadcastHashJoin unhinted at these sizes (PLANS.md q14) and AQE can
+    # BroadcastHashJoin unhinted at these sizes (the q14 plan) and AQE can
     # fall back to SMJ when the dim outgrows autoBroadcastJoinThreshold.
     joined = t.join(f_pruned, on=["store_id", "date"], how="left")
     # J2: string-key join form emits store_id once

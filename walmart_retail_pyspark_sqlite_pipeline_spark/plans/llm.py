@@ -25,6 +25,7 @@ from pyspark.sql.window import Window
 from ..functions import hashing, text, vectors
 from ..multimodal import attach_fake_payload, frame_sample, image_meta
 from ..sources import read_embeddings, read_table
+from ..sources.tables import EMB_SOURCE_SQL
 from .registry import QuerySpec, register
 
 P = hashing.MERSENNE_P
@@ -542,7 +543,7 @@ def ann_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ANN_TOPK_SQL = f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x IS NULL)) = 0 AND len(list_filter(embedding, x -> x <> 0)) > 0) embeddings),
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM {EMB_SOURCE_SQL}),
 q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
 SELECT vec_id, ROUND({vectors.cosine_sql('v', 'qv')}, 6) AS cos
 FROM e, q WHERE vec_id <> 0
@@ -595,7 +596,7 @@ _BUCKET_SQL = " + ".join(
 )
 
 ANN_LSH_SQL = f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x IS NULL)) = 0 AND len(list_filter(embedding, x -> x <> 0)) > 0) embeddings)
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM {EMB_SOURCE_SQL})
 SELECT vec_id, CAST({_BUCKET_SQL} AS BIGINT) AS bucket
 FROM e ORDER BY vec_id
 """
@@ -682,8 +683,8 @@ def ann_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 # base every embedding oracle starts from; `_IVF_CENT_FRAG` is the
 # label-seeded centroid assignment (ranked_cells keeps every centroid's
 # rank so nprobe>1 probing can reuse it; cells is the rn=1 home cell).
-_EMB_BASE_CTES = """
-e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x IS NULL)) = 0 AND len(list_filter(embedding, x -> x <> 0)) > 0) embeddings),
+_EMB_BASE_CTES = f"""
+e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM {EMB_SOURCE_SQL}),
 ex AS (
   SELECT vec_id, label, t.d AS d, v[t.d + 1] AS x
   FROM e, range(0, 64) t(d)
@@ -1653,7 +1654,7 @@ ANN_INT8_SQL = f"""
 WITH e AS (
   SELECT vec_id,
          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x IS NULL)) = 0 AND len(list_filter(embedding, x -> x <> 0)) > 0) embeddings
+  FROM {EMB_SOURCE_SQL}
 ),
 sc AS (
   SELECT vec_id, v,
@@ -1948,7 +1949,7 @@ def ann_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ANN_KNN_JOIN_SQL = f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x IS NULL)) = 0 AND len(list_filter(embedding, x -> x <> 0)) > 0) embeddings),
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM {EMB_SOURCE_SQL}),
 q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < {KNN_Q}),
 scored AS (
   SELECT q_id, vec_id, ROUND({vectors.cosine_sql('v', 'qv')}, 6) AS cos
@@ -2724,7 +2725,7 @@ def _pc_iter_sql(prev: str, name: str) -> str:
 
 
 EMB_TOP_COMPONENT_SQL = f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x IS NULL)) = 0 AND len(list_filter(embedding, x -> x <> 0)) > 0) embeddings),
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM {EMB_SOURCE_SQL}),
 r0 AS (
   SELECT list_transform(range(64), x -> CAST(0.125 AS DOUBLE)) AS pc
 ),
@@ -3217,7 +3218,7 @@ def ann_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ANN_RRF_SQL = f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x IS NULL)) = 0 AND len(list_filter(embedding, x -> x <> 0)) > 0) embeddings),
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM {EMB_SOURCE_SQL}),
 q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
 cos_list AS (
   SELECT vec_id, ROUND({vectors.cosine_sql('v', 'qv')}, 6) AS cos
@@ -3824,7 +3825,8 @@ def dedup_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     if docs.rdd.getNumPartitions() < par:
         docs = docs.repartition(par)
     # materialized tok column — never the tokens(text) expression
-    # (capture pathology; SCALING.md round-10 note)
+    # (capture pathology: a captured tokens() subtree is re-evaluated per
+    # lambda element)
     tk = docs.select("doc_id", text.tokens(F.col("text")).alias("tok"))
     sh = tk.select(
         "doc_id", text.word_shingles(F.col("tok")).alias("sh")
@@ -3967,7 +3969,7 @@ def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ANN_PQ_RECALL_SQL = f"""
 WITH e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x IS NULL)) = 0 AND len(list_filter(embedding, x -> x <> 0)) > 0) embeddings
+  SELECT vec_id, embedding::DOUBLE[] AS v FROM {EMB_SOURCE_SQL}
 ),
 q AS (
   SELECT vec_id AS q_id, v AS qv FROM e
@@ -4388,7 +4390,7 @@ ANN_HAMMING_SQL = f"""
 WITH e AS (
   SELECT vec_id,
          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x IS NULL)) = 0 AND len(list_filter(embedding, x -> x <> 0)) > 0) embeddings
+  FROM {EMB_SOURCE_SQL}
 ),
 qv AS (SELECT v AS qv FROM e WHERE vec_id = 0)
 SELECT vec_id,
@@ -4481,7 +4483,7 @@ ANN_HAMMING_PACKED_SQL = f"""
 WITH e AS (
   SELECT vec_id,
          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x IS NULL)) = 0 AND len(list_filter(embedding, x -> x <> 0)) > 0) embeddings
+  FROM {EMB_SOURCE_SQL}
 ),
 p AS (
   SELECT vec_id, v,
@@ -4628,7 +4630,7 @@ def ann_mips_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ANN_MIPS_SQL = f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x IS NULL)) = 0 AND len(list_filter(embedding, x -> x <> 0)) > 0) embeddings),
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM {EMB_SOURCE_SQL}),
 m AS (SELECT MAX(sqrt(list_dot_product(v, v))) AS m FROM e),
 q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
 aug AS (
@@ -5189,7 +5191,7 @@ WITH comp AS (
   FROM (
     SELECT vec_id, unnest(embedding) AS v,
            generate_subscripts(embedding, 1) AS i
-    FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x IS NULL)) = 0 AND len(list_filter(embedding, x -> x <> 0)) > 0) embeddings
+    FROM {EMB_SOURCE_SQL}
   )
 ),
 proj AS (
@@ -5361,7 +5363,7 @@ def _mrl_sql() -> str:
     )
     union = "\n  UNION ALL".join(branches)
     return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x IS NULL)) = 0 AND len(list_filter(embedding, x -> x <> 0)) > 0) embeddings),
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM {EMB_SOURCE_SQL}),
 fulltk AS ({_mrl_topk_sql(None)}),
 {pfx_ctes},
 u AS ({union})
@@ -5545,10 +5547,10 @@ def dedup_semantic_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TWO_LEVEL_CELLS_SQL_CTES = f"""e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x IS NULL)) = 0 AND len(list_filter(embedding, x -> x <> 0)) > 0) embeddings),
+_TWO_LEVEL_CELLS_SQL_CTES = f"""e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM {EMB_SOURCE_SQL}),
 cfg AS (
   SELECT GREATEST({_SEMDEDUP_C_MIN}, COUNT(*) // {_SEMDEDUP_TARGET}) AS c
-  FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x IS NULL)) = 0 AND len(list_filter(embedding, x -> x <> 0)) > 0) embeddings
+  FROM {EMB_SOURCE_SQL}
 ),
 cfg2 AS (
   SELECT c, GREATEST(2, CAST(FLOOR(SQRT(c)) AS BIGINT)) AS c1 FROM cfg
@@ -5656,8 +5658,8 @@ register(
 # ---------------------------------------------------------------------------
 # dedup_embedding_pairs_scaled — the PAIR-level export of the scalable
 # embedding near-dup discipline. Blocking by a FIXED number of cells
-# (given labels, or k IVF cells) leaves n^2/k candidate pairs (SCALING.md
-# round-13 part 1 measured 40.4x and 14.3x per decade). Here cells come
+# (given labels, or k IVF cells) leaves n^2/k candidate pairs (measured
+# 40.4x and 14.3x per decade of data). Here cells come
 # from the SAME two-level learned assignment as dedup_semantic_ivf
 # (C = n/250 cells GROWS with n, assignment work n·3·sqrt(C)), so
 # within-cell candidates stay ~(n/C)^2/2 = 250^2/2 per cell — ~n·125
@@ -5715,8 +5717,8 @@ register(
 #
 # VERDICT r8 #7: the round-8 shape also ran the DIRECT full-corpus exact
 # top-K to flag each cascade pick (`in_exact_topk`) — a second linear scan
-# that doubled the measured growth (SCALING.md 10.69×/decade vs the
-# token-scan ~5×). That recall-audit surface survives unchanged as the
+# that doubled the measured growth (10.69×/decade vs the token-scan
+# ~5×). That recall-audit surface survives unchanged as the
 # local-only `ann_rerank_audit`; the exported query is
 # the production cascade with ONE linear scan.
 #
@@ -5769,7 +5771,7 @@ def ann_rerank_two_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ANN_RERANK_SQL = f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x IS NULL)) = 0 AND len(list_filter(embedding, x -> x <> 0)) > 0) embeddings),
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM {EMB_SOURCE_SQL}),
 sc AS (
   SELECT vec_id, v, 127.0 / list_max(list_transform(v, x -> abs(x))) AS s
   FROM e
@@ -5879,7 +5881,7 @@ def ann_rerank_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ANN_RERANK_AUDIT_SQL = f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x IS NULL)) = 0 AND len(list_filter(embedding, x -> x <> 0)) > 0) embeddings),
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM {EMB_SOURCE_SQL}),
 sc AS (
   SELECT vec_id, v, 127.0 / list_max(list_transform(v, x -> abs(x))) AS s
   FROM e
@@ -5998,7 +6000,7 @@ def ann_rerank_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ANN_RERANK_BATCH_SQL = f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x IS NULL)) = 0 AND len(list_filter(embedding, x -> x <> 0)) > 0) embeddings),
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM {EMB_SOURCE_SQL}),
 sc AS (
   SELECT vec_id, v, 127.0 / list_max(list_transform(v, x -> abs(x))) AS s
   FROM e
@@ -6697,7 +6699,7 @@ def _pc2_iter_sql(prev: str, name: str) -> str:
 
 
 EMB_TOP2_SQL = f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x IS NULL)) = 0 AND len(list_filter(embedding, x -> x <> 0)) > 0) embeddings),
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM {EMB_SOURCE_SQL}),
 r0 AS (
   SELECT list_transform(range(64), x -> CAST(0.125 AS DOUBLE)) AS pc
 ),
@@ -6797,8 +6799,8 @@ def embeddings_dim_clip_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EMB_CLIP_SQL = """
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x IS NULL)) = 0 AND len(list_filter(embedding, x -> x <> 0)) > 0) embeddings),
+EMB_CLIP_SQL = f"""
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM {EMB_SOURCE_SQL}),
 vals AS (
   SELECT vec_id, CAST(i - 1 AS BIGINT) AS dim, v[i] AS val
   FROM (SELECT vec_id, v, unnest(range(1, len(v) + 1)) AS i FROM e)
@@ -7063,7 +7065,7 @@ def ann_range_search_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ANN_RANGE_SQL = f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x IS NULL)) = 0 AND len(list_filter(embedding, x -> x <> 0)) > 0) embeddings),
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM {EMB_SOURCE_SQL}),
 q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < {KNN_Q})
 SELECT q_id, vec_id,
   ROUND({vectors.cosine_sql('e.v', 'q.qv')}, 6) AS cos
@@ -7133,8 +7135,8 @@ def embeddings_whitening_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("dim")
 
 
-EMB_WHITEN_SQL = """
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM (SELECT * FROM embeddings WHERE embedding IS NOT NULL AND len(list_filter(embedding, x -> x IS NULL)) = 0 AND len(list_filter(embedding, x -> x <> 0)) > 0) embeddings),
+EMB_WHITEN_SQL = f"""
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM {EMB_SOURCE_SQL}),
 vals AS (
   SELECT CAST(i - 1 AS BIGINT) AS dim,
     CAST(ROUND(v[i] * 1000000.0, 0) AS BIGINT) AS xm

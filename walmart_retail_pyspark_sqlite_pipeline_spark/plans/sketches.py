@@ -60,8 +60,8 @@ def sketch_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate makes Spark's distinct-rewrite evaluate the HLL partial at
     the (event_type, user_id) grain — at rsd=0.01 that is ~1.6k packed
     register columns carried by EVERY distinct pair through the first
-    exchange (plans/r15/sketch_approx_distinct_before.txt: partial agg
-    "Results [1641]"). Deduplicating the pairs first and aggregating the
+    exchange (the partial aggregate's plan listed 1641 result columns).
+    Deduplicating the pairs first and aggregating the
     distinct stream shuffles 2 narrow columns instead; HLL insertion is
     idempotent, so the sketch registers — and hence the estimate and the
     band flag — are identical over the distinct stream.

@@ -71,7 +71,10 @@ def run_quality_checks(
 ) -> tuple[DataFrame, QualityReport]:
     """Q4 composite: enforce schema (extra and missing columns are
     reported as issues) → one-pass profile → conditional dedup →
-    threshold issues → cache + temp view → report.
+    threshold issues → temp view → report.
+
+    The typed frame is not cached: the pipeline reads it only in the one
+    job that builds the curated fact, which is cached where it is built.
 
     Job count: exactly one aggregate job (the profile); the reference runs
     N_columns + 3 jobs per table for the same information.
@@ -96,7 +99,6 @@ def run_quality_checks(
         if frac > max_null_fraction:
             issues.append(f"high null fraction in {c}: {frac:.2%}")
 
-    typed = typed.cache()
     if register_view:
         typed.createOrReplaceTempView(f"typed_{dataset}")
     return typed, QualityReport(

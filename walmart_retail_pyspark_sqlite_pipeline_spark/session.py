@@ -43,10 +43,11 @@ through ``spark.driver.extraJavaOptions``:
 - **skipped** (launch exactly as without it, reason logged): the Spark or
   Hadoop conf dir on the class path holds active (non-``.template``)
   files, because the JDK refuses to dump with a non-empty directory on
-  the class path; the caller passed its own ``-Xshare``/CDS flags; or
-  there is no ``jcmd`` to record with. Otherwise ``SPARK_CONF_DIR`` points
-  at an empty engine-owned directory for the launch, so Spark sees the
-  same configuration as with a conf dir that holds only templates.
+  the class path; the caller passed its own ``-Xshare``/CDS flags in
+  ``SPARK_SUBMIT_OPTS``; or there is no ``jcmd`` to record with.
+  Otherwise ``SPARK_CONF_DIR`` points at an empty engine-owned directory
+  for the launch, so Spark sees the same configuration as with a conf dir
+  that holds only templates.
 - **reset:** delete the cache directory.
 
 Every new launch logs one INFO line on ``walmart_retail_pipeline.session``
@@ -108,7 +109,6 @@ def get_spark(
     app_name: str = "walmart-retail-pyspark-engine",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults.
 
@@ -138,23 +138,16 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.driver.bindAddress", "127.0.0.1")
         .config("spark.driver.host", "127.0.0.1")
         .config("spark.ui.enabled", "false")
     )
-    conf = extra_conf or {}
-    for k, v in conf.items():
-        builder = builder.config(k, v)
     if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
         return builder.getOrCreate()  # the driver JVM is already running
 
-    java_opts = conf.get("spark.driver.extraJavaOptions", "")
-    start = plan_cold_start(f"{conf.get('spark.driver.defaultJavaOptions', '')} {java_opts}")
+    start = plan_cold_start()
     if start.java_opts:
-        builder = builder.config(
-            "spark.driver.extraJavaOptions", f"{java_opts} {start.java_opts}".strip()
-        )
+        builder = builder.config("spark.driver.extraJavaOptions", start.java_opts)
     t0 = time.time()
     with start.launch_env():
         spark = builder.getOrCreate()
@@ -178,7 +171,8 @@ def get_spark(
 #: there, and stdout is the caller's)
 _QUIET_CDS = "-Xlog:cds=off -Xlog:cds+dynamic=off"
 _RECORD = f"-XX:+RecordDynamicDumpInfo {_QUIET_CDS}"
-#: a caller's own class-sharing flags win: the archive is then skipped
+#: a caller's own class-sharing flags (in ``SPARK_SUBMIT_OPTS``) win: the
+#: archive is then skipped
 _CALLER_CDS_FLAGS = ("-Xshare", "SharedArchiveFile", "ArchiveClassesAtExit", "DynamicDumpInfo")
 #: appended to a finished dump: marker + the dump's length (8 bytes, LE)
 _SEAL = b"WRPSCDS1"
@@ -306,9 +300,9 @@ class ColdStart:
         return self.state
 
 
-def plan_cold_start(caller_java_opts: str = "") -> ColdStart:
+def plan_cold_start() -> ColdStart:
     """Decide how the next new driver JVM starts (module doc, Cold start)."""
-    given = f"{caller_java_opts} {os.environ.get('SPARK_SUBMIT_OPTS', '')}"
+    given = os.environ.get("SPARK_SUBMIT_OPTS", "")
     if any(flag in given for flag in _CALLER_CDS_FLAGS):
         return ColdStart("skipped (the caller passed its own -Xshare/CDS flags)")
     spark_home = Path(_find_spark_home())

@@ -39,16 +39,17 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 #: DuckDB twin of the :func:`read_embeddings` ingestion contract. Every
-#: embedding oracle embeds EXACTLY the subquery
-#: ``(SELECT * FROM embeddings WHERE {EMB_VALID_SQL}) embeddings`` —
-#: tests/test_registry.py asserts each site matches this constant, so a
-#: contract change is one edit here + one mechanical sync of the oracle
-#: strings instead of 19 opportunities for silent engine drift.
+#: embedding oracle reads the table through :data:`EMB_SOURCE_SQL`, and
+#: tests/test_registry.py asserts no oracle reads it any other way, so a
+#: contract change is one edit here.
 EMB_VALID_SQL = (
     "embedding IS NOT NULL"
     " AND len(list_filter(embedding, x -> x IS NULL)) = 0"
     " AND len(list_filter(embedding, x -> x <> 0)) > 0"
 )
+#: the embeddings table as the oracles read it: the gated subquery, aliased
+#: back to ``embeddings``
+EMB_SOURCE_SQL = f"(SELECT * FROM embeddings WHERE {EMB_VALID_SQL}) embeddings"
 
 
 def read_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
