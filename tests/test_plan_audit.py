@@ -9,8 +9,8 @@ if ANY registered plan picks up
   are allowed only when the build side is a broadcast),
 - row-at-a-time Python (``BatchEvalPython`` — the slow path this engine
   bans in relational queries; Arrow surfaces ``ArrowEvalPython`` /
-  ``MapInPandas`` / ``PythonMapInArrow`` and UDTFs are whitelisted where
-  deliberate),
+  ``MapInPandas`` / ``PythonMapInArrow`` are whitelisted only for the
+  multimodal Arrow plumbing),
 - a sort-based fallback aggregate where a hash aggregate was expected is
   NOT checked: ``ObjectHashAggregate``/``SortAggregate`` appear legally
   for collect_list/sketches.
@@ -28,11 +28,9 @@ import pytest
 from tests.conftest import SF_SMALL
 from walmart_retail_pyspark_sqlite_pipeline_spark.plans.registry import all_specs
 
-#: queries whose Python boundary is the point (UDTF chunker, Arrow
-#: multimodal plumbing) — any OTHER query showing Python in its plan fails.
+#: queries whose Python boundary is the point (Arrow multimodal plumbing)
+#: — any OTHER query showing Python in its plan fails.
 PYTHON_ALLOWED = {
-    "text_chunks",  # Arrow-batched mapInPandas chunker (operators/chunking.py)
-    "text_chunks_udtf",  # local-only Python UDTF surface (functions/udtfs.py)
     "multimodal_image_meta",  # Arrow mapInPandas decode stub
     "multimodal_frame_sample",  # Arrow mapInPandas 1->N expansion
     "multimodal_image_resize",  # Arrow mapInPandas resize planning
@@ -43,7 +41,6 @@ PYTHON_ALLOWED = {
     "multimodal_keyframe_select",  # same Arrow frame-energy pass (round 10)
     "multimodal_audio_vad_segments",  # same Arrow frame-energy pass (round 11)
     "multimodal_audio_meta",  # Arrow mapInPandas audio metadata
-    "corpus_chunk_dedup",  # Arrow-batched chunker (operators/chunking.py)
 }
 
 #: queries that legitimately execute a Structured Streaming job inside the

@@ -19,6 +19,7 @@ from walmart_retail_pyspark_sqlite_pipeline_spark.plans.registry import (
     QuerySpec,
     register,
 )
+from walmart_retail_pyspark_sqlite_pipeline_spark.sources.tables import TABLES
 
 # every registered query, exported or local-only, is checked here
 SPECS = all_specs(include_local=True)
@@ -60,11 +61,34 @@ def test_every_query_has_oracle_or_documented_exception():
     assert missing == set(), f"queries without oracle SQL: {missing}"
 
 
+def _session_names(spark):
+    """What a query could clobber in the caller's session: each temp view
+    (with its plan's hash, so a replaced view shows) and the temporary
+    functions."""
+    views = {
+        t.name: spark.table(t.name).semanticHash()
+        for t in spark.catalog.listTables()
+        if t.isTemporary
+    }
+    funcs = {r[0] for r in spark.sql("SHOW USER FUNCTIONS").collect()}
+    return views, funcs
+
+
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_runs_and_columns_match_oracle(spark, name):
-    df = QUERIES[name](spark, SF_SMALL)
-    n = df.count()
-    assert n >= 0
+    # the caller's own views named like the engine's tables must survive
+    # building and running a query, as must every other view and function
+    for t in TABLES:
+        spark.range(3).createOrReplaceTempView(t)
+    before = _session_names(spark)
+    try:
+        df = QUERIES[name](spark, SF_SMALL)
+        n = df.count()
+        assert n >= 0
+        assert _session_names(spark) == before, f"{name} changed the session catalog"
+    finally:
+        for t in TABLES:
+            spark.catalog.dropTempView(t)
     if name in ORACLES:
         con = duck_con(SF_SMALL)
         res = con.execute(ORACLES[name])

@@ -23,8 +23,21 @@ echo "== oracle gate (adversarial edge dataset, full registry) =="
 python tools/make_edge_sf.py > /dev/null
 python tools/oracle_check.py /tmp/edge_sf 2>&1 | tail -1
 
+# perfbench exits 0 even when a lap's outputs are wrong; its last line is
+# the {"correct", "attempted", "failed", "metrics"} record, so gate on that.
+perfbench_gate() {
+  local last
+  last="$(python3 perfbench/run.py --workload "$1" --seed 1 --seconds 10 --trace 0 | tail -1)"
+  echo "$last"
+  python3 -c '
+import json, sys
+r = json.loads(sys.argv[1])
+sys.exit(0 if r.get("correct") is True and r.get("failed") == 0 else 1)
+' "$last" || { echo "perfbench $1: wrong outputs (correct/failed above)" >&2; return 1; }
+}
+
 echo "== perfbench batch_etl =="
-python3 perfbench/run.py --workload batch_etl --seed 1 --seconds 10 --trace 0 | tail -1
+perfbench_gate batch_etl
 
 echo "== perfbench query_mix =="
-python3 perfbench/run.py --workload query_mix --seed 1 --seconds 10 --trace 0 | tail -1
+perfbench_gate query_mix

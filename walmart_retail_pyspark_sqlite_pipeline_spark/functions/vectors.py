@@ -71,6 +71,24 @@ def l2sq_sql(a: str, b: str) -> str:
     )
 
 
+def int8_dot(a: Column, b: Column) -> Column:
+    """Exact BIGINT dot product of two int8 code arrays (an ordered left
+    fold of integer products — no rounding anywhere)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+
+
+def int8_dot_sql(a: str, b: str) -> str:
+    """DuckDB twin of :func:`int8_dot`."""
+    return (
+        f"CAST(list_sum(list_transform(list_zip({a}, {b}), p -> p[1] * p[2]))\n"
+        "         AS BIGINT)"
+    )
+
+
 def int8_quantize(v: Column) -> Column:
     """Symmetric int8 quantization: ``q_i = floor(x_i * 127 / max|x|)``
     (floor, not round — IEEE ``floor(double)`` is bit-identical across

@@ -1,16 +1,12 @@
-"""Arrow-batched document chunking (`mapInPandas`) — the scale path for
-context-window prep.
+"""Fixed-width document chunking from built-in expressions — the scale path
+for context-window prep.
 
-Two surfaces implement the same fixed-width chunk semantics (chunk i covers
-characters [i*width, (i+1)*width)):
-
-- ``functions/udtfs.py::ChunkText`` — a Python UDTF composable in SQL via
-  LATERAL joins (per-row streaming; the demo of Spark 4's UDTF surface);
-- :func:`chunk_text_batched` here — ``mapInPandas`` over Arrow batches, no
-  per-row Python call overhead, which is what you run over a 100 TB corpus.
-
-Both are verified against the same DuckDB oracle
-(``plans/llm.py::TEXT_CHUNKS_SQL``) in tests/test_chunking.py.
+Chunk i of a document covers characters [i*width, (i+1)*width): the chunk
+indexes are one ``explode(sequence(...))`` over the document's own length
+and each chunk is one ``substr``, so the whole operator stays inside the
+JVM (no Python worker, no Arrow round trip) and Catalyst prunes and fuses
+it like any other projection. Verified against the DuckDB oracle
+``plans/llm.py::TEXT_CHUNKS_SQL`` in tests/test_chunking.py.
 
 At scale the plan is embarrassingly parallel: no shuffle at all — each input
 partition expands independently, and output size is input size (every char
@@ -20,22 +16,8 @@ EXPANDED row count (docs × chunks/doc) if a shuffle follows downstream.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.types import (
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-CHUNK_FIELDS = [
-    StructField("chunk_idx", IntegerType()),
-    StructField("chunk", StringType()),
-    StructField("chunk_len", IntegerType()),
-]
+from pyspark.sql import functions as F
 
 
 def chunk_text_batched(
@@ -44,47 +26,32 @@ def chunk_text_batched(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Explode ``df[id_col, text_col]`` into fixed-width chunks via one
-    Arrow-batched ``mapInPandas`` pass.
+    """Explode ``df[id_col, text_col]`` into fixed-width chunks.
 
     Output schema: (id_col, chunk_idx int, chunk string, chunk_len int);
-    rows with NULL text produce no chunks (matching the UDTF).
+    rows with NULL or empty text produce no chunks.
     """
     if width <= 0:
         raise ValueError(f"width must be positive, got {width}")
-
-    id_field = [f for f in df.schema.fields if f.name == id_col]
-    if not id_field:
+    if id_col not in df.columns:
         raise ValueError(f"missing id column {id_col!r}")
-    out_schema = StructType([id_field[0], *CHUNK_FIELDS])
 
-    def expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            texts = pdf[text_col]
-            valid = texts.notna()
-            lens = texts.str.len()  # float64 with NaN for NULL text
-            n_chunks = ((lens + width - 1) // width).where(valid, 0).astype("int64")
-            # vectorized expansion: repeat ids by per-doc chunk count, then
-            # slice each chunk (slicing is the only per-chunk Python work)
-            ids = pdf[id_col].repeat(n_chunks).reset_index(drop=True)
-            idx = [i for n in n_chunks for i in range(n)]
-            chunks = [
-                t[i * width : (i + 1) * width]
-                for t, n in zip(texts, n_chunks)
-                for i in range(n)
-            ]
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "chunk_idx": pd.Series(idx, dtype="int32"),
-                    "chunk": pd.Series(chunks, dtype="object"),
-                    "chunk_len": pd.Series(
-                        [len(c) for c in chunks], dtype="int32"
-                    ),
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(expand, schema=out_schema)
+    n = F.length(text_col)
+    # (n - 1) / width is an exact double quotient of two ints, so the int
+    # cast floors it: the last chunk index for n > 0
+    last = ((n - 1) / width).cast("int")
+    idx = F.explode(F.when(n > 0, F.sequence(F.lit(0), last)))
+    return (
+        df.select(id_col, text_col, idx.alias("chunk_idx"))
+        .select(
+            id_col,
+            "chunk_idx",
+            F.col(text_col)
+            .substr(F.col("chunk_idx") * width + 1, F.lit(width))
+            .alias("chunk"),
+        )
+        .withColumn("chunk_len", F.length("chunk"))
+    )
 
 
-__all__ = ["chunk_text_batched", "CHUNK_FIELDS"]
+__all__ = ["chunk_text_batched"]

@@ -271,20 +271,30 @@ def dedup_cc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CC_CLUSTERS_SQL = f"""
-WITH RECURSIVE {MINHASH_SIG_CTE},
-{VERIFIED_PAIRS_CTES},
+#: The verified near-dup pairs symmetrized into directed ``edges`` (the SQL
+#: twin of :func:`_lsh_edges`), shared by the graph oracles; prepend
+#: ``WITH RECURSIVE {MINHASH_SIG_CTE},``.
+_GRAPH_EDGES_CTES = f"""{VERIFIED_PAIRS_CTES},
 edges AS (
   SELECT doc_a AS src, doc_b AS dst FROM pairs
   UNION
   SELECT doc_b AS src, doc_a AS dst FROM pairs
-),
-reach(src, node) AS (
+)"""
+
+#: ``lab``: each doc's connected-component label, the minimum doc_id its
+#: recursive reachability walk over ``edges`` finds (the SQL twin of
+#: :func:`_cc_labels`).
+_CC_LABEL_CTES = """reach(src, node) AS (
   SELECT src, src FROM (SELECT DISTINCT src FROM edges)
   UNION
   SELECT r.src, e.dst FROM reach r JOIN edges e ON r.node = e.src
 ),
-lab AS (SELECT src AS doc_id, MIN(node) AS cluster_id FROM reach GROUP BY src),
+lab AS (SELECT src AS doc_id, MIN(node) AS cluster_id FROM reach GROUP BY src)"""
+
+CC_CLUSTERS_SQL = f"""
+WITH RECURSIVE {MINHASH_SIG_CTE},
+{_GRAPH_EDGES_CTES},
+{_CC_LABEL_CTES},
 sz AS (SELECT cluster_id, COUNT(*) AS cluster_size FROM lab GROUP BY cluster_id)
 SELECT lab.doc_id, lab.cluster_id, sz.cluster_size
 FROM lab JOIN sz USING (cluster_id)
@@ -597,22 +607,21 @@ def _pr_iter_sql(prev: str, name: str) -> str:
 )"""
 
 
-PAGERANK_SQL = f"""
-WITH {MINHASH_SIG_CTE},
-{VERIFIED_PAIRS_CTES},
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION
-  SELECT doc_b AS src, doc_a AS dst FROM pairs
-),
-deg AS (SELECT src AS node, COUNT(*) AS deg FROM edges GROUP BY src),
+#: Three PageRank steps over ``edges`` ending in ``it3(node, deg, rank)``
+#: (the SQL twin of :func:`_pagerank_ranks`).
+_PAGERANK_CTES = f"""deg AS (SELECT src AS node, COUNT(*) AS deg FROM edges GROUP BY src),
 n AS (SELECT COUNT(*) AS nn FROM deg),
 r0 AS (
   SELECT node, deg, CAST(1.0 AS DOUBLE) / n.nn AS rank FROM deg CROSS JOIN n
 ),
 {_pr_iter_sql("r0", "it1")},
 {_pr_iter_sql("it1", "it2")},
-{_pr_iter_sql("it2", "it3")}
+{_pr_iter_sql("it2", "it3")}"""
+
+PAGERANK_SQL = f"""
+WITH {MINHASH_SIG_CTE},
+{_GRAPH_EDGES_CTES},
+{_PAGERANK_CTES}
 SELECT node AS doc_id, ROUND(rank, 9) AS pagerank FROM it3 ORDER BY doc_id
 """
 
@@ -668,26 +677,9 @@ def corpus_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 CANONICAL_DOCS_SQL = f"""
 WITH RECURSIVE {MINHASH_SIG_CTE},
-{VERIFIED_PAIRS_CTES},
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION
-  SELECT doc_b AS src, doc_a AS dst FROM pairs
-),
-reach(src, node) AS (
-  SELECT src, src FROM (SELECT DISTINCT src FROM edges)
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.node = e.src
-),
-lab AS (SELECT src AS doc_id, MIN(node) AS cluster_id FROM reach GROUP BY src),
-deg AS (SELECT src AS node, COUNT(*) AS deg FROM edges GROUP BY src),
-n AS (SELECT COUNT(*) AS nn FROM deg),
-r0 AS (
-  SELECT node, deg, CAST(1.0 AS DOUBLE) / n.nn AS rank FROM deg CROSS JOIN n
-),
-{_pr_iter_sql("r0", "it1")},
-{_pr_iter_sql("it1", "it2")},
-{_pr_iter_sql("it2", "it3")},
+{_GRAPH_EDGES_CTES},
+{_CC_LABEL_CTES},
+{_PAGERANK_CTES},
 csz AS (
   SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS cluster_size
   FROM lab GROUP BY cluster_id
@@ -1047,76 +1039,129 @@ register(
 # exact integer arithmetic (summation-order-free), and the final mean is
 # one identical double division sequence.
 # ---------------------------------------------------------------------------
-def text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _bigrams(spark: SparkSession, sf_dir: str, *carry: str) -> DataFrame:
+    """The corpus bigram occurrence stream ``(doc_id, *carry, g, w1, w2)``:
+    one row per adjacent token pair ``g = "w1 w2"`` of each document."""
     docs = read_table(spark, sf_dir, "documents")
     # tokens MUST be materialized as a column before word_shingles:
     # passing the tokens(text) EXPRESSION captures the whole regex
     # tokenizer inside the per-element shingle lambda (element_at(tok,..)
     # twice per shingle) — the round-9 int8_quantize pathology, re-found
     # by the round-10 lm probes (15.1 s -> sub-second at sf0.1)
-    tk = docs.select("doc_id", text.tokens(F.col("text")).alias("tok"))
+    tk = docs.select("doc_id", *carry, text.tokens(F.col("text")).alias("tok"))
+    words = F.split(F.col("g"), " ")
+    return tk.select(
+        "doc_id", *carry, F.explode(text.word_shingles(F.col("tok"), 2)).alias("g")
+    ).select(
+        "doc_id",
+        *carry,
+        "g",
+        words.getItem(0).alias("w1"),
+        words.getItem(1).alias("w2"),
+    )
+
+
+def _vocab_size(postings: DataFrame) -> DataFrame:
+    """1-row ``v``: the distinct non-NULL terms of a postings frame."""
+    return postings.filter(F.col("term").isNotNull()).agg(
+        F.countDistinct("term").alias("v")
+    )
+
+
+def _ln_micro(ratio: Column) -> Column:
+    """``ln(ratio)`` in BIGINT micro-nats, rounded at 1e-6 on both engines."""
+    return F.round(F.log(ratio) * 1000000.0, 0).cast("long")
+
+
+def _mean_micro(scored: DataFrame, *keys: str) -> DataFrame:
+    """``(doc_id, *keys, n_bigrams, micro)``: each doc's count of ``qf``
+    rows and their mean, rounded half away from zero to an integer.
+
+    No float ROUND: a float round can tie-break differently across
+    engines when the mean lands within an ulp of a 5e-7 boundary (observed
+    on corpus_importance_weights driver data: Spark BigDecimal-of-double
+    rounds the exact binary value, DuckDB multiply-shifts); the
+    (2|sq|+n) div 2n identity is exact integer arithmetic."""
+    micro = F.expr(
+        "CASE WHEN sq < 0 THEN -1 ELSE 1 END"
+        " * ((2 * abs(sq) + n_bigrams) DIV (2 * n_bigrams))"
+    )
+    return (
+        scored.groupBy("doc_id", *keys)
+        .agg(F.count("*").alias("n_bigrams"), F.sum("qf").alias("sq"))
+        .select("doc_id", *keys, "n_bigrams", micro.cast("long").alias("micro"))
+    )
+
+
+def _mean_nll(scored: DataFrame, name: str) -> DataFrame:
+    """``(doc_id, n_bigrams, name)``: the per-doc mean negative log-prob."""
+    return (
+        _mean_micro(scored)
+        .select(
+            "doc_id", "n_bigrams", (-F.col("micro") / F.lit(1000000.0)).alias(name)
+        )
+        .sortWithinPartitions("doc_id")
+    )
+
+
+def _bigram_ctes(carry: str = "") -> str:
+    """The SQL twin of :func:`_bigrams` (tk → grams); ``carry`` is a column
+    list with a trailing comma."""
+    return f"""tk AS (
+  SELECT doc_id, {carry}{_TOK_SQL} AS tok FROM documents
+),
+grams AS (
+  SELECT doc_id, {carry}g, string_split(g, ' ')[1] AS w1, string_split(g, ' ')[2] AS w2
+  FROM (
+    SELECT doc_id, {carry}unnest({text.word_shingles_sql("tok", 2)}) AS g FROM tk
+  )
+)"""
+
+
+#: The bigram and history count tables over ``grams``.
+_BIGRAM_COUNT_CTES = """c2 AS (SELECT g, COUNT(*) AS n2 FROM grams GROUP BY g),
+c1 AS (SELECT w1, COUNT(*) AS n1 FROM grams GROUP BY w1)"""
+
+#: The SQL twin of :func:`_mean_micro`'s ``micro`` over ``agg(sq, n_bigrams)``.
+_MEAN_MICRO_SQL = """CAST(CASE WHEN sq < 0 THEN -1 ELSE 1 END
+              * ((2 * ABS(sq) + n_bigrams) // (2 * n_bigrams)) AS BIGINT)"""
+
+
+def _mean_nll_sql(name: str) -> str:
+    """The SQL twin of :func:`_mean_nll` over a ``scored(doc_id, qf)`` CTE."""
+    return f"""agg AS (
+  SELECT doc_id, COUNT(*) AS n_bigrams, SUM(qf) AS sq
+  FROM scored GROUP BY doc_id
+)
+SELECT doc_id,
+  CAST(n_bigrams AS BIGINT) AS n_bigrams,
+  CAST(-{_MEAN_MICRO_SQL}
+       AS DOUBLE) / CAST(1000000.0 AS DOUBLE) AS {name}
+FROM agg
+ORDER BY doc_id"""
+
+
+def text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bigram counts as WINDOW counts over ONE gram stream; vocabulary off
     # the shared cached token index — the old c2/c1/vocab branches each
     # re-planned the scan+tokenize (round-11 scan census: 4 documents
     # scans here)
     grams = (
-        tk.select(
-            "doc_id", F.explode(text.word_shingles(F.col("tok"), 2)).alias("g")
-        )
-        .select("doc_id", "g", F.split(F.col("g"), " ").getItem(0).alias("w1"))
+        _bigrams(spark, sf_dir)
         .withColumn("n2", F.count("*").over(Window.partitionBy("g")))
         .withColumn("n1", F.count("*").over(Window.partitionBy("w1")))
     )
-    vocab = (
-        _token_postings(spark, sf_dir)
-        .filter(F.col("term").isNotNull())
-        .agg(F.countDistinct("term").alias("v"))
-    )
-    scored = (
-        grams.crossJoin(F.broadcast(vocab))
-        .select(
-            "doc_id",
-            F.round(
-                F.log(
-                    (F.col("n2") + F.lit(1.0)) / (F.col("n1") + F.col("v"))
-                )
-                * 1000000.0,
-                0,
-            )
-            .cast("long")
-            .alias("qf"),
-        )
-    )
-    agg = scored.groupBy("doc_id").agg(
-        F.count("*").alias("n_bigrams"), F.sum("qf").alias("sq")
-    )
-    # exact integer micro-rounding of the mean (no float ROUND: a float
-    # round can tie-break differently across engines when the mean lands
-    # within an ulp of a 5e-7 boundary — observed on corpus_importance_
-    # weights; the (2|sq|+n) div 2n identity has no such boundary)
-    micro = F.expr(
-        "CASE WHEN sq < 0 THEN -1 ELSE 1 END"
-        " * ((2 * abs(sq) + n_bigrams) DIV (2 * n_bigrams))"
-    )
-    return agg.select(
+    vocab = _vocab_size(_token_postings(spark, sf_dir))
+    scored = grams.crossJoin(F.broadcast(vocab)).select(
         "doc_id",
-        "n_bigrams",
-        (-(micro.cast("long")) / F.lit(1000000.0)).alias("avg_nll"),
-    ).sortWithinPartitions("doc_id")
+        _ln_micro((F.col("n2") + F.lit(1.0)) / (F.col("n1") + F.col("v"))).alias("qf"),
+    )
+    return _mean_nll(scored, "avg_nll")
 
 
 LM_SCORE_SQL = f"""
-WITH tk AS (
-  SELECT doc_id, {_TOK_SQL} AS tok FROM documents
-),
-grams AS (
-  SELECT doc_id, g, string_split(g, ' ')[1] AS w1
-  FROM (
-    SELECT doc_id, unnest({text.word_shingles_sql("tok", 2)}) AS g FROM tk
-  )
-),
-c2 AS (SELECT g, COUNT(*) AS n2 FROM grams GROUP BY g),
-c1 AS (SELECT w1, COUNT(*) AS n1 FROM grams GROUP BY w1),
+WITH {_bigram_ctes()},
+{_BIGRAM_COUNT_CTES},
 vocab AS (
   SELECT COUNT(DISTINCT w) AS v
   FROM (SELECT unnest(tok) AS w FROM tk)
@@ -1130,17 +1175,7 @@ scored AS (
   JOIN c1 USING (w1)
   CROSS JOIN vocab
 ),
-agg AS (
-  SELECT doc_id, COUNT(*) AS n_bigrams, SUM(qf) AS sq
-  FROM scored GROUP BY doc_id
-)
-SELECT doc_id,
-  CAST(n_bigrams AS BIGINT) AS n_bigrams,
-  CAST(-(CAST(CASE WHEN sq < 0 THEN -1 ELSE 1 END
-              * ((2 * ABS(sq) + n_bigrams) // (2 * n_bigrams)) AS BIGINT))
-       AS DOUBLE) / CAST(1000000.0 AS DOUBLE) AS avg_nll
-FROM agg
-ORDER BY doc_id
+{_mean_nll_sql("avg_nll")}
 """
 
 
@@ -1179,8 +1214,8 @@ register(
 # ---------------------------------------------------------------------------
 LP_ITERS = 3
 
-#: shared SQL prefix: the verified near-dup pair list (same body the CC /
-#: PageRank / canonical-doc oracles inline) symmetrized into directed
+#: shared SQL prefix: the verified near-dup pair list (``_GRAPH_EDGES_CTES``
+#: keeps the pair edges only) symmetrized into directed
 #: edges, plus one self-loop per document so isolated docs vote for
 #: themselves and the majority is over "self + neighbors".
 _LP_EDGES_CTE = f"""{VERIFIED_PAIRS_CTES},
@@ -1306,12 +1341,6 @@ TARGET_LANG = "en"
 
 
 def corpus_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = read_table(spark, sf_dir, "documents")
-    # materialized tok column — never the expression (capture pathology;
-    # see text_lm_score)
-    tk = docs.select(
-        "doc_id", "lang", text.tokens(F.col("text")).alias("tok")
-    )
     # base and target gram counts as WINDOW sums over ONE gram stream —
     # the old four groupBy+join branches each re-planned the scan+tokenize
     # (round-11 scan census: 6 documents scans); the target-language legs
@@ -1319,35 +1348,17 @@ def corpus_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the shared cached token index.
     is_tgt = F.when(F.col("lang") == TARGET_LANG, 1).otherwise(0)
     grams = (
-        tk.select(
-            "doc_id",
-            "lang",
-            F.explode(text.word_shingles(F.col("tok"), 2)).alias("g"),
-        )
-        .select(
-            "doc_id",
-            "lang",
-            "g",
-            F.split(F.col("g"), " ").getItem(0).alias("w1"),
-            is_tgt.alias("tgt"),
-        )
+        _bigrams(spark, sf_dir, "lang")
+        .withColumn("tgt", is_tgt)
         .withColumn("b2", F.count("*").over(Window.partitionBy("g")))
         .withColumn("t2", F.sum("tgt").over(Window.partitionBy("g")))
         .withColumn("b1", F.count("*").over(Window.partitionBy("w1")))
         .withColumn("t1", F.sum("tgt").over(Window.partitionBy("w1")))
     )
-    vocab = (
-        _token_postings(spark, sf_dir)
-        .filter(F.col("term").isNotNull())
-        .agg(F.countDistinct("term").alias("v"))
-    )
+    vocab = _vocab_size(_token_postings(spark, sf_dir))
 
     def _lp(num, den):
-        return (
-            F.round(
-                F.log((num + F.lit(1.0)) / (den + F.col("v"))) * 1000000.0, 0
-            ).cast("long")
-        )
+        return _ln_micro((num + F.lit(1.0)) / (den + F.col("v")))
 
     scored = grams.crossJoin(F.broadcast(vocab)).select(
         "doc_id",
@@ -1357,40 +1368,21 @@ def corpus_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             - _lp(F.col("b2"), F.col("b1"))
         ).alias("qf"),
     )
-    agg = scored.groupBy("doc_id", "lang").agg(
-        F.count("*").alias("n_bigrams"), F.sum("qf").alias("sq")
-    )
-    # final mean WITHOUT a float ROUND: the mean is rounded to integer
-    # micro-units in EXACT integer arithmetic (half-away-from-zero via the
-    # (2|sq|+n) div 2n identity), then one exact integer/literal division
-    # produces the double. A float ROUND here can tie-break differently
-    # across engines when sq/n/1e6 lands within an ulp of a 5e-7 boundary
-    # (observed on driver data: Spark BigDecimal-of-double rounds the
-    # exact binary value, DuckDB multiply-shifts) — integer rounding has
-    # no such boundary.
-    micro = F.expr(
-        "CASE WHEN sq < 0 THEN -1 ELSE 1 END"
-        " * ((2 * abs(sq) + n_bigrams) DIV (2 * n_bigrams))"
-    )
     # lang rides the gram stream (constant per doc), so no docs re-join
-    return agg.select(
-        "doc_id",
-        "lang",
-        "n_bigrams",
-        (micro.cast("long") / F.lit(1000000.0)).alias("avg_loglr"),
-    ).sortWithinPartitions("doc_id")
+    return (
+        _mean_micro(scored, "lang")
+        .select(
+            "doc_id",
+            "lang",
+            "n_bigrams",
+            (F.col("micro") / F.lit(1000000.0)).alias("avg_loglr"),
+        )
+        .sortWithinPartitions("doc_id")
+    )
 
 
 IMPORTANCE_SQL = f"""
-WITH tk AS (
-  SELECT doc_id, lang, {_TOK_SQL} AS tok FROM documents
-),
-grams AS (
-  SELECT doc_id, lang, g, string_split(g, ' ')[1] AS w1
-  FROM (
-    SELECT doc_id, lang, unnest({text.word_shingles_sql("tok", 2)}) AS g FROM tk
-  )
-),
+WITH {_bigram_ctes("lang, ")},
 base2 AS (SELECT g, COUNT(*) AS b2 FROM grams GROUP BY g),
 base1 AS (SELECT w1, COUNT(*) AS b1 FROM grams GROUP BY w1),
 tgt2 AS (
@@ -1424,8 +1416,7 @@ agg AS (
 )
 SELECT d.doc_id, d.lang,
   CAST(n_bigrams AS BIGINT) AS n_bigrams,
-  CAST(CAST(CASE WHEN sq < 0 THEN -1 ELSE 1 END
-            * ((2 * ABS(sq) + n_bigrams) // (2 * n_bigrams)) AS BIGINT)
+  CAST({_MEAN_MICRO_SQL}
        AS DOUBLE) / CAST(1000000.0 AS DOUBLE) AS avg_loglr
 FROM documents d JOIN agg ON d.doc_id = agg.doc_id
 ORDER BY d.doc_id
@@ -3115,25 +3106,12 @@ register(
 # partition-local order only.
 # ---------------------------------------------------------------------------
 def text_lm_interpolated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = read_table(spark, sf_dir, "documents")
-    # materialized tok column — never the expression (capture pathology;
-    # see text_lm_score; probe receipt 172.5 -> token-scan cost at the
-    # 50k-doc decade)
-    tk = docs.select("doc_id", text.tokens(F.col("text")).alias("tok"))
     # bigram counts as WINDOW counts over ONE gram stream (n2 per bigram,
     # n1 per history) instead of two groupBy+join branches — each branch
     # re-planned the scan+tokenize (round-11 scan census: 5 documents
     # scans here); unigram stats come off the shared cached token index
     grams = (
-        tk.select(
-            "doc_id", F.explode(text.word_shingles(F.col("tok"), 2)).alias("g")
-        )
-        .select(
-            "doc_id",
-            "g",
-            F.split(F.col("g"), " ").getItem(0).alias("w1"),
-            F.split(F.col("g"), " ").getItem(1).alias("w2"),
-        )
+        _bigrams(spark, sf_dir)
         .withColumn("n2", F.count("*").over(Window.partitionBy("g")))
         .withColumn("n1", F.count("*").over(Window.partitionBy("w1")))
     )
@@ -3147,51 +3125,23 @@ def text_lm_interpolated(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(tstat))
         .select(
             "doc_id",
-            F.round(
-                F.log(
-                    (
-                        F.col("n2").cast("decimal(38,0)") * F.col("t_tok")
-                        + F.col("nu").cast("decimal(38,0)") * F.col("n1")
-                    ).cast("double")
-                    / (
-                        F.lit(2).cast("decimal(38,0)")
-                        * F.col("n1")
-                        * F.col("t_tok")
-                    ).cast("double")
-                )
-                * 1000000.0,
-                0,
-            )
-            .cast("long")
-            .alias("qf"),
+            _ln_micro(
+                (
+                    F.col("n2").cast("decimal(38,0)") * F.col("t_tok")
+                    + F.col("nu").cast("decimal(38,0)") * F.col("n1")
+                ).cast("double")
+                / (
+                    F.lit(2).cast("decimal(38,0)") * F.col("n1") * F.col("t_tok")
+                ).cast("double")
+            ).alias("qf"),
         )
     )
-    agg = scored.groupBy("doc_id").agg(
-        F.count("*").alias("n_bigrams"), F.sum("qf").alias("sq")
-    )
-    micro = F.expr(
-        "CASE WHEN sq < 0 THEN -1 ELSE 1 END"
-        " * ((2 * abs(sq) + n_bigrams) DIV (2 * n_bigrams))"
-    )
-    return agg.select(
-        "doc_id",
-        "n_bigrams",
-        (-(micro.cast("long")) / F.lit(1000000.0)).alias("avg_nll_jm"),
-    ).sortWithinPartitions("doc_id")
+    return _mean_nll(scored, "avg_nll_jm")
 
 
 LM_JM_SQL = f"""
-WITH tk AS (
-  SELECT doc_id, {_TOK_SQL} AS tok FROM documents
-),
-grams AS (
-  SELECT doc_id, g, string_split(g, ' ')[1] AS w1, string_split(g, ' ')[2] AS w2
-  FROM (
-    SELECT doc_id, unnest({text.word_shingles_sql("tok", 2)}) AS g FROM tk
-  )
-),
-c2 AS (SELECT g, COUNT(*) AS n2 FROM grams GROUP BY g),
-c1 AS (SELECT w1, COUNT(*) AS n1 FROM grams GROUP BY w1),
+WITH {_bigram_ctes()},
+{_BIGRAM_COUNT_CTES},
 unis AS (SELECT unnest(tok) AS w FROM tk),
 cu AS (SELECT w, COUNT(*) AS nu FROM unis GROUP BY w),
 tstat AS (SELECT COUNT(*) AS t_tok FROM unis),
@@ -3208,15 +3158,7 @@ scored AS (
   JOIN cu ON cu.w = grams.w2
   CROSS JOIN tstat t
 ),
-agg AS (
-  SELECT doc_id, COUNT(*) AS n_bigrams, SUM(qf) AS sq FROM scored GROUP BY doc_id
-)
-SELECT doc_id, n_bigrams,
-  -(CAST(CASE WHEN sq < 0 THEN -1 ELSE 1 END
-    * ((2 * ABS(sq) + n_bigrams) // (2 * n_bigrams)) AS BIGINT))
-    / 1000000.0 AS avg_nll_jm
-FROM agg
-ORDER BY doc_id
+{_mean_nll_sql("avg_nll_jm")}
 """
 
 
@@ -3442,65 +3384,31 @@ register(
 # Scale shape: ONE bigram scan + two windows (g, w1) + the cached index.
 # ---------------------------------------------------------------------------
 def text_lm_heldout_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = read_table(spark, sf_dir, "documents")
-    tk = docs.select("doc_id", text.tokens(F.col("text")).alias("tok"))
     is_train = F.when(F.col("doc_id") % 10 < 8, 1).otherwise(0)
     grams = (
-        tk.select(
-            "doc_id", F.explode(text.word_shingles(F.col("tok"), 2)).alias("g")
-        )
-        .select(
-            "doc_id", "g", F.split(F.col("g"), " ").getItem(0).alias("w1")
-        )
+        _bigrams(spark, sf_dir)
         .withColumn("tr", is_train)
         .withColumn("n2t", F.sum("tr").over(Window.partitionBy("g")))
         .withColumn("n1t", F.sum("tr").over(Window.partitionBy("w1")))
     )
-    vocab = (
-        _token_postings(spark, sf_dir)
-        .filter(F.col("term").isNotNull() & (F.col("doc_id") % 10 < 8))
-        .agg(F.countDistinct("term").alias("v"))
+    vocab = _vocab_size(
+        _token_postings(spark, sf_dir).filter(F.col("doc_id") % 10 < 8)
     )
     scored = (
         grams.filter(F.col("tr") == 0)
         .crossJoin(F.broadcast(vocab))
         .select(
             "doc_id",
-            F.round(
-                F.log(
-                    (F.col("n2t") + F.lit(1.0)) / (F.col("n1t") + F.col("v"))
-                )
-                * 1000000.0,
-                0,
-            )
-            .cast("long")
-            .alias("qf"),
+            _ln_micro(
+                (F.col("n2t") + F.lit(1.0)) / (F.col("n1t") + F.col("v"))
+            ).alias("qf"),
         )
     )
-    agg = scored.groupBy("doc_id").agg(
-        F.count("*").alias("n_bigrams"), F.sum("qf").alias("sq")
-    )
-    micro = F.expr(
-        "CASE WHEN sq < 0 THEN -1 ELSE 1 END"
-        " * ((2 * abs(sq) + n_bigrams) DIV (2 * n_bigrams))"
-    )
-    return agg.select(
-        "doc_id",
-        "n_bigrams",
-        (-(micro.cast("long")) / F.lit(1000000.0)).alias("avg_nll_heldout"),
-    ).sortWithinPartitions("doc_id")
+    return _mean_nll(scored, "avg_nll_heldout")
 
 
 LM_HELDOUT_SQL = f"""
-WITH tk AS (
-  SELECT doc_id, {_TOK_SQL} AS tok FROM documents
-),
-grams AS (
-  SELECT doc_id, g, string_split(g, ' ')[1] AS w1
-  FROM (
-    SELECT doc_id, unnest({text.word_shingles_sql("tok", 2)}) AS g FROM tk
-  )
-),
+WITH {_bigram_ctes()},
 g2 AS (
   SELECT doc_id, g, w1,
     SUM(CASE WHEN doc_id % 10 < 8 THEN 1 ELSE 0 END)
@@ -3521,16 +3429,7 @@ scored AS (
   FROM g2 CROSS JOIN vocab
   WHERE doc_id % 10 >= 8
 ),
-agg AS (
-  SELECT doc_id, COUNT(*) AS n_bigrams, SUM(qf) AS sq
-  FROM scored GROUP BY doc_id
-)
-SELECT doc_id, n_bigrams,
-  -(CAST(CASE WHEN sq < 0 THEN -1 ELSE 1 END
-    * ((2 * ABS(sq) + n_bigrams) // (2 * n_bigrams)) AS BIGINT))
-    / 1000000.0 AS avg_nll_heldout
-FROM agg
-ORDER BY doc_id
+{_mean_nll_sql("avg_nll_heldout")}
 """
 
 
@@ -3659,16 +3558,7 @@ register(
 # documents-text floor 2, recorded.
 # ---------------------------------------------------------------------------
 def corpus_lm_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = read_table(spark, sf_dir, "documents")
-    tk = docs.select("doc_id", text.tokens(F.col("text")).alias("tok"))
-    gstream = tk.select(
-        "doc_id", F.explode(text.word_shingles(F.col("tok"), 2)).alias("g")
-    ).select(
-        "doc_id",
-        "g",
-        F.split(F.col("g"), " ").getItem(0).alias("w1"),
-        F.split(F.col("g"), " ").getItem(1).alias("w2"),
-    )
+    gstream = _bigrams(spark, sf_dir)
     grams = (
         gstream.withColumn(
             "is_first",
@@ -3687,52 +3577,25 @@ def corpus_lm_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     nt = gstream.agg(F.countDistinct("g").alias("nt"))
     scored = grams.crossJoin(F.broadcast(nt)).select(
         "doc_id",
-        F.round(
-            F.log(
-                (
-                    F.greatest(
-                        F.lit(4).cast("decimal(38,0)") * F.col("n2") - 3,
-                        F.lit(0).cast("decimal(38,0)"),
-                    )
-                    * F.col("nt")
-                    + F.lit(3).cast("decimal(38,0)")
-                    * F.col("nf1")
-                    * F.col("nb2")
-                ).cast("double")
-                / (
-                    F.lit(4).cast("decimal(38,0)") * F.col("n1") * F.col("nt")
-                ).cast("double")
-            )
-            * 1000000.0,
-            0,
-        )
-        .cast("long")
-        .alias("qf"),
+        _ln_micro(
+            (
+                F.greatest(
+                    F.lit(4).cast("decimal(38,0)") * F.col("n2") - 3,
+                    F.lit(0).cast("decimal(38,0)"),
+                )
+                * F.col("nt")
+                + F.lit(3).cast("decimal(38,0)") * F.col("nf1") * F.col("nb2")
+            ).cast("double")
+            / (
+                F.lit(4).cast("decimal(38,0)") * F.col("n1") * F.col("nt")
+            ).cast("double")
+        ).alias("qf"),
     )
-    agg = scored.groupBy("doc_id").agg(
-        F.count("*").alias("n_bigrams"), F.sum("qf").alias("sq")
-    )
-    micro = F.expr(
-        "CASE WHEN sq < 0 THEN -1 ELSE 1 END"
-        " * ((2 * abs(sq) + n_bigrams) DIV (2 * n_bigrams))"
-    )
-    return agg.select(
-        "doc_id",
-        "n_bigrams",
-        (-(micro.cast("long")) / F.lit(1000000.0)).alias("avg_nll_kn"),
-    ).sortWithinPartitions("doc_id")
+    return _mean_nll(scored, "avg_nll_kn")
 
 
 LM_KN_SQL = f"""
-WITH tk AS (
-  SELECT doc_id, {_TOK_SQL} AS tok FROM documents
-),
-grams AS (
-  SELECT doc_id, g, string_split(g, ' ')[1] AS w1, string_split(g, ' ')[2] AS w2
-  FROM (
-    SELECT doc_id, unnest({text.word_shingles_sql("tok", 2)}) AS g FROM tk
-  )
-),
+WITH {_bigram_ctes()},
 c2 AS (SELECT g, COUNT(*) AS n2 FROM grams GROUP BY g),
 cf1 AS (
   SELECT w1, COUNT(*) AS n1, COUNT(DISTINCT w2) AS nf1 FROM grams GROUP BY w1
@@ -3752,15 +3615,7 @@ scored AS (
   JOIN cb2 USING (w2)
   CROSS JOIN ntc
 ),
-agg AS (
-  SELECT doc_id, COUNT(*) AS n_bigrams, SUM(qf) AS sq FROM scored GROUP BY doc_id
-)
-SELECT doc_id, n_bigrams,
-  -(CAST(CASE WHEN sq < 0 THEN -1 ELSE 1 END
-    * ((2 * ABS(sq) + n_bigrams) // (2 * n_bigrams)) AS BIGINT))
-    / 1000000.0 AS avg_nll_kn
-FROM agg
-ORDER BY doc_id
+{_mean_nll_sql("avg_nll_kn")}
 """
 
 

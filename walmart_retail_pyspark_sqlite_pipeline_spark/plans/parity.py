@@ -592,18 +592,19 @@ SELECT
   {_xsum_sql("l_quantity")} AS sum_qty,
   COUNT(*) AS n_rows,
   CAST(GROUPING(l_returnflag) * 2 + GROUPING(l_linestatus) AS BIGINT) AS lvl
-FROM lineitem
+FROM {{lineitem}}
 GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
 ORDER BY lvl, l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST
 """
 
 
 def q17_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    read_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(_Q17_BODY)
+    return spark.sql(_Q17_BODY, lineitem=read_table(spark, sf_dir, "lineitem"))
 
 
-Q17_SQL = _Q17_BODY  # identical ANSI SQL runs on both engines
+# identical ANSI SQL runs on both engines; Spark binds the frame through a
+# placeholder, so the caller's own temp views are left alone
+Q17_SQL = _Q17_BODY.format(lineitem="lineitem")
 
 
 # ---------------------------------------------------------------------------
@@ -1151,21 +1152,20 @@ _Q31_BODY = """
 SELECT o_orderstatus, COUNT(*) AS n_orders,
   (SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) / CAST(100.0 AS DOUBLE))
     AS sum_price
-FROM orders
+FROM {orders}
 WHERE CAST(ROUND(o_totalprice * 100) AS BIGINT)
-        * (SELECT COUNT(*) FROM orders)
-      > (SELECT SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) FROM orders)
+        * (SELECT COUNT(*) FROM {orders})
+      > (SELECT SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) FROM {orders})
 GROUP BY o_orderstatus
 ORDER BY o_orderstatus
 """
 
 
 def q31_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    read_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_Q31_BODY)
+    return spark.sql(_Q31_BODY, orders=read_table(spark, sf_dir, "orders"))
 
 
-Q31_SQL = _Q31_BODY  # identical ANSI SQL runs on both engines
+Q31_SQL = _Q31_BODY.format(orders="orders")  # the same ANSI SQL (see Q17_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1297,25 +1297,28 @@ register(
 # ---------------------------------------------------------------------------
 _Q34_BODY = """
 SELECT c_custkey,
-  (SELECT COUNT(*) FROM orders o WHERE o.o_custkey = c.c_custkey)
+  (SELECT COUNT(*) FROM {orders} o WHERE o.o_custkey = c.c_custkey)
     AS n_orders,
-  (SELECT MAX(o_orderdate) FROM orders o WHERE o.o_custkey = c.c_custkey)
+  (SELECT MAX(o_orderdate) FROM {orders} o WHERE o.o_custkey = c.c_custkey)
     AS last_order
-FROM customer c
+FROM {customer} c
 WHERE c_mktsegment = 'BUILDING'
 """
 
 
 def q34_correlated_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    read_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    read_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     # bulk per-customer export: partition-local order only (the shared
     # ANSI body carries no ORDER BY; the oracle compare is
     # order-insensitive)
-    return spark.sql(_Q34_BODY).sortWithinPartitions("c_custkey")
+    return spark.sql(
+        _Q34_BODY,
+        customer=read_table(spark, sf_dir, "customer"),
+        orders=read_table(spark, sf_dir, "orders"),
+    ).sortWithinPartitions("c_custkey")
 
 
-Q34_SQL = _Q34_BODY  # identical ANSI SQL runs on both engines
+# the same ANSI SQL (see Q17_SQL)
+Q34_SQL = _Q34_BODY.format(customer="customer", orders="orders")
 
 
 register(
@@ -1449,9 +1452,9 @@ register(
 # discipline.
 # ---------------------------------------------------------------------------
 def q36_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    read_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql("""
-        FROM lineitem
+    return spark.sql(
+        """
+        FROM {lineitem}
         |> WHERE l_shipdate <= DATE'1998-09-02'
         |> AGGREGATE
              COUNT(*) AS n_rows,
@@ -1459,7 +1462,9 @@ def q36_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
              SUM(CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)) AS price_c
            GROUP BY l_returnflag, l_linestatus
         |> ORDER BY l_returnflag, l_linestatus
-    """)
+        """,
+        lineitem=read_table(spark, sf_dir, "lineitem"),
+    )
 
 
 Q36_SQL = """
@@ -1808,12 +1813,12 @@ register(
 # ---------------------------------------------------------------------------
 _Q44_BODY = """
 SELECT r.r_name AS region, t.n_name AS nation, t.bal_cents
-FROM region r,
+FROM {region} r,
 LATERAL (
   SELECT n.n_name,
     CAST(SUM(CAST(ROUND(c.c_acctbal * 100, 0) AS BIGINT)) AS BIGINT)
       AS bal_cents
-  FROM nation n JOIN customer c ON c.c_nationkey = n.n_nationkey
+  FROM {nation} n JOIN {customer} c ON c.c_nationkey = n.n_nationkey
   WHERE n.n_regionkey = r.r_regionkey
   GROUP BY n.n_name
   ORDER BY bal_cents DESC, n.n_name
@@ -1824,12 +1829,12 @@ ORDER BY region, bal_cents DESC, nation
 
 
 def q44_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    for t in ("region", "nation", "customer"):
-        read_table(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_Q44_BODY)
+    tables = ("region", "nation", "customer")
+    return spark.sql(_Q44_BODY, **{t: read_table(spark, sf_dir, t) for t in tables})
 
 
-Q44_SQL = _Q44_BODY  # identical ANSI SQL runs on both engines
+# the same ANSI SQL (see Q17_SQL)
+Q44_SQL = _Q44_BODY.format(region="region", nation="nation", customer="customer")
 
 
 register(
@@ -1913,7 +1918,6 @@ register(
 # ---------------------------------------------------------------------------
 def q46_recursive_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = read_table(spark, sf_dir, "orders")
-    orders.createOrReplaceTempView("orders")
     b = orders.agg(
         F.date_trunc("month", F.min("o_orderdate")).cast("date").alias("mmin"),
         F.date_trunc("month", F.max("o_orderdate")).cast("date").alias("mmax"),
@@ -1928,12 +1932,13 @@ WITH RECURSIVE spine(m) AS (
 ),
 monthly AS (
   SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS m, COUNT(*) AS n
-  FROM orders GROUP BY 1
+  FROM {{orders}} GROUP BY 1
 )
 SELECT spine.m AS month_start, CAST(COALESCE(monthly.n, 0) AS BIGINT) AS n_orders
 FROM spine LEFT JOIN monthly ON spine.m = monthly.m
 ORDER BY month_start
-"""
+""",
+        orders=orders,
     )
 
 

@@ -241,12 +241,15 @@ register(
 _KS_BUCKET = 5_000  # whole-dollar ECDF grid step
 
 
-def qc_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    counts = _drift_counts(spark, sf_dir, _KS_BUCKET)
+def _ecdf_gaps(counts: DataFrame, steps: DataFrame) -> DataFrame:
+    """One row per grid step of ``steps`` (bucket, n_ref, n_cur): the
+    exact common-denominator ECDF gap ``gap`` = |cum_ref·t_cur −
+    cum_cur·t_ref| (DECIMAL(37,0)) beside the window totals ``t_ref`` /
+    ``t_cur`` of ``counts``."""
     w = Window.orderBy("bucket").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    cum = counts.select(
+    cum = steps.select(
         F.sum("n_ref").over(w).cast("decimal(19,0)").alias("cum_ref"),
         F.sum("n_cur").over(w).cast("decimal(19,0)").alias("cum_cur"),
     )
@@ -254,19 +257,49 @@ def qc_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_ref").cast("bigint").alias("t_ref"),
         F.sum("n_cur").cast("bigint").alias("t_cur"),
     )
+    gap = F.abs(
+        (F.col("cum_ref") * F.col("t_cur").cast("decimal(18,0)")).cast(
+            "decimal(37,0)"
+        )
+        - (F.col("cum_cur") * F.col("t_ref").cast("decimal(18,0)")).cast(
+            "decimal(37,0)"
+        )
+    )
+    return cum.crossJoin(F.broadcast(totals)).withColumn("gap", gap)
+
+
+def _ecdf_gaps_sql(steps: str) -> str:
+    """The SQL twin of :func:`_ecdf_gaps` over the ``counts`` CTE and a
+    ``steps`` CTE, ending in ``gaps(t_ref, t_cur, gap)``."""
+    return f"""cum AS (
+  SELECT
+    CAST(SUM(n_ref) OVER (ORDER BY bucket
+      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DECIMAL(19,0))
+      AS cum_ref,
+    CAST(SUM(n_cur) OVER (ORDER BY bucket
+      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DECIMAL(19,0))
+      AS cum_cur
+  FROM {steps}
+),
+totals AS (
+  SELECT CAST(SUM(n_ref) AS BIGINT) AS t_ref,
+         CAST(SUM(n_cur) AS BIGINT) AS t_cur
+  FROM counts
+),
+gaps AS (
+  SELECT t_ref, t_cur,
+    ABS(CAST(cum_ref * CAST(t_cur AS DECIMAL(18,0)) AS DECIMAL(37,0))
+        - CAST(cum_cur * CAST(t_ref AS DECIMAL(18,0)) AS DECIMAL(37,0))) AS gap
+  FROM cum, totals
+)"""
+
+
+def qc_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    counts = _drift_counts(spark, sf_dir, _KS_BUCKET)
     return (
-        cum.crossJoin(F.broadcast(totals))
+        _ecdf_gaps(counts, counts)
         .agg(
-            F.max(
-                F.abs(
-                    (
-                        F.col("cum_ref") * F.col("t_cur").cast("decimal(18,0)")
-                    ).cast("decimal(37,0)")
-                    - (
-                        F.col("cum_cur") * F.col("t_ref").cast("decimal(18,0)")
-                    ).cast("decimal(37,0)")
-                )
-            ).alias("ks_num"),
+            F.max("gap").alias("ks_num"),
             F.first("t_ref").alias("t_ref"),
             F.first("t_cur").alias("t_cur"),
         )
@@ -285,36 +318,16 @@ def qc_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QC_DRIFT_KS_SQL = f"""
 WITH {_drift_counts_sql(_KS_BUCKET)},
-cum AS (
-  SELECT
-    CAST(SUM(n_ref) OVER (ORDER BY bucket
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DECIMAL(19,0))
-      AS cum_ref,
-    CAST(SUM(n_cur) OVER (ORDER BY bucket
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DECIMAL(19,0))
-      AS cum_cur
-  FROM counts
-),
-totals AS (
-  SELECT CAST(SUM(n_ref) AS BIGINT) AS t_ref,
-         CAST(SUM(n_cur) AS BIGINT) AS t_cur
-  FROM counts
-)
+{_ecdf_gaps_sql("counts")}
 -- no GROUP BY: a global aggregate returns its one (all-NULL on empty
 -- input) row exactly like Spark's .agg() global — t_ref/t_cur are
 -- constant over the cross join so first() is deterministic
 SELECT first(t_ref) AS t_ref, first(t_cur) AS t_cur,
-  CAST(MAX(ABS(
-    CAST(cum_ref * CAST(t_cur AS DECIMAL(18,0)) AS DECIMAL(37,0))
-    - CAST(cum_cur * CAST(t_ref AS DECIMAL(18,0)) AS DECIMAL(37,0))))
-    AS BIGINT) AS ks_num,
-  ROUND(CAST(MAX(ABS(
-    CAST(cum_ref * CAST(t_cur AS DECIMAL(18,0)) AS DECIMAL(37,0))
-    - CAST(cum_cur * CAST(t_ref AS DECIMAL(18,0)) AS DECIMAL(37,0))))
-      AS DOUBLE)
+  CAST(MAX(gap) AS BIGINT) AS ks_num,
+  ROUND(CAST(MAX(gap) AS DOUBLE)
         / (CAST(first(t_ref) AS DOUBLE) * CAST(first(t_cur) AS DOUBLE)), 6)
     AS ks_stat
-FROM cum, totals
+FROM gaps
 """
 
 
@@ -508,32 +521,13 @@ def qc_drift_wasserstein(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce("n_ref", F.lit(0)).alias("n_ref"),
         F.coalesce("n_cur", F.lit(0)).alias("n_cur"),
     )
-    w = Window.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = dense.select(
-        F.sum("n_ref").over(w).cast("decimal(19,0)").alias("cum_ref"),
-        F.sum("n_cur").over(w).cast("decimal(19,0)").alias("cum_cur"),
-    )
-    totals = counts.agg(
-        F.sum("n_ref").cast("bigint").alias("t_ref"),
-        F.sum("n_cur").cast("bigint").alias("t_cur"),
-    )
-    gap = F.abs(
-        (F.col("cum_ref") * F.col("t_cur").cast("decimal(18,0)")).cast(
-            "decimal(37,0)"
-        )
-        - (F.col("cum_cur") * F.col("t_ref").cast("decimal(18,0)")).cast(
-            "decimal(37,0)"
-        )
-    )
     return (
-        cum.crossJoin(F.broadcast(totals))
+        _ecdf_gaps(counts, dense)
         .agg(
             F.first("t_ref").alias("t_ref"),
             F.first("t_cur").alias("t_cur"),
             F.count("*").cast("bigint").alias("grid_buckets"),
-            F.sum(gap).cast("decimal(38,0)").alias("w1_num"),
+            F.sum("gap").cast("decimal(38,0)").alias("w1_num"),
         )
         .select(
             "t_ref",
@@ -567,34 +561,14 @@ dense AS (
     COALESCE(c.n_cur, 0) AS n_cur
   FROM grid g LEFT JOIN counts c ON g.bucket = c.bucket
 ),
-cum AS (
-  SELECT
-    CAST(SUM(n_ref) OVER (ORDER BY bucket
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DECIMAL(19,0))
-      AS cum_ref,
-    CAST(SUM(n_cur) OVER (ORDER BY bucket
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DECIMAL(19,0))
-      AS cum_cur
-  FROM dense
-),
-totals AS (
-  SELECT CAST(SUM(n_ref) AS BIGINT) AS t_ref,
-         CAST(SUM(n_cur) AS BIGINT) AS t_cur
-  FROM counts
-)
+{_ecdf_gaps_sql("dense")}
 SELECT first(t_ref) AS t_ref, first(t_cur) AS t_cur,
   CAST(COUNT(*) AS BIGINT) AS grid_buckets,
-  CAST(SUM(ABS(
-    CAST(cum_ref * CAST(t_cur AS DECIMAL(18,0)) AS DECIMAL(37,0))
-    - CAST(cum_cur * CAST(t_ref AS DECIMAL(18,0)) AS DECIMAL(37,0))))
-    AS BIGINT) AS w1_num,
-  ROUND(CAST(SUM(ABS(
-    CAST(cum_ref * CAST(t_cur AS DECIMAL(18,0)) AS DECIMAL(37,0))
-    - CAST(cum_cur * CAST(t_ref AS DECIMAL(18,0)) AS DECIMAL(37,0))))
-      AS DOUBLE) * {float(_KS_BUCKET)}
+  CAST(SUM(gap) AS BIGINT) AS w1_num,
+  ROUND(CAST(SUM(gap) AS DOUBLE) * {float(_KS_BUCKET)}
         / (CAST(first(t_ref) AS DOUBLE) * CAST(first(t_cur) AS DOUBLE)), 6)
     AS w1_dollars
-FROM cum, totals
+FROM gaps
 """
 
 

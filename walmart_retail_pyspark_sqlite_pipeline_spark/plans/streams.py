@@ -25,8 +25,11 @@ def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sessionize(ev).sortWithinPartitions("user_id", "session_idx")
 
 
-SESSIONIZE_SQL = """
-WITH e AS (
+#: ``sess(user_id, ts_s, session_idx)``: every event's epoch second and
+#: its per-user session number (a new session after a gap over 30 min),
+#: the SQL twin of ``streaming.sessionize``'s split; shared by the
+#: session oracles.
+SESSION_CTES = """e AS (
   SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS ts_s
   FROM events
 ),
@@ -43,7 +46,10 @@ sess AS (
     CAST(SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts_s, event_id
                              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_idx
   FROM flagged
-)
+)"""
+
+SESSIONIZE_SQL = f"""
+WITH {SESSION_CTES}
 SELECT user_id, session_idx,
   MIN(ts_s) AS session_start,
   MAX(ts_s) AS session_end,

@@ -16,6 +16,7 @@ from pyspark.sql.window import Window
 from ..sources import read_table
 from ..streaming.events import SESSION_GAP_S
 from .registry import QuerySpec, register
+from .streams import SESSION_CTES
 
 
 # ---------------------------------------------------------------------------
@@ -309,25 +310,8 @@ def events_session_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SESSION_CONCURRENCY_SQL = """
-WITH e AS (
-  SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS ts_s
-  FROM events
-),
-flagged AS (
-  SELECT user_id, event_id, ts_s,
-    CASE WHEN lag(ts_s) OVER w IS NULL
-              OR ts_s - lag(ts_s) OVER w > 1800
-         THEN 1 ELSE 0 END AS new_sess
-  FROM e
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts_s, event_id)
-),
-sess AS (
-  SELECT user_id, ts_s,
-    SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts_s, event_id
-                        ROWS UNBOUNDED PRECEDING) AS session_idx
-  FROM flagged
-),
+SESSION_CONCURRENCY_SQL = f"""
+WITH {SESSION_CTES},
 bounds AS (
   SELECT user_id, session_idx,
     MIN(ts_s) // 3600 AS h_lo, MAX(ts_s) // 3600 AS h_hi
@@ -2905,57 +2889,18 @@ def events_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("sy_b"),
     )
-    # every derived column is ONE mirrored double expression over the 12
-    # exact integer moments; the shared scalar subexpressions are spelled
-    # out identically in the SQL twin so both engines evaluate the same
-    # IEEE operation tree.
-    d = "CAST(%s AS DOUBLE)"
-    varx = (
-        f"({d % 'n'} * {d % 'sxx'} - {d % 'sx'} * {d % 'sx'})"
-    )
-    vary = (
-        f"({d % 'n'} * {d % 'syy'} - {d % 'sy'} * {d % 'sy'})"
-    )
-    covxy = (
-        f"({d % 'n'} * {d % 'sxy'} - {d % 'sx'} * {d % 'sy'})"
-    )
-    theta = f"CASE WHEN {varx} = 0 THEN CAST(NULL AS DOUBLE) ELSE {covxy} / {varx} END"
-    mean = "CASE WHEN {n} = 0 THEN CAST(NULL AS DOUBLE) ELSE CAST({s} AS DOUBLE) / CAST({n} AS DOUBLE) END"
-    mean_x = f"(CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))"
-    cuped = (
-        "CASE WHEN {n} = 0 THEN CAST(NULL AS DOUBLE) ELSE "
-        + mean.format(n="{n}", s="{sy}")
-        + f" - ({theta}) * ("
-        + mean.format(n="{n}", s="{sx}")
-        + f" - {mean_x}) END"
-    )
-    cuped_a = cuped.format(n="n_a", sy="sy_a", sx="sx_a")
-    cuped_b = cuped.format(n="n_b", sy="sy_b", sx="sx_b")
     return stats.select(
         "n_a",
         "n_b",
-        F.expr(mean.format(n="n_a", s="sy_a")).alias("mean_y_a"),
-        F.expr(mean.format(n="n_b", s="sy_b")).alias("mean_y_b"),
-        F.expr(theta).alias("theta"),
-        F.expr(
-            "CASE WHEN n_a = 0 OR n_b = 0 THEN CAST(NULL AS DOUBLE) ELSE "
-            + mean.format(n="n_a", s="sy_a")
-            + " - "
-            + mean.format(n="n_b", s="sy_b")
-            + " END"
-        ).alias("diff_raw"),
-        F.expr(
-            "CASE WHEN n_a = 0 OR n_b = 0 THEN CAST(NULL AS DOUBLE) ELSE "
-            f"({cuped_a}) - ({cuped_b}) END"
-        ).alias("diff_cuped"),
-        F.expr(
-            f"CASE WHEN {varx} = 0 OR {vary} = 0 THEN CAST(NULL AS DOUBLE) "
-            f"ELSE ({covxy} * {covxy}) / ({varx} * {vary}) END"
-        ).alias("rho2"),
+        *[F.expr(sql).alias(name) for name, sql in _CUPED_COLUMNS.items()],
     )
 
 
-def _cuped_sql() -> str:
+def _cuped_columns() -> dict[str, str]:
+    """The readout columns as ONE set of SQL expressions over the 12 exact
+    integer moments. Both engines evaluate these strings verbatim (Spark
+    through ``F.expr``, DuckDB in the oracle's SELECT), so both evaluate
+    the same IEEE operation tree."""
     d = "CAST(%s AS DOUBLE)"
     varx = f"({d % 'n'} * {d % 'sxx'} - {d % 'sx'} * {d % 'sx'})"
     vary = f"({d % 'n'} * {d % 'syy'} - {d % 'sy'} * {d % 'sy'})"
@@ -2978,6 +2923,27 @@ def _cuped_sql() -> str:
     )
     cuped_a = cuped.format(n="n_a", sy="sy_a", sx="sx_a")
     cuped_b = cuped.format(n="n_b", sy="sy_b", sx="sx_b")
+    both = "CASE WHEN n_a = 0 OR n_b = 0 THEN CAST(NULL AS DOUBLE) ELSE "
+    return {
+        "mean_y_a": mean.format(n="n_a", s="sy_a"),
+        "mean_y_b": mean.format(n="n_b", s="sy_b"),
+        "theta": theta,
+        "diff_raw": both
+        + mean.format(n="n_a", s="sy_a")
+        + " - "
+        + mean.format(n="n_b", s="sy_b")
+        + " END",
+        "diff_cuped": f"{both}({cuped_a}) - ({cuped_b}) END",
+        "rho2": f"CASE WHEN {varx} = 0 OR {vary} = 0 THEN CAST(NULL AS DOUBLE) "
+        f"ELSE ({covxy} * {covxy}) / ({varx} * {vary}) END",
+    }
+
+
+_CUPED_COLUMNS = _cuped_columns()
+
+
+def _cuped_sql() -> str:
+    readout = ",\n  ".join(f"{sql} AS {name}" for name, sql in _CUPED_COLUMNS.items())
     return f"""
 WITH bounds AS (
   SELECT (MIN(CAST(floor(epoch(ts)) AS BIGINT))
@@ -3012,16 +2978,7 @@ stats AS (
   FROM per_user
 )
 SELECT n_a, n_b,
-  {mean.format(n="n_a", s="sy_a")} AS mean_y_a,
-  {mean.format(n="n_b", s="sy_b")} AS mean_y_b,
-  {theta} AS theta,
-  CASE WHEN n_a = 0 OR n_b = 0 THEN CAST(NULL AS DOUBLE) ELSE
-    {mean.format(n="n_a", s="sy_a")} - {mean.format(n="n_b", s="sy_b")}
-  END AS diff_raw,
-  CASE WHEN n_a = 0 OR n_b = 0 THEN CAST(NULL AS DOUBLE) ELSE
-    ({cuped_a}) - ({cuped_b}) END AS diff_cuped,
-  CASE WHEN {varx} = 0 OR {vary} = 0 THEN CAST(NULL AS DOUBLE)
-    ELSE ({covxy} * {covxy}) / ({varx} * {vary}) END AS rho2
+  {readout}
 FROM stats
 """
 
