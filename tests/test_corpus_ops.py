@@ -179,6 +179,33 @@ def test_corpus_pipeline_rerun_reads_changed_documents(spark, tmp_path):
     assert stats["docs"] == len(want)
 
 
+def test_registry_rerun_reads_changed_documents(spark, tmp_path):
+    """A registry query re-run in one session after its documents changed
+    at the same path answers for the new file (the source invalidates the
+    shingle index the first run cached), matching its DuckDB oracle."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from walmart_retail_pyspark_sqlite_pipeline_spark.plans.llm import (
+        DEDUP_MINHASH_PAIRS_SQL,
+    )
+
+    docs = pq.read_table(f"{SF_SMALL}/documents.parquet")
+    path = tmp_path / "documents.parquet"
+    pq.write_table(docs, path)
+    assert dedup_minhash_lsh_pairs(spark, str(tmp_path)).collect()
+    pq.write_table(docs.slice(0, docs.num_rows // 2), path)
+    got = dedup_minhash_lsh_pairs(spark, str(tmp_path)).collect()
+
+    con = duckdb.connect()
+    try:
+        con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
+        want = con.execute(DEDUP_MINHASH_PAIRS_SQL).fetchall()
+    finally:
+        con.close()
+    assert sorted(tuple(r) for r in got) == sorted(tuple(r) for r in want)
+
+
 def _plan_nodes_outside_cache(node):
     """Physical plan nodes reachable through ``children()``, not entering
     cached-data scans (their plans are the cache's, built once)."""
@@ -253,25 +280,29 @@ def test_lsh_candidates_far_fewer_than_all_pairs(spark):
 
 
 def test_split_decision_keyed_by_plan(spark, monkeypatch):
-    """undersplit() probes once per documents plan: two separate reads of
-    one path share a decision, and a frame no path backs gets its own."""
+    """repartition_undersplit() probes once per documents plan: two
+    separate reads of one path share a decision, and a frame no path
+    backs gets its own. An under-split frame comes back hash-partitioned
+    on doc_id into the session's default parallelism."""
     from walmart_retail_pyspark_sqlite_pipeline_spark import session
 
-    probes = []
-    real = session.default_parallelism
+    class Probes(dict):
+        stored = 0
 
-    def counting():
-        probes.append(1)
-        return real()
+        def __setitem__(self, key, hit):
+            Probes.stored += 1
+            super().__setitem__(key, hit)
 
-    monkeypatch.setattr(session, "_SPLIT_DECISIONS", {})
-    monkeypatch.setattr(session, "default_parallelism", counting)
-    first = session.undersplit(read_table(spark, SF_SMALL, "documents"))
-    second = session.undersplit(read_table(spark, SF_SMALL, "documents"))
-    assert first == second and len(probes) == 1
+    monkeypatch.setattr(session, "_SPLIT_DECISIONS", Probes())
+    first = session.repartition_undersplit(read_table(spark, SF_SMALL, "documents"))
+    second = session.repartition_undersplit(read_table(spark, SF_SMALL, "documents"))
+    assert Probes.stored == 1
+    n = spark.sparkContext.defaultParallelism
+    # the testdata documents file is one split, below any parallelism > 1
+    assert first.rdd.getNumPartitions() == second.rdd.getNumPartitions() == n
     local = spark.createDataFrame([Row(doc_id=1, text="a b c")])
-    assert isinstance(session.undersplit(local), bool)
-    assert len(probes) == 2 and len(session._SPLIT_DECISIONS) == 2
+    session.repartition_undersplit(local)
+    assert Probes.stored == 2 and len(session._SPLIT_DECISIONS) == 2
 
 
 def test_pagerank_is_a_probability_distribution(spark):

@@ -1,8 +1,7 @@
-"""Multimodal decode tests: the REAL header-decode path (PNG/GIF/JPEG via
-pure stdlib) against payloads with known true dimensions, the deterministic
-pseudo-decode fallback for unrecognized payloads, and a PIL cross-check
-that activates wherever Pillow is installed (no skip — the stdlib parser
-is asserted unconditionally)."""
+"""Multimodal decode tests: the header decode (PNG/GIF/JPEG, built-in
+expressions) against payloads with known true dimensions, the
+deterministic pseudo-decode for unrecognized payloads, and the frame and
+feature passes against hand-computed truths and their DuckDB oracles."""
 
 from __future__ import annotations
 
@@ -11,9 +10,7 @@ import zlib
 
 from tests.conftest import SF_SMALL
 from walmart_retail_pyspark_sqlite_pipeline_spark.multimodal.binary import (
-    _HAVE_PIL,
     image_meta,
-    parse_image_dims,
 )
 from walmart_retail_pyspark_sqlite_pipeline_spark.plans.llm import (
     multimodal_audio_vad_segments,
@@ -48,8 +45,9 @@ def make_gif(w: int, h: int) -> bytes:
     return b"GIF89a" + struct.pack("<HH", w, h) + b"\x00\x00\x00\x3b"
 
 
-def make_jpeg(w: int, h: int) -> bytes:
-    """Minimal JPEG: SOI, an APP0 segment to force marker walking, SOF0."""
+def make_jpeg(w: int, h: int, before_sof: bytes = b"") -> bytes:
+    """Minimal JPEG: SOI, an APP0 segment to force marker walking,
+    ``before_sof`` (more markers), SOF0."""
     app0 = b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + b"\x00" * 9
     sof0 = (
         b"\xff\xc0"
@@ -58,53 +56,50 @@ def make_jpeg(w: int, h: int) -> bytes:
         + struct.pack(">HH", h, w)
         + b"\x01\x01\x11\x00"
     )
-    return b"\xff\xd8" + app0 + sof0 + b"\xff\xd9"
-
-
-def test_parse_image_dims_real_headers():
-    assert parse_image_dims(make_png(37, 21)) == (37, 21)
-    assert parse_image_dims(make_png(1, 1)) == (1, 1)
-    assert parse_image_dims(make_gif(640, 480)) == (640, 480)
-    assert parse_image_dims(make_jpeg(123, 456)) == (123, 456)
-    # unrecognized payloads → None (falls back to the pseudo-decode)
-    assert parse_image_dims(b"just some text") is None
-    assert parse_image_dims(b"") is None
-    assert parse_image_dims(b"\x89PNG\r\n\x1a\n_tooshort") is None
-
-
-def test_parse_image_dims_matches_pil_when_present():
-    """Cross-check the stdlib parser against Pillow wherever it exists;
-    the stdlib assertions above run unconditionally either way."""
-    if not _HAVE_PIL:
-        return
-    import io
-
-    from PIL import Image
-
-    for payload in [make_png(37, 21), make_gif(640, 480), make_jpeg(123, 456)]:
-        with Image.open(io.BytesIO(payload)) as img:
-            assert parse_image_dims(payload) == (img.width, img.height)
+    return b"\xff\xd8" + app0 + before_sof + sof0 + b"\xff\xd9"
 
 
 def test_image_meta_decodes_real_payloads(spark):
-    """End-to-end through the Arrow mapInPandas plumbing: real image
-    payloads produce their TRUE dimensions (n_frames=1); a text payload in
-    the same batch falls back to the deterministic pseudo-decode."""
-    png, gif, jpg = make_png(37, 21), make_gif(640, 480), make_jpeg(123, 456)
-    text = b"not an image at all"
+    """Real image payloads produce their TRUE header dimensions
+    (n_frames=1); anything no header parse accepts (text, a truncated
+    PNG, a JPEG cut off before its SOF, an empty payload) gets the
+    deterministic pseudo-decode from its byte length; a NULL payload
+    gives no row."""
+    dht = b"\xff\xc4" + struct.pack(">H", 5) + b"\x00\x01\x02"
+    real = {
+        1: (make_png(37, 21), (37, 21)),
+        2: (make_png(1, 1), (1, 1)),
+        3: (make_gif(640, 480), (640, 480)),
+        4: (b"GIF87a" + struct.pack("<HH", 7, 9) + b"\x00\x00\x00\x3b", (7, 9)),
+        5: (make_jpeg(123, 456), (123, 456)),
+        # a fill byte and a DHT (0xC4, not a SOF) before the SOF0
+        6: (make_jpeg(300, 200, before_sof=b"\xff" + dht), (300, 200)),
+    }
+    pseudo = {
+        7: b"not an image at all",
+        8: b"\x89PNG\r\n\x1a\n_tooshort",
+        9: b"",
+        10: make_jpeg(123, 456)[:22],
+    }
     df = spark.createDataFrame(
-        [(1, png), (2, gif), (3, jpg), (4, text)],
+        [(k, p) for k, (p, _) in real.items()]
+        + list(pseudo.items())
+        + [(11, None)],
         "doc_id long, payload binary",
     )
     rows = {r.doc_id: r for r in image_meta(df).collect()}
-    assert (rows[1].width, rows[1].height, rows[1].n_frames) == (37, 21, 1)
-    assert (rows[2].width, rows[2].height, rows[2].n_frames) == (640, 480, 1)
-    assert (rows[3].width, rows[3].height, rows[3].n_frames) == (123, 456, 1)
+    assert set(rows) == set(real) | set(pseudo), "a NULL payload gives no row"
+    for k, (payload, dims) in real.items():
+        r = rows[k]
+        assert (r.width, r.height, r.n_frames) == (*dims, 1), k
+        assert r.byte_len == len(payload)
     # pseudo path: dims derive from byte length, matching the oracle model
-    n = len(text)
-    assert (rows[4].width, rows[4].height) == (16 + n % 64, 16 + (n * 7) % 64)
-    assert rows[4].n_frames == 1 + n % 8
-    assert all(rows[i].byte_len == len(p) for i, p in [(1, png), (2, gif), (3, jpg)])
+    for k, payload in pseudo.items():
+        n = len(payload)
+        r = rows[k]
+        assert r.byte_len == n
+        assert (r.width, r.height) == (16 + n % 64, 16 + (n * 7) % 64), k
+        assert r.n_frames == 1 + n % 8
 
 
 def test_image_features_drops_empty_and_null_payloads(spark):

@@ -7,10 +7,10 @@ if ANY registered plan picks up
 - a ``CartesianProduct`` (unbounded cross join — the classic accidental
   O(N^2); broadcast 1-row cross joins plan as BroadcastNestedLoopJoin and
   are allowed only when the build side is a broadcast),
-- row-at-a-time Python (``BatchEvalPython`` — the slow path this engine
-  bans in relational queries; Arrow surfaces ``ArrowEvalPython`` /
-  ``MapInPandas`` / ``PythonMapInArrow`` are whitelisted only for the
-  multimodal Arrow plumbing),
+- any Python boundary (``BatchEvalPython``, ``ArrowEvalPython``,
+  ``MapInPandas``, ``PythonMapInArrow``, ``EvalPythonUDTF``,
+  ``FlatMapGroupsInPandas``) — every plan stays in the JVM, the
+  multimodal decode included,
 - a sort-based fallback aggregate where a hash aggregate was expected is
   NOT checked: ``ObjectHashAggregate``/``SortAggregate`` appear legally
   for collect_list/sketches.
@@ -28,20 +28,15 @@ import pytest
 from tests.conftest import SF_SMALL
 from walmart_retail_pyspark_sqlite_pipeline_spark.plans.registry import all_specs
 
-#: queries whose Python boundary is the point (Arrow multimodal plumbing)
-#: — any OTHER query showing Python in its plan fails.
-PYTHON_ALLOWED = {
-    "multimodal_image_meta",  # Arrow mapInPandas decode stub
-    "multimodal_frame_sample",  # Arrow mapInPandas 1->N expansion
-    "multimodal_image_resize",  # Arrow mapInPandas resize planning
-    "multimodal_image_features",  # Arrow mapInPandas feature vectors
-    "multimodal_image_features_vec",  # array-shaped local surface of same
-    "multimodal_image_ann",  # Arrow feature pass feeding the cosine top-k
-    "multimodal_scene_cut",  # Arrow per-frame byte-energy pass (round 9)
-    "multimodal_keyframe_select",  # same Arrow frame-energy pass (round 10)
-    "multimodal_audio_vad_segments",  # same Arrow frame-energy pass (round 11)
-    "multimodal_audio_meta",  # Arrow mapInPandas audio metadata
-}
+#: physical operators that hand rows to a Python worker
+PYTHON_NODES = (
+    "BatchEvalPython",
+    "ArrowEvalPython",
+    "MapInPandas",
+    "MapInArrow",  # also matches PythonMapInArrow
+    "EvalPythonUDTF",
+    "FlatMapGroupsInPandas",
+)
 
 #: queries that legitimately execute a Structured Streaming job inside the
 #: query function; their batch plan is audited via their batch twins.
@@ -182,7 +177,7 @@ MULTI_TEXT_SCAN_ALLOWED: dict[str, tuple[int, str]] = {
     # split-assignment self-join (sa/sb) + the LSH pair legs; the final
     # adaptive plan reads the split scan once (verified)
     "corpus_split_leakage": (3, "split-table join sides + LSH leg; runtime reuses"),
-    # image-ANN: Arrow feature pass + in-plan query-vector leg
+    # image-ANN: feature pass + in-plan query-vector leg
     "multimodal_image_ann": (2, "feature pass + query-vector leg"),
     # round-11 additions at their floors
     "corpus_soft_dedup_weights": (2, "md5 scan + LSH shingle-index leg"),
@@ -443,7 +438,6 @@ def test_allowlists_name_registered_queries():
     query that reuses the name, so every allowlisted name must resolve."""
     registered = all_specs(include_local=True).keys()
     allowlists = {
-        "PYTHON_ALLOWED": PYTHON_ALLOWED,
         "STREAMING": STREAMING,
         "GLOBAL_SORT_PRESENTATIONAL": GLOBAL_SORT_PRESENTATIONAL,
         "GLOBAL_SORT_MIGRATION_PENDING": GLOBAL_SORT_MIGRATION_PENDING,
@@ -481,11 +475,8 @@ def test_plan_has_no_scale_hazards(spark, name, spec):
 
     assert "CartesianProduct" not in plan, f"{name}: cartesian product\n{plan}"
 
-    if name not in PYTHON_ALLOWED:
-        assert "BatchEvalPython" not in plan, f"{name}: row-Python\n{plan}"
-        assert "MapInPandas" not in plan and "EvalPythonUDTF" not in plan, (
-            f"{name}: unexpected Python boundary\n{plan}"
-        )
+    python = [node for node in PYTHON_NODES if node in plan]
+    assert not python, f"{name}: Python boundary {python}\n{plan}"
 
     # BroadcastNestedLoopJoin is only tolerable when it IS a broadcast —
     # i.e. never as an inner/outer join without a broadcast side (Spark

@@ -239,3 +239,29 @@ def test_every_engine_module_is_reached_from_an_entry_point():
     }
     unreached = sorted(modules - seen - _UNREACHED_OK)
     assert unreached == [], f"modules no entry point reaches: {unreached}"
+
+
+#: modules that move rows into Python: a package that imports none of
+#: them keeps every query plan in the JVM
+_PYTHON_DATA_MODULES = {"pandas", "numpy", "PIL"}
+
+
+def test_no_engine_module_imports_python_data_libraries():
+    """Spark-free twin of the plan audit's no-Python-boundary rule: no
+    package module imports pandas, numpy or PIL, at module level or
+    inside a function."""
+    found = []
+    for path in sorted(_PKG_DIR.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and node.level == 0:
+                names = [node.module]
+            else:
+                continue
+            found += [
+                f"{path.relative_to(_REPO)}:{node.lineno} {name}"
+                for name in names
+                if name.split(".")[0] in _PYTHON_DATA_MODULES
+            ]
+    assert found == [], f"engine modules import Python data libraries: {found}"

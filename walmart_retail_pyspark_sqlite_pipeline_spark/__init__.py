@@ -9,8 +9,8 @@ event-time windows, multimodal column plumbing).
 Design principles (see SURVEY.md §7):
 - Declare plans with the DataFrame/SQL API; let Catalyst + Tungsten pick the
   physical strategy. No RDDs, no driver-side row loops.
-- Built-in ``pyspark.sql.functions`` in the hot path; Arrow-batched pandas
-  UDFs only where built-ins genuinely cannot express the semantics.
+- Built-in ``pyspark.sql.functions`` only: no query plan crosses into
+  Python (the multimodal decode included).
 - Every operator ships with a DuckDB-oracle SQL twin for correctness
   (see ``plans.registry``).
 """

@@ -1,91 +1,81 @@
 """Multimodal column plumbing: opaque ``binary`` payloads + typed metadata.
 
-The Spark-side pattern is real and scale-correct — binary column, Arrow
-batches through ``mapInPandas``, per-batch vectorized work, no
-``collect()``.
+Every pass is built-in expressions over the binary column, so the plan
+stays in the JVM and nothing is collected. Payload bytes are read from
+the column's ``hex()`` dump, the way the DuckDB oracles read them.
 
 The decode itself is tiered:
 
-1. **Real header decode** (always available, pure stdlib): PNG / GIF /
-   JPEG payloads get their TRUE width/height parsed from the container
-   header (IHDR chunk, logical-screen descriptor, SOF marker) — no
-   imaging library needed for metadata extraction.
-2. **PIL fallback** (import-gated; absent in this container): full decode
-   for any other format Pillow recognizes.
-3. **Deterministic pseudo-decode** for payloads no decoder recognizes
-   (e.g. the utf-8 text stand-ins the oracle-graded fixture queries use) —
-   pseudo-dims from the payload length so the DuckDB oracle can reproduce
-   them. Pixel-level ops (resize kernels, CNN features) remain stubbed;
-   the schema, partitioning, UDF signature, and batch shape are the same
-   ones a Pillow/torchaudio kernel would use.
+1. **Real header decode**: PNG / GIF / JPEG payloads get their TRUE
+   width/height from the container header (IHDR chunk, logical-screen
+   descriptor, SOF marker) — no imaging library needed for metadata.
+2. **Deterministic pseudo-decode** for payloads no header matches (e.g.
+   the utf-8 text stand-ins the oracle-graded fixture queries use) —
+   pseudo-dims from the payload length so the oracle can reproduce them.
+   Pixel-level ops (resize kernels, CNN features) remain stubbed; the
+   schema and row shape are the ones a real decoder would produce.
 
-At 100 TB: payloads live in parquet binary columns (or object-store URIs
-resolved inside the batch fn); ``mapInPandas`` streams Arrow batches so
-executor memory is bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch``.
+A NULL payload gives no row (nothing to decode; the oracles filter
+``text IS NOT NULL``). An EMPTY payload keeps its metadata and frame rows
+(byte_len 0 is meaningful) but gives no feature row.
 """
 
 from __future__ import annotations
 
-import struct
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-IMAGE_META_SCHEMA = (
-    "doc_id long, byte_len int, width int, height int, n_frames int"
+#: the payload's unsigned byte values as ``array<int>``, in one pass over
+#: its hex dump (a ``substr`` of byte j on the hex string is O(j) per call)
+_BYTES = (
+    "transform(regexp_extract_all(hex(payload), '(..)', 1),"
+    " x -> CAST(conv(x, 16, 10) AS INT))"
 )
 
-_HAVE_PIL = False
-try:  # full-decode fallback gated behind an import-try; absent here
-    from PIL import Image  # noqa: F401
-
-    _HAVE_PIL = True
-except ImportError:
-    pass
-
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
 # JPEG start-of-frame markers carrying dimensions (C4=DHT, C8=JPG ext,
 # CC=DAC are NOT SOF)
-_JPEG_SOF = frozenset(range(0xC0, 0xD0)) - {0xC4, 0xC8, 0xCC}
+_JPEG_SOF = ", ".join(
+    str(m) for m in sorted(set(range(0xC0, 0xD0)) - {0xC4, 0xC8, 0xCC})
+)
 
 
-def parse_image_dims(b: bytes) -> tuple[int, int] | None:
-    """REAL metadata decode: (width, height) from a PNG / GIF / JPEG
-    payload's own header, pure stdlib. Returns ``None`` for anything
-    else (caller falls back to PIL, then to the pseudo-decode)."""
-    if b.startswith(_PNG_SIG) and len(b) >= 24 and b[12:16] == b"IHDR":
-        w, h = struct.unpack(">II", b[16:24])
-        return int(w), int(h)
-    if b[:6] in (b"GIF87a", b"GIF89a") and len(b) >= 10:
-        w, h = struct.unpack("<HH", b[6:10])
-        return int(w), int(h)
-    if b[:2] == b"\xff\xd8":  # JPEG: walk segment markers to a SOF
-        i = 2
-        while i + 9 <= len(b) and b[i] == 0xFF:
-            marker = b[i + 1]
-            if marker == 0xFF:  # fill byte
-                i += 1
-                continue
-            if marker in _JPEG_SOF:
-                h, w = struct.unpack(">HH", b[i + 5 : i + 9])
-                return int(w), int(h)
-            (seg_len,) = struct.unpack(">H", b[i + 2 : i + 4])
-            i += 2 + seg_len
-    return None
+def _uint(pos: int | str, n: int) -> str:
+    """Big-endian unsigned int of the ``n`` payload bytes at 1-based ``pos``
+    (``substring`` of a binary is O(n), of a string O(pos))."""
+    return f"CAST(conv(hex(substring(payload, {pos}, {n})), 16, 10) AS INT)"
 
 
-def _pil_dims(b: bytes) -> tuple[int, int] | None:
-    if not _HAVE_PIL:
-        return None
-    import io
+#: JPEG (w, h), NULL for any other payload: walk the segment markers from
+#: offset 2 (``s.i``, 0-based) to the first SOF — step over a fill byte,
+#: jump ``2 + seg_len`` over any other segment, stop when fewer than 9
+#: bytes remain or the byte at the walk is not 0xFF (a stop parks ``s.i``
+#: at ``blen``). Each step advances at least one byte, so ``blen`` steps
+#: finish the walk; NULL dims when no SOF is reached.
+_JPEG_DIMS = f"""CASE WHEN substring(payload, 1, 2) = X'FFD8' THEN aggregate(
+  sequence(1, blen),
+  named_struct('i', 2, 'w', CAST(NULL AS INT), 'h', CAST(NULL AS INT)),
+  (s, _) -> CASE
+    WHEN s.w IS NOT NULL OR s.i + 9 > blen THEN s
+    WHEN {_uint("s.i + 1", 1)} != 255 THEN named_struct('i', blen, 'w', s.w, 'h', s.h)
+    WHEN {_uint("s.i + 2", 1)} = 255 THEN named_struct('i', s.i + 1, 'w', s.w, 'h', s.h)
+    WHEN {_uint("s.i + 2", 1)} IN ({_JPEG_SOF})
+      THEN named_struct('i', s.i, 'w', {_uint("s.i + 8", 2)}, 'h', {_uint("s.i + 6", 2)})
+    ELSE named_struct('i', s.i + 2 + {_uint("s.i + 3", 2)}, 'w', s.w, 'h', s.h)
+  END) END"""
 
-    try:
-        with Image.open(io.BytesIO(b)) as img:
-            return int(img.width), int(img.height)
-    except Exception:
-        return None
+
+#: (w, h) from a PNG or GIF header, else from the JPEG walk (NULL when
+#: that found none); the three signatures differ in their first byte
+_HEADER_DIMS = f"""CASE
+  WHEN substring(payload, 1, 8) = X'89504E470D0A1A0A' AND blen >= 24
+       AND substring(payload, 13, 4) = X'49484452'
+    THEN named_struct('w', {_uint(17, 4)}, 'h', {_uint(21, 4)})
+  WHEN substring(payload, 1, 6) IN (X'474946383761', X'474946383961')
+       AND blen >= 10
+    THEN named_struct('w', {_uint(7, 1)} + 256 * {_uint(8, 1)},  -- little-endian
+                      'h', {_uint(9, 1)} + 256 * {_uint(10, 1)})
+  ELSE named_struct('w', jpeg.w, 'h', jpeg.h)
+END"""
 
 
 def attach_fake_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -94,273 +84,135 @@ def attach_fake_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("payload", F.encode(F.col(text_col), "utf-8"))
 
 
-def _decode_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Tiered decode (see module doc): real header parse → PIL → pseudo.
-
-    Real image payloads (PNG/GIF/JPEG) get true dimensions and
-    ``n_frames=1``; unrecognized payloads get the deterministic
-    pseudo-dims the oracle reproduces from the byte length. NULL payloads
-    produce NO row (nothing to decode — quarantine, like the feature
-    kernel; the oracles filter ``text IS NOT NULL`` to match). An EMPTY
-    payload is different: byte_len 0 metadata is meaningful, so it keeps
-    its row via the pseudo path.
-    """
-    pdf = pdf[pdf["payload"].notna()]
-    blen = pdf["payload"].map(len).astype("int64")
-    widths, heights, frames = [], [], []
-    for b, n in zip(pdf["payload"], blen):
-        dims = parse_image_dims(bytes(b)) or _pil_dims(bytes(b))
-        if dims is not None:
-            widths.append(dims[0])
-            heights.append(dims[1])
-            frames.append(1)
-        else:
-            widths.append(16 + n % 64)
-            heights.append(16 + (n * 7) % 64)
-            frames.append(1 + n % 8)
-    return pd.DataFrame(
-        {
-            "doc_id": pdf["doc_id"],
-            "byte_len": blen.astype("int32"),
-            "width": pd.Series(widths, index=pdf.index).astype("int32"),
-            "height": pd.Series(heights, index=pdf.index).astype("int32"),
-            "n_frames": pd.Series(frames, index=pdf.index).astype("int32"),
-        }
-    )
-
-
-FRAME_SCHEMA = "doc_id long, frame_idx int, frame_offset int, frame_sig long"
-
-
-def frame_sample(df_with_payload: DataFrame) -> DataFrame:
-    """Video-style frame sampling: expand each payload into its (stub)
-    frames — the 1→N row expansion shape of media pipelines, still
-    Arrow-batched. Frame count/offsets/signatures are deterministic
-    functions of the payload so the oracle can reproduce them; a real
-    decoder would emit actual frame tensors here.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "frame_idx": [], "frame_offset": [], "frame_sig": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload is None:
-                    continue  # nothing to decode -> no frames (oracle twin
-                    # filters text IS NOT NULL)
-                blen = len(payload)
-                n = 1 + blen % 8
-                for i in range(n):
-                    off = (i * blen) // n
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(i)
-                    out["frame_offset"].append(off)
-                    out["frame_sig"].append((blen * 31 + i * 7) % 1000003)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                    "frame_idx": pd.Series(out["frame_idx"], dtype="int32"),
-                    "frame_offset": pd.Series(out["frame_offset"], dtype="int32"),
-                    "frame_sig": pd.Series(out["frame_sig"], dtype="int64"),
-                }
-            )
-
-    return df_with_payload.select("doc_id", "payload").mapInPandas(
-        run, schema=FRAME_SCHEMA
-    )
-
-
-FRAME_ENERGY_SCHEMA = "doc_id long, frame_idx int, n_frames int, energy long"
-
-
-def frame_energy(df_with_payload: DataFrame) -> DataFrame:
-    """Per-frame byte-energy extraction (the scene-cut feature pass):
-    expand each payload into its stub frames (same boundary arithmetic as
-    :func:`frame_sample` — ``off_i = (i*blen)//n``) and reduce each
-    frame's byte slice to an EXACT integer sum. This is the
-    1→N-expand-then-per-slice-reduce shape of a real video feature
-    pipeline (decode frame → pool features), Arrow-batched; a real
-    decoder would emit per-frame tensors and pool them here.
-
-    NULL payloads produce no rows (quarantine, matching the other
-    kernels); an EMPTY payload keeps its single frame with energy 0 (the
-    metadata is meaningful). Bytes are summed as unsigned ints, so the
-    energy is deterministic and the DuckDB oracle reproduces it from the
-    payload's hex dump.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "frame_idx": [], "n_frames": [], "energy": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                b = bytes(payload)
-                blen = len(b)
-                n = 1 + blen % 8
-                for i in range(n):
-                    lo = (i * blen) // n
-                    hi = ((i + 1) * blen) // n
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(i)
-                    out["n_frames"].append(n)
-                    out["energy"].append(sum(b[lo:hi]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                    "frame_idx": pd.Series(out["frame_idx"], dtype="int32"),
-                    "n_frames": pd.Series(out["n_frames"], dtype="int32"),
-                    "energy": pd.Series(out["energy"], dtype="int64"),
-                }
-            )
-
-    return df_with_payload.select("doc_id", "payload").mapInPandas(
-        run, schema=FRAME_ENERGY_SCHEMA
-    )
+def _payloads(df: DataFrame) -> DataFrame:
+    """``doc_id``, ``payload`` and its byte length ``blen``; no row for a NULL payload."""
+    return df.select(
+        "doc_id", "payload", F.octet_length("payload").alias("blen")
+    ).filter(F.col("payload").isNotNull())
 
 
 def image_meta(df_with_payload: DataFrame) -> DataFrame:
-    """Extract typed metadata from a binary payload column via Arrow-batched
-    ``mapInPandas`` (the multimodal feature-extraction pattern)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _decode_batch(pdf)
-
-    return df_with_payload.select("doc_id", "payload").mapInPandas(
-        run, schema=IMAGE_META_SCHEMA
+    """Typed metadata from a binary payload column: the true dimensions
+    and ``n_frames=1`` from a real image header, else the pseudo-dims the
+    oracle reproduces from the byte length."""
+    return (
+        _payloads(df_with_payload)
+        .withColumn("jpeg", F.expr(_JPEG_DIMS))
+        .withColumn("dims", F.expr(_HEADER_DIMS))
+        .selectExpr(
+            "doc_id",
+            "blen AS byte_len",
+            "coalesce(dims.w, 16 + blen % 64) AS width",
+            "coalesce(dims.h, 16 + (blen * 7) % 64) AS height",
+            "CASE WHEN dims.w IS NULL THEN 1 + blen % 8 ELSE 1 END AS n_frames",
+        )
     )
 
 
-RESIZE_SCHEMA = (
-    "doc_id long, width int, height int, out_w int, out_h int, out_bytes int"
-)
+def frame_sample(df_with_payload: DataFrame) -> DataFrame:
+    """Video-style frame sampling: expand each payload into its ``1 +
+    blen % 8`` stub frames — the 1→N row expansion shape of media
+    pipelines. Offsets and signatures are deterministic functions of the
+    payload so the oracle can reproduce them; a real decoder would emit
+    actual frame tensors here.
+    """
+    return (
+        _payloads(df_with_payload)
+        .selectExpr(
+            "doc_id", "CAST(blen AS BIGINT) AS blen", "explode(sequence(0, blen % 8)) AS frame_idx"
+        )
+        .selectExpr(
+            "doc_id",
+            "frame_idx",
+            "CAST((frame_idx * blen) DIV (1 + blen % 8) AS INT) AS frame_offset",
+            "(blen * 31 + frame_idx * 7) % 1000003 AS frame_sig",
+        )
+    )
+
+
+def frame_energy(df_with_payload: DataFrame) -> DataFrame:
+    """Per-frame byte energy (the scene-cut feature pass): the ``n`` frames
+    of :func:`frame_sample`, frame ``i`` covering bytes ``[(i*blen) div n,
+    ((i+1)*blen) div n)``, each reduced to the EXACT integer sum of its
+    unsigned bytes — the decode frame → pool features shape of a real
+    video pipeline. An empty payload keeps one frame with energy 0.
+    """
+    return (
+        _payloads(df_with_payload)
+        .selectExpr("doc_id", "CAST(blen AS BIGINT) AS blen", "1 + blen % 8 AS n", f"{_BYTES} AS b")
+        .selectExpr(
+            "doc_id",
+            """inline(transform(sequence(0, n - 1), i -> named_struct(
+                 'frame_idx', i, 'n_frames', n, 'energy', aggregate(
+                   slice(b, CAST((i * blen) DIV n AS INT) + 1,
+                         CAST(((i + 1) * blen) DIV n - (i * blen) DIV n AS INT)),
+                   0L, (acc, x) -> acc + x))))""",
+        )
+    )
 
 
 def image_resize(
     df_with_payload: DataFrame, target_w: int = 32, target_h: int = 32
 ) -> DataFrame:
-    """Aspect-preserving resize planning via Arrow-batched ``mapInPandas``
-    (STUB decode — see module doc): source dims come from the stub decode,
-    output dims scale by ``min(target/w, target/h)`` exactly as a Pillow
-    ``thumbnail`` kernel would, and ``out_bytes`` models the re-encoded
-    size. All integer arithmetic — deterministic, so the DuckDB oracle
-    reproduces it. A real deployment swaps the body for
-    ``img.resize((out_w, out_h))`` + re-encode; schema and batching stay.
+    """Aspect-preserving resize planning (STUB decode — see module doc):
+    source dims from :func:`image_meta`, output dims scaled by
+    ``min(target/w, target/h)`` as a Pillow ``thumbnail`` kernel would —
+    the binding dimension hits its target exactly, the other scales by
+    floor division — and ``out_bytes`` models the re-encoded size. All
+    integer arithmetic, so the DuckDB oracle reproduces it. A real
+    deployment swaps in ``img.resize((out_w, out_h))`` + re-encode.
     """
-
-    def run(batches):
-        import numpy as np
-
-        for pdf in batches:
-            meta = _decode_batch(pdf)
-            w = meta["width"].to_numpy().astype("int64")
-            h = meta["height"].to_numpy().astype("int64")
-            # scale = min(target_w/w, target_h/h), kept in exact integer
-            # form: the binding dimension hits its target exactly, the
-            # other scales by floor division (both engines reproduce this)
-            width_binding = (w * target_h) >= (h * target_w)
-            out_w = np.where(width_binding, target_w, (w * target_h) // h)
-            out_h = np.where(width_binding, (h * target_w) // w, target_h)
-            yield pd.DataFrame(
-                {
-                    # meta's doc_id, not pdf's: _decode_batch drops
-                    # NULL-payload rows, so the frames must stay aligned
-                    "doc_id": meta["doc_id"],
-                    "width": meta["width"],
-                    "height": meta["height"],
-                    "out_w": out_w.astype("int32"),
-                    "out_h": out_h.astype("int32"),
-                    "out_bytes": (out_w * out_h * 3).astype("int32"),
-                }
-            )
-
-    return df_with_payload.select("doc_id", "payload").mapInPandas(
-        run, schema=RESIZE_SCHEMA
+    # BIGINT targets (``48L``) keep the products exact; a binding width
+    # with w = 0 means h = 0 too, so out_h is 0
+    binding = f"width * {target_h}L >= height * {target_w}L"
+    return (
+        image_meta(df_with_payload)
+        .selectExpr(
+            "doc_id", "width", "height",
+            f"CAST(CASE WHEN {binding} THEN {target_w}"
+            f" ELSE (width * {target_h}L) DIV height END AS INT) AS out_w",
+            f"CAST(CASE WHEN {binding} THEN (height * {target_w}L) DIV greatest(width, 1)"
+            f" ELSE {target_h} END AS INT) AS out_h",
+        )
+        .withColumn("out_bytes", F.col("out_w") * F.col("out_h") * 3)
     )
 
 
-FEATURES_DIM = 16
-
-FEATURES_SCHEMA = "doc_id long, feat array<double>"
-
-
-def image_features(df_with_payload: DataFrame) -> DataFrame:
-    """Feature extraction to a fixed-dim vector via Arrow-batched
-    ``mapInPandas``: a 16-bin byte-value histogram (fractions, rounded) —
-    the STUB stand-in for a CNN/CLIP embedding kernel. NumPy-vectorized
-    per batch (``np.frombuffer`` + ``bincount``), no per-row Python in
-    the inner loop beyond the payload walk a real decoder would also do.
-    The output column is ``array<double>`` — exactly the shape the ANN /
-    dedup operators consume, so ``image_features`` output pipes straight
-    into ``ann_*`` / ``dedup_embedding_*``.
-
-    Empty or NULL payloads produce NO row (a real decoder quarantines an
-    undecodable blob rather than emitting a degenerate all-zero
-    embedding) — the same semantics the DuckDB oracles get for free from
-    their per-character histogram CTEs, which contain no rows for an
-    empty document.
-    """
-    import numpy as np
-
-    def run(batches):
-        for pdf in batches:
-            ids, feats = [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload is None or len(payload) == 0:
-                    continue  # undecodable -> dropped, matching the oracle
-                arr = np.frombuffer(payload, dtype=np.uint8)
-                hist = np.bincount(arr % FEATURES_DIM, minlength=FEATURES_DIM)
-                # round half-AWAY like SQL ROUND (np.round is
-                # half-even: 0.0390625 would flip the oracle hash)
-                frac = np.floor(hist / arr.size * 1e6 + 0.5) / 1e6
-                ids.append(doc_id)
-                feats.append(frac.tolist())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    # object dtype even when the batch dropped every row —
-                    # an empty float64 column breaks Arrow's list<double>
-                    # conversion
-                    "feat": pd.Series(feats, dtype="object"),
-                }
-            )
-
-    return df_with_payload.select("doc_id", "payload").mapInPandas(
-        run, schema=FEATURES_SCHEMA
-    )
-
-
-AUDIO_META_SCHEMA = (
-    "doc_id long, byte_len int, sample_rate int, n_samples int, duration_ms int"
+#: bin k's byte share, rounded half-away at 6 dp (``floor(x*1e6 + 0.5)``)
+_FEATURE_BINS = ", ".join(
+    f"floor((blen - length(replace(lo, '{k}', ''))) / blen * 1e6 + 5e-1) / 1e6"
+    for k in "0123456789ABCDEF"
 )
 
 
+def image_features(df_with_payload: DataFrame) -> DataFrame:
+    """Feature extraction to a fixed-dim vector: a 16-bin byte-value
+    histogram, bin ``k`` holding the share of bytes whose low hex nibble
+    is ``k`` — the STUB stand-in for a CNN/CLIP embedding kernel, shaped
+    ``array<double>`` so it pipes straight into ``ann_*`` /
+    ``dedup_embedding_*``. An empty payload gives NO row (a real decoder
+    quarantines an undecodable blob rather than emitting a degenerate
+    all-zero embedding), as the oracles' per-byte CTEs have no rows for it.
+    """
+    return (
+        _payloads(df_with_payload)
+        .filter(F.col("blen") > 0)
+        # the low nibbles, one hex digit per byte
+        .selectExpr("doc_id", "blen", "regexp_replace(hex(payload), '(.)(.)', '$2') AS lo")
+        .selectExpr("doc_id", f"array({_FEATURE_BINS}) AS feat")
+    )
+
+
 def audio_meta(df_with_payload: DataFrame) -> DataFrame:
-    """Audio-side twin of :func:`image_meta`: typed metadata from an opaque
-    payload via Arrow-batched ``mapInPandas`` (STUB decode — a real kernel
-    is ``torchaudio.info`` / ``soundfile.info``). Stub model: 16-bit mono
-    PCM at a deterministic sample rate, so every derived field is integer
+    """Audio-side twin of :func:`image_meta` (STUB decode — a real kernel
+    is ``torchaudio.info`` / ``soundfile.info``): 16-bit mono PCM at a
+    deterministic 8/16/24 kHz rate, so every derived field is integer
     arithmetic both engines reproduce.
     """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # NULL payload -> no row (quarantine; oracle filters
-            # text IS NOT NULL). Empty payload keeps its 0-length row.
-            pdf = pdf[pdf["payload"].notna()]
-            blen = pdf["payload"].map(len).astype("int64")
-            rate = (8000 * (1 + blen % 3)).astype("int64")  # 8/16/24 kHz
-            n_samples = blen // 2  # 16-bit mono PCM
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "byte_len": blen.astype("int32"),
-                    "sample_rate": rate.astype("int32"),
-                    "n_samples": n_samples.astype("int32"),
-                    "duration_ms": (n_samples * 1000 // rate).astype("int32"),
-                }
-            )
-
-    return df_with_payload.select("doc_id", "payload").mapInPandas(
-        run, schema=AUDIO_META_SCHEMA
+    return _payloads(df_with_payload).selectExpr(
+        "doc_id",
+        "blen AS byte_len",
+        "8000 * (1 + blen % 3) AS sample_rate",
+        "CAST(blen DIV 2 AS INT) AS n_samples",
+        "CAST((blen DIV 2) * 1000 DIV (8000 * (1 + blen % 3)) AS INT) AS duration_ms",
     )

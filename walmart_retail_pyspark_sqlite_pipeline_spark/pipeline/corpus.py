@@ -45,9 +45,6 @@ class CorpusConfig:
 def run_corpus_pipeline(spark: SparkSession, cfg: CorpusConfig) -> dict:
     """Run prep → split → partitioned sink; returns observed corpus stats."""
     t0 = time.perf_counter()
-    # a cached plan is matched by its file scans' root paths: without this
-    # a re-run over changed documents reuses the previous shingle index
-    spark.catalog.refreshByPath(cfg.input_dir)
     kept = corpus_prep(read_table(spark, cfg.input_dir, "documents"))
     out = kept.select(
         "doc_id",

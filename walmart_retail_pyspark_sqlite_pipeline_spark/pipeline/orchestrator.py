@@ -175,9 +175,6 @@ def run_pipeline(
     for key, fname in datasets:
         if not (raw_dir / fname).exists():
             raise FileNotFoundError(f"input {raw_dir / fname} for dataset {key!r}")
-    # a cached plan is matched by its file scans' root paths, so frames a
-    # previous run cached over these inputs would hide changed files
-    spark.catalog.refreshByPath(str(raw_dir))
 
     def check(item: tuple[str, str]) -> tuple[DataFrame, QualityReport]:
         key, fname = item

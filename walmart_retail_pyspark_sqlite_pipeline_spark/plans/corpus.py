@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import hashing, text
+from ..session import repartition_undersplit
 from ..sources import read_table
 from .llm import (
     _TOK_SQL,
@@ -473,7 +474,7 @@ register(
 
 
 # ---------------------------------------------------------------------------
-# corpus_chunk_dedup — chunk-granular exact dedup: Arrow-batched chunking
+# corpus_chunk_dedup — chunk-granular exact dedup: built-in chunking
 # (operators/chunking.py, the 100 TB chunker) feeding the same hash-groupBy
 # histogram shape as dedup_exact_hist. Chunk-level dedup is what catches
 # boilerplate shared across otherwise-distinct documents (headers, license
@@ -525,7 +526,7 @@ register(
         corpus_chunk_dedup,
         CHUNK_DEDUP_SQL,
         ("DD10",),
-        doc="chunk-granular exact dedup over the Arrow-batched chunker",
+        doc="chunk-granular exact dedup over the built-in chunker",
     )
 )
 
@@ -788,8 +789,6 @@ def _gram_hashes(thp: Column, n_tok: Column, n: int) -> Column:
 
 
 def dedup_substring_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..session import default_parallelism, undersplit
-
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     # Guide §2.5 "input skew — repartition immediately after an
     # under-split read" (the _doc_shingles guard, cached-decision form):
@@ -799,8 +798,7 @@ def dedup_substring_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parquet file serializes it all onto one task. Data-adaptive: never
     # fires on a well-split 100 TB scan; what it shuffles is the raw
     # doc rows (1× corpus bytes), before any expansion.
-    if undersplit(docs):
-        docs = docs.repartition(default_parallelism(), "doc_id")
+    docs = repartition_undersplit(docs)
     # materialized tok / thp / n columns — never the expressions (capture
     # pathology; see text_lm_score): the gram fold references thp 24×
     # per gram, so an unmaterialized thp would re-run the per-token char

@@ -12,8 +12,8 @@ Scale design notes appear per query; the common themes:
   guard for similarity self-joins);
 - pairwise verification only ever runs on CANDIDATES (LSH buckets or label
   blocks), never the full cross product;
-- everything is built-in Column expressions — no Python in the hot path
-  except the (stub) multimodal decode, which is Arrow-batched.
+- everything is built-in Column expressions, the (stub) multimodal decode
+  included — no query plan crosses into Python.
 """
 
 from __future__ import annotations
@@ -23,7 +23,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import hashing, text, vectors
-from ..multimodal import attach_fake_payload, frame_sample, image_meta
+from ..multimodal import (
+    attach_fake_payload,
+    audio_meta,
+    frame_energy,
+    frame_sample,
+    image_features,
+    image_meta,
+    image_resize,
+)
+from ..session import repartition_undersplit
 from ..sources import read_embeddings, read_table
 from ..sources.tables import EMB_SOURCE_SQL
 from .registry import QuerySpec, register
@@ -229,15 +238,12 @@ def _doc_shingles(docs: DataFrame) -> DataFrame:
     # would be pure waste), and what it shuffles is doc-grain token rows
     # (≈1× corpus bytes) — still 3× narrower than the old exploded
     # exchange, and it shows up in the plan only on under-split inputs.
-    # Round 15 (ADVICE r14): the probe result is cached per plan, so
-    # repeated plan builds neither re-pay the DataFrame→RDD conversion
-    # nor flip the plan shape mid-session.
-    from ..session import default_parallelism, undersplit
-
-    if undersplit(tok):
-        tok = tok.repartition(default_parallelism(), "doc_id")
+    # The probe result is cached per plan, so repeated plan builds neither
+    # re-pay the DataFrame→RDD conversion nor flip the plan shape
+    # mid-session.
     return (
-        tok.select(
+        repartition_undersplit(tok)
+        .select(
             "doc_id",
             F.explode(
                 F.array_distinct(text.word_shingles(F.col("tok"), 3))
@@ -1021,13 +1027,17 @@ FROM n ORDER BY doc_id
 
 
 # ---------------------------------------------------------------------------
-# multimodal_image_meta — binary payload column → Arrow-batched mapInPandas
-# metadata extraction (decode itself is a deterministic STUB — see
-# multimodal/binary.py). The oracle reproduces the stub's arithmetic.
+# multimodal_image_meta — binary payload column → typed metadata (real
+# PNG/GIF/JPEG header decode, else a deterministic pseudo-decode STUB —
+# see multimodal/binary.py). The oracle reproduces the stub's arithmetic.
 # ---------------------------------------------------------------------------
+def _payload_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents table as a multimodal one (utf-8 payload bytes)."""
+    return attach_fake_payload(read_table(spark, sf_dir, "documents"))
+
+
 def multimodal_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = read_table(spark, sf_dir, "documents")
-    return image_meta(attach_fake_payload(docs)).sortWithinPartitions("doc_id")
+    return image_meta(_payload_docs(spark, sf_dir)).sortWithinPartitions("doc_id")
 
 
 MULTIMODAL_SQL = """
@@ -1042,12 +1052,11 @@ FROM documents WHERE text IS NOT NULL ORDER BY doc_id
 
 # ---------------------------------------------------------------------------
 # multimodal_frame_sample — 1→N media expansion (video frame sampling
-# shape) through Arrow-batched mapInPandas; stub frames are deterministic
-# so the oracle reproduces them with a lateral range join.
+# shape) as an explode over the frame indices; stub frames are
+# deterministic so the oracle reproduces them with a lateral range join.
 # ---------------------------------------------------------------------------
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = read_table(spark, sf_dir, "documents")
-    return frame_sample(attach_fake_payload(docs)).sortWithinPartitions(
+    return frame_sample(_payload_docs(spark, sf_dir)).sortWithinPartitions(
         "doc_id", "frame_idx"
     )
 
@@ -1070,7 +1079,7 @@ ORDER BY doc_id, frame_idx
 
 # ---------------------------------------------------------------------------
 # multimodal_scene_cut — video scene-cut detection over the frame pipeline:
-# the Arrow kernel (multimodal/binary.py::frame_energy) expands each
+# the frame-energy pass (multimodal/binary.py::frame_energy) expands each
 # payload into its frames and reduces every frame's byte slice to an exact
 # integer energy (a real pipeline pools decoded-frame features here); the
 # DataFrame side then flags a cut wherever the frame-to-frame energy jump
@@ -1078,17 +1087,14 @@ ORDER BY doc_id, frame_idx
 # shot-boundary heuristic, made integer-exact as
 # ``|Δenergy| · n_frames > Σenergy`` (no division, no float).
 #
-# Scale shape: 1→N Arrow expansion, then ONE shuffle partitioning frames
+# Scale shape: 1→N frame expansion, then ONE shuffle partitioning frames
 # by doc_id; both windows (lag, per-doc total) share that partitioning and
 # per-doc state is bounded at 8 frames. Nothing global, nothing all-pairs.
 # The oracle reproduces the energies by walking the payload's hex dump
 # byte-by-byte (the unicode-safe idiom the image-features oracle uses).
 # ---------------------------------------------------------------------------
 def multimodal_scene_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..multimodal import frame_energy
-
-    docs = read_table(spark, sf_dir, "documents")
-    fr = frame_energy(attach_fake_payload(docs))
+    fr = frame_energy(_payload_docs(spark, sf_dir))
     w = Window.partitionBy("doc_id").orderBy("frame_idx")
     tot = Window.partitionBy("doc_id")
     return (
@@ -1171,7 +1177,7 @@ register(
         multimodal_scene_cut,
         SCENE_CUT_SQL,
         ("MM7",),
-        doc="scene-cut detection: Arrow per-frame byte energy + integer-exact jump test",
+        doc="scene-cut detection: per-frame byte energy + integer-exact jump test",
     )
 )
 
@@ -1186,7 +1192,7 @@ register(
 # the per-segment table (start/end frame, length, energy) a
 # speech-pipeline consumer clips on.
 #
-# Scale shape: same as multimodal_scene_cut — 1→N Arrow expansion, ONE
+# Scale shape: same as multimodal_scene_cut — 1→N frame expansion, ONE
 # shuffle by doc_id, three windows sharing that partitioning, per-doc
 # state bounded at 8 frames. The oracle reproduces the energies from the
 # payload's hex dump (the shared byte-walk idiom; CTEs mirror
@@ -1195,10 +1201,7 @@ register(
 def multimodal_audio_vad_segments(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..multimodal import frame_energy
-
-    docs = read_table(spark, sf_dir, "documents")
-    fr = frame_energy(attach_fake_payload(docs))
+    fr = frame_energy(_payload_docs(spark, sf_dir))
     w = Window.partitionBy("doc_id").orderBy("frame_idx")
     wrun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     tot = Window.partitionBy("doc_id")
@@ -2139,8 +2142,8 @@ register(
 # ---------------------------------------------------------------------------
 # multimodal_image_resize / multimodal_image_features — the remaining two
 # media ops of the decode/feature-extract/resize/frame-sample family
-# (multimodal/binary.py; decode is the documented deterministic STUB, the
-# Arrow plumbing is real). The resize plans aspect-preserving integer
+# (multimodal/binary.py; decode is the documented deterministic STUB,
+# the column plumbing is real). The resize plans aspect-preserving integer
 # output dims; features is a 16-bin byte-histogram vector — shaped
 # array<double> so it pipes straight into the ann_*/dedup_embedding_* ops.
 # ---------------------------------------------------------------------------
@@ -2148,11 +2151,8 @@ RESIZE_TW, RESIZE_TH = 48, 32
 
 
 def multimodal_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..multimodal import image_resize
-
-    docs = read_table(spark, sf_dir, "documents")
     return image_resize(
-        attach_fake_payload(docs), target_w=RESIZE_TW, target_h=RESIZE_TH
+        _payload_docs(spark, sf_dir), target_w=RESIZE_TW, target_h=RESIZE_TH
     ).sortWithinPartitions("doc_id")
 
 
@@ -2185,24 +2185,19 @@ def multimodal_image_features_vec(spark: SparkSession, sf_dir: str) -> DataFrame
     value hasher sorts a pandas frame by every column, and a list column is
     unhashable there, so ``multimodal_image_features`` exports the exploded
     scalar twin below instead."""
-    from ..multimodal import image_features
-
-    docs = read_table(spark, sf_dir, "documents")
-    return image_features(attach_fake_payload(docs)).sortWithinPartitions(
-        "doc_id"
-    )
+    return image_features(_payload_docs(spark, sf_dir)).sortWithinPartitions("doc_id")
 
 
 def multimodal_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-safe export of the same kernel: posexplode the 16-bin
     histogram to scalar ``(doc_id, bucket, frac)`` rows — every column
     hash-sortable, identical numbers to the array variant."""
-    from ..multimodal import image_features
-
-    docs = read_table(spark, sf_dir, "documents")
-    vec = image_features(attach_fake_payload(docs))
+    vec = image_features(_payload_docs(spark, sf_dir))
+    # feat always holds 16 bins, so _outer yields the same rows; it stops
+    # Spark inferring a size(feat) > 0 filter that it would push below the
+    # projection and so compute the histogram twice
     return vec.select(
-        "doc_id", F.posexplode("feat").alias("bucket", "frac")
+        "doc_id", F.posexplode_outer("feat").alias("bucket", "frac")
     ).sortWithinPartitions("doc_id", "bucket")
 
 
@@ -2262,7 +2257,7 @@ for _spec in [
         multimodal_image_resize,
         IMAGE_RESIZE_SQL,
         ("MM3",),
-        doc="aspect-preserving resize planning via Arrow-batched mapInPandas",
+        doc="aspect-preserving resize planning (integer-exact thumbnail math)",
     ),
     QuerySpec(
         "multimodal_image_features",
@@ -2285,14 +2280,11 @@ for _spec in [
 # ---------------------------------------------------------------------------
 # multimodal_audio_meta — audio twin of image_meta (16-bit mono PCM stub):
 # completes the image/audio/video coverage of the opaque-binary multimodal
-# family. Same Arrow-batched mapInPandas plumbing; oracle reproduces the
-# stub's integer arithmetic.
+# family. Same built-in column plumbing; oracle reproduces the stub's
+# integer arithmetic.
 # ---------------------------------------------------------------------------
 def multimodal_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..multimodal import audio_meta
-
-    docs = read_table(spark, sf_dir, "documents")
-    return audio_meta(attach_fake_payload(docs)).sortWithinPartitions("doc_id")
+    return audio_meta(_payload_docs(spark, sf_dir)).sortWithinPartitions("doc_id")
 
 
 AUDIO_META_SQL = """
@@ -2315,7 +2307,7 @@ register(
         multimodal_audio_meta,
         AUDIO_META_SQL,
         ("MM5",),
-        doc="audio metadata extraction (PCM stub), Arrow-batched",
+        doc="audio metadata extraction (PCM stub)",
     )
 )
 
@@ -3700,9 +3692,9 @@ register(
 # fingerprints). A document-frequency cap (same guard as
 # dedup_ngram_jaccard) stops boilerplate fingerprints exploding the
 # bucket join. Selection, hashing, and counts are all exact integers.
-# The defaultParallelism respread only fires when the local input is a
-# single split — at 100 TB the source is already thousands of splits
-# and the respread is a no-op branch.
+# The under-split respread only fires when the local input is a single
+# split — at 100 TB the source is already thousands of splits and the
+# respread is a no-op branch.
 # ---------------------------------------------------------------------------
 WINNOW_W = 4
 WINNOW_DF_CAP = 64
@@ -3710,10 +3702,7 @@ WINNOW_MIN_SHARED = 2
 
 
 def dedup_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = read_table(spark, sf_dir, "documents")
-    par = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < par:
-        docs = docs.repartition(par)
+    docs = repartition_undersplit(read_table(spark, sf_dir, "documents"))
     # materialized tok column — never the tokens(text) expression
     # (capture pathology: a captured tokens() subtree is re-evaluated per
     # lambda element)
@@ -5814,32 +5803,26 @@ register(
 # ---------------------------------------------------------------------------
 # multimodal_image_ann — image near-duplicate retrieval over the multimodal
 # feature pipeline: the 16-bin byte-histogram feature vectors (the STUB
-# stand-in for CLIP embeddings, produced by the SAME Arrow mapInPandas
-# kernel the driver grades via multimodal_image_features) feed the generic
-# cosine top-k — the composition a multimodal dedup/retrieval pipeline
-# actually runs: decode -> embed -> ANN. Query image = doc_id 0; exports
-# the top-K most-similar images with 6-dp cosines, ties on doc_id.
+# stand-in for CLIP embeddings, the same feature pass the driver grades
+# via multimodal_image_features) feed the generic cosine top-k — the
+# composition a multimodal dedup/retrieval pipeline actually runs:
+# decode -> embed -> ANN. Query image = doc_id 0; exports the top-K
+# most-similar images with 6-dp cosines, ties on doc_id.
 #
-# Scale shape: one Arrow-batched feature pass over the corpus (the real
-# cost at 100 TB, Arrow-vectorized), then the broadcast-query scan +
-# TakeOrderedAndProject skeleton shared with ann_topk_cosine. Zero-norm
-# rows cannot occur — the feature kernel drops empty/NULL payloads
-# outright (matching the oracle's per-character CTEs, which have no rows
-# for an empty doc), so an empty query image yields 0 result rows on BOTH
-# engines; the explicit list_dot_product(v,v) > 0 filter stays as
-# belt-and-braces against any future kernel emitting a zero vector.
+# Scale shape: one feature pass over the corpus, then the broadcast-query
+# scan + TakeOrderedAndProject skeleton shared with ann_topk_cosine.
+# Zero-norm rows cannot occur: the feature pass drops empty/NULL payloads
+# (matching the oracle's per-byte CTEs, which have no rows for an empty
+# doc), and a non-empty payload puts at least 1/16 of its bytes in one
+# bin. So an empty query image yields 0 result rows on BOTH engines, and
+# the oracle's list_dot_product(v,v) > 0 filter has no Spark twin (Spark
+# would push it below the projection and compute every histogram twice).
 # ---------------------------------------------------------------------------
 def multimodal_image_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..multimodal import image_features
-
-    docs = read_table(spark, sf_dir, "documents")
-    feats = image_features(attach_fake_payload(docs)).select(
-        "doc_id", vectors.as_double(F.col("feat")).alias("v")
-    )
+    feats = image_features(_payload_docs(spark, sf_dir)).withColumnRenamed("feat", "v")
     q = feats.filter(F.col("doc_id") == 0).select(F.col("v").alias("qv"))
     return (
         feats.filter(F.col("doc_id") != 0)
-        .filter(vectors.dot(F.col("v"), F.col("v")) > 0)
         .crossJoin(F.broadcast(q))
         .select(
             "doc_id",
@@ -6154,8 +6137,8 @@ register(
 # multimodal_keyframe_select — the step after scene-cut detection in a
 # video-curation pipeline: pick each video's KF_K most-informative frames
 # (highest byte-energy; frame_idx asc breaks ties deterministically) as
-# the frames that go on to the expensive encoder. Same Arrow frame-energy
-# pass as multimodal_scene_cut; the selection is one rank-k window
+# the frames that go on to the expensive encoder. Same frame-energy pass
+# as multimodal_scene_cut; the selection is one rank-k window
 # PARTITIONED BY doc_id — per-doc state bounded at the 8-frame stub
 # cap, no global window, no shuffle beyond the frame exchange. Bulk
 # per-video export: partition-local order only.
@@ -6164,10 +6147,7 @@ KF_K = 2  # keyframes kept per video
 
 
 def multimodal_keyframe_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..multimodal import frame_energy
-
-    docs = read_table(spark, sf_dir, "documents")
-    fr = frame_energy(attach_fake_payload(docs))
+    fr = frame_energy(_payload_docs(spark, sf_dir))
     w = Window.partitionBy("doc_id").orderBy(
         F.desc("energy"), F.asc("frame_idx")
     )
@@ -6204,7 +6184,7 @@ register(
         multimodal_keyframe_select,
         KEYFRAME_SQL,
         ("MM8",),
-        doc="keyframe selection: top-k frames per video by byte energy over the Arrow frame-energy pass",
+        doc="keyframe selection: top-k frames per video by byte energy over the frame-energy pass",
     )
 )
 

@@ -5,8 +5,8 @@ The reference builds its session at
 shuffle.partitions=8, sqlite-jdbc package). We keep the config-driven spirit
 but default to scale-friendly settings: AQE on (runtime partition coalescing
 + skew-join handling), explicit shuffle partitions, UTC session timezone so
-date math is deterministic across hosts, and Arrow enabled for the pandas
-boundaries used by the multimodal extensions.
+date math is deterministic across hosts, and Arrow enabled for a caller's
+driver-side pandas conversions (``toPandas``, ``createDataFrame``).
 
 ANSI note: Spark 4 enables ANSI mode by default. The engine's own code never
 relies on session-level cast semantics — parity-critical lenient casts (the
@@ -69,40 +69,38 @@ from pathlib import Path
 
 from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 log = logging.getLogger("walmart_retail_pipeline.session")
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
-def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-
-
-# Cached scan-split decisions for undersplit(), keyed by the frame's
-# semantic plan hash, so two reads of one path (or two builds of one plan)
-# share a decision. One probe per plan per process: the probe is a
-# DataFrame→RDD conversion (full analysis + deserializer plan — cheap but
-# not free), and caching it also keeps the guarded plan SHAPE stable within
-# a session even if the file layout changes mid-run (ADVICE r14: the
-# per-call probe both re-paid the conversion and could split one plan
-# into two divergent cache entries).
+# Cached scan-split decisions for repartition_undersplit(), keyed by the
+# frame's semantic plan hash, so two reads of one path (or two builds of
+# one plan) share a decision. One probe per plan per process: the probe is
+# a DataFrame→RDD conversion (full analysis + deserializer plan — cheap
+# but not free), and caching it also keeps the guarded plan SHAPE stable
+# within a session even if the file layout changes mid-run (the per-call
+# probe both re-paid the conversion and could split one plan into two
+# divergent cache entries).
 _SPLIT_DECISIONS: dict[int, bool] = {}
 
 
-def undersplit(df) -> bool:
-    """True when ``df``'s scan yields fewer partitions than the session's
-    parallelism — the data-adaptive trigger for the "repartition
-    immediately after an under-split read" guards (guide §2.5). Never
-    fires on a well-split 100 TB scan; on a local single-row-group parquet
-    file it restores the parallelism the input cannot supply."""
+def repartition_undersplit(df: DataFrame) -> DataFrame:
+    """``df.repartition(n, "doc_id")`` when ``df``'s scan yields fewer
+    than ``n`` partitions, ``n`` being its session's default parallelism;
+    ``df`` otherwise. The "repartition immediately after an under-split
+    read" guard (guide §2.5): it never fires on a well-split 100 TB scan;
+    on a local single-row-group parquet file it restores the parallelism
+    the input cannot supply."""
+    n = df.sparkSession.sparkContext.defaultParallelism
     key = df.semanticHash()
     hit = _SPLIT_DECISIONS.get(key)
     if hit is None:
-        hit = df.rdd.getNumPartitions() < default_parallelism()
+        hit = df.rdd.getNumPartitions() < n
         _SPLIT_DECISIONS[key] = hit
-    return hit
+    return df.repartition(n, "doc_id") if hit else df
 
 
 def get_spark(
@@ -116,7 +114,7 @@ def get_spark(
     you would set on a real cluster; nothing here assumes single-node. A
     new driver JVM starts from the class archive (module doc, Cold start).
     """
-    cpus = default_parallelism()
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")

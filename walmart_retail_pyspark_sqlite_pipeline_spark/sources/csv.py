@@ -11,8 +11,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .tables import refresh_if_changed
+
 
 def read_csv_raw(spark: SparkSession, paths: str | list[str]) -> DataFrame:
+    for path in [paths] if isinstance(paths, str) else paths:
+        refresh_if_changed(spark, path)
     return (
         spark.read.option("header", True)
         .option("multiLine", True)

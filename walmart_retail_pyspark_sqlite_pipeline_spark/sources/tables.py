@@ -9,6 +9,7 @@ partitions for free.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -30,12 +31,38 @@ TABLES = (
 STAR_TABLES = TABLES[:7]
 
 
+#: each source path's file listing (name, size, mtime) at its last read
+_LISTINGS: dict[str, list] = {}
+
+
+def refresh_if_changed(spark: SparkSession, path: str) -> None:
+    """Invalidate the frames cached over ``path`` when its files changed
+    since the last read: a cache entry is matched by plan, whose scan names
+    only the path, so it would otherwise answer for the new files. Only on
+    a change, because a refresh re-plans every cached frame over the path,
+    and a frame cached on top of another one then scans the files itself.
+    A path that lists no local files (a glob, a remote URI) always
+    refreshes."""
+    root = Path(path)
+    files = [root] if root.is_file() else sorted(root.rglob("*"))
+    listing = [(str(f), f.stat().st_size, f.stat().st_mtime_ns) for f in files]
+    if not listing or _LISTINGS.get(path) != listing:
+        spark.catalog.refreshByPath(path)
+        _LISTINGS[path] = listing
+
+
+def _read_parquet(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    refresh_if_changed(spark, path)
+    return spark.read.parquet(path)
+
+
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     if name == "events":
         return _read_events(spark, sf_dir)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return _read_parquet(spark, sf_dir, name)
 
 
 #: DuckDB twin of the :func:`read_embeddings` ingestion contract. Every
@@ -72,7 +99,7 @@ def read_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    df = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    df = _read_parquet(spark, sf_dir, "embeddings")
     return df.filter(
         F.col("embedding").isNotNull()
         & ~F.exists("embedding", lambda x: x.isNull())
@@ -118,5 +145,4 @@ def pin_event_confs(spark: SparkSession) -> None:
 
 def _read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin_event_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    return normalize_event_ts(df)
+    return normalize_event_ts(_read_parquet(spark, sf_dir, "events"))
