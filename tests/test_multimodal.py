@@ -10,6 +10,7 @@ import zlib
 
 from tests.conftest import SF_SMALL
 from walmart_retail_pyspark_sqlite_pipeline_spark.multimodal.binary import (
+    header_dims,
     image_meta,
 )
 from walmart_retail_pyspark_sqlite_pipeline_spark.plans.llm import (
@@ -57,6 +58,28 @@ def make_jpeg(w: int, h: int, before_sof: bytes = b"") -> bytes:
         + b"\x01\x01\x11\x00"
     )
     return b"\xff\xd8" + app0 + before_sof + sof0 + b"\xff\xd9"
+
+
+def test_parse_image_dims_real_headers(spark):
+    """The header decode alone: true (w, h) for PNG/GIF/JPEG headers,
+    NULL dims (the pseudo-decode's cue) for anything else."""
+    payloads = [
+        make_png(37, 21),
+        make_png(1, 1),
+        make_gif(640, 480),
+        make_jpeg(123, 456),
+        # unrecognized payloads → no header dims
+        b"just some text",
+        b"",
+        b"\x89PNG\r\n\x1a\n_tooshort",
+    ]
+    df = spark.createDataFrame(
+        list(enumerate(payloads)), "doc_id long, payload binary"
+    )
+    dims = {r.doc_id: r.dims for r in header_dims(df).select("doc_id", "dims").collect()}
+    got = [(dims[i].w, dims[i].h) for i in range(len(payloads))]
+    got = [None if wh == (None, None) else wh for wh in got]
+    assert got == [(37, 21), (1, 1), (640, 480), (123, 456), None, None, None]
 
 
 def test_image_meta_decodes_real_payloads(spark):

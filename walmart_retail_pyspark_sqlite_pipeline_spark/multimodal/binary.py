@@ -91,14 +91,23 @@ def _payloads(df: DataFrame) -> DataFrame:
     ).filter(F.col("payload").isNotNull())
 
 
+def header_dims(df_with_payload: DataFrame) -> DataFrame:
+    """``doc_id``, ``payload``, ``blen`` and the header decode ``dims``:
+    a ``(w, h)`` struct, both NULL when no PNG/GIF/JPEG header parse
+    accepts the payload."""
+    return (
+        _payloads(df_with_payload)
+        .withColumn("jpeg", F.expr(_JPEG_DIMS))
+        .withColumn("dims", F.expr(_HEADER_DIMS))
+    )
+
+
 def image_meta(df_with_payload: DataFrame) -> DataFrame:
     """Typed metadata from a binary payload column: the true dimensions
     and ``n_frames=1`` from a real image header, else the pseudo-dims the
     oracle reproduces from the byte length."""
     return (
-        _payloads(df_with_payload)
-        .withColumn("jpeg", F.expr(_JPEG_DIMS))
-        .withColumn("dims", F.expr(_HEADER_DIMS))
+        header_dims(df_with_payload)
         .selectExpr(
             "doc_id",
             "blen AS byte_len",
